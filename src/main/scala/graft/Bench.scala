@@ -111,9 +111,8 @@ object Bench {
       if (t2 >= 0) { spent += t2; best(name) = math.min(t1, t2) }
     }
     // ---- extra tracked items (not registered queries) -------------------
-    // Bodies live in BenchBodies (shared with DevBench so local
-    // micro-benchmarks drive EXACTLY this load; see its doc). The bulk
-    // k-NN item runs BulkLoadSpec's always-on 200k-window scale; the two
+    // Bodies live in BenchBodies. The bulk k-NN item runs BulkLoadSpec's
+    // always-on 200k-window scale; the two
     // streaming items drive the 100k-event MemoryStream fixtures (4
     // micro-batches each, so GroupState crosses batch boundaries) — the
     // 14 streaming twins are correctness-pinned ≡ batch by their specs,

@@ -2,9 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The bench's extra tracked items (not registered queries), factored out
-  * of [[Bench]] so local micro-benchmarks (DevBench) drive EXACTLY the
-  * load the bench times — an independent copy could drift and tune the
-  * wrong thing. Bodies only; the measurement protocol stays in the
+  * of [[Bench]]: bodies only; the measurement protocol stays in the
   * caller.
   */
 object BenchBodies {
@@ -74,71 +72,5 @@ object BenchBodies {
         input.addData(chunk); q.processAllAvailable()
       }
     } finally q.stop()
-  }
-}
-
-/** Local micro-bench over a subset of the bench's items (registered
-  * queries by name, or the extra bodies by their bench keys): same
-  * session shape, same noop-sink methodology, first + min-of-k per item.
-  * Dev tooling only — the driver contract lives in [[Bench]].
-  *
-  * Usage: DevBench <sfDir> <reps> <item1,item2,...>
-  */
-object DevBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val reps = if (args.length > 1) args(1).toInt else 3
-    val items = if (args.length > 2) args(2).split(",").toSeq
-      else Seq("streaming_words_100k", "streaming_dedup_100k")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    lazy val wordModel = graft.streaming.StreamFixtures.wordModel
-    lazy val wordEvents = graft.streaming.StreamFixtures.wordPointEvents
-    lazy val docEvents = graft.streaming.StreamFixtures.dedupDocEvents
-    def body(name: String): () => Unit = name match {
-      case "bulk_knn_layout_200k" => () => BenchBodies.bulkKnnBody(spark)
-      case "streaming_words_100k" =>
-        val (m, e) = (wordModel, wordEvents)
-        () => BenchBodies.streamingWordsBody(spark, m, e)
-      case "streaming_dedup_100k" =>
-        val e = docEvents
-        () => BenchBodies.streamingDedupBody(spark, e)
-      case q =>
-        val fn = SparkEntry.queries(q)
-        () => fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    }
-    if (sys.env.contains("DEVBENCH_STREAM_PROFILE")) {
-      // one instrumented words drive: per-batch duration breakdown
-      import spark.implicits._
-      implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[graft.streaming.StreamingWords.PointEvent]
-      val q = graft.streaming.StreamingWords.wordStream(input.toDS(), wordModel)(spark)
-        .writeStream.format("noop").outputMode("append").start()
-      try {
-        wordEvents.grouped(graft.streaming.StreamFixtures.ChunkSize).foreach { chunk =>
-          val t0 = System.nanoTime()
-          input.addData(chunk); q.processAllAvailable()
-          println(f"[profile] batch wall=${(System.nanoTime() - t0) / 1e9}%.3f")
-        }
-        q.recentProgress.foreach(p =>
-          println(s"[profile] batch=${p.batchId} rows=${p.numInputRows} durationMs=${p.durationMs}"))
-      } finally q.stop()
-    }
-    items.foreach { name =>
-      val f = body(name)
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[devbench] $name%-28s first=${times.head}%7.3f min=${times.min}%7.3f  all=${times.map(t => f"$t%.3f").mkString(",")}")
-    }
-    spark.stop()
   }
 }

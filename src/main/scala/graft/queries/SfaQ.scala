@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.{Pipelines, QueryDef, Rnd, Tables}
 import graft.util.Rnd.{jround, jroundSql}
-import graft.sfa.{SFA, SFAOps}
+import graft.sfa.{HistogramType, SFA, SFAOps}
 
 /** SFA-core query surface over the `events` table (series key = user_id,
   * order = (ts, event_id)); single config w=16, l=8, α=4, normMean=false,
@@ -504,21 +504,17 @@ object SfaQ {
     * recursion is exactly two levels deep, so the DuckDB oracle unrolls
     * it ([[f4Sql]]); reference semantics also asserted by SFASpec.
     */
-  private def f4(s: SparkSession, dir: String): DataFrame = {
-    val edgesUdf = udf { (pairs: Seq[org.apache.spark.sql.Row]) =>
-      val sorted = pairs.map(r => (r.getDouble(0), r.getDouble(1))).sortBy(identity).toArray
-      SFA.infoGainEdges(sorted, Alpha)
-        .zipWithIndex.collect { case (e, p) if e != Double.MaxValue => (p, e) }
-    }
+  private def f4(s: SparkSession, dir: String): DataFrame =
     disjointApprox(s, dir)
       .select(col("coef"), jround(col("v"), 2).as("v2"),
         (col("user_id") % 3).cast("double").as("label"))
       .groupBy("coef")
-      .agg(edgesUdf(collect_list(struct(col("v2"), col("label")))).as("edges"))
-      .select(col("coef").cast("long").as("coef"), explode(col("edges")).as("pe"))
-      .select(col("coef"), col("pe._1").cast("long").as("pos"), round(col("pe._2"), 6).as("edge"))
+      .agg(SFAOps.edgesCol(collect_list(struct(col("v2"), col("label"))), Alpha,
+        HistogramType.InformationGain).as("edges"))
+      .select(col("coef").cast("long").as("coef"), posexplode(col("edges")).as(Seq("pos", "edge")))
+      .filter(col("edge") =!= Double.MaxValue)
+      .select(col("coef"), col("pos").cast("long").as("pos"), round(col("edge"), 6).as("edge"))
       .orderBy("coef", "pos")
-  }
 
   /** Entropy term −Σ p·log₂p replicated with the reference's exact
     * guards (SFA.java entropy(): a class term joins only when

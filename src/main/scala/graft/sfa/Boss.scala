@@ -15,8 +15,8 @@ import org.apache.spark.sql.expressions.Window
   * configurations with a thread pool; here the configuration is a *data
   * column*, so the whole grid is a handful of Spark jobs regardless of
   * grid size — fit bins (one groupBy per (cfg, coefficient)), build words
-  * (one UDF pass), build bags (one lag+groupBy), and leave-one-out 1-NN
-  * (one equi-join on (cfg, word) — never a cross join; pairs sharing no
+  * (one native-expression pass), build bags (one lag+groupBy), and
+  * leave-one-out 1-NN (one equi-join on (cfg, word) — never a cross join; pairs sharing no
   * word have distance == noMatch and are skipped by the reference too, so
   * the equi-join loses nothing).
   *
@@ -55,11 +55,11 @@ object Boss {
       trainBags: DataFrame,
       trainSize: Long)
 
-  private def cfgCols = Seq(col("norm"), col("w"))
-
-  /** Fit SFA bins for every (norm, windowLength) config in one pass.
-    * Returns driver-side models keyed by (norm, w) — the bins are tiny
-    * (l × (α−1) doubles per config) and broadcast with the closure.
+  /** Fit SFA bins for every (norm, windowLength) config in one plan: DFT
+    * of z-normed disjoint windows (lowerBounding on), the 2-decimal HALF_UP
+    * orderline ([[SFA.roundAt]]'s rule) and equi-depth edges per (cfg,
+    * coefficient). Every config with a training window gets a model, even
+    * one whose edges all stay +∞.
     */
   def fitBinsGrid(
       train: DataFrame,
@@ -69,64 +69,46 @@ object Boss {
       alphabetSize: Int)(implicit spark: SparkSession): Map[(Boolean, Int), SFAModel] = {
     import spark.implicits._
     val cfgs = norms.flatMap(n => windows.map(w => (n, w))).toDF("norm", "w")
-
-    val disjointApprox = udf { (data: Seq[Double], w: Int, norm: Boolean) =>
-      val arr = data.toArray
-      SFA.disjointWindows(arr, w, norm).map { win =>
-        Fourier.transformWindow(win, 0, w, wordLength, norm, lowerBounding = true)
-          .map(SFA.roundAt(_, 2))
-      }
-    }
-
-    val orderline = train
-      .crossJoin(cfgs)
-      .select(col("norm"), col("w"), col("label"),
-        explode(disjointApprox(col("data"), col("w"), col("norm"))).as("approx"))
-      .select(col("norm"), col("w"), col("label"), posexplode(col("approx")).as(Seq("coef", "v")))
-
-    // exact per-coefficient orderline → reference equi-depth scan; the
-    // collect_list group is one (cfg, coefficient) slice of the training
-    // windows — bounded by the fit sample, which at extreme scale is
-    // itself a sample (the reference trains on disjoint windows for the
-    // same reason).
-    val edgesUdf = udf { (vals: Seq[Double]) =>
-      SFA.equiDepthEdges(vals.sorted.toArray, alphabetSize)
-    }
-    val binRows = orderline
+    // the collect_list group is one (cfg, coefficient) slice of the
+    // training windows — bounded by the fit sample, which at extreme
+    // scale is itself a sample (the reference trains on disjoint windows
+    // for the same reason)
+    val rows = train.crossJoin(cfgs)
+      .select(col("norm"), col("w"), explode(SFAOps.disjointCol(col("data"), col("w"),
+        lit(wordLength), col("norm"), lowerBounding = true, zNorm = true)).as("approx"))
+      .select(col("norm"), col("w"), posexplode(col("approx")).as(Seq("coef", "v")))
       .groupBy(col("norm"), col("w"), col("coef"))
-      .agg(edgesUdf(collect_list(col("v"))).as("edges"))
-      .groupBy(col("norm"), col("w"))
-      .agg(sort_array(collect_list(struct(col("coef"), col("edges")))).as("perCoef"))
+      .agg(SFAOps.edgesCol(collect_list(round(col("v"), 2)), alphabetSize, HistogramType.EquiDepth)
+        .as("edges"))
       .collect()
-
-    binRows.map { r =>
-      val norm = r.getBoolean(0)
-      val w = r.getInt(1)
-      val perCoef = r.getSeq[org.apache.spark.sql.Row](2)
-      val bins = Array.fill(wordLength)(Array.fill(alphabetSize - 1)(Double.MaxValue))
-      perCoef.foreach { pc => bins(pc.getInt(0)) = pc.getSeq[Double](1).toArray }
-      (norm, w) -> SFAModel(w, wordLength, alphabetSize, norm,
-        lowerBounding = true, applyZNorm = true, bins = bins)
-    }.toMap
+    SFAOps.binsByKey(rows, wordLength, alphabetSize)(r => (r.getBoolean(0), r.getInt(1)))
+      .map { case ((norm, w), bins) =>
+        (norm, w) -> SFAModel(w, wordLength, alphabetSize, norm,
+          lowerBounding = true, applyZNorm = true, bins = bins)
+      }
   }
 
-  /** Sliding packed words (at maxF symbols) for every config — one UDF
-    * pass per (series, cfg) via the MFT recurrence. Columns:
-    * (norm, w, id, label, offset, word).
+  /** Sliding packed words (at maxF symbols) for every config in one plan
+    * — [[SFAModel.transformWindowingWords]] as MFT (lowerBounding and
+    * window z-norm on) plus [[graft.sfa.expr.SfaWordExpr]] against the
+    * config's bins. Columns: (norm, w, id, label, offset, word).
     */
   def slidingWordsGrid(
       train: DataFrame,
       models: Map[(Boolean, Int), SFAModel],
       maxF: Int)(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(models)
-    val cfgs = models.keys.toSeq.toDF("norm", "w")
-    val wordsUdf = udf { (data: Seq[Double], norm: Boolean, w: Int) =>
-      bc.value((norm, w)).transformWindowingWords(data.toArray, maxF)
-    }
-    train.crossJoin(cfgs)
-      .select(col("norm"), col("w"), col("id"), col("label"),
-        posexplode(wordsUdf(col("data"), col("norm"), col("w"))).as(Seq("offset", "word")))
+    val usedBits = SFAOps.gridUsedBits(models.values)
+    val l = SFAOps.configValue(models.map { case (k, m) => k -> m.wordLength }, col("norm"), col("w"))
+    val edges = SFAOps.configValue(
+      models.map { case (k, m) => k -> SFAOps.wordEdges(m.bins, maxF, usedBits) }, col("norm"), col("w"))
+    train.crossJoin(models.keys.toSeq.toDF("norm", "w"))
+      .select(col("norm"), col("w"), col("id"), col("label"), col("data"), l.as("l"), edges.as("edges"))
+      .select(col("norm"), col("w"), col("id"), col("label"), col("edges"),
+        posexplode(SFAOps.mftCol(col("data"), col("w"), col("l"), col("norm"),
+          lowerBounding = true, applyZNorm = true)).as(Seq("offset", "approx")))
+      .select(col("norm"), col("w"), col("id"), col("label"), col("offset"),
+        SFAOps.wordCol(col("approx"), col("edges"), usedBits).as("word"))
   }
 
   /** Numerosity-reduced bags at feature length f: mask the packed word to

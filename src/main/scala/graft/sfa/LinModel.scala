@@ -2,7 +2,7 @@ package graft.sfa
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
+import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 
 /** The linear scoring stage behind WEASEL / MUSE (and therefore the
@@ -23,21 +23,15 @@ import org.apache.spark.ml.linalg.{Vector, Vectors}
   * sigmoids, and TEASER's one-class master consumes those vectors: the
   * sharper geometry made the cascade accept early (BASELINE.md § D2).
   * Post-hoc flattening of softmax margins was tried and rejected
-  * (worse on both axes); parity needs OvR-fitted *weights*.
-  *
-  * [[MultiLM]] (MLlib multinomial) is kept as a config escape hatch.
+  * (worse on both axes); parity needs OvR-fitted *weights*, so OvR is
+  * the only solver.
   */
 sealed trait LinModel extends Serializable {
 
   /** Adds `prediction` and `probability` (ml Vector) to a frame with a
-    * `features` vector column — the MLlib transformer contract, so call
-    * sites are solver-agnostic.
+    * `features` vector column — the MLlib transformer contract.
     */
   def transform(vecs: DataFrame): DataFrame
-}
-
-final case class MultiLM(m: LogisticRegressionModel) extends LinModel {
-  def transform(vecs: DataFrame): DataFrame = m.transform(vecs)
 }
 
 /** One-vs-rest binary L2 logistic models, scored liblinear-style.
@@ -111,10 +105,6 @@ final case class OvrLM(
 
 object LinModel {
 
-  /** Which solver a classifier config asks for. */
-  val Ovr = "ovr"
-  val Multinomial = "multinomial"
-
   /** Convergence tolerance of BOTH OvR paths — 1e-2, and this value is
     * LOAD-BEARING for reference parity, not a shortcut. Measured r5:
     * tightening it shifts the stopping point and with it the
@@ -151,23 +141,13 @@ object LinModel {
     .setFamily("binomial")
     .setTol(OvrTol)
 
-  /** Fit per the configured solver. `vecs` must carry (label, features)
-    * and should already be coalesced for small fits
-    * (Pipelines.fitParallelism).
+  /** Fit the OvR model, on the driver below [[LocalFitMaxRows]] samples.
+    * `vecs` must carry (label, features) and should already be coalesced
+    * for small fits (Pipelines.fitParallelism).
     */
-  def fit(solver: String, vecs: DataFrame, n: Long, maxIter: Int): LinModel =
-    solver match {
-      case Multinomial =>
-        MultiLM(new LogisticRegression()
-          .setMaxIter(maxIter).setRegParam(1.0 / n)
-          .setStandardization(false).setFitIntercept(true)
-          .setFamily("auto").setTol(1e-2)
-          .fit(vecs))
-      case Ovr =>
-        if (n <= LocalFitMaxRows) fitOvrLocal(vecs, n, maxIter)
-        else fitOvr(vecs, n, maxIter)
-      case other => throw new IllegalArgumentException(s"unknown solver: $other")
-    }
+  def fit(vecs: DataFrame, n: Long, maxIter: Int): LinModel =
+    if (n <= LocalFitMaxRows) fitOvrLocal(vecs, n, maxIter)
+    else fitOvr(vecs, n, maxIter)
 
   /** Below this many train samples an OvR fit collects the feature
     * vectors and solves on the driver. Rationale: every L-BFGS
@@ -278,34 +258,31 @@ object LinModel {
 
   // ---- persistence (ModelIO) -------------------------------------------
 
-  /** Save under `path`: MLlib's own writer for [[MultiLM]] (at
-    * `path/lr`), a one-row-per-class parquet for [[OvrLM]] (at
-    * `path/lr_ovr`). The loader dispatches on which child exists.
+  /** Save under `path/lr_ovr`: a one-row-per-class parquet of the
+    * [[OvrLM]] weights.
     */
-  def save(model: LinModel, path: String)(implicit spark: org.apache.spark.sql.SparkSession): Unit =
-    model match {
-      case MultiLM(m) => m.write.overwrite().save(s"$path/lr")
-      case OvrLM(labels, weights, intercepts) =>
-        import spark.implicits._
-        labels.indices.map { k =>
-          // K = 2 stores one weight row but both labels; pad with nulls
-          val w = if (k < weights.length) weights(k).toSeq else null
-          val b = if (k < intercepts.length) intercepts(k) else Double.NaN
-          (k, labels(k), w, b)
-        }.toDF("k", "label", "weights", "intercept")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/lr_ovr")
-    }
+  def save(model: LinModel, path: String)(implicit spark: org.apache.spark.sql.SparkSession): Unit = {
+    import spark.implicits._
+    val OvrLM(labels, weights, intercepts) = model
+    labels.indices.map { k =>
+      // K = 2 stores one weight row but both labels; pad with nulls
+      val w = if (k < weights.length) weights(k).toSeq else null
+      val b = if (k < intercepts.length) intercepts(k) else Double.NaN
+      (k, labels(k), w, b)
+    }.toDF("k", "label", "weights", "intercept")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/lr_ovr")
+  }
 
   def load(path: String)(implicit spark: org.apache.spark.sql.SparkSession): LinModel = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/lr_ovr"))) {
-      val rows = spark.read.parquet(s"$path/lr_ovr").collect().sortBy(_.getInt(0))
-      val labels = rows.map(_.getDouble(1))
-      val fitted = rows.filter(!_.isNullAt(2))
-      OvrLM(labels,
-        fitted.map(_.getSeq[Double](2).toArray),
-        fitted.map(_.getDouble(3)))
-    } else MultiLM(LogisticRegressionModel.load(s"$path/lr"))
+    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/lr_ovr")),
+      s"no linear model at $path: $path/lr_ovr is missing")
+    val rows = spark.read.parquet(s"$path/lr_ovr").collect().sortBy(_.getInt(0))
+    val labels = rows.map(_.getDouble(1))
+    val fitted = rows.filter(!_.isNullAt(2))
+    OvrLM(labels,
+      fitted.map(_.getSeq[Double](2).toArray),
+      fitted.map(_.getDouble(3)))
   }
 }

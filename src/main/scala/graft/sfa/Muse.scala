@@ -3,7 +3,7 @@ package graft.sfa
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.functions.vector_to_array
 
 /** WEASEL+MUSE — the multivariate WEASEL
   * (/root/reference/src/main/java/sfa/transformation/MUSE.java,
@@ -42,8 +42,6 @@ object Muse {
       folds: Int = 10,
       histTypes: Seq[HistogramType] = Seq(HistogramType.EquiDepth, HistogramType.EquiWidth),
       normalization: Seq[Boolean] = Seq(true, false),
-      // liblinear-parity OvR by default (see [[LinModel]])
-      solver: String = LinModel.Ovr,
       // L-BFGS iteration cap (see Weasel.Config.lrMaxIter): reduced
       // fixture fits cap it low; the default matches liblinear's
       // effectively-unbounded inner loop
@@ -68,8 +66,10 @@ object Muse {
   private val WIdxBits = 9
   private val WordBits = 12
 
-  /** Fit bins for every (norm, w, dim) of one histogram type in one
-    * aggregation pass (the MUSE fit is unsupervised — labels unused).
+  /** Fit bins for every (norm, w, dim) of one histogram type in one plan
+    * (unsupervised — labels unused): DFT of the raw disjoint windows (no
+    * window z-norm, lowerBounding off), the 2-decimal HALF_UP orderline
+    * and equi-width or equi-depth edges per (cfg, dim, coefficient).
     */
   def fitBinsGrid(
       series: DataFrame, // (id, dim, label, data)
@@ -80,64 +80,49 @@ object Muse {
       alphabetSize: Int)(implicit spark: SparkSession): Map[(Boolean, Int, Int), SFAModel] = {
     import spark.implicits._
     val cfgs = norms.flatMap(n => windows.map(w => (n, w))).toDF("norm", "w")
-    val disjointApprox = udf { (data: Seq[Double], w: Int, norm: Boolean) =>
-      val arr = data.toArray
-      // no z-norm of windows (APPLY_Z_NORM off); normMean only drops DC
-      val amount = arr.length / w
-      Array.tabulate(amount) { i =>
-        Fourier.transformWindow(arr, i * w, w, maxF, norm, lowerBounding = false)
-          .map(SFA.roundAt(_, 2))
-      }
-    }
-    val orderline = series.crossJoin(cfgs)
+    val edges = if (hist == HistogramType.EquiWidth) hist else HistogramType.EquiDepth
+    val rows = series.crossJoin(cfgs)
       .filter(size(col("data")) >= col("w"))
-      .select(col("norm"), col("w"), col("dim"),
-        explode(disjointApprox(col("data"), col("w"), col("norm"))).as("approx"))
+      .select(col("norm"), col("w"), col("dim"), explode(SFAOps.disjointCol(col("data"), col("w"),
+        lit(maxF), col("norm"), lowerBounding = false, zNorm = false)).as("approx"))
       .select(col("norm"), col("w"), col("dim"), posexplode(col("approx")).as(Seq("coef", "v")))
-    val edgesUdf = udf { (vals: Seq[Double]) =>
-      val sorted = vals.sorted.toArray
-      hist match {
-        case HistogramType.EquiWidth => SFA.equiWidthEdges(sorted, alphabetSize)
-        case _                       => SFA.equiDepthEdges(sorted, alphabetSize)
-      }
-    }
-    orderline
       .groupBy("norm", "w", "dim", "coef")
-      .agg(edgesUdf(collect_list(col("v"))).as("edges"))
-      .groupBy("norm", "w", "dim")
-      .agg(sort_array(collect_list(struct(col("coef"), col("edges")))).as("perCoef"))
+      .agg(SFAOps.edgesCol(collect_list(round(col("v"), 2)), alphabetSize, edges).as("edges"))
       .collect()
-      .map { r =>
-        val bins = Array.fill(maxF)(Array.fill(alphabetSize - 1)(Double.MaxValue))
-        r.getSeq[org.apache.spark.sql.Row](3).foreach { pc =>
-          bins(pc.getInt(0)) = pc.getSeq[Double](1).toArray
-        }
-        (r.getBoolean(0), r.getInt(1), r.getInt(2)) ->
-          SFAModel(r.getInt(1), maxF, alphabetSize, r.getBoolean(0),
-            lowerBounding = false, applyZNorm = false, bins = bins)
-      }.toMap
+    SFAOps.binsByKey(rows, maxF, alphabetSize)(r => (r.getBoolean(0), r.getInt(1), r.getInt(2)))
+      .map { case (k @ (norm, w, _), bins) =>
+        k -> SFAModel(w, maxF, alphabetSize, norm, lowerBounding = false, applyZNorm = false, bins = bins)
+      }
   }
 
-  /** Sliding packed words per (norm, w, dim, id, offset). */
+  /** Sliding packed words per (norm, w, dim, id, offset) in one plan —
+    * [[SFAModel.transformWindowingWords]] as MFT (no z-norm, lowerBounding
+    * off) plus [[graft.sfa.expr.SfaWordExpr]]; a (norm, w, dim) without a
+    * model yields no words.
+    */
   def wordsGrid(
       series: DataFrame,
       models: Map[(Boolean, Int, Int), SFAModel],
       windowIdx: Map[Int, Int],
       maxF: Int)(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(models)
+    val usedBits = SFAOps.gridUsedBits(models.values)
+    val key = Seq(col("norm"), col("w"), col("dim"))
+    val l = SFAOps.configValue(models.map { case (k, m) => k -> m.wordLength }, key: _*)
+    val edges = SFAOps.configValue(
+      models.map { case (k, m) => k -> SFAOps.wordEdges(m.bins, maxF, usedBits) }, key: _*)
     val cfgs = models.keys.map { case (n, w, _) => (n, w, windowIdx(w)) }.toSeq.distinct
       .toDF("norm", "w", "w_idx")
-    val wordsUdf = udf { (data: Seq[Double], norm: Boolean, w: Int, dim: Int) =>
-      bc.value.get((norm, w, dim))
-        .map(_.transformWindowingWords(data.toArray, maxF))
-        .getOrElse(Array.empty[Long])
-    }
     series.crossJoin(cfgs)
       .filter(size(col("data")) >= col("w"))
+      .select(col("norm"), col("w"), col("w_idx"), col("dim"), col("id"), col("label"), col("data"),
+        l.as("l"), edges.as("edges"))
+      .filter(col("edges").isNotNull)
+      .select(col("norm"), col("w"), col("w_idx"), col("dim"), col("id"), col("label"), col("edges"),
+        posexplode(SFAOps.mftCol(col("data"), col("w"), col("l"), col("norm"),
+          lowerBounding = false, applyZNorm = false)).as(Seq("offset", "approx")))
       .select(col("norm"), col("w"), col("w_idx"), col("dim"), col("id"), col("label"),
-        posexplode(wordsUdf(col("data"), col("norm"), col("w"), col("dim")))
-          .as(Seq("offset", "word")))
+        col("offset"), SFAOps.wordCol(col("approx"), col("edges"), usedBits).as("word"))
   }
 
   /** MUSE bag keys at word length f: unigrams always, bigrams when the
@@ -176,7 +161,7 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
   private val usedBits = Words.binlog(cfg.alphabetSize)
 
   private def fitLin(vecs: DataFrame, n: Long): LinModel =
-    LinModel.fit(cfg.solver, vecs, n, maxIter = cfg.lrMaxIter)
+    LinModel.fit(vecs, n, maxIter = cfg.lrMaxIter)
 
   private def chiFilter(b: DataFrame, nSamples: Long): DataFrame = {
     val presence = b.filter(col("cnt") > 0)
@@ -196,34 +181,6 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
       .select("norm", "f", "key")
   }
 
-  /** `samples` (id, label) = the complete sample set: a sample sharing
-    * no selected feature still gets an all-zero vector (LR intercept
-    * path) — the reference scores every sample.
-    */
-  private def vectorsOf(
-      b: DataFrame,
-      dict: DataFrame,
-      dims: Map[(Boolean, Int), Int],
-      samples: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    val dimsB = spark.sparkContext.broadcast(dims)
-    val toVec = udf { (norm: Boolean, f: Int, idx: Seq[Int], cnt: Seq[Long]) =>
-      val dim = dimsB.value((norm, f)) + 1
-      if (idx == null) Vectors.sparse(dim, Array.empty[Int], Array.empty[Double])
-      else {
-        val pairs = idx.zip(cnt.map(_.toDouble)).sortBy(_._1)
-        Vectors.sparse(dim, pairs.map(_._1).toArray, pairs.map(_._2).toArray)
-      }
-    }
-    samples.select(col("id"), col("label")).distinct()
-      .crossJoin(b.select("norm", "f").distinct())
-      .join(b.join(dict, Seq("norm", "f", "key"))
-        .groupBy("norm", "f", "id", "label")
-        .agg(collect_list(col("dict_idx")).as("idx"), collect_list(col("cnt")).as("cnt")),
-        Seq("norm", "f", "id", "label"), "left")
-      .select(col("norm"), col("f"), col("id"), col("label"),
-        toVec(col("norm"), col("f"), col("idx"), col("cnt")).as("features"))
-  }
-
   def fit(train: DataFrame)(implicit spark: SparkSession): MuseModel = {
     val (model, vecs) = fitCore(train)
     vecs.unpersist()
@@ -236,10 +193,9 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
     */
   private[sfa] def fitWithProba(train: DataFrame)(implicit spark: SparkSession): (MuseModel, DataFrame) = {
     val (model, vecs) = fitCore(train)
-    val vecToArr = udf { v: org.apache.spark.ml.linalg.Vector => v.toArray }
     val proba = model.lr.transform(vecs)
       .select(col("id"), col("label"), col("prediction").as("pred"),
-        vecToArr(col("probability")).as("probs"))
+        vector_to_array(col("probability")).as("probs"))
       .localCheckpoint(true)
     vecs.unpersist()
     (model, proba)
@@ -295,7 +251,7 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
           .map(r => (r.getBoolean(0), r.getInt(1)) -> r.getInt(2)).toMap
         if (dims.nonEmpty) {
           // coalesce before the iterative LR fits: see Pipelines.fitParallelism
-          val vecs = vectorsOf(b, dict, dims, train).join(folds, "id")
+          val vecs = Weasel.vectors(b, dict, dims, train).join(folds, "id")
             .coalesce(graft.util.Pipelines.fitParallelism(n)).cache()
           val correct = (0 until cfg.folds).map { k =>
             val tr = vecs.filter(col("fold") =!= k)
@@ -323,7 +279,7 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
     val dict = sel.withColumn("dict_idx", row_number().over(byKey)).cache()
     val dims = dict.groupBy("norm", "f").agg(max("dict_idx").as("d")).collect()
       .map(r => (r.getBoolean(0), r.getInt(1)) -> r.getInt(2)).toMap
-    val vecs = vectorsOf(fb, dict, dims, train)
+    val vecs = Weasel.vectors(fb, dict, dims, train)
       .coalesce(graft.util.Pipelines.fitParallelism(n)).cache()
     val lr = fitLin(vecs, n)
     // single-candidate path skipped CV: trainCorrect = final-model score
@@ -347,12 +303,10 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
     * cascade ([[MteaserClassifier]]). `probs` follows MLlib's
     * class-index order (labels are class ids).
     */
-  def predictProba(model: MuseModel, test: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    val vecToArr = udf { v: org.apache.spark.ml.linalg.Vector => v.toArray }
+  def predictProba(model: MuseModel, test: DataFrame)(implicit spark: SparkSession): DataFrame =
     predictFull(model, test)
       .select(col("id"), col("label"), col("prediction").as("pred"),
-        vecToArr(col("probability")).as("probs"))
-  }
+        vector_to_array(col("probability")).as("probs"))
 
   private def predictFull(model: MuseModel, test: DataFrame)(implicit spark: SparkSession): DataFrame = {
     // the w_idx mapping and the bigram maxWindow toggle MUST come from
@@ -364,23 +318,10 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
     val models = model.quantizers.map { case ((w, d), m) => (model.norm, w, d) -> m }
     val words = wordsGrid(test, models, wIdx, cfg.maxF)
     val b = bags(words, model.features, usedBits, allWindows.max, cfg)
-    val dim = model.dictSize + 1
-    val toVec = udf { (idx: Seq[Int], cnt: Seq[Long]) =>
-      if (idx == null) Vectors.sparse(dim, Array.empty[Int], Array.empty[Double])
-      else {
-        val pairs = idx.zip(cnt.map(_.toDouble)).sortBy(_._1)
-        Vectors.sparse(dim, pairs.map(_._1).toArray, pairs.map(_._2).toArray)
-      }
-    }
-    // left-join from ALL test samples: zero-feature samples still get an
+    // vectors from ALL test samples: zero-feature samples still get an
     // LR prediction via the intercept (reference behavior)
-    val vecs = test.select(col("id"), col("label")).distinct()
-      .join(b.join(broadcast(model.selected), Seq("key"))
-        .groupBy("id", "label")
-        .agg(collect_list(col("dict_idx")).as("idx"), collect_list(col("cnt")).as("cnt")),
-        Seq("id", "label"), "left")
-      .select(col("id"), col("label"), toVec(col("idx"), col("cnt")).as("features"))
-    model.lr.transform(vecs)
+    model.lr.transform(Weasel.predictVectors(b, model.selected, model.norm, model.features,
+      model.dictSize, test))
   }
 
   def eval(train: DataFrame, test: DataFrame)(implicit spark: SparkSession): (MuseModel, Double) = {

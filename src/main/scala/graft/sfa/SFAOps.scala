@@ -3,10 +3,13 @@ package graft.sfa
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.reflect.runtime.universe.TypeTag
 
 /** Distributed SFA operators over an event-log table — the single-config
-  * query surface registered in SparkEntry (the grid/ensemble form lives
-  * in [[Boss]]).
+  * query surface registered in SparkEntry — and the column builders of
+  * the one SFA word pipeline (native DFT, edge-fit and word expressions)
+  * that these queries and the [[Boss]], [[BossVS]], [[Weasel]] and
+  * [[Muse]] grids share.
   *
   * Series model: `events(user_id, ts, event_id, value)` → one series per
   * user ordered by (ts, event_id). The per-series array is bounded by
@@ -23,32 +26,31 @@ object SFAOps {
         .as("pts"))
       .select(col("user_id"), expr("transform(pts, p -> p.value)").as("data"))
 
-  /** THE per-series disjoint-window kernel — z-norm rule and DFT call in
-    * ONE place, shared by the fixed-w UDF ([[disjointApprox]]) and the
-    * grid UDF ([[windowGridBags]], window length as data) so the two
-    * paths cannot silently diverge under a future fix.
+  /** THE per-series disjoint-window kernel behind
+    * [[graft.sfa.expr.DisjointDftExpr]]: `zNorm` z-norms each complete
+    * window first (σ-division only when !normMean; MUSE transforms the
+    * raw windows), then the single-window DFT.
     */
-  private[sfa] def disjointKernel(
-      data: Seq[Double], w: Int, l: Int, normMean: Boolean): Array[Array[Double]] =
-    disjointKernelArr(data.toArray, w, l, normMean)
-
   private[sfa] def disjointKernelArr(
-      arr: Array[Double], w: Int, l: Int, normMean: Boolean): Array[Array[Double]] =
-    SFA.disjointWindows(arr, w, normMean).map { win =>
-      Fourier.transformWindow(win, 0, w, l, normMean, lowerBounding = true)
-    }
+      arr: Array[Double], w: Int, l: Int, normMean: Boolean,
+      lowerBounding: Boolean, zNorm: Boolean): Array[Array[Double]] =
+    if (zNorm)
+      SFA.disjointWindows(arr, w, normMean).map { win =>
+        Fourier.transformWindow(win, 0, w, l, normMean, lowerBounding)
+      }
+    else
+      Array.tabulate(arr.length / w) { i =>
+        Fourier.transformWindow(arr, i * w, w, l, normMean, lowerBounding)
+      }
 
   /** THE per-series sliding-window kernel (direct per-window DFT with
-    * per-window 1/σ scaling, σ=0 guarded to 1) — shared by
-    * [[slidingApproxDirect]], [[slidingApproxArrays]] and the grid UDF
-    * in [[windowGridBags]]. Series shorter than the window yield no
-    * rows (callers additionally exclude them at DataFrame level, where
-    * the SQL oracle models the exclusion).
+    * per-window 1/σ scaling, σ=0 guarded to 1) — behind
+    * [[graft.sfa.expr.SlidingDftExpr]], shared by
+    * [[slidingApproxDirect]], [[slidingApproxArrays]] and
+    * [[windowGridBags]]. Series shorter than the window yield no rows
+    * (callers additionally exclude them at DataFrame level, where the
+    * SQL oracle models the exclusion).
     */
-  private[sfa] def slidingKernel(
-      data: Seq[Double], w: Int, l: Int, normMean: Boolean): Array[Array[Double]] =
-    slidingKernelArr(data.toArray, w, l, normMean)
-
   private[sfa] def slidingKernelArr(
       arr: Array[Double], w: Int, l: Int, normMean: Boolean): Array[Array[Double]] =
     if (arr.length < w) Array.empty
@@ -61,45 +63,93 @@ object SFAOps {
       }
     }
 
+  // ---- the shared SFA word pipeline as native expressions -------------
+  // Every quantizer fit and word stage — the queries below and the BOSS,
+  // BOSS VS, WEASEL and MUSE grids — builds its columns here. The window
+  // length, value count and norm are columns (a grid carries (norm, w)
+  // as data), the transform variant is a plan literal.
+
+  import org.apache.spark.sql.graft.Bridge
+
+  /** Disjoint-window approximations, one array per complete window
+    * ([[graft.sfa.expr.DisjointDftExpr]]).
+    */
+  def disjointCol(data: Column, w: Column, l: Column, normMean: Column,
+      lowerBounding: Boolean, zNorm: Boolean): Column =
+    Bridge.column(graft.sfa.expr.DisjointDftExpr(Bridge.expression(data),
+      Bridge.expression(w.cast("int")), Bridge.expression(l), Bridge.expression(normMean),
+      lowerBounding, zNorm))
+
+  /** Sliding direct-DFT approximations ([[graft.sfa.expr.SlidingDftExpr]]). */
+  def slidingCol(data: Column, w: Column, l: Column, normMean: Column): Column =
+    Bridge.column(graft.sfa.expr.SlidingDftExpr(Bridge.expression(data),
+      Bridge.expression(w.cast("int")), Bridge.expression(l), Bridge.expression(normMean)))
+
+  /** Sliding MFT approximations ([[graft.sfa.expr.MftDftExpr]]). */
+  def mftCol(data: Column, w: Column, l: Column, normMean: Column,
+      lowerBounding: Boolean, applyZNorm: Boolean): Column =
+    Bridge.column(graft.sfa.expr.MftDftExpr(Bridge.expression(data),
+      Bridge.expression(w.cast("int")), Bridge.expression(l), Bridge.expression(normMean),
+      lowerBounding, applyZNorm))
+
+  /** Bin edges of a collected orderline ([[graft.sfa.expr.SfaEdgesExpr]]):
+    * the kernel's full `alphabetSize − 1` edges, +∞ placeholders kept.
+    */
+  def edgesCol(orderline: Column, alphabetSize: Int, histogram: HistogramType): Column =
+    Bridge.column(graft.sfa.expr.SfaEdgesExpr(Bridge.expression(orderline), alphabetSize, histogram))
+
+  /** Packed word of one window ([[graft.sfa.expr.SfaWordExpr]]). */
+  def wordCol(approx: Column, edges: Column, usedBits: Int): Column =
+    Bridge.column(graft.sfa.expr.SfaWordExpr(Bridge.expression(approx), Bridge.expression(edges), usedBits))
+
+  /** The approximation at the given coefficients, in their order
+    * ([[graft.sfa.expr.SelectCoefsExpr]]).
+    */
+  def selectCoefsCol(approx: Column, coefs: Column): Column =
+    Bridge.column(graft.sfa.expr.SelectCoefsExpr(Bridge.expression(approx), Bridge.expression(coefs)))
+
+  /** The edges rows [[wordCol]] needs to pack `features` symbols from a
+    * bins matrix: [[Words.createWord]] packs at most `features` and
+    * `60 / usedBits` symbols, and a coefficient without an edges row
+    * packs as 0.
+    */
+  def wordEdges(bins: Array[Array[Double]], features: Int, usedBits: Int): Seq[Seq[Double]] =
+    bins.take(math.min(features, 60 / usedBits)).map(_.toSeq).toSeq
+
+  /** A grid's per-config values (bins, value counts) as ONE plan literal
+    * looked up by the config's key columns (null for a missing key); the
+    * grids select it once per (series, config) row, before the generator.
+    * Carried in the cross-joined config table instead, the bins would
+    * inflate Catalyst's product size estimate and turn downstream
+    * broadcast joins into sort-merge joins.
+    */
+  def configValue[K: TypeTag, V: TypeTag](values: Map[K, V], key: Column*): Column =
+    try_element_at(typedlit(values),
+      struct(key.zipWithIndex.map { case (c, i) => c.as(s"_${i + 1}") }: _*))
+
+  /** The one symbol width of a grid's models (no models: no words). */
+  private[sfa] def gridUsedBits(models: Iterable[SFAModel]): Int = {
+    val bits = models.map(_.usedBits).toSet
+    require(bits.size <= 1, s"one alphabet per word grid, got usedBits $bits")
+    bits.headOption.getOrElse(1)
+  }
+
+  /** Collected `(key…, coef, edges)` fit rows → one bins matrix per key;
+    * a coefficient without a row keeps its +∞ placeholders.
+    */
+  private[sfa] def binsByKey[K](rows: Array[org.apache.spark.sql.Row], wordLength: Int,
+      alphabetSize: Int)(key: org.apache.spark.sql.Row => K): Map[K, Array[Array[Double]]] =
+    rows.groupBy(key).map { case (k, rs) =>
+      val bins = Array.fill(wordLength)(Array.fill(alphabetSize - 1)(Double.MaxValue))
+      rs.foreach(r => bins(r.getInt(r.length - 2)) = r.getSeq[Double](r.length - 1).toArray)
+      k -> bins
+    }
+
   /** Disjoint-window Fourier approximations (the quantizer-fit input):
     * z-norm each complete window (σ-division only when !normMean), direct
     * DFT, keep `l` values. Output: (user_id, win, coef, v) with `v`
     * unrounded (rounding is applied by callers per use).
     */
-  /** Stable UDF instances per parameter tuple: Catalyst canonicalizes a
-    * ScalaUDF by its function REFERENCE, so a `udf {}` closure built per
-    * call makes otherwise-identical plans compare unequal — every re-run
-    * of a query whose stages are persisted (`tracked`/`cachedDF`) missed
-    * the CacheManager entry and re-ran the whole word pipeline. One
-    * instance per (kernel, params) makes re-runs plan-identical; entries
-    * are bounded by the distinct parameter tuples a process uses.
-    * (The DFT kernels themselves moved to native expressions —
-    * [[graft.sfa.expr.SlidingDftExpr]] and friends — which canonicalize
-    * structurally; the memo remains for the one remaining UDF, the
-    * equi-depth edge fit.)
-    */
-  private val udfMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Any), org.apache.spark.sql.expressions.UserDefinedFunction]
-  private def memoUdf(kernel: String, params: Any)(
-      build: => org.apache.spark.sql.expressions.UserDefinedFunction) =
-    udfMemo.getOrElseUpdate((kernel, params), build)
-
-  /** The per-series DFT stages as native codegen expressions: one
-    * primitive-array copy in, UnsafeArrayData windows out — no boxed
-    * Seq round-trip per series row (the engine's hottest boundary).
-    */
-  private def disjointCol(data: Column, w: Column, l: Int, normMean: Boolean): Column = {
-    import org.apache.spark.sql.graft.Bridge
-    Bridge.column(graft.sfa.expr.DisjointDftExpr(
-      Bridge.expression(data), Bridge.expression(w.cast("int")), l, normMean))
-  }
-
-  private def slidingCol(data: Column, w: Column, l: Int, normMean: Boolean): Column = {
-    import org.apache.spark.sql.graft.Bridge
-    Bridge.column(graft.sfa.expr.SlidingDftExpr(
-      Bridge.expression(data), Bridge.expression(w.cast("int")), l, normMean))
-  }
-
   def disjointApprox(
       series: DataFrame,
       windowSize: Int,
@@ -108,8 +158,8 @@ object SFAOps {
       extraKeys: Seq[String] = Nil): DataFrame = {
     val keep = (extraKeys :+ "user_id").map(col)
     series
-      .select(keep :+ posexplode(
-        disjointCol(col("data"), lit(windowSize), l, normMean)).as(Seq("win", "approx")): _*)
+      .select(keep :+ posexplode(disjointCol(col("data"), lit(windowSize), lit(l), lit(normMean),
+        lowerBounding = true, zNorm = true)).as(Seq("win", "approx")): _*)
       .select(keep ++ Seq(col("win"), posexplode(col("approx")).as(Seq("coef", "v"))): _*)
   }
 
@@ -124,19 +174,13 @@ object SFAOps {
     * in the SAME grouped aggregate — one plan, no per-config driver loop.
     */
   def equiDepthBins(approx: DataFrame, alphabetSize: Int, extraKeys: Seq[String] = Nil): DataFrame = {
-    val edgesUdf = memoUdf("equiDepthEdges", alphabetSize) {
-      udf { (vals: Seq[Double]) =>
-        SFA.equiDepthEdges(vals.sorted.toArray, alphabetSize)
-          .zipWithIndex.collect { case (e, p) if e != Double.MaxValue => (p, e) }
-      }
-    }
     val keys = (extraKeys :+ "coef").map(col)
     approx
       .select(keys :+ graft.util.Rnd.jround(col("v"), 2).as("v2"): _*)
       .groupBy(keys: _*)
-      .agg(edgesUdf(collect_list(col("v2"))).as("edges"))
-      .select(keys :+ explode(col("edges")).as("pe"): _*)
-      .select(keys :+ col("pe._1").as("pos") :+ col("pe._2").as("edge"): _*)
+      .agg(edgesCol(collect_list(col("v2")), alphabetSize, HistogramType.EquiDepth).as("edges"))
+      .select(keys :+ posexplode(col("edges")).as(Seq("pos", "edge")): _*)
+      .filter(col("edge") =!= Double.MaxValue)
   }
 
   /** Collect (coef, pos, edge) rows into a bins matrix. */
@@ -198,8 +242,8 @@ object SFAOps {
     val keep = (extraKeys :+ "user_id").map(col)
     series
       .filter(size(col("data")) >= windowSize)
-      .select(keep :+ posexplode(
-        slidingCol(col("data"), lit(windowSize), l, normMean)).as(Seq("win", "approx")): _*)
+      .select(keep :+ posexplode(slidingCol(col("data"), lit(windowSize), lit(l), lit(normMean)))
+        .as(Seq("win", "approx")): _*)
       .select(keep ++ Seq(col("win"), posexplode(col("approx")).as(Seq("coef", "v"))): _*)
   }
 
@@ -214,8 +258,8 @@ object SFAOps {
       normMean: Boolean): DataFrame =
     series
       .filter(size(col("data")) >= windowSize)
-      .select(col("user_id"), posexplode(
-        slidingCol(col("data"), lit(windowSize), l, normMean)).as(Seq("win", "approx")))
+      .select(col("user_id"), posexplode(slidingCol(col("data"), lit(windowSize), lit(l), lit(normMean)))
+        .as(Seq("win", "approx")))
 
   /** Fused quantize + pack via the native codegen expression
     * [[graft.sfa.expr.SfaWordExpr]]: one pass per window row, bins as a
@@ -227,18 +271,14 @@ object SFAOps {
       approxArrays: DataFrame,
       bins: Array[Array[Double]],
       usedBits: Int): DataFrame = {
-    import org.apache.spark.sql.graft.Bridge
     // a coefficient with ≥ 2^usedBits−1 assigned edges would overflow its
     // bit field and the OR-pack would corrupt neighboring symbols — the
     // grouped packWords caps structurally; the fused form must check
     require(bins.forall(_.count(_ != Double.MaxValue) <= (1 << usedBits) - 1),
       s"bin edges exceed symbol capacity for usedBits=$usedBits")
     val edges: Seq[Seq[Double]] = bins.map(_.filter(_ != Double.MaxValue).toSeq).toSeq
-    val wordExpr = graft.sfa.expr.SfaWordExpr(
-      Bridge.expression(col("approx")),
-      Bridge.expression(typedlit(edges)),
-      usedBits)
-    approxArrays.select(col("user_id"), col("win"), Bridge.column(wordExpr).as("word"))
+    approxArrays.select(col("user_id"), col("win"),
+      wordCol(col("approx"), typedlit(edges), usedBits).as("word"))
   }
 
   /** Sliding approximations via the MFT recurrence (the scale path). */
@@ -247,11 +287,10 @@ object SFAOps {
       windowSize: Int,
       l: Int,
       normMean: Boolean): DataFrame = {
-    import org.apache.spark.sql.graft.Bridge
-    val mftCol = Bridge.column(graft.sfa.expr.MftDftExpr(
-      Bridge.expression(col("data")), windowSize, l, normMean))
+    val mft = mftCol(col("data"), lit(windowSize), lit(l), lit(normMean),
+      lowerBounding = true, applyZNorm = true)
     series
-      .select(col("user_id"), posexplode(mftCol).as(Seq("win", "approx")))
+      .select(col("user_id"), posexplode(mft).as(Seq("win", "approx")))
       .select(col("user_id"), col("win"), posexplode(col("approx")).as(Seq("coef", "v")))
   }
 
@@ -265,8 +304,8 @@ object SFAOps {
     * The grid fan-out is `explode(array(w…))` on the SOURCE — one series
     * scan per pipeline stage for ANY grid size, not one per window: on
     * an uncached 100 TB corpus a 64-point grid must not read the fact
-    * table 64 times. The window length reaches the transforms as a UDF
-    * ARGUMENT, so the grid points appear in the plan only as one array
+    * table 64 times. The window length reaches the transforms as an
+    * expression CHILD, so the grid points appear in the plan only as one array
     * literal — plan size and compile time are grid-size-independent too
     * (GridPlanSpec pins both the scan-count and shuffle-count
     * invariance, at 2 vs 64 points).
@@ -284,8 +323,8 @@ object SFAOps {
     // the per-w form, so parity is by construction
     val disjoint = fanned
       .select(col("w"), col("user_id"),
-        posexplode(disjointCol(col("data"), col("w"), l, normMean = false))
-          .as(Seq("win", "approx")))
+        posexplode(disjointCol(col("data"), col("w"), lit(l), lit(false),
+          lowerBounding = true, zNorm = true)).as(Seq("win", "approx")))
       .select(col("w"), col("user_id"), col("win"),
         posexplode(col("approx")).as(Seq("coef", "v")))
     val bins = equiDepthBins(disjoint, alphabetSize, Seq("w"))
@@ -294,7 +333,7 @@ object SFAOps {
     val sliding = fanned
       .filter(size(col("data")) >= col("w"))
       .select(col("w"), col("user_id"),
-        posexplode(slidingCol(col("data"), col("w"), l, normMean = false))
+        posexplode(slidingCol(col("data"), col("w"), lit(l), lit(false)))
           .as(Seq("win", "approx")))
       .select(col("w"), col("user_id"), col("win"),
         posexplode(col("approx")).as(Seq("coef", "v")))

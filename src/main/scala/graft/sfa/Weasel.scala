@@ -3,6 +3,7 @@ package graft.sfa
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.Vectors
 
 /** WEASEL — Word ExtrAction for time SEries cLassification, Spark-first.
@@ -49,10 +50,7 @@ object Weasel {
       // so reduced-config fixture fits (artifact shape only, no
       // accuracy claim — e.g. the s9 round-trip) cap it low to avoid
       // paying ~100 job rounds on a 30-series fixture
-      lrMaxIter: Int = 100,
-      // liblinear-parity OvR by default (see [[LinModel]]); the
-      // multinomial MLlib path remains available as an escape hatch
-      solver: String = LinModel.Ovr)
+      lrMaxIter: Int = 100)
 
   /** Per-(norm, w) supervised quantizer: F-ranked coefficient indices +
     * info-gain bins at those indices.
@@ -142,8 +140,9 @@ object Weasel {
   }
 
   /** Fit every (norm, windowLength) supervised quantizer in two passes:
-    * full-length disjoint spectra → ANOVA-F top-maxF coefficients →
-    * info-gain bins at the selected coefficients.
+    * full-length spectra of z-normed disjoint windows (lowerBounding off)
+    * → ANOVA-F top-maxF coefficients → information-gain edges of the
+    * (jround(v, 2), label) orderline at the selected coefficients.
     */
   def fitQuantizersGrid(
       train: DataFrame,
@@ -153,16 +152,9 @@ object Weasel {
     import spark.implicits._
     val cfgs = norms.flatMap(n => windows.map(w => (n, w))).toDF("norm", "w")
 
-    // full-length spectra of z-normed disjoint windows (l = windowSize)
-    val spectraUdf = udf { (data: Seq[Double], w: Int, norm: Boolean) =>
-      val arr = data.toArray
-      SFA.disjointWindows(arr, w, norm).map { win =>
-        Fourier.transformWindow(win, 0, w, w + (w % 2), norm, lowerBounding = false)
-      }
-    }
     val approx = train.crossJoin(cfgs)
-      .select(col("norm"), col("w"), col("label"),
-        explode(spectraUdf(col("data"), col("w"), col("norm"))).as("sp"))
+      .select(col("norm"), col("w"), col("label"), explode(SFAOps.disjointCol(col("data"), col("w"),
+        col("w") + col("w") % 2, col("norm"), lowerBounding = false, zNorm = true)).as("sp"))
       .select(col("norm"), col("w"), col("label"), posexplode(col("sp")).as(Seq("coef", "v")))
       .cache()
 
@@ -176,16 +168,13 @@ object Weasel {
       .select("norm", "w", "coef", "rk")
 
     // info-gain bins only at selected coefficients
-    val edgesUdf = udf { (pairs: Seq[org.apache.spark.sql.Row]) =>
-      val sorted = pairs.map(r => (r.getDouble(0), r.getDouble(1))).sortBy(identity).toArray
-      SFA.infoGainEdges(sorted, cfg.alphabetSize)
-    }
     val binRows = approx
       .join(best.select("norm", "w", "coef"), Seq("norm", "w", "coef"))
       .select(col("norm"), col("w"), col("coef"),
         struct(graft.util.Rnd.jround(col("v"), 2).as("v2"), col("label")).as("vl"))
       .groupBy("norm", "w", "coef")
-      .agg(edgesUdf(collect_list(col("vl"))).as("edges"))
+      .agg(SFAOps.edgesCol(collect_list(col("vl")), cfg.alphabetSize, HistogramType.InformationGain)
+        .as("edges"))
 
     val bestRows = best.collect()
     val binMap = binRows.collect()
@@ -204,9 +193,10 @@ object Weasel {
     }
   }
 
-  /** Sliding packed words for every config: (norm, w, w_idx, id, label,
-    * offset, word). `w_idx` is the window's index in the length grid —
-    * part of the unigram key.
+  /** Sliding packed words for every config in one plan — [[SupervisedModel.words]]
+    * as MFT (lowerBounding off), F-ranked coefficient selection and
+    * [[graft.sfa.expr.SfaWordExpr]]. Columns: (norm, w, w_idx, id, label,
+    * offset, word); `w_idx` is the window's index in the length grid.
     */
   def wordsGrid(
       data: DataFrame,
@@ -214,16 +204,21 @@ object Weasel {
       windowIdx: Map[Int, Int],
       usedBits: Int)(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(models)
+    def byCfg[V: scala.reflect.runtime.universe.TypeTag](f: SupervisedModel => V) =
+      SFAOps.configValue(models.map { case (k, q) => k -> f(q) }, col("norm"), col("w"))
     val cfgs = models.keys.toSeq.map { case (n, w) => (n, w, windowIdx(w)) }
       .toDF("norm", "w", "w_idx")
-    val wordsUdf = udf { (d: Seq[Double], norm: Boolean, w: Int) =>
-      bc.value((norm, w)).words(d.toArray, usedBits)
-    }
     data.crossJoin(cfgs)
       .filter(size(col("data")) >= col("w"))
-      .select(col("norm"), col("w"), col("w_idx"), col("id"), col("label"),
-        posexplode(wordsUdf(col("data"), col("norm"), col("w"))).as(Seq("offset", "word")))
+      .select(col("norm"), col("w"), col("w_idx"), col("id"), col("label"), col("data"),
+        byCfg(q => math.max(q.maxWordLength, 2)).as("l"), byCfg(_.bestValues.toSeq).as("coefs"),
+        byCfg(q => SFAOps.wordEdges(q.bestValues.map(q.bins), q.bestValues.length, usedBits)).as("edges"))
+      .select(col("norm"), col("w"), col("w_idx"), col("id"), col("label"), col("coefs"), col("edges"),
+        posexplode(SFAOps.mftCol(col("data"), col("w"), col("l"), col("norm"),
+          lowerBounding = false, applyZNorm = true)).as(Seq("offset", "approx")))
+      .select(col("norm"), col("w"), col("w_idx"), col("id"), col("label"), col("offset"),
+        SFAOps.wordCol(SFAOps.selectCoefsCol(col("approx"), col("coefs")), col("edges"), usedBits)
+          .as("word"))
   }
 
   /** Bit width of the window-index field in unigram keys:
@@ -309,7 +304,11 @@ object Weasel {
   }
 
   /** Assemble MLlib sparse vectors per sample from dictionary-indexed
-    * counts. Output: (norm, f, id, label, features VECTOR).
+    * counts — the one vector helper of WEASEL and MUSE, fit and predict.
+    * `bags` (norm, f, id, label, key, cnt) join `dict` (norm, f, key,
+    * dict_idx); `dims` gives each (norm, f) its largest dict_idx.
+    * Output: (norm, f, id, label, features VECTOR) for every sample of
+    * every (norm, f) in `dims`.
     *
     * `samples` (id, label) is the complete sample set: a sample sharing
     * NO selected feature still gets an all-zero vector — the reference
@@ -321,28 +320,40 @@ object Weasel {
       bags: DataFrame,
       dict: DataFrame,
       dims: Map[(Boolean, Int), Int],
-      samples: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val joined = bags.join(dict, Seq("norm", "f", "key"))
-      .select(col("norm"), col("f"), col("id"), col("label"),
-        col("dict_idx"), col("cnt"))
-    val dimsB = spark.sparkContext.broadcast(dims)
-    val toVec = udf { (norm: Boolean, f: Int, idx: Seq[Int], cnt: Seq[Long]) =>
-      val dim = dimsB.value((norm, f)) + 1
-      if (idx == null) Vectors.sparse(dim, Array.empty[Int], Array.empty[Double])
-      else {
-        val pairs = idx.zip(cnt.map(_.toDouble)).sortBy(_._1)
-        Vectors.sparse(dim, pairs.map(_._1).toArray, pairs.map(_._2).toArray)
-      }
-    }
-    val base = samples.select(col("id"), col("label")).distinct()
-      .crossJoin(bags.select("norm", "f").distinct())
-    base.join(joined.groupBy("norm", "f", "id", "label")
-        .agg(collect_list(col("dict_idx")).as("idx"), collect_list(col("cnt")).as("cnt")),
-        Seq("norm", "f", "id", "label"), "left")
-      .select(col("norm"), col("f"), col("id"), col("label"),
-        toVec(col("norm"), col("f"), col("idx"), col("cnt")).as("features"))
+      samples: DataFrame): DataFrame = {
+    val ids = samples.select(col("id"), col("label")).distinct()
+    // one (id, label)-keyed join per (norm, f) — callers fit one at a time
+    dims.toSeq.map { case ((n, f), d) =>
+      val counts = bags.filter(col("norm") === n && col("f") === f)
+        .join(dict.filter(col("norm") === n && col("f") === f).select("key", "dict_idx"), "key")
+        .groupBy("id", "label")
+        .agg(collect_list(col("dict_idx")).as("idx"), collect_list(col("cnt")).as("cnt"))
+      ids.join(counts, Seq("id", "label"), "left")
+        .select(lit(n).as("norm"), lit(f).as("f"), col("id"), col("label"),
+          sparseVector(lit(d + 1), col("idx"), col("cnt")).as("features"))
+    }.reduce(_ unionByName _)
   }
+
+  private val sparseVector = udf { (size: Int, idx: Seq[Int], cnt: Seq[Long]) =>
+    if (idx == null) Vectors.sparse(size, Array.empty[Int], Array.empty[Double])
+    else {
+      val pairs = idx.zip(cnt.map(_.toDouble)).sortBy(_._1)
+      Vectors.sparse(size, pairs.map(_._1).toArray, pairs.map(_._2).toArray)
+    }
+  }
+
+  /** Predict-side [[vectors]] of a fitted model's selected features
+    * (key, dict_idx) at its (norm, f).
+    */
+  def predictVectors(
+      bags: DataFrame,
+      selected: DataFrame,
+      norm: Boolean,
+      features: Int,
+      dictSize: Int,
+      samples: DataFrame): DataFrame =
+    vectors(bags, broadcast(selected.select(lit(norm).as("norm"), lit(features).as("f"),
+      col("key"), col("dict_idx"))), Map((norm, features) -> dictSize), samples)
 }
 
 /** The WEASEL classifier pipeline over (id, label, data) DataFrames. */
@@ -353,10 +364,9 @@ class WeaselClassifier(cfg: Weasel.Config = Weasel.Config()) {
 
   // liblinear runs with eps = 0.1 (loose); a tight MLlib tolerance only
   // burns L-BFGS iterations on 10⁴-dim coefficient vectors without
-  // moving the golden accuracies. Solver shape (OvR vs multinomial)
-  // comes from cfg.solver — see [[LinModel]].
+  // moving the golden accuracies — see [[LinModel]].
   private def fitLin(vecs: DataFrame, n: Long): LinModel =
-    LinModel.fit(cfg.solver, vecs, n, cfg.lrMaxIter)
+    LinModel.fit(vecs, n, cfg.lrMaxIter)
 
   /** Fit: grid over norm × f with 10-fold stratified CV, then refit the
     * best configuration on all samples.
@@ -376,10 +386,9 @@ class WeaselClassifier(cfg: Weasel.Config = Weasel.Config()) {
     */
   private[sfa] def fitWithProba(train: DataFrame)(implicit spark: SparkSession): (WeaselModel, DataFrame) = {
     val (model, vecs) = fitCore(train)
-    val vecToArr = udf { v: org.apache.spark.ml.linalg.Vector => v.toArray }
     val proba = model.lr.transform(vecs)
       .select(col("id"), col("label"), col("prediction").as("pred"),
-        vecToArr(col("probability")).as("probs"))
+        vector_to_array(col("probability")).as("probs"))
       .localCheckpoint(true)
     vecs.unpersist()
     (model, proba)
@@ -494,12 +503,10 @@ class WeaselClassifier(cfg: Weasel.Config = Weasel.Config()) {
   /** Predict with per-class probabilities → (id, label, pred, probs).
     * `probs` follows MLlib's class-index order (labels are class ids).
     */
-  def predictProba(model: WeaselModel, test: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    val vecToArr = udf { v: org.apache.spark.ml.linalg.Vector => v.toArray }
+  def predictProba(model: WeaselModel, test: DataFrame)(implicit spark: SparkSession): DataFrame =
     predictFull(model, test)
       .select(col("id"), col("label"), col("prediction").as("pred"),
-        vecToArr(col("probability")).as("probs"))
-  }
+        vector_to_array(col("probability")).as("probs"))
 
   /** Predict test rows → (id, label, pred). */
   def predict(model: WeaselModel, test: DataFrame)(implicit spark: SparkSession): DataFrame =
@@ -507,7 +514,6 @@ class WeaselClassifier(cfg: Weasel.Config = Weasel.Config()) {
       .select(col("id"), col("label"), col("prediction").as("pred"))
 
   private def predictFull(model: WeaselModel, test: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val hb = highestBit(cfg.maxWindowLength)
     // w_idx MUST come from the fitted full grid (see WeaselModel doc)
     val wIdx = model.windows.zipWithIndex.toMap
@@ -515,23 +521,10 @@ class WeaselClassifier(cfg: Weasel.Config = Weasel.Config()) {
       model.quantizers.map { case (w, m) => (model.norm, w) -> m },
       wIdx, usedBits)
     val b = bags(words, model.features, usedBits, hb)
-    val joined = b.join(broadcast(model.selected.select("key", "dict_idx")), Seq("key"))
-    val dim = model.dictSize + 1
-    val toVec = udf { (idx: Seq[Int], cnt: Seq[Long]) =>
-      if (idx == null) Vectors.sparse(dim, Array.empty[Int], Array.empty[Double])
-      else {
-        val pairs = idx.zip(cnt.map(_.toDouble)).sortBy(_._1)
-        Vectors.sparse(dim, pairs.map(_._1).toArray, pairs.map(_._2).toArray)
-      }
-    }
-    // left-join from ALL test samples: a sample with no selected feature
+    // vectors from ALL test samples: a sample with no selected feature
     // still gets an LR prediction via the intercept (reference behavior)
-    val vecs = test.select(col("id"), col("label"))
-      .join(joined.groupBy("id", "label")
-        .agg(collect_list(col("dict_idx")).as("idx"), collect_list(col("cnt")).as("cnt")),
-        Seq("id", "label"), "left")
-      .select(col("id"), col("label"), toVec(col("idx"), col("cnt")).as("features"))
-    model.lr.transform(vecs)
+    model.lr.transform(predictVectors(b, model.selected, model.norm, model.features,
+      model.dictSize, test))
   }
 
   def eval(train: DataFrame, test: DataFrame)(implicit spark: SparkSession): (WeaselModel, Double) = {

@@ -1,9 +1,9 @@
 package graft.sfa.expr
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Fused SFA quantize + word pack as a native Catalyst expression with
   * whole-stage codegen: given a window's Fourier approximation
@@ -17,7 +17,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * (sfa/classification/Classifier.java:163-192). The symbol counts ALL
   * edges ≤ v (no early break), bit-for-bit the grouped form
   * [[graft.sfa.SFAOps.packWords]] computes; a coefficient with no
-  * edges row yields symbol 0, matching that form's left join.
+  * edges row yields symbol 0, matching that form's left join. On
+  * ascending edges (a fitted bins row, +∞ placeholders included) the
+  * count equals [[graft.sfa.SFAModel.quantize]]'s scan, and the symbol
+  * is masked to `usedBits` as [[graft.sfa.Words.createWord]] masks it,
+  * so the word is `createWord(quantize(approx), edges rows, usedBits)`.
   */
 case class SfaWordExpr(approx: Expression, edges: Expression, usedBits: Int)
     extends BinaryExpression with ImplicitCastInputTypes {
@@ -32,6 +36,8 @@ case class SfaWordExpr(approx: Expression, edges: Expression, usedBits: Int)
   // misreading the array storage at runtime.
   override def inputTypes =
     Seq(ArrayType(DoubleType), ArrayType(ArrayType(DoubleType)))
+
+  private def mask: Long = (1L << usedBits) - 1
 
   override def nullSafeEval(a: Any, e: Any): Any = {
     val av = a.asInstanceOf[ArrayData]
@@ -52,7 +58,7 @@ case class SfaWordExpr(approx: Expression, edges: Expression, usedBits: Int)
           j += 1
         }
       }
-      word |= sym << (usedBits * c)
+      word |= (sym & mask) << (usedBits * c)
       c += 1
     }
     word
@@ -83,7 +89,7 @@ case class SfaWordExpr(approx: Expression, edges: Expression, usedBits: Int)
          |      if ($v >= $es.getDouble($j)) $sym++;
          |    }
          |  }
-         |  $word |= $sym << ($usedBits * $c);
+         |  $word |= ($sym & ${mask}L) << ($usedBits * $c);
          |}
          |${ev.value} = $word;
        """.stripMargin
@@ -92,4 +98,42 @@ case class SfaWordExpr(approx: Expression, edges: Expression, usedBits: Int)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SfaWordExpr =
     copy(approx = newLeft, edges = newRight)
+}
+
+/** The approximation values at the given coefficient indices, in index
+  * order: `(ARRAY<DOUBLE>, ARRAY<INT>) → ARRAY<DOUBLE>` — WEASEL's
+  * F-ranked coefficient selection ahead of [[SfaWordExpr]]. An index
+  * past the approximation reads NaN, which no edge is ≤ to, so its
+  * symbol is 0 (the `i < a.length` guard of
+  * [[graft.sfa.Weasel.SupervisedModel.words]]).
+  */
+case class SelectCoefsExpr(approx: Expression, coefs: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes {
+
+  override def left: Expression = approx
+  override def right: Expression = coefs
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def prettyName: String = "sfa_select_coefs"
+  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(IntegerType))
+
+  override def nullSafeEval(a: Any, c: Any): Any =
+    SelectCoefsExpr.select(a.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, c) =>
+      s"${ev.value} = graft.sfa.expr.SelectCoefsExpr.select($a, $c);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SelectCoefsExpr =
+    copy(approx = newLeft, coefs = newRight)
+}
+
+object SelectCoefsExpr {
+  def select(approx: ArrayData, coefs: ArrayData): ArrayData = {
+    val n = approx.numElements()
+    UnsafeArrayData.fromPrimitiveArray(Array.tabulate(coefs.numElements()) { k =>
+      val i = coefs.getInt(k)
+      if (i < n) approx.getDouble(i) else Double.NaN
+    })
+  }
 }

@@ -180,53 +180,137 @@ class ExprPropsSpec extends SparkSpec {
 
   test("property: DFT expressions ≡ Scala kernels, interpreted and codegen") {
     import spark.implicits._
-    val (l, w) = (6, 8)
+    // window length, value count and norm vary per row (grids carry
+    // them as columns); lengths straddle the window (short series:
+    // sliding yields no rows, disjoint none or partial, MFT pads)
     val cases = (0 until 80).map { i =>
-      // lengths straddle the window (short series: sliding yields no
-      // rows, disjoint yields none or partial, MFT pads)
+      val w = 2 + rnd.nextInt(11)
+      val l = 1 + rnd.nextInt(w + 3)
       val n = 1 + rnd.nextInt(4 * w)
-      (i.toLong, Seq.fill(n)(rnd.nextDouble() * 20 - 10))
+      (i.toLong, Seq.fill(n)(rnd.nextDouble() * 20 - 10), w, l, rnd.nextBoolean())
     }
+    val variants = for (lb <- Seq(true, false); z <- Seq(true, false)) yield (lb, z)
+    def disjointRef(d: Seq[Double], w: Int, l: Int, nm: Boolean, lb: Boolean, z: Boolean) = {
+      val a = d.toArray
+      val wins =
+        if (z) SFA.disjointWindows(a, w, nm).map(win => Fourier.transformWindow(win, 0, w, l, nm, lb))
+        else Array.tabulate(a.length / w)(i => Fourier.transformWindow(a, i * w, w, l, nm, lb))
+      wins.map(_.toSeq).toSeq
+    }
+    def mftRef(d: Seq[Double], w: Int, l: Int, nm: Boolean, lb: Boolean, z: Boolean) =
+      Fourier.transformWindowing(d.toArray, w, l, nm, lb, z).map(_.toSeq).toSeq
+    def slidingRef(d: Seq[Double], w: Int, l: Int, nm: Boolean) =
+      SFAOps.slidingKernelArr(d.toArray, w, l, nm).map(_.toSeq).toSeq
     def deep(a: Any): Seq[Seq[Double]] = a match {
       case ad: org.apache.spark.sql.catalyst.util.ArrayData =>
         (0 until ad.numElements()).map(i => ad.getArray(i).toDoubleArray().toSeq)
     }
-    for (normMean <- Seq(true, false)) {
-      cases.foreach { case (_, d) =>
-        val dj = graft.sfa.expr.DisjointDftExpr(
-          litArr(d, DoubleType), Literal(w), l, normMean).eval(null)
-        assert(deep(dj) == SFAOps.disjointKernel(d, w, l, normMean).map(_.toSeq).toSeq)
-        val sl = graft.sfa.expr.SlidingDftExpr(
-          litArr(d, DoubleType), Literal(w), l, normMean).eval(null)
-        assert(deep(sl) == SFAOps.slidingKernel(d, w, l, normMean).map(_.toSeq).toSeq)
-        val mf = graft.sfa.expr.MftDftExpr(
-          litArr(d, DoubleType), w, l, normMean).eval(null)
-        assert(deep(mf) == Fourier.transformWindowing(
-          d.toArray, w, l, normMean, lowerBounding = true, applyZNorm = true)
-          .map(_.toSeq).toSeq)
+    import graft.sfa.expr.{DisjointDftExpr, MftDftExpr, SlidingDftExpr}
+    // interpreted
+    cases.foreach { case (_, d, w, l, nm) =>
+      val args = (litArr(d, DoubleType), Literal(w), Literal(l), Literal(nm))
+      for ((lb, z) <- variants) {
+        assert(deep(DisjointDftExpr(args._1, args._2, args._3, args._4, lb, z).eval(null)) ==
+          disjointRef(d, w, l, nm, lb, z), s"dj w=$w l=$l norm=$nm lb=$lb z=$z")
+        assert(deep(MftDftExpr(args._1, args._2, args._3, args._4, lb, z).eval(null)) ==
+          mftRef(d, w, l, nm, lb, z), s"mf w=$w l=$l norm=$nm lb=$lb z=$z")
       }
-      // codegen: one DataFrame pass per expression over all cases
-      val df = cases.toDF("id", "d")
-      val B = org.apache.spark.sql.graft.Bridge
-      val got = df.select(col("id"),
-          B.column(graft.sfa.expr.DisjointDftExpr(
-            B.expression(col("d")), B.expression(lit(w)), l, normMean)).as("dj"),
-          B.column(graft.sfa.expr.SlidingDftExpr(
-            B.expression(col("d")), B.expression(lit(w)), l, normMean)).as("sl"),
-          B.column(graft.sfa.expr.MftDftExpr(
-            B.expression(col("d")), w, l, normMean)).as("mf"))
-        .collect()
-        .map(r => r.getLong(0) -> (
-          r.getSeq[Seq[Double]](1), r.getSeq[Seq[Double]](2), r.getSeq[Seq[Double]](3)))
-        .toMap
-      cases.foreach { case (id, d) =>
-        val (dj, sl, mf) = got(id)
-        assert(dj == SFAOps.disjointKernel(d, w, l, normMean).map(_.toSeq).toSeq, s"dj $id")
-        assert(sl == SFAOps.slidingKernel(d, w, l, normMean).map(_.toSeq).toSeq, s"sl $id")
-        assert(mf == Fourier.transformWindowing(
-          d.toArray, w, l, normMean, lowerBounding = true, applyZNorm = true)
-          .map(_.toSeq).toSeq, s"mf $id")
+      assert(deep(SlidingDftExpr(args._1, args._2, args._3, args._4).eval(null)) ==
+        slidingRef(d, w, l, nm), s"sl w=$w l=$l norm=$nm")
+    }
+    // codegen: one DataFrame pass over all cases, parameters as columns
+    // (an RDD-backed frame: a local Seq's projection is pre-evaluated
+    // interpreted by ConvertToLocalRelation)
+    val df = spark.sparkContext.parallelize(cases, 2).toDF("id", "d", "w", "l", "nm")
+    val data = Seq(col("d"), col("w"), col("l"), col("nm"))
+    val cols = variants.flatMap { case (lb, z) =>
+      Seq(SFAOps.disjointCol(data(0), data(1), data(2), data(3), lb, z),
+        SFAOps.mftCol(data(0), data(1), data(2), data(3), lb, z))
+    } :+ SFAOps.slidingCol(data(0), data(1), data(2), data(3))
+    val got = df.select(col("id") +: cols: _*).collect()
+      .map(r => r.getLong(0) -> (1 to cols.length).map(r.getSeq[Seq[Double]](_)))
+      .toMap
+    cases.foreach { case (id, d, w, l, nm) =>
+      val want = variants.flatMap { case (lb, z) =>
+        Seq(disjointRef(d, w, l, nm, lb, z), mftRef(d, w, l, nm, lb, z))
+      } :+ slidingRef(d, w, l, nm)
+      assert(got(id) == want, s"codegen case $id")
+    }
+  }
+
+  test("property: edge-fit expression ≡ SFA edge kernels, interpreted and codegen") {
+    import spark.implicits._
+    // 2-decimal orderlines with many ties and some empty ones, labels 1..3
+    val cases = (0 until 150).map { i =>
+      val n = rnd.nextInt(40)
+      (i.toLong, Seq.fill(n)(math.floor((rnd.nextDouble() * 4 - 2) * 20) / 20),
+        Seq.fill(n)(1.0 + rnd.nextInt(3)), 2 << rnd.nextInt(3))
+    }
+    def ref(v: Seq[Double], lab: Seq[Double], alpha: Int, h: HistogramType): Seq[Double] = h match {
+      case HistogramType.EquiDepth => SFA.equiDepthEdges(v.sorted.toArray, alpha).toSeq
+      case HistogramType.EquiWidth => SFA.equiWidthEdges(v.sorted.toArray, alpha).toSeq
+      case HistogramType.InformationGain =>
+        SFA.infoGainEdges(v.zip(lab).sorted.toArray, alpha).toSeq
+    }
+    val hists = Seq(HistogramType.EquiDepth, HistogramType.EquiWidth, HistogramType.InformationGain)
+    val pairType = ArrayType(org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("v", DoubleType),
+      org.apache.spark.sql.types.StructField("label", DoubleType))))
+    import graft.sfa.expr.SfaEdgesExpr
+    for (h <- hists; (_, v, lab, alpha) <- cases) {
+      val ol =
+        if (h == HistogramType.InformationGain)
+          Literal.create(v.zip(lab).map { case (a, b) => org.apache.spark.sql.Row(a, b) }, pairType)
+        else litArr(v, DoubleType)
+      val got = SfaEdgesExpr(ol, alpha, h).eval(null)
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray().toSeq
+      assert(got == ref(v, lab, alpha, h), s"$h alpha=$alpha v=$v")
+    }
+    val df = spark.sparkContext.parallelize(cases, 2).toDF("id", "v", "lab", "alpha")
+    for (alpha <- cases.map(_._4).distinct) {
+      val sub = cases.filter(_._4 == alpha)
+      val pairs = arrays_zip(col("v"), col("lab"))
+      val got = df.filter(col("alpha") === alpha).select(col("id") +: hists.map(h =>
+          SFAOps.edgesCol(if (h == HistogramType.InformationGain) pairs else col("v"), alpha, h)): _*)
+        .collect().map(r => r.getLong(0) -> hists.indices.map(i => r.getSeq[Double](i + 1))).toMap
+      sub.foreach { case (id, v, lab, _) =>
+        assert(got(id) == hists.map(ref(v, lab, alpha, _)), s"codegen alpha=$alpha case $id")
       }
     }
+  }
+
+  test("property: selected-coefficient words ≡ quantize + createWord, interpreted and codegen") {
+    import spark.implicits._
+    val (usedBits, alpha) = (2, 4)
+    // ascending edges per coefficient, some with +∞ placeholders
+    val bins = Array.fill(8)(Array.iterate(rnd.nextDouble() - 2, alpha - 1)(_ + rnd.nextDouble()))
+      .map(e => if (rnd.nextBoolean()) e.updated(alpha - 2, Double.MaxValue) else e)
+    val cases = (0 until 200).map { i =>
+      val n = 1 + rnd.nextInt(8)
+      // coefficient indices occasionally past the approximation
+      (i.toLong, Seq.fill(n)(rnd.nextDouble() * 6 - 3), Seq.fill(1 + rnd.nextInt(5))(rnd.nextInt(8)))
+    }
+    def ref(a: Seq[Double], coefs: Seq[Int]): Long = {
+      val syms = coefs.map { i =>
+        var c = 0
+        while (c < bins(i).length && i < a.length && a(i) >= bins(i)(c)) c += 1
+        c
+      }.toArray
+      Words.createWord(syms, syms.length, usedBits)
+    }
+    def edges(coefs: Seq[Int]) = SFAOps.wordEdges(coefs.map(bins).toArray, coefs.length, usedBits)
+    import graft.sfa.expr.{SelectCoefsExpr, SfaWordExpr}
+    val edgesType = ArrayType(ArrayType(DoubleType))
+    cases.foreach { case (_, a, coefs) =>
+      val got = SfaWordExpr(SelectCoefsExpr(litArr(a, DoubleType), litArr(coefs, IntegerType)),
+        Literal.create(edges(coefs), edgesType), usedBits).eval(null)
+      assert(got == ref(a, coefs), s"a=$a coefs=$coefs")
+    }
+    val df = spark.sparkContext.parallelize(cases.map { case (id, a, coefs) =>
+      (id, a, coefs, edges(coefs)) }, 2).toDF("id", "a", "coefs", "edges")
+    val got = df.select(col("id"),
+        SFAOps.wordCol(SFAOps.selectCoefsCol(col("a"), col("coefs")), col("edges"), usedBits))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    cases.foreach { case (id, a, coefs) => assert(got(id) == ref(a, coefs), s"codegen case $id") }
   }
 }

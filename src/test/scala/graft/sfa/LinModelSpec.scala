@@ -114,4 +114,10 @@ class LinModelSpec extends SparkSpec {
     assert(acc >= 0.95, s"binary fit quality: acc=$acc")
     vecs.unpersist()
   }
+
+  test("load names the path when no OvR model was saved there") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_linmodel_missing").toString
+    val err = intercept[IllegalArgumentException](LinModel.load(dir))
+    assert(err.getMessage.contains(s"$dir/lr_ovr"), err.getMessage)
+  }
 }
