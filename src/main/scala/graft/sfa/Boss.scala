@@ -13,12 +13,15 @@ import org.apache.spark.sql.expressions.Window
   *
   * Architecture: the reference grids over ~240 (windowLength, norm)
   * configurations with a thread pool; here the configuration is a *data
-  * column*, so the whole grid is a handful of Spark jobs regardless of
-  * grid size — fit bins (one groupBy per (cfg, coefficient)), build words
-  * (one native-expression pass), build bags (one lag+groupBy), and
-  * leave-one-out 1-NN (one equi-join on (cfg, word) — never a cross join; pairs sharing no
-  * word have distance == noMatch and are skipped by the reference too, so
-  * the equi-join loses nothing).
+  * column*, and so is the word length f, so the whole grid is a handful
+  * of Spark jobs regardless of grid size — fit bins (one groupBy per
+  * (cfg, coefficient)), build words (one native-expression pass) with
+  * each word's predecessor (one lag over the full-length word, shared by
+  * every f), build bags at every f (one mask+groupBy over the f-exploded
+  * words), and leave-one-out 1-NN (one equi-join on (cfg, f, word) —
+  * never a cross join; pairs sharing no word have distance == noMatch
+  * and are skipped by the reference too, so the equi-join loses
+  * nothing).
   *
   * Scale notes (100 TB): every shuffle is keyed by (cfg, series) or
   * (cfg, word) — both high-cardinality and bounded-skew (word vocabulary
@@ -47,8 +50,8 @@ object Boss {
       sfa: SFAModel)
 
   /** A fitted ensemble: selected window models + their train bags.
-    * `trainBags` columns: (norm, w, id, label, word, cnt) for the
-    * selected (norm, w) configs at each model's feature length.
+    * `trainBags` columns: (norm, w, id, label, word, cnt, f) for the
+    * selected (norm, w) configs at each model's feature length f.
     */
   final case class EnsembleModel(
       models: Seq[WindowModel],
@@ -111,21 +114,33 @@ object Boss {
         SFAOps.wordCol(col("approx"), col("edges"), usedBits).as("word"))
   }
 
-  /** Numerosity-reduced bags at feature length f: mask the packed word to
-    * f symbols, drop offsets whose masked word equals the previous
-    * offset's, count per (cfg, series, word) (BOSS.java:116-145).
-    * Input must carry (norm, w, id, label, offset, word).
+  /** Each word's predecessor in offset order per (cfg, series), as
+    * column `prev` (null at the first offset) — the one lag every bag of
+    * these words shares: masking commutes with the lag, so the bag at
+    * any f masks `word` and `prev` alike. Input must carry (norm, w, id,
+    * offset, word).
     */
-  def bagsAt(words: DataFrame, f: Int, usedBits: Int): DataFrame = {
-    val m = Words.mask(f, usedBits)
+  def withPrev(words: DataFrame): DataFrame = {
     val byOffset = Window.partitionBy(col("norm"), col("w"), col("id")).orderBy(col("offset"))
+    words.withColumn("prev", lag(col("word"), 1).over(byOffset))
+  }
+
+  /** Numerosity-reduced bags at each row's feature length `f`: mask the
+    * packed word and its predecessor to f symbols, drop offsets whose
+    * masked word equals the predecessor's, count per (cfg, f, series,
+    * word) (BOSS.java:116-145). Input must carry (norm, w, f, id, label,
+    * word, prev) — see [[withPrev]]. Output: (norm, w, id, label, word,
+    * cnt, f).
+    */
+  def bags(words: DataFrame, usedBits: Int): DataFrame = {
+    val mask = call_function("shiftleft", lit(1L), col("f") * usedBits) - 1L
     words
-      .withColumn("wf", col("word").bitwiseAND(lit(m)))
-      .withColumn("prev", lag(col("wf"), 1).over(byOffset))
-      .filter(col("prev").isNull || col("prev") =!= col("wf"))
-      .groupBy(col("norm"), col("w"), col("id"), col("label"), col("wf"))
+      .select(col("norm"), col("w"), col("f"), col("id"), col("label"),
+        col("word").bitwiseAND(mask).as("wf"), col("prev").bitwiseAND(mask).as("pf"))
+      .filter(col("pf").isNull || col("pf") =!= col("wf"))
+      .groupBy(col("norm"), col("w"), col("f"), col("id"), col("label"), col("wf"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumnRenamed("wf", "word")
+      .select(col("norm"), col("w"), col("id"), col("label"), col("wf").as("word"), col("cnt"), col("f"))
   }
 
   /** Asymmetric 1-NN bag join: for each test bag, the nearest train bag
@@ -225,17 +240,15 @@ class BossEnsemble(cfg: Boss.Config = Boss.Config()) {
     val windows = (cfg.minWindowLength to maxW).toSeq
 
     val models = fitBinsGrid(train, windows, cfg.normalization, cfg.maxF, cfg.alphabetSize)
-    val words = slidingWordsGrid(train, models, cfg.maxF).cache()
+    val words = withPrev(slidingWordsGrid(train, models, cfg.maxF)).cache()
     words.count() // materialize once; reused for every f
 
-    // f-sweep: LOO per-sample predictions per (norm, w, f) — ONE batched
-    // job over the f-tagged union instead of a job chain per f value.
+    // f-sweep: LOO per-sample predictions per (norm, w, f) — one bag
+    // pass over the f-exploded words, one 1-NN join keyed by f too.
     // Cached: the ensemble vote below reuses these rows instead of
     // re-running the whole 1-NN join on the selected configs.
     val fValues = (cfg.minF to cfg.maxF by 2).toSeq
-    val allBags = fValues
-      .map(f => bagsAt(words, f, usedBits).withColumn("f", lit(f)))
-      .reduce(_ unionByName _)
+    val allBags = bags(words.withColumn("f", explode(array(fValues.map(lit): _*))), usedBits)
     val looAll = nn1(allBags, allBags, keys = Seq("norm", "w", "f")).cache()
     val scores: Map[(Boolean, Int, Int), Long] =
       looAll
@@ -266,15 +279,9 @@ class BossEnsemble(cfg: Boss.Config = Boss.Config()) {
     // evaluate each norm's ensemble by its weighted vote on train: the
     // per-sample LOO predictions at each model's own f are already in
     // the cached sweep result — select them, attach weights, vote.
-    def looPreds(ms: Seq[WindowModel]): Option[DataFrame] = {
-      import spark.implicits._
+    def looPreds(ms: Seq[WindowModel]): Option[DataFrame] =
       if (ms.isEmpty) None
-      else {
-        val sel = ms.map(m => (m.norm, m.windowLength, m.features, m.trainCorrect))
-          .toDF("norm", "w", "f", "weight")
-        Some(looAll.join(broadcast(sel), Seq("norm", "w", "f")))
-      }
-    }
+      else Some(looAll.join(broadcast(selected(ms)), Seq("norm", "w", "f")))
 
     val evaluated = cfg.normalization.map { n =>
       val correct = looPreds(candidates(n)) match {
@@ -288,21 +295,18 @@ class BossEnsemble(cfg: Boss.Config = Boss.Config()) {
 
     // persist train bags of the selected models (each at its own f);
     // carry f so predict-side bags can be matched per model.
-    val trainBags = bagsByF(words, ensemble).cache()
+    val trainBags = bags(words.join(broadcast(selected(ensemble).drop("weight")), Seq("norm", "w")),
+      usedBits).cache()
     trainBags.count()
     words.unpersist()
 
     EnsembleModel(ensemble, trainBags, trainCount)
   }
 
-  /** Bags for a set of models, one pass per distinct f, tagged with `f`. */
-  private def bagsByF(words: DataFrame, ms: Seq[WindowModel])(implicit spark: SparkSession): DataFrame = {
+  /** The models' (norm, w, f, weight) table; weight = train score. */
+  private def selected(ms: Seq[WindowModel])(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    ms.groupBy(_.features).map { case (f, group) =>
-      val sel = group.map(m => (m.norm, m.windowLength)).toDF("norm", "w")
-      bagsAt(words.join(broadcast(sel), Seq("norm", "w")), f, usedBits)
-        .withColumn("f", lit(f))
-    }.reduce(_ unionByName _)
+    ms.map(m => (m.norm, m.windowLength, m.features, m.trainCorrect)).toDF("norm", "w", "f", "weight")
   }
 
   /** Train-bag rows the predict-side 1-NN may broadcast: the train-bag
@@ -314,23 +318,20 @@ class BossEnsemble(cfg: Boss.Config = Boss.Config()) {
 
   /** Predict labels for (id, label, data) rows → (id, label, pred). */
   def predict(model: EnsembleModel, test: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val sfaModels = model.models.map(m => (m.norm, m.windowLength) -> m.sfa).toMap
-    val words = slidingWordsGrid(test, sfaModels, cfg.maxF)
+    val sel = selected(model.models)
+    val words = withPrev(slidingWordsGrid(test, sfaModels, cfg.maxF))
+      .join(broadcast(sel.drop("weight")), Seq("norm", "w"))
     // trainBags is cached by fit — the count gate is cheap
     val bcTrain = model.trainBags.count() <= BroadcastBagMaxRows
     if (!bcTrain)
       System.err.println("[gated] BOSS predict: train bags above broadcast ceiling — shuffle 1-NN join")
 
-    val preds = model.models.groupBy(_.features).map { case (f, group) =>
-      val sel = group.map(m => (m.norm, m.windowLength)).toDF("norm", "w")
-      val bags = bagsAt(words.join(broadcast(sel), Seq("norm", "w")), f, usedBits)
-      val trainB = model.trainBags.filter(col("f") === f).drop("f")
-      val wts = group.map(m => (m.norm, m.windowLength, m.trainCorrect))
-        .toDF("norm", "w", "weight")
-      nn1(bags, trainB, broadcastTrain = bcTrain, excludeSameId = false)
-        .join(broadcast(wts), Seq("norm", "w"))
-    }.reduce(_ unionByName _)
+    // each (norm, w) has its one f on both sides, so (norm, w) keys the
+    // join and the test words' (norm, w, id) partitioning carries through
+    val preds = nn1(bags(words, usedBits), model.trainBags, broadcastTrain = bcTrain,
+      excludeSameId = false)
+      .join(broadcast(sel), Seq("norm", "w"))
     vote(preds)
   }
 

@@ -15,9 +15,11 @@ import org.apache.spark.sql.expressions.Window
   *    ensemble within factor 0.95, weighted vote)
   *
   * Architecture: window length, feature length AND fold are data
-  * columns. Per-fold tf-idf matrices come from one aggregation — fold
-  * tf = total tf − the fold's own contribution — so the entire
-  * grid × f × 10-fold CV is a fixed number of Spark jobs.
+  * columns. The bags of every f come from one pass over the f-exploded
+  * words ([[Boss.bags]] on words carrying their predecessor,
+  * [[Boss.withPrev]]); per-fold tf-idf matrices come from one
+  * aggregation — fold tf = total tf − the fold's own contribution — so
+  * the entire grid × f × 10-fold CV is a fixed number of Spark jobs.
   *
   * Deviation: the reference's class argmax follows hash-map iteration
   * order on ties; we tie-break deterministically by smaller label.
@@ -62,6 +64,15 @@ object BossVS {
       c = (c + distance).toInt
     }
     out.toSeq
+  }
+
+  /** Bags at every f ∈ {minF, minF + 2, …, maxF} with f ≤ the window
+    * length (BOSSVSClassifier.java's f ≤ min(w, maxF)), f as data.
+    * Input: [[Boss.withPrev]] words. Output: [[Boss.bags]] rows.
+    */
+  def sweepBags(words: DataFrame, minF: Int, maxF: Int, usedBits: Int): DataFrame = {
+    val fs = explode(array((minF to maxF by 2).map(lit): _*))
+    Boss.bags(words.withColumn("f", fs).filter(col("f") <= col("w")), usedBits)
   }
 
   /** Per-class tf-idf matrix from bag rows (norm, w, f, label, word,
@@ -149,7 +160,7 @@ class BossVSEnsemble(cfg: BossVS.Config = BossVS.Config()) {
     val windows = sampleWindows(cfg.minWindowLength, math.min(maxLen, cfg.maxWindowLength))
 
     val models = Boss.fitBinsGrid(train, windows, cfg.normalization, cfg.maxF, cfg.alphabetSize)
-    val words = Boss.slidingWordsGrid(train, models, cfg.maxF).cache()
+    val words = Boss.withPrev(Boss.slidingWordsGrid(train, models, cfg.maxF)).cache()
 
     val byLabel = Window.partitionBy("label").orderBy("id")
     val folds = train.withColumn("fold",
@@ -157,10 +168,7 @@ class BossVSEnsemble(cfg: BossVS.Config = BossVS.Config()) {
       .select("id", "fold")
 
     // bags for every f, f capped at min(windowLength, maxF)
-    val allBags = (cfg.minF to cfg.maxF by 2).map { f =>
-      Boss.bagsAt(words, f, usedBits).withColumn("f", lit(f))
-    }.reduce(_ unionByName _)
-      .filter(col("f") <= least(col("w"), lit(cfg.maxF)))
+    val allBags = sweepBags(words, cfg.minF, cfg.maxF, usedBits)
       .join(folds, "id")
       .cache()
 
@@ -227,16 +235,11 @@ class BossVSEnsemble(cfg: BossVS.Config = BossVS.Config()) {
     val labels = model.classMatrix.select(col("label")).distinct()
       .collect().map(_.getDouble(0)).sorted.toSeq
     val sfaModels = model.models.map(m => (m.norm, m.windowLength) -> m.sfa).toMap
-    val words = Boss.slidingWordsGrid(test, sfaModels, cfg.maxF)
-    val bags = model.models.map(m => (m.features, m.norm, m.windowLength))
-      .groupBy(_._1).map { case (f, group) =>
-        val sel = group.map(g => (g._2, g._3)).toSeq.toDF("norm", "w")
-        Boss.bagsAt(words.join(broadcast(sel), Seq("norm", "w")), f, usedBits)
-          .withColumn("f", lit(f))
-      }.reduce(_ unionByName _)
     val wts = model.models.map(m => (m.norm, m.windowLength, m.features, m.trainCorrect))
       .toDF("norm", "w", "f", "weight")
-    val preds = classify(bags, model.classMatrix, labels)
+    val words = Boss.withPrev(Boss.slidingWordsGrid(test, sfaModels, cfg.maxF))
+      .join(broadcast(wts.drop("weight")), Seq("norm", "w"))
+    val preds = classify(Boss.bags(words, usedBits), model.classMatrix, labels)
       .join(broadcast(wts), Seq("norm", "w", "f"))
     Boss.vote(preds)
   }

@@ -245,8 +245,7 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
       for (nm <- cfg.normalization; f <- cfg.minF to cfg.maxF by 2 if !singleCandidate) {
         val b = bags(words.filter(col("norm") === nm), f, usedBits, maxWindow, cfg).cache()
         val sel = chiFilter(b, n)
-        val byKey = Window.partitionBy("norm", "f").orderBy("key")
-        val dict = sel.withColumn("dict_idx", row_number().over(byKey)).cache()
+        val dict = Weasel.dictionary(sel).cache()
         val dims = dict.groupBy("norm", "f").agg(max("dict_idx").as("d")).collect()
           .map(r => (r.getBoolean(0), r.getInt(1)) -> r.getInt(2)).toMap
         if (dims.nonEmpty) {
@@ -274,12 +273,8 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
     val models = fitted(bestHist).filter { case ((nm, _, _), _) => nm == bestNorm }
     val words = wordsGrid(train, models, wIdx, cfg.maxF)
     val fb = bags(words, bestF, usedBits, maxWindow, cfg).cache()
-    val sel = chiFilter(fb, n)
-    val byKey = Window.partitionBy("norm", "f").orderBy("key")
-    val dict = sel.withColumn("dict_idx", row_number().over(byKey)).cache()
-    val dims = dict.groupBy("norm", "f").agg(max("dict_idx").as("d")).collect()
-      .map(r => (r.getBoolean(0), r.getInt(1)) -> r.getInt(2)).toMap
-    val vecs = Weasel.vectors(fb, dict, dims, train)
+    val (selected, dictSize) = Weasel.modelDictionary(chiFilter(fb, n))
+    val vecs = Weasel.modelVectors(fb, selected, bestNorm, bestF, dictSize, train, broadcastDict = false)
       .coalesce(graft.util.Pipelines.fitParallelism(n)).cache()
     val lr = fitLin(vecs, n)
     // single-candidate path skipped CV: trainCorrect = final-model score
@@ -290,8 +285,7 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
 
     (MuseModel(bestHist, bestNorm, bestF, correct,
       models.map { case ((_, w, d), m) => (w, d) -> m },
-      allWindows,
-      dict.select("key", "dict_idx").cache(), dims.getOrElse((bestNorm, bestF), 0), lr), vecs)
+      allWindows, selected, dictSize, lr), vecs)
   }
 
   def predict(model: MuseModel, test: DataFrame)(implicit spark: SparkSession): DataFrame =
@@ -320,8 +314,8 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
     val b = bags(words, model.features, usedBits, allWindows.max, cfg)
     // vectors from ALL test samples: zero-feature samples still get an
     // LR prediction via the intercept (reference behavior)
-    model.lr.transform(Weasel.predictVectors(b, model.selected, model.norm, model.features,
-      model.dictSize, test))
+    model.lr.transform(Weasel.modelVectors(b, model.selected, model.norm, model.features,
+      model.dictSize, test, broadcastDict = true))
   }
 
   def eval(train: DataFrame, test: DataFrame)(implicit spark: SparkSession): (MuseModel, Double) = {

@@ -161,23 +161,27 @@ object Weasel {
     // top-maxF coefficients by F desc (NaN dropped, stable by coef asc)
     val byF = Window.partitionBy("norm", "w")
       .orderBy(col("f").desc, col("coef").asc)
-    val best = anovaF(approx)
+    val bestRows = anovaF(approx)
       .filter(!isnan(col("f")))
       .withColumn("rk", row_number().over(byF))
       .filter(col("rk") <= cfg.maxF)
       .select("norm", "w", "coef", "rk")
+      .collect()
 
-    // info-gain bins only at selected coefficients
-    val binRows = approx
-      .join(best.select("norm", "w", "coef"), Seq("norm", "w", "coef"))
+    // info-gain bins only at selected coefficients: the collected ranking
+    // filters the cached spectra as one set literal, so the F statistics
+    // are not recomputed, and no join shuffles the spectra or schedules a
+    // broadcast build (the edge fit sorts its orderline, so row order
+    // does not matter)
+    val best = bestRows.map(r => typedLit((r.getBoolean(0), r.getInt(1), r.getInt(2))))
+    val binMap = approx
+      .filter(struct(col("norm").as("_1"), col("w").as("_2"), col("coef").as("_3")).isin(best: _*))
       .select(col("norm"), col("w"), col("coef"),
         struct(graft.util.Rnd.jround(col("v"), 2).as("v2"), col("label")).as("vl"))
       .groupBy("norm", "w", "coef")
       .agg(SFAOps.edgesCol(collect_list(col("vl")), cfg.alphabetSize, HistogramType.InformationGain)
         .as("edges"))
-
-    val bestRows = best.collect()
-    val binMap = binRows.collect()
+      .collect()
       .map(r => ((r.getBoolean(0), r.getInt(1), r.getInt(2)), r.getSeq[Double](3).toArray))
       .toMap
     approx.unpersist()
@@ -342,18 +346,32 @@ object Weasel {
     }
   }
 
-  /** Predict-side [[vectors]] of a fitted model's selected features
-    * (key, dict_idx) at its (norm, f).
+  /** A final refit's dictionary: `selected` (norm, f, key) of one
+    * (norm, f) numbered by [[dictionary]] and kept as (key, dict_idx),
+    * cached — the one frame a fitted model keeps — with its size (0 when
+    * nothing was selected).
     */
-  def predictVectors(
+  private[sfa] def modelDictionary(selected: DataFrame): (DataFrame, Int) = {
+    val dict = dictionary(selected).select(col("key"), col("dict_idx")).cache()
+    val size = dict.agg(max("dict_idx")).collect().head
+    (dict, if (size.isNullAt(0)) 0 else size.getInt(0))
+  }
+
+  /** [[vectors]] of a model dictionary (key, dict_idx) at its (norm, f);
+    * the predict side broadcasts the model-sized dictionary, a small fit
+    * joins it in its one job instead of scheduling a broadcast build.
+    */
+  def modelVectors(
       bags: DataFrame,
       selected: DataFrame,
       norm: Boolean,
       features: Int,
       dictSize: Int,
-      samples: DataFrame): DataFrame =
-    vectors(bags, broadcast(selected.select(lit(norm).as("norm"), lit(features).as("f"),
-      col("key"), col("dict_idx"))), Map((norm, features) -> dictSize), samples)
+      samples: DataFrame,
+      broadcastDict: Boolean): DataFrame = {
+    val dict = selected.select(lit(norm).as("norm"), lit(features).as("f"), col("key"), col("dict_idx"))
+    vectors(bags, if (broadcastDict) broadcast(dict) else dict, Map((norm, features) -> dictSize), samples)
+  }
 }
 
 /** The WEASEL classifier pipeline over (id, label, data) DataFrames. */
@@ -449,7 +467,7 @@ class WeaselClassifier(cfg: Weasel.Config = Weasel.Config()) {
       val dict = dictionary(sel).cache()
       val dims = dict.groupBy("norm", "f").agg(max("dict_idx").as("d")).collect()
         .map(r => (r.getBoolean(0), r.getInt(1)) -> r.getInt(2)).toMap
-      if (dims.isEmpty) (nm, f, 0L)
+      if (dims.isEmpty) { b.unpersist(); dict.unpersist(); (nm, f, 0L) }
       else {
         // coalesce before the iterative LR fits: see Pipelines.fitParallelism
         val vecs = vectors(b, dict, dims, folded)
@@ -475,29 +493,26 @@ class WeaselClassifier(cfg: Weasel.Config = Weasel.Config()) {
         case (acc @ (_, _, bc), (nm, f, c)) => if (c > bc) (nm, f, c) else acc
       }
 
-    // final refit at the chosen configuration
+    // final refit at the chosen configuration; of its cached frames only
+    // the model's dictionary outlives the fit (and `vecs`, until the
+    // caller releases it)
     val fb = bags(wordsByNorm(bestNorm).filter(col("norm") === bestNorm),
       bestF, usedBits, hb).cache()
-    val sel = chiSquared(fb, n, cfg, hb)
-    val dict = dictionary(sel).cache()
-    val dims = dict.groupBy("norm", "f").agg(max("dict_idx").as("d")).collect()
-      .map(r => (r.getBoolean(0), r.getInt(1)) -> r.getInt(2)).toMap
-    val vecs = vectors(fb, dict, dims, folded)
+    val (selected, dictSize) = modelDictionary(chiSquared(fb, n, cfg, hb))
+    val vecs = modelVectors(fb, selected, bestNorm, bestF, dictSize, folded, broadcastDict = false)
       .coalesce(graft.util.Pipelines.fitParallelism(n)).cache()
     val lr = fitLin(vecs, n)
     // single-candidate path skipped CV: trainCorrect = final-model score
     val correct =
       if (!singleCandidate) bestCorrect
       else lr.transform(vecs).filter(col("prediction") === col("label")).count()
+    fb.unpersist()
     wordsByNorm.values.foreach(_.unpersist())
     folded.unpersist()
 
     (WeaselModel(bestNorm, bestF, correct,
       quantizers.collect { case ((`bestNorm`, w), m) => w -> m }.toMap,
-      windowsFor(bestNorm),
-      dict.select(col("key"), col("dict_idx")).cache(),
-      dims.getOrElse((bestNorm, bestF), 0),
-      lr), vecs)
+      windowsFor(bestNorm), selected, dictSize, lr), vecs)
   }
 
   /** Predict with per-class probabilities → (id, label, pred, probs).
@@ -523,8 +538,8 @@ class WeaselClassifier(cfg: Weasel.Config = Weasel.Config()) {
     val b = bags(words, model.features, usedBits, hb)
     // vectors from ALL test samples: a sample with no selected feature
     // still gets an LR prediction via the intercept (reference behavior)
-    model.lr.transform(predictVectors(b, model.selected, model.norm, model.features,
-      model.dictSize, test))
+    model.lr.transform(modelVectors(b, model.selected, model.norm, model.features,
+      model.dictSize, test, broadcastDict = true))
   }
 
   def eval(train: DataFrame, test: DataFrame)(implicit spark: SparkSession): (WeaselModel, Double) = {

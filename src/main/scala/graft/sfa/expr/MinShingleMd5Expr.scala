@@ -34,12 +34,12 @@ case class MinShingleMd5Expr(toks: Expression, n: Int)
   override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(a: Any): Any =
-    MinShingleMd5Expr.eval(a.asInstanceOf[ArrayData], n)
+    ShingleKernels.minMd5(a.asInstanceOf[ArrayData], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
       s"""
-         |${ev.value} = graft.sfa.expr.MinShingleMd5Expr.eval($a, $n);
+         |${ev.value} = graft.sfa.expr.ShingleKernels.minMd5($a, $n);
          |${ev.isNull} = (${ev.value} == null);
        """.stripMargin
     })
@@ -48,7 +48,12 @@ case class MinShingleMd5Expr(toks: Expression, n: Int)
     copy(toks = newChild)
 }
 
-object MinShingleMd5Expr {
+/** The kernel of [[MinShingleMd5Expr]], in an object of its own: the
+  * generated code calls it as a static method, and Scala emits no static
+  * forwarder for a companion method named like a member of its class
+  * (the expression's own `eval`).
+  */
+object ShingleKernels {
   private val digests = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
@@ -56,7 +61,7 @@ object MinShingleMd5Expr {
 
   private val HexChars = "0123456789abcdef".toCharArray
 
-  def eval(arr: ArrayData, n: Int): UTF8String = {
+  def minMd5(arr: ArrayData, n: Int): UTF8String = {
     val len = arr.numElements()
     if (len < n) return null
     val md = digests.get()

@@ -152,18 +152,24 @@ class ExprPropsSpec extends SparkSpec {
       val n = rnd.nextInt(12) // incl. < 5 tokens (null fingerprint)
       (i.toLong, Seq.fill(n)(words(rnd.nextInt(words.size))))
     }
-    val df = cases.toDF("id", "toks")
+    // codegen: an RDD-backed frame (a local Seq's projection is
+    // pre-evaluated interpreted by ConvertToLocalRelation), the kernel in
+    // a whole-stage-codegen projection of its own (the reference's
+    // `transform` lambda would keep the stage interpreted), with the
+    // interpreted fallback off so a generated-code compile error fails
+    val df = spark.sparkContext.parallelize(cases, 2).toDF("id", "toks")
     val B = org.apache.spark.sql.graft.Bridge
-    val got = df.select(col("id"),
-        B.column(graft.sfa.expr.MinShingleMd5Expr(B.expression(col("toks")), 5)).as("fp"),
-        when(size(col("toks")) >= 5, expr(
-          "array_min(transform(sequence(0, size(toks)-5), i -> " +
-            "md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4]))))"))
-          .as("want"))
+    val fallback = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val got = try df.select(col("id"),
+        B.column(graft.sfa.expr.MinShingleMd5Expr(B.expression(col("toks")), 5)).as("fp"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    finally spark.conf.set("spark.sql.codegen.fallback", fallback)
+    df.select(col("id"), when(size(col("toks")) >= 5, expr(
+        "array_min(transform(sequence(0, size(toks)-5), i -> " +
+          "md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4]))))")))
       .collect()
-    got.foreach { r =>
-      assert(r.getAs[String]("fp") == r.getAs[String]("want"), s"case ${r.getLong(0)}")
-    }
+      .foreach(r => assert(got(r.getLong(0)) == r.getString(1), s"case ${r.getLong(0)}"))
     // interpreted path too
     cases.foreach { case (_, toks) =>
       val e = graft.sfa.expr.MinShingleMd5Expr(
