@@ -499,35 +499,27 @@ object Dedup {
     * row per document (singletons keep themselves). CC via
     * [[ccLabels]] (large-star/small-star, O(log n) rounds).
     */
-  private def components(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    // iterative CC at fixture corpus size is scheduling-bound (each
-    // star round is distincts + checkpoints) — small-fit scope, no-op
-    // at real scale where AQE matters
-    graft.util.Pipelines.smallFitScope(s, d.count()) {
-      // keyed session cache (the knnEdges precedent), not just
-      // tracked(): ccLabels checkpoints each star round, so two runs'
-      // plans never canonicalize equal and the persist is unreachable
-      // on re-run — every re-run re-ran all O(log n) rounds
-      Pipelines.cachedDF(s, s"dedup.cc:$dir") { componentsBody(s, dir, d) }
+  private def components(s: SparkSession, dir: String): DataFrame =
+    // keyed session cache (the knnEdges precedent), not just tracked():
+    // ccLabels checkpoints each star round, so two runs' plans never
+    // canonicalize equal and the persist is unreachable on re-run —
+    // every re-run re-ran all O(log n) rounds
+    Pipelines.cachedDF(s, s"dedup.cc:$dir") {
+      val d = docs(s, dir)
+      val exactPairs = {
+        val h = d.select(col("doc_id"), md5(col("text")).as("h"))
+        h.select(col("h"), col("doc_id").as("a"))
+          .join(h.select(col("h"), col("doc_id").as("b")), "h")
+          .filter(col("a") < col("b")).select("a", "b")
+      }
+      val nearPairs = pairOverlap(s, dir)
+        .filter(col("inter") / (col("sza") + col("szb") - col("inter")).cast("double") >= CompJac)
+        .select("a", "b")
+      val edges = Pipelines.tracked(s, exactPairs.unionByName(nearPairs).distinct())
+      ccLabels(d.select("doc_id"), edges)
+        .withColumn("keeper", when(col("comp") === col("doc_id"), 1L).otherwise(0L))
+        .orderBy("doc_id")
     }
-  }
-
-  private def componentsBody(s: SparkSession, dir: String, d: DataFrame): DataFrame = {
-    val exactPairs = {
-      val h = d.select(col("doc_id"), md5(col("text")).as("h"))
-      h.select(col("h"), col("doc_id").as("a"))
-        .join(h.select(col("h"), col("doc_id").as("b")), "h")
-        .filter(col("a") < col("b")).select("a", "b")
-    }
-    val nearPairs = pairOverlap(s, dir)
-      .filter(col("inter") / (col("sza") + col("szb") - col("inter")).cast("double") >= CompJac)
-      .select("a", "b")
-    val edges = Pipelines.tracked(s, exactPairs.unionByName(nearPairs).distinct())
-    ccLabels(d.select("doc_id"), edges)
-      .withColumn("keeper", when(col("comp") === col("doc_id"), 1L).otherwise(0L))
-      .orderBy("doc_id")
-  }
 
   /** Oracle: transitive closure by recursive CTE (min reachable id =
     * the component id) over the SAME edge set — exact-digest pairs ∪

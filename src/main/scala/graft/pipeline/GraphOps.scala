@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.util.{Pipelines, QueryDef}
+import org.apache.spark.sql.graft.Bridge
 
 /** Graph analytics over the embedding kNN graph — the structure a
   * curation pipeline builds right after blocking (SemDeDup-style
@@ -73,34 +74,51 @@ object GraphOps {
         .unionByName(k.select(col("b").as("u"), col("a").as("v")))
     }
 
-  /** Fixture-scale graph stages are plan-depth-bound (node-count-sized
-    * data under many joins), so both graph queries run inside
-    * [[Pipelines.smallFitScope]] — at real scale the gate never fires.
+  /** Vertex count up to which pagerank and triangles run in
+    * [[smallGraphSession]] and pagerank keeps its rounds in one plan;
+    * past it both run in the caller's session and pagerank checkpoints
+    * each round.
     */
-  private def scoped(s: SparkSession, dir: String)(body: => DataFrame): DataFrame =
-    Pipelines.smallFitScope(s, emb(s, dir).count()) {
-      val res = Pipelines.tracked(s, body)
-      res.count()
-      res
-    }
+  private val SmallGraph = 5000L
 
-  private def pagerank(s: SparkSession, dir: String): DataFrame = {
-    // the round-barrier decision is the caller's (it owns the small-fit
-    // gate): checkpoint each round at real scale, one deep plan inside
-    // the small-fit scope — NOT a session-conf read at plan-build time
-    val barrier = emb(s, dir).count() > Pipelines.SmallFitThreshold
-    // keyed session cache AROUND the tracked body: re-building the
-    // 3-iteration join tree costs ~2.5 s of driver-side analysis +
-    // canonicalization per call even when the data is cached (measured);
-    // returning the memoized frame skips the plan rebuild outright
+  /** A memoized clone of the caller's session with AQE off, 8 shuffle
+    * partitions and no auto-broadcast. Small pagerank and triangle
+    * bodies are plan-depth-bound: node-count-sized frames under many
+    * joins, where AQE's stage-at-a-time scheduling costs more than the
+    * data (triangles at sf0.1 on 4 cores: 1.8 s without AQE, 9–12 s
+    * with it). The caller's own session is never changed.
+    */
+  private def smallGraphSession(s: SparkSession): SparkSession =
+    Pipelines.clonedSession(s, "graph.small",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
+  /** Rebinds a frame built in the caller's session to the session a
+    * graph body over `n` vertices runs in: [[smallGraphSession]] up to
+    * [[SmallGraph]], else the caller's own. The body's result stays a
+    * frame of that session, so it is planned, cached and read there
+    * (the DSv2 clone's precedent): read back through the caller's AQE,
+    * a result over AQE-built cached inputs re-plans plans that print at
+    * megabyte scale on every action.
+    */
+  private def graphSession(s: SparkSession, n: Long): DataFrame => DataFrame =
+    if (n > SmallGraph) identity
+    else { val g = smallGraphSession(s); Bridge.rebind(_, g) }
+
+  private def pagerank(s: SparkSession, dir: String): DataFrame =
+    // keyed session cache AROUND the body: re-building the 3-iteration
+    // join tree costs ~2.5 s of driver-side analysis + canonicalization
+    // per call even when the data is cached (measured); returning the
+    // memoized frame skips the plan rebuild outright
     Pipelines.cachedDF(s, s"graph.pr:$dir") {
-      scoped(s, dir)(pagerankBody(s, dir, barrier))
+      val n = emb(s, dir).count()
+      val on = graphSession(s, n)
+      pagerankBody(on(emb(s, dir).select(col("vec_id").as("u"))), on(symEdges(s, dir)),
+        barrier = n > SmallGraph)
     }
-  }
 
-  private[pipeline] def pagerankBody(s: SparkSession, dir: String, barrier: Boolean): DataFrame = {
-    val nodes = emb(s, dir).select(col("vec_id").as("u"))
-    val edges = symEdges(s, dir)
+  private def pagerankBody(nodes: DataFrame, edges: DataFrame, barrier: Boolean): DataFrame = {
     val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
     val n = nodes.count()
     var rank = nodes.withColumn("pr", lit(PrScale / n))
@@ -115,10 +133,9 @@ object GraphOps {
           call_function("div", lit(15L * PrScale), lit(100L * n)) +
             call_function("div", lit(85L) * col("inflow"), lit(100L)))
         .select("u", "pr")
-      // materialize each round (lineage truncation, the dedup_components
-      // rule) — without it AQE re-plans a 3-round join tree layer by
-      // layer; inside the small-fit scope one deep plan in a single job
-      // is the cheaper shape, so the caller passes barrier = false there
+      // past SmallGraph, materialize each round (lineage truncation, the
+      // dedup_components rule) — without it AQE re-plans a 3-round join
+      // tree layer by layer; a small graph runs one deep plan instead
       if (i < PrIters && barrier)
         rank = rank.localCheckpoint()
     }
@@ -129,11 +146,11 @@ object GraphOps {
     // keyed like pagerank: the wedge-join tree's per-call rebuild cost
     // dominates its warm re-run
     Pipelines.cachedDF(s, s"graph.tri:$dir") {
-      scoped(s, dir)(trianglesBody(s, dir))
+      trianglesBody(graphSession(s, emb(s, dir).count())(symEdges(s, dir)))
     }
 
-  private def trianglesBody(s: SparkSession, dir: String): DataFrame = {
-    val und = symEdges(s, dir).filter(col("u") < col("v"))
+  private def trianglesBody(sym: DataFrame): DataFrame = {
+    val und = sym.filter(col("u") < col("v"))
     val e1 = und.select(col("u").as("a"), col("v").as("b"))
     val e2 = und.select(col("u").as("b"), col("v").as("c"))
     val e3 = und.select(col("u").as("a"), col("v").as("c"))
@@ -159,15 +176,13 @@ object GraphOps {
     // ccLabels checkpoints each star round, so two runs' plans can never
     // canonicalize equal and a plain persist is unreachable on re-run —
     // without the key every re-run re-ran all O(log n) rounds
-    scoped(s, dir) {
-      Pipelines.cachedDF(s, s"graph.cc:$dir") {
-        val nodes = emb(s, dir).select(col("vec_id").as("doc_id"))
-        val edges = symEdges(s, dir).filter(col("u") < col("v"))
-          .select(col("u").as("a"), col("v").as("b"))
-        Dedup.ccLabels(nodes, edges)
-          .select(col("doc_id").as("vec_id"), col("comp"))
-      }.orderBy("vec_id")
-    }
+    Pipelines.cachedDF(s, s"graph.cc:$dir") {
+      val nodes = emb(s, dir).select(col("vec_id").as("doc_id"))
+      val edges = symEdges(s, dir).filter(col("u") < col("v"))
+        .select(col("u").as("a"), col("v").as("b"))
+      Dedup.ccLabels(nodes, edges)
+        .select(col("doc_id").as("vec_id"), col("comp"))
+    }.orderBy("vec_id")
 
   // ---- oracle fragments -------------------------------------------------
 

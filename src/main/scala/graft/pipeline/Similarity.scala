@@ -948,18 +948,6 @@ object Similarity {
     * queryable number, not a claim.
     */
   private def annRecall(s: SparkSession, dir: String): DataFrame = {
-    // at fixture corpus size the three memoized builds below are
-    // plan-depth-bound — run them (and the recall join) in the
-    // small-fit scope; at real scale the gate never triggers
-    val n = emb(s, dir).count()
-    Pipelines.smallFitScope(s, n) {
-      val res = Pipelines.tracked(s, annRecallBody(s, dir))
-      res.count()
-      res
-    }
-  }
-
-  private def annRecallBody(s: SparkSession, dir: String): DataFrame = {
     // The brute top-k and the four ANN pipelines are INDEPENDENT
     // builds, each a chain of small fit jobs (13 cachedDF stages, 38
     // scheduled jobs back to back at sf0.1) — overlap them (§2.6) so
@@ -984,10 +972,10 @@ object Similarity {
         .select(lit(name).as("method"), col("q_id"), col("hits"),
           graft.util.Rnd.jround(col("hits") / lit(3.0), 6).as("recall"))
     }
-    methodFs
+    Pipelines.tracked(s, methodFs
       .map { case (name, f) => recallOf(name, Await.result(f, Duration.Inf)) }
       .reduce(_ unionByName _)
-      .orderBy("method", "q_id")
+      .orderBy("method", "q_id"))
   }
 
   private val recallSql = {
@@ -1244,18 +1232,15 @@ object Similarity {
     * (`dedup_block_recall`).
     */
   private def semantic(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
-    Pipelines.smallFitScope(s, e.count()) {
-      // keyed session cache, not tracked(): ccLabels checkpoints each
-      // star round, so re-run plans never canonicalize equal and a
-      // plain persist is unreachable — every re-run re-ran all rounds
-      Pipelines.cachedDF(s, s"sim.cc:$dir") {
-        val pairs = dupPairs(s, dir).select("a", "b")
-        Dedup.ccLabels(e.select(col("vec_id").as("doc_id")), pairs)
-          .withColumn("keeper", when(col("comp") === col("doc_id"), 1L).otherwise(0L))
-          .select(col("doc_id").as("vec_id"), col("comp"), col("keeper"))
-      }.orderBy("vec_id")
-    }
+    // keyed session cache, not tracked(): ccLabels checkpoints each
+    // star round, so re-run plans never canonicalize equal and a plain
+    // persist is unreachable — every re-run re-ran all rounds
+    Pipelines.cachedDF(s, s"sim.cc:$dir") {
+      val pairs = dupPairs(s, dir).select("a", "b")
+      Dedup.ccLabels(emb(s, dir).select(col("vec_id").as("doc_id")), pairs)
+        .withColumn("keeper", when(col("comp") === col("doc_id"), 1L).otherwise(0L))
+        .select(col("doc_id").as("vec_id"), col("comp"), col("keeper"))
+    }.orderBy("vec_id")
   }
 
   private val semanticSql =

@@ -40,10 +40,9 @@ object ClassifierQ {
     val bags = SfaQ.slidingBags(s, dir)
     // tracked result: the chain has no UDFs, so a re-run in a live
     // session canonicalizes equal and reuses the materialized scoring.
-    // Deliberately NOT small-fit-scoped: the class pick ranks by a raw
-    // double score sum, and changing the shuffle/AQE shape changes its
-    // summation order — the one thing an optimization round must not do
-    // (the o4 lesson).
+    // The class pick ranks by a raw double score sum, so changing the
+    // shuffle/AQE shape changes its summation order — the one thing an
+    // optimization round must not do (the o4 lesson).
     val res = graft.util.Pipelines.tracked(s, j2Body(bags))
     res.count()
     res
@@ -324,33 +323,28 @@ object ClassifierQ {
   private def m1(s: SparkSession, dir: String): DataFrame = {
     import graft.sfa.SFAOps
     val ser = SfaQ.series(s, dir).filter(size(col("data")) >= 16)
-    // window-grid fit at fixture input size is plan-depth-bound — the
-    // same small-fit scoping + session-shared artifacts as m2: the
-    // per-w quantizer bins are fitted models (cachedObj — also what
-    // keeps the packWordsFused literal, and with it the whole plan,
-    // canonically stable across re-runs), and the result is tracked so
-    // a re-run in a live session reuses the materialized join instead
-    // of silently re-running the LOO 1-NN
-    graft.util.Pipelines.smallFitScope(s, ser.count()) {
-      val branches = M1Ws.map { w =>
-        val bins = graft.util.Pipelines.cachedObj(s, s"m1.bins:$w:$dir") {
-          SFAOps.collectBins(
-            SFAOps.equiDepthBins(
-              SFAOps.disjointApprox(ser, w, M1L, normMean = false), M1Alpha),
-            M1L, M1Alpha)
-        }
-        val bags = SFAOps.bagOfWords(SFAOps.packWordsFused(
-          SFAOps.slidingApproxArrays(ser, w, M1L, normMean = false), bins, M1Bits))
-        SFAOps.nnBagJoin(bags, bags)
-          .agg(sum(when(col("nn_id") % 3 === col("test_id") % 3, 1L).otherwise(0L))
-            .as("train_correct"))
-          .select(lit(false).as("norm"), lit(w.toLong).as("w"),
-            lit(M1L.toLong).as("features"), col("train_correct"))
+    // session-shared artifacts as in m2: the per-w quantizer bins are
+    // fitted models (cachedObj — also what keeps the packWordsFused
+    // literal, and with it the whole plan, canonically stable across
+    // re-runs), and the result is tracked so a re-run in a live session
+    // reuses the materialized join instead of silently re-running the
+    // LOO 1-NN
+    val branches = M1Ws.map { w =>
+      val bins = graft.util.Pipelines.cachedObj(s, s"m1.bins:$w:$dir") {
+        SFAOps.collectBins(
+          SFAOps.equiDepthBins(
+            SFAOps.disjointApprox(ser, w, M1L, normMean = false), M1Alpha),
+          M1L, M1Alpha)
       }
-      val res = graft.util.Pipelines.tracked(s, branches.reduce(_ unionByName _).orderBy("w"))
-      res.count()
-      res
+      val bags = SFAOps.bagOfWords(SFAOps.packWordsFused(
+        SFAOps.slidingApproxArrays(ser, w, M1L, normMean = false), bins, M1Bits))
+      SFAOps.nnBagJoin(bags, bags)
+        .agg(sum(when(col("nn_id") % 3 === col("test_id") % 3, 1L).otherwise(0L))
+          .as("train_correct"))
+        .select(lit(false).as("norm"), lit(w.toLong).as("w"),
+          lit(M1L.toLong).as("features"), col("train_correct"))
     }
+    graft.util.Pipelines.tracked(s, branches.reduce(_ unionByName _).orderBy("w"))
   }
 
   /** LOO variant of [[SfaQ]]'s nn CTEs: both sides are the full bag

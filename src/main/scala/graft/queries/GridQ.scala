@@ -57,12 +57,6 @@ object GridQ {
     // SfaQ.series is already an eagerly-materialized session cache —
     // both windows' pipelines below scan it from the block store
     val ser = SfaQ.series(s, dir)
-    // a window-grid FIT at fixture input size is plan-depth-bound:
-    // run it (and the result materialization) in the small-fit scope
-    graft.util.Pipelines.smallFitScope(s, ser.count()) { m2Body(s, ser) }
-  }
-
-  private def m2Body(s: SparkSession, ser: DataFrame): DataFrame = {
     // the grid axis `w` is a COLUMN, not a driver loop: both windows'
     // quantizer fits run in ONE grouped aggregate, the word/bag/tf-idf
     // chain is keyed by (w, …) throughout, and the whole grid is ONE
@@ -113,11 +107,9 @@ object GridQ {
     val full = wDim.join(graded, Seq("w"), "left")
       .withColumn("total", coalesce(col("total"), lit(0L)))
     val byModel = Window.orderBy(col("correct").desc, col("w").desc)
-    val res = graft.util.Pipelines.tracked(s, full
+    graft.util.Pipelines.tracked(s, full
       .withColumn("rank", row_number().over(byModel).cast("long"))
       .orderBy("w"))
-    res.count() // materialize inside the small-fit scope
-    res
   }
 
   private def m2Branch(w: Int): String =
@@ -172,12 +164,6 @@ object GridQ {
     * per-(f, uni/bigram) χ² ≥ limit feature counts emitted.
     */
   private def m3(s: SparkSession, dir: String): DataFrame = {
-    // an f-sweep GRID at fixture input size is plan-depth-bound — same
-    // small-fit scoping as m2 (no-op at real scale)
-    graft.util.Pipelines.smallFitScope(s, SfaQ.series(s, dir).count()) { m3Body(s, dir) }
-  }
-
-  private def m3Body(s: SparkSession, dir: String): DataFrame = {
     val words = SfaQ.slidingWords(s, dir) // eagerly-materialized cache
     val byWin = Window.partitionBy("user_id").orderBy("win")
     // the sweep axis `f` is a COLUMN: the bigram lag runs ONCE on the
@@ -206,7 +192,7 @@ object GridQ {
     val wt = cell.groupBy("f", "key").agg(sum(col("obs")).as("wtot"))
     val lt = cell.groupBy("f", "cls").agg(sum(col("obs")).as("ltot"))
     val nt = cell.groupBy("f").agg(sum(col("obs")).as("n"))
-    val res = graft.util.Pipelines.tracked(s, wt
+    graft.util.Pipelines.tracked(s, wt
       .join(broadcast(lt), Seq("f"))
       .join(broadcast(nt), Seq("f"))
       .join(cell, Seq("f", "key", "cls"), "left")
@@ -219,8 +205,6 @@ object GridQ {
         sum(when(col("chi2") >= ChiLimit, 1L).otherwise(0L)).as("n_selected"))
       .select(col("f"), col("is_bigram"), col("n_features"), col("n_selected"))
       .orderBy("f", "is_bigram"))
-    res.count() // materialize inside the small-fit scope
-    res
   }
 
   private def m3Branch(f: Int): String = {
@@ -433,11 +417,7 @@ object GridQ {
   private def mteaser(s: SparkSession, dir: String): DataFrame = {
     implicit val sp: SparkSession = s
     val base = "/root/reference/src/main/resources/datasets/multivariate"
-    // fixture-scale fit: run the whole build (fits AND the eager
-    // cachedDF materialization) in the small-fit scope — see
-    // Pipelines.smallFitScope
-    val res = graft.util.Pipelines.smallFitScope(s, n = 60) {
-     graft.util.Pipelines.cachedDF(s, "mteaser.pendigits") {
+    val res = graft.util.Pipelines.cachedDF(s, "mteaser.pendigits") {
       val train0 = graft.ts.Loaders.loadMultivariate(s, s"$base/PenDigits/PenDigits_TRAIN3",
         applyZNorm = false)
       val test0 = graft.ts.Loaders.loadMultivariate(s, s"$base/PenDigits/PenDigits_TEST3",
@@ -461,7 +441,6 @@ object GridQ {
           normalization = Seq(false), lrMaxIter = 20))
       val model = clf.fit(train)
       clf.predictDF(model, test)
-     }
     }
     res.groupBy(col("off").cast("long").as("off"))
       .agg(count(lit(1)).as("n"),

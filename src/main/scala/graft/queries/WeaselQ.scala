@@ -68,11 +68,10 @@ object WeaselQ {
     */
   private def chiRanked(s: SparkSession, dir: String): DataFrame = {
     // tracked result (no UDFs → re-runs canonicalize equal, so o4/f9
-    // and their repeats reuse the materialized ranking). Deliberately
-    // NOT small-fit-scoped: the ranking key is a raw double χ² sum, and
-    // changing the shuffle/AQE shape changes its summation order — the
-    // one thing an optimization round must not do (observed: rn flip at
-    // sf0.01 under the scope).
+    // and their repeats reuse the materialized ranking). The ranking key
+    // is a raw double χ² sum, so changing the shuffle/AQE shape changes
+    // its summation order — the one thing an optimization round must not
+    // do (observed: rn flip at sf0.01 with AQE off and 8 partitions).
     val res = Pipelines.tracked(s, chiRankedFrom(bags(s, dir)))
     res.count()
     res

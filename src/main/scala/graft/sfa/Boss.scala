@@ -51,11 +51,13 @@ object Boss {
 
   /** A fitted ensemble: selected window models + their train bags.
     * `trainBags` columns: (norm, w, id, label, word, cnt, f) for the
-    * selected (norm, w) configs at each model's feature length f.
+    * selected (norm, w) configs at each model's feature length f;
+    * `trainBagRows` is its row count, predict's broadcast gate.
     */
   final case class EnsembleModel(
       models: Seq[WindowModel],
       trainBags: DataFrame,
+      trainBagRows: Long,
       trainSize: Long)
 
   /** Fit SFA bins for every (norm, windowLength) config in one plan: DFT
@@ -229,12 +231,6 @@ class BossEnsemble(cfg: Boss.Config = Boss.Config()) {
   /** Fit on (id LONG, label DOUBLE, data ARRAY<DOUBLE>). */
   def fit(train: DataFrame)(implicit spark: SparkSession): EnsembleModel = {
     val trainCount = train.count()
-    // fixture-scale fits drop AQE/auto-broadcast to stay few-job
-    graft.util.Pipelines.smallFitScope(spark, trainCount) { fitBody(train, trainCount) }
-  }
-
-  private def fitBody(train: DataFrame, trainCount: Long)(
-      implicit spark: SparkSession): EnsembleModel = {
     val maxLen = train.select(max(size(col("data")))).head.getInt(0)
     val maxW = math.min(maxLen, cfg.maxWindowLength)
     val windows = (cfg.minWindowLength to maxW).toSeq
@@ -297,10 +293,10 @@ class BossEnsemble(cfg: Boss.Config = Boss.Config()) {
     // carry f so predict-side bags can be matched per model.
     val trainBags = bags(words.join(broadcast(selected(ensemble).drop("weight")), Seq("norm", "w")),
       usedBits).cache()
-    trainBags.count()
+    val trainBagRows = trainBags.count()
     words.unpersist()
 
-    EnsembleModel(ensemble, trainBags, trainCount)
+    EnsembleModel(ensemble, trainBags, trainBagRows, trainCount)
   }
 
   /** The models' (norm, w, f, weight) table; weight = train score. */
@@ -322,8 +318,7 @@ class BossEnsemble(cfg: Boss.Config = Boss.Config()) {
     val sel = selected(model.models)
     val words = withPrev(slidingWordsGrid(test, sfaModels, cfg.maxF))
       .join(broadcast(sel.drop("weight")), Seq("norm", "w"))
-    // trainBags is cached by fit — the count gate is cheap
-    val bcTrain = model.trainBags.count() <= BroadcastBagMaxRows
+    val bcTrain = model.trainBagRows <= BroadcastBagMaxRows
     if (!bcTrain)
       System.err.println("[gated] BOSS predict: train bags above broadcast ceiling — shuffle 1-NN join")
 

@@ -147,13 +147,6 @@ class BossVSEnsemble(cfg: BossVS.Config = BossVS.Config()) {
   private val usedBits = Words.binlog(cfg.alphabetSize)
 
   def fit(train: DataFrame)(implicit spark: SparkSession): VsEnsembleModel = {
-    val n = train.count()
-    // fixture-scale fits drop AQE/auto-broadcast to stay few-job
-    graft.util.Pipelines.smallFitScope(spark, n) { fitBody(train, n) }
-  }
-
-  private def fitBody(train: DataFrame, n: Long)(
-      implicit spark: SparkSession): VsEnsembleModel = {
     import spark.implicits._
     val labels = train.select("label").distinct().collect().map(_.getDouble(0)).sorted.toSeq
     val maxLen = train.select(max(size(col("data")))).head.getInt(0)

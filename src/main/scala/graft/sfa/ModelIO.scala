@@ -103,6 +103,7 @@ object ModelIO {
     val binsF = Future(spark.read.parquet(s"$path/bins").collect())
     val modelsF = Future(spark.read.parquet(s"$path/models").collect())
     val sizeF = Future(spark.read.parquet(s"$path/meta").head.getLong(0))
+    val bagRowsF = Future(spark.read.parquet(s"$path/trainBags").count())
     val binRows = Await.result(binsF, Duration.Inf).groupBy(_.getInt(0))
     val models = Await.result(modelsF, Duration.Inf)
       .sortBy(_.getInt(0))
@@ -118,7 +119,8 @@ object ModelIO {
             r.getBoolean(8), r.getBoolean(9), r.getBoolean(10), bins))
       }.toSeq
     val bags = spark.read.parquet(s"$path/trainBags")
-    Boss.EnsembleModel(models, bags, Await.result(sizeF, Duration.Inf))
+    Boss.EnsembleModel(models, bags, Await.result(bagRowsF, Duration.Inf),
+      Await.result(sizeF, Duration.Inf))
   }
 
   // ---- S9: WEASEL ----------------------------------------------------
@@ -586,8 +588,8 @@ object ModelIO {
     // prefix it touches — tasks × prefixes tiny files per write, paid
     // back on every subsequent listing and scan. The Iceberg
     // write.distribution-mode=hash idea, expressed in plain parquet.
-    // The hint is a silent no-op when AQE is off (e.g. a caller writing
-    // inside a small-fit scope), which would quietly reintroduce the
+    // The hint is a silent no-op when AQE is off (a session configured
+    // without it), which would quietly reintroduce the
     // tasks × prefixes dust — fall back to an explicit hash repartition
     // by prefix there (one file per prefix: clustered, not skew-split).
     val clustered =

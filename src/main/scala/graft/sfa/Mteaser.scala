@@ -58,24 +58,18 @@ class MteaserClassifier(
   import Mteaser._
 
   def fit(train0: DataFrame)(implicit spark: SparkSession): MteaserModel = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
     val muse = new MuseClassifier(slaveCfg)
     // eager cache: the per-snapshot fits below run CONCURRENTLY and all
     // branch from `train` — against a lazy input each would race to
-    // recompute the whole upstream plan (the Pipelines.cachedDF rule).
+    // recompute the whole upstream plan (the Pipelines.cachedDF rule);
+    // the max-length scan materializes it before they start.
     // Only unpersist at the end if the cache was introduced HERE — a
     // caller that handed in an already-cached frame owns that cache.
     val ownCache = train0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val train = if (ownCache) train0.cache() else train0
-    val nTrain = train.count()
-    // fixture-scale cascades drop AQE/auto-broadcast to stay few-job
-    graft.util.Pipelines.smallFitScope(spark, nTrain) { fitBody(train, muse, ownCache) }
-  }
-
-  private def fitBody(train: DataFrame, muse: MuseClassifier, ownCache: Boolean)(
-      implicit spark: SparkSession): MteaserModel = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val maxLen = sampleLens(train).select(max(col("len"))).head.getInt(0)
     val maxL = math.min(maxLen, cfg.maxWindowLength)
     val step = maxL / cfg.s.toDouble

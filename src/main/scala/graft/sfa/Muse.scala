@@ -202,14 +202,8 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
   }
 
   private def fitCore(train: DataFrame)(implicit spark: SparkSession): (MuseModel, DataFrame) = {
-    val n = train.select("id").distinct().count()
-    // fixture-scale fits drop AQE/auto-broadcast to stay few-job
-    graft.util.Pipelines.smallFitScope(spark, n) { fitCoreBody(train, n) }
-  }
-
-  private def fitCoreBody(train: DataFrame, n: Long)(
-      implicit spark: SparkSession): (MuseModel, DataFrame) = {
     import spark.implicits._
+    val n = train.select("id").distinct().count()
     val maxLen = train.select(max(size(col("data")))).head.getInt(0)
 
     def windowsFor(norm: Boolean): Seq[Int] = {

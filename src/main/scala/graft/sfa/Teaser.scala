@@ -68,15 +68,7 @@ class TeaserClassifier(
   import Teaser._
 
   def fit(train: DataFrame)(implicit spark: SparkSession): TeaserModel = {
-    val statsRow = train.agg(count(lit(1)), max(size(col("data")))).head
-    // fixture-scale cascades drop AQE/auto-broadcast to stay few-job
-    graft.util.Pipelines.smallFitScope(spark, statsRow.getLong(0)) {
-      fitBody(train, statsRow.getInt(1))
-    }
-  }
-
-  private def fitBody(train: DataFrame, maxLen: Int)(
-      implicit spark: SparkSession): TeaserModel = {
+    val maxLen = train.select(max(size(col("data")))).head.getInt(0)
     val weasel = new WeaselClassifier(slaveCfg)
     val maxL = math.min(maxLen, cfg.maxWindowLength)
     val step = maxL / cfg.s.toDouble

@@ -358,8 +358,8 @@ object Weasel {
   }
 
   /** [[vectors]] of a model dictionary (key, dict_idx) at its (norm, f);
-    * the predict side broadcasts the model-sized dictionary, a small fit
-    * joins it in its one job instead of scheduling a broadcast build.
+    * the predict side broadcasts the model-sized dictionary, the fit
+    * leaves the join to the planner.
     */
   def modelVectors(
       bags: DataFrame,
@@ -413,14 +413,8 @@ class WeaselClassifier(cfg: Weasel.Config = Weasel.Config()) {
   }
 
   private def fitCore(train: DataFrame)(implicit spark: SparkSession): (WeaselModel, DataFrame) = {
-    val n = train.count()
-    // fixture-scale fits drop AQE/auto-broadcast to stay few-job
-    graft.util.Pipelines.smallFitScope(spark, n) { fitCoreBody(train, n) }
-  }
-
-  private def fitCoreBody(train: DataFrame, n: Long)(
-      implicit spark: SparkSession): (WeaselModel, DataFrame) = {
     import spark.implicits._
+    val n = train.count()
     val maxLen = train.select(max(size(col("data")))).head.getInt(0)
     val hb = highestBit(cfg.maxWindowLength)
 

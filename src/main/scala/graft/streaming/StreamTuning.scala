@@ -54,7 +54,8 @@ object StreamTuning {
   def resolve(s: SparkSession, expectedKeys: Long): Int = {
     val cap = s.conf.get("spark.sql.shuffle.partitions").toInt
     s.conf.getOption(PartitionsConf).map(_.toInt).getOrElse {
-      val byKeys = (expectedKeys + KeysPerPartition - 1) / KeysPerPartition
+      // ceil without the `+ KeysPerPartition - 1` that overflows near Long.MaxValue
+      val byKeys = expectedKeys / KeysPerPartition + (if (expectedKeys % KeysPerPartition > 0) 1 else 0)
       math.max(1L, math.min(byKeys, cap.toLong)).toInt
     }
   }

@@ -152,10 +152,9 @@ object Pipelines {
     * the driver calls them sequentially). Cached — i.e. unbounded — so
     * an overlapped build that itself overlaps sub-builds can never
     * self-deadlock on pool starvation; the concurrency in practice is
-    * bounded by the handful of builds a call site submits. Session
-    * confs are session-wide (not thread-local), so pool threads see a
-    * caller's [[smallFitScope]] settings; FitScope's depth counter is
-    * synchronized for exactly this concurrent-futures case.
+    * bounded by the handful of builds a call site submits. Nothing
+    * here changes a session's confs, so every pool thread plans under
+    * the settings of the session it was handed.
     */
   lazy val buildPool: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
@@ -163,31 +162,37 @@ object Pipelines {
         val t = new Thread(r, "graft-build"); t.setDaemon(true); t
       }))
 
-  /** The DSv2 clone the pushdown queries read through: parquet routed to
-    * the v2 source with footer-aggregate pushdown on, scoped to a CLONED
-    * session so the caller's v1 plan shapes (and their pinned gates)
-    * stay untouched. Memoized per calling session — repeated bench
-    * passes reuse ONE SessionState instead of building and discarding
-    * one per call — and the runtime confs the scans depend on are copied
-    * from the caller (newSession() starts from the context defaults, not
-    * the caller's runtime values).
+  /** A memoized clone of `s` with `overrides` set on it, for plans that
+    * need settings the caller's session must not be steered into: the
+    * clone has its own SQL conf, shares the caller's cache manager, and
+    * is memoized per calling session and `name`, so repeated passes
+    * reuse ONE SessionState. The runtime confs scans depend on are
+    * re-synced from the caller on EVERY call, not only at creation
+    * (`newSession()` starts from the context defaults): a caller that
+    * changes e.g. its time zone must not read through a clone that kept
+    * the stale value. An override wins over its mirrored conf.
     */
-  def dsv2Session(s: SparkSession): SparkSession = {
-    val s2 = cachedObj(s, "dsv2.session") {
+  def clonedSession(s: SparkSession, name: String, overrides: (String, String)*): SparkSession = {
+    val s2 = cachedObj(s, s"session:$name") {
       val fresh = s.newSession()
-      fresh.conf.set("spark.sql.sources.useV1SourceList", "")
-      fresh.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+      overrides.foreach { case (k, v) => fresh.conf.set(k, v) }
       fresh
     }
-    // re-sync the mirrored runtime confs on EVERY call, not only at
-    // creation: a caller that changes e.g. the session time zone inside
-    // a scoped config block must not read through a clone that silently
-    // kept the stale value (the set is a cheap no-op when unchanged)
     Seq("spark.sql.session.timeZone", "spark.sql.shuffle.partitions",
         "spark.sql.legacy.parquet.nanosAsLong")
+      .filterNot(k => overrides.exists(_._1 == k))
       .foreach(k => scala.util.Try(s2.conf.set(k, s.conf.get(k))))
     s2
   }
+
+  /** The DSv2 clone the pushdown queries read through: parquet routed to
+    * the v2 source with footer-aggregate pushdown on, so the caller's v1
+    * plan shapes (and their pinned gates) stay untouched.
+    */
+  def dsv2Session(s: SparkSession): SparkSession =
+    clonedSession(s, "dsv2",
+      "spark.sql.sources.useV1SourceList" -> "",
+      "spark.sql.parquet.aggregatePushdown" -> "true")
 
   /** Cache `df` AND register it for session-scoped release: an ad-hoc
     * intra-query `.cache()` has no owner, so it would survive
@@ -248,63 +253,6 @@ object Pipelines {
     */
   def fitParallelism(n: Long): Int =
     math.max(1L, math.min(1024L, n / 5000L)).toInt
-
-  /** Run `body` with AQE and wide shuffles turned off when the fit
-    * input is fixture-scale (n ≤ `threshold` rows), restoring the
-    * session conf after. Rationale: a classifier fit at fixture scale
-    * is PLAN-DEPTH-bound — AQE materializes every shuffle stage as its
-    * own scheduled job, so a 10-action fit schedules 50+ jobs whose
-    * wall time is hostage to driver contention, while the data would
-    * fit one task. At real scale (n past the threshold) the body runs
-    * untouched and keeps AQE's runtime re-planning. Restores to the
-    * previous values, so scopes nest; the caller must materialize its
-    * results inside the scope (our query wrappers cache eagerly).
-    */
-  /** Default [[smallFitScope]] threshold — public so a caller that must
-    * BRANCH on the same decision (e.g. checkpoint-per-round vs
-    * one-deep-plan in iterative graph bodies) tests the identical
-    * condition instead of re-reading session confs at plan-build time.
-    */
-  val SmallFitThreshold = 5000L
-
-  def smallFitScope[T](s: SparkSession, n: Long, threshold: Long = SmallFitThreshold)(body: => T): T =
-    if (n > threshold) body
-    else {
-      FitScope.enter(s)
-      try body
-      finally FitScope.exit(s)
-    }
-
-  /** Depth-counted session-conf toggling for [[smallFitScope]]: fits
-    * may nest (a cascade fits slaves inside its own scope) and run in
-    * concurrent driver futures, so only the OUTERMOST scope saves/sets
-    * and only the last exit restores — a plain save/restore pair would
-    * race and could leave the session stuck on the small-fit settings.
-    */
-  private object FitScope {
-    // auto-broadcast also goes: every broadcast build is its own
-    // scheduled job, and at fixture scale a shuffle join inside the
-    // one query job is cheaper than scheduling a build job per join
-    private val settings = Seq(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "8",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    private var depth = 0
-    private var saved: Seq[(String, String)] = Nil
-
-    def enter(s: SparkSession): Unit = synchronized {
-      if (depth == 0) {
-        saved = settings.map { case (k, _) => k -> s.conf.get(k) }
-        settings.foreach { case (k, v) => s.conf.set(k, v) }
-      }
-      depth += 1
-    }
-
-    def exit(s: SparkSession): Unit = synchronized {
-      depth -= 1
-      if (depth == 0) saved.foreach { case (k, v) => s.conf.set(k, v) }
-    }
-  }
 }
 
 /** Size-gated broadcast: the single place a fact-derived frame is ever

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -20,6 +20,16 @@ object Bridge {
     */
   def waitListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** `df`'s analyzed plan as a frame of session `s`
+    * (`Dataset.ofRows` is `private[sql]`): `s` plans and runs it under
+    * its own confs, and cached stages in the plan still resolve through
+    * the shared cache manager.
+    */
+  def rebind(df: DataFrame, s: org.apache.spark.sql.SparkSession): DataFrame = (df, s) match {
+    case (d: org.apache.spark.sql.classic.Dataset[_], c: org.apache.spark.sql.classic.SparkSession) =>
+      org.apache.spark.sql.classic.Dataset.ofRows(c, d.logicalPlan)
+  }
 
   /** Stable per-session UUID (`private[sql]` on the classic session) —
     * used as a cache key that can't alias after a session is GC'd.

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Lag
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions.{array, explode, lit}
@@ -83,13 +84,17 @@ class BossBagsSpec extends SparkSpec {
     } finally ws.unpersist()
   }
 
-  /** Every plan node, through cached relations' plans; each node once. */
+  /** Every plan node, through cached relations' plans and adaptive
+    * plans' final plans and query stages; each node once.
+    */
   private def nodes(p: QueryPlan[_]): Seq[QueryPlan[_]] = {
     val seen = java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[QueryPlan[_], java.lang.Boolean])
     def walk(q: QueryPlan[_]): Unit = if (seen.add(q)) {
       q.children.foreach(c => walk(c.asInstanceOf[QueryPlan[_]]))
       q match {
         case s: InMemoryTableScanExec => walk(s.relation.cachedPlan)
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case s: QueryStageExec => walk(s.plan)
         case _ => q.innerChildren.foreach(walk)
       }
     }

@@ -101,6 +101,7 @@ class ModelIOSpec extends SparkSpec {
     ModelIO.saveBossEnsemble(model, path)
     val loaded = ModelIO.loadBossEnsemble(path)
     assert(loaded.trainSize == model.trainSize)
+    assert(loaded.trainBagRows == model.trainBagRows)
     assert(loaded.models.map(m => (m.norm, m.windowLength, m.features, m.trainCorrect))
       == model.models.map(m => (m.norm, m.windowLength, m.features, m.trainCorrect)))
     assert(loaded.models.map(_.sfa.bins.map(_.toSeq).toSeq)

@@ -18,7 +18,9 @@ class StreamTuningSpec extends SparkSpec {
     assert(StreamTuning.resolve(spark, 1L) == 1)
     assert(StreamTuning.resolve(spark, 8192L) == 1)
     assert(StreamTuning.resolve(spark, 8193L) == math.min(2, cap))
-    assert(StreamTuning.resolve(spark, Long.MaxValue / 2) == cap)
+    Seq(Long.MaxValue / 2, Long.MaxValue).foreach { keys =>
+      assert(StreamTuning.resolve(spark, keys) == cap, s"$keys keys")
+    }
     spark.conf.set(StreamTuning.PartitionsConf, "3")
     try assert(StreamTuning.resolve(spark, 1L) == 3)
     finally spark.conf.unset(StreamTuning.PartitionsConf)
