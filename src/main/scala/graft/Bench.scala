@@ -36,15 +36,6 @@ object Bench {
     // it; later consumers reuse it, as a real session would
     graft.util.Pipelines.clear()
 
-    // s9's BOSS-ensemble + WEASEL fits are the query's INPUT artifacts,
-    // not the sink/source operator under test — fit them once OUTSIDE the
-    // timed region so the s9 line measures save+load+emit (r8 published
-    // the ~10 s cold fit as the roundtrip cost whenever the repeat pass
-    // missed it under driver contention)
-    if (sys.env.get("SPARK_GRAFT_ONLY").filter(_.nonEmpty)
-        .forall(_.split(",").contains("s9_classifier_roundtrip")))
-      graft.queries.SourceQ.prefitS9(spark, sfDir)
-
     // Per-query scheduled-job counter: a query dominated by many small
     // jobs is scheduling-bound and its wall time is hostage to driver
     // CPU/GC contention in the measuring environment (BENCH_r04 inflated
@@ -86,6 +77,14 @@ object Bench {
     }
     def runOne(name: String, fn: (SparkSession, String) => DataFrame): Double =
       timed(name) { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
+    // s9's BOSS-ensemble + WEASEL fits are the query's INPUT artifacts,
+    // not the sink/source operator under test — fit them once before the
+    // measured pass so the s9 line measures save+load+emit (r8 published
+    // the ~10 s cold fit as the roundtrip cost whenever the repeat pass
+    // missed it under driver contention). Its time is not reported; a
+    // failure (e.g. missing input) is one recorded error, like any item's.
+    if (only.forall(_.contains("s9_classifier_roundtrip")))
+      timed("s9_prefit")(graft.queries.SourceQ.prefitS9(spark, sfDir))
     val firstPass = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) => (name, fn, runOne(name, fn)) }

@@ -464,17 +464,14 @@ object Curation {
     */
   private def curationExport(s: SparkSession, dir: String): DataFrame = {
     // the funnel-stage chain and the dup-span starts are INDEPENDENT
-    // build arms over the shared grams stage (§2.6) — overlap them;
-    // the shared-stage caches are single-flight, so the arms' common
-    // dependency (curation.grams) is built exactly once
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec = Pipelines.buildPool
-    val stagesF = Future(stageCache(s, dir))
-    val startsF = Future(dupStartsCached(s, dir))
-    curationExportOf(docs(s, dir), grams(s, dir),
-      Some(Await.result(stagesF, Duration.Inf)),
-      Some(Await.result(startsF, Duration.Inf)))
+    // build arms over the shared grams stage — overlap them in one
+    // Overlap scope; the shared-stage caches are single-flight, so the
+    // arms' common dependency (curation.grams) is built exactly once
+    graft.util.Overlap(s) { o =>
+      val stagesA = o.fork(stageCache(s, dir))
+      val startsA = o.fork(dupStartsCached(s, dir))
+      curationExportOf(docs(s, dir), grams(s, dir), Some(stagesA.join()), Some(startsA.join()))
+    }
   }
 
   private[pipeline] def curationExportOf(d: DataFrame, g: DataFrame,

@@ -266,10 +266,6 @@ object Similarity {
   private val IvfCells = 32
   private val IvfProbes = 8
 
-  /** Layout dirs already (re)built by THIS JVM — see [[ivfLayoutAnn]]. */
-  private val builtLayouts =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** IVF-bucketed ANN: corpus is partitioned into $IvfCells cells; a
     * query probes the $IvfProbes nearest cells and exact-reranks only
     * their members. Centroids are deterministic and engine-portable:
@@ -580,27 +576,22 @@ object Similarity {
     val loc = graft.util.Warehouse.dir(s,
       "ivf/" + java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString)
-    // Session-scoped build-once: a fresh JVM always rebuilds (an on-disk
+    // Build-once per JVM: a fresh JVM always rebuilds (an on-disk
     // _SUCCESS check would serve a stale layout if the source table
-    // changed between runs); within a session every re-run reuses it.
-    // mark built only AFTER the write returns (a failed first write must
-    // not leave later calls reading a partial directory).
+    // changed between runs); within a JVM every re-run reuses it.
     // The build is half-SAVED / half-APPENDED by design: the registered
     // query itself exercises the append lifecycle, so the DuckDB oracle
     // (≡ sim_ivf_ann) gates the append-grown layout every round — a
     // member's cell depends only on itself and the centroids, so the
     // two-step build is bit-identical to a one-shot save.
-    if (!builtLayouts.contains(loc)) builtLayouts.synchronized {
-      if (!builtLayouts.contains(loc)) {
-        val centFit = ivfCentroids(c.select(col("c_id").as("id"), col("civ").as("iv")), IvfCells)
-        saveIvfLayout(s, c.filter(col("c_id") % 2 === 0), centFit, loc)
-        appendIvfLayout(s, c.filter(col("c_id") % 2 =!= 0), loc)
-        // ... then COMPACTED (r10): membership and scores are untouched
-        // by the physical merge, so the DuckDB oracle now gates the
-        // whole save→append→compact lifecycle every round
-        compactIvfLayout(s, loc, maxFilesPerCell = 1)
-        builtLayouts.add(loc)
-      }
+    graft.util.BuildOnce(loc) {
+      val centFit = ivfCentroids(c.select(col("c_id").as("id"), col("civ").as("iv")), IvfCells)
+      saveIvfLayout(s, c.filter(col("c_id") % 2 === 0), centFit, loc)
+      appendIvfLayout(s, c.filter(col("c_id") % 2 =!= 0), loc)
+      // ... then COMPACTED (r10): membership and scores are untouched
+      // by the physical merge, so the DuckDB oracle now gates the
+      // whole save→append→compact lifecycle every round
+      compactIvfLayout(s, loc, maxFilesPerCell = 1)
     }
     // probes score against the PERSISTED centroid table, as any reader
     // of the at-rest layout would (integer centroid sums round-trip
@@ -950,19 +941,19 @@ object Similarity {
   private def annRecall(s: SparkSession, dir: String): DataFrame = {
     // The brute top-k and the four ANN pipelines are INDEPENDENT
     // builds, each a chain of small fit jobs (13 cachedDF stages, 38
-    // scheduled jobs back to back at sf0.1) — overlap them (§2.6) so
-    // the cold path costs ~slowest-build instead of the sum. The
-    // assembled recall plan consumes exactly the session-cached frames
-    // the futures built, in the same ivf/lsh/pq/sq leg order.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec = Pipelines.buildPool
-    val bruteF = Future(cosineTopK(s, dir))
-    val methodFs = Seq(
-      "ivf" -> Future(ivfAnn(s, dir)), "lsh" -> Future(lshAnn(s, dir)),
-      "pq" -> Future(pqAnn(s, dir)), "sq" -> Future(sqAnn(s, dir)))
-    val brute = Await.result(bruteF, Duration.Inf)
-      .filter(col("rk") <= 3).select("q_id", "c_id")
+    // scheduled jobs back to back at sf0.1) — overlap them as arms of
+    // one Overlap scope so the cold path costs ~slowest-build instead
+    // of the sum. The assembled recall plan consumes exactly the
+    // session-cached frames the arms built, in the same ivf/lsh/pq/sq
+    // leg order.
+    val (bruteAll, methods) = graft.util.Overlap(s) { o =>
+      val bruteA = o.fork(cosineTopK(s, dir))
+      val methodAs = Seq(
+        "ivf" -> o.fork(ivfAnn(s, dir)), "lsh" -> o.fork(lshAnn(s, dir)),
+        "pq" -> o.fork(pqAnn(s, dir)), "sq" -> o.fork(sqAnn(s, dir)))
+      (bruteA.join(), methodAs.map { case (name, a) => name -> a.join() })
+    }
+    val brute = bruteAll.filter(col("rk") <= 3).select("q_id", "c_id")
     val qs = emb(s, dir).filter(col("vec_id") < 10).select(col("vec_id").as("q_id"))
     def recallOf(name: String, ann: DataFrame): DataFrame = {
       val hits = brute.join(ann.select("q_id", "c_id"), Seq("q_id", "c_id"))
@@ -972,8 +963,8 @@ object Similarity {
         .select(lit(name).as("method"), col("q_id"), col("hits"),
           graft.util.Rnd.jround(col("hits") / lit(3.0), 6).as("recall"))
     }
-    Pipelines.tracked(s, methodFs
-      .map { case (name, f) => recallOf(name, Await.result(f, Duration.Inf)) }
+    Pipelines.tracked(s, methods
+      .map { case (name, ann) => recallOf(name, ann) }
       .reduce(_ unionByName _)
       .orderBy("method", "q_id"))
   }

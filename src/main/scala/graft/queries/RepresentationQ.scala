@@ -49,10 +49,6 @@ object RepresentationQ {
 
   // ---- T5: PLA ---------------------------------------------------------
 
-  private val Frame = 4.0 // 16 points / (l=8 / 2) segments
-  private val ConstA = (Frame + 1) / 2.0 // 2.5
-  private val ConstB = (2 * Frame + 1) / 3.0 // 3.0
-
   /** Sum-order determinism: `value` is cents-exact, and the PLA weights
     * (t − 2.5, t − 3) are exact halves/integers — so both engines sum
     * the INTEGER quantities Σ(2t−5)·cents and Σ(t−3)·cents (exact,

@@ -184,12 +184,6 @@ object Stats {
       .orderBy("label", "fold")
   }
 
-  private val foldsSql =
-    """SELECT label, (ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id) - 1) % 10 AS fold,
-      |  COUNT(*) AS n
-      |FROM embeddings GROUP BY label, fold ORDER BY label, fold""".stripMargin
-    // note: DuckDB disallows window fns in GROUP BY directly; rewritten below.
-
   private val foldsSqlSafe =
     """WITH f AS (
       |  SELECT label,

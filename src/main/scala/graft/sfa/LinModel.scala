@@ -162,24 +162,21 @@ object LinModel {
   private val LocalFitMaxRows = 5000L
 
   /** liblinear-style OvR: K binary fits (ONE for K = 2). The binary
-    * fits share the cached `vecs` and run concurrently — each MLlib fit
-    * is a driver-blocking sequence of treeAggregate jobs, so a few
-    * parallel fits just interleave their jobs on the cluster.
+    * fits share the cached `vecs` and run as arms of one
+    * [[graft.util.Overlap]] scope — each MLlib fit is a driver-blocking
+    * sequence of treeAggregate jobs, so a few parallel fits just
+    * interleave their jobs on the cluster.
     */
   def fitOvr(vecs: DataFrame, n: Long, maxIter: Int): OvrLM = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
     val labels = vecs.select("label").distinct()
       .collect().map(_.getDouble(0)).sorted
     val fitLabels = if (labels.length == 2) labels.take(1) else labels
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fits = fitLabels.map { c =>
-      Future {
-        newBinaryLr(n, maxIter).fit(
-          vecs.withColumn("label", when(col("label") === c, 1.0).otherwise(0.0)))
-      }
+    val models = graft.util.Overlap(vecs.sparkSession) { o =>
+      fitLabels.map { c =>
+        o.fork(newBinaryLr(n, maxIter).fit(
+          vecs.withColumn("label", when(col("label") === c, 1.0).otherwise(0.0))))
+      }.map(_.join())
     }
-    val models = fits.map(Await.result(_, Duration.Inf))
     OvrLM(labels, models.map(_.coefficients.toArray), models.map(_.intercept))
   }
 

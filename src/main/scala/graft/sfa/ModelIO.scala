@@ -2,6 +2,7 @@ package graft.sfa
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Overlap
 
 /** Model persistence (SURVEY §2.1 S8/S9/S10), re-expressed as columnar
   * artifacts instead of the reference's Java/Kryo serialization
@@ -15,27 +16,13 @@ import org.apache.spark.sql.functions._
   *  - the k-NN index layout is parquet *partitioned by word prefix* with
   *    columnar min/max stats — the trie's bulk-load design at rest; a
   *    reader prunes partitions by prefix before the LB scan.
+  *
+  * The BOSS-ensemble and WEASEL artifact tables sit under disjoint
+  * sub-paths and are written and read as arms of one [[Overlap]] scope:
+  * each is a tiny 1-task job whose time is scheduling overhead, so k of
+  * them overlapped cost about the slowest instead of the sum.
   */
 object ModelIO {
-
-  /** Run independent artifact jobs — writes to / reads from DISJOINT
-    * sub-paths of one artifact directory — concurrently (guide §2.6:
-    * actions are only sequential because the driver calls them
-    * sequentially). Artifact tables are tiny 1-task jobs whose wall
-    * time is per-job scheduling overhead, so k of them overlapped cost
-    * ~max instead of ~sum; the s9 roundtrip is 9 such writes + 6 such
-    * reads. A cached daemon pool (not a bounded one) so nested saves
-    * (TEASER slaves call saveWeasel) can never self-deadlock. Blocks
-    * until all finish; a failure is rethrown to the caller.
-    */
-  private def artifactPool = graft.util.Pipelines.buildPool
-
-  private def concurrently[T](tasks: (() => T)*): Seq[T] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec = artifactPool
-    Await.result(Future.traverse(tasks.toSeq)(t => Future(t())), Duration.Inf)
-  }
 
   // ---- S8: SFA quantizer ---------------------------------------------
 
@@ -75,37 +62,35 @@ object ModelIO {
     */
   def saveBossEnsemble(model: Boss.EnsembleModel, path: String)(implicit spark: SparkSession): Unit = {
     import spark.implicits._
-    concurrently(
+    Overlap(spark) { o =>
       // member row = window-model meta + its SFA quantizer meta (1:1)
-      () => model.models.zipWithIndex.map { case (m, i) =>
+      o.fork(model.models.zipWithIndex.map { case (m, i) =>
         (i, m.norm, m.windowLength, m.features, m.trainCorrect,
           m.sfa.windowSize, m.sfa.wordLength, m.sfa.alphabetSize,
           m.sfa.normMean, m.sfa.lowerBounding, m.sfa.applyZNorm)
       }.toDF("idx", "norm", "w", "features", "trainCorrect",
         "windowSize", "wordLength", "alphabetSize", "normMean", "lowerBounding", "applyZNorm")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/models"),
-      () => (for {
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/models"))
+      o.fork((for {
         (m, i) <- model.models.zipWithIndex
         (row, coef) <- m.sfa.bins.zipWithIndex.toSeq
         (edge, pos) <- row.zipWithIndex
         if edge != Double.MaxValue
       } yield (i, coef, pos, edge)).toDF("idx", "coef", "pos", "edge")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/bins"),
-      () => model.trainBags.write.mode("overwrite").parquet(s"$path/trainBags"),
-      () => Seq(model.trainSize).toDF("trainSize")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/bins"))
+      o.fork(model.trainBags.write.mode("overwrite").parquet(s"$path/trainBags"))
+      o.fork(Seq(model.trainSize).toDF("trainSize")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/meta"))
+    }
   }
 
-  def loadBossEnsemble(path: String)(implicit spark: SparkSession): Boss.EnsembleModel = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec = artifactPool
-    val binsF = Future(spark.read.parquet(s"$path/bins").collect())
-    val modelsF = Future(spark.read.parquet(s"$path/models").collect())
-    val sizeF = Future(spark.read.parquet(s"$path/meta").head.getLong(0))
-    val bagRowsF = Future(spark.read.parquet(s"$path/trainBags").count())
-    val binRows = Await.result(binsF, Duration.Inf).groupBy(_.getInt(0))
-    val models = Await.result(modelsF, Duration.Inf)
+  def loadBossEnsemble(path: String)(implicit spark: SparkSession): Boss.EnsembleModel = Overlap(spark) { o =>
+    val binsA = o.fork(spark.read.parquet(s"$path/bins").collect())
+    val modelsA = o.fork(spark.read.parquet(s"$path/models").collect())
+    val sizeA = o.fork(spark.read.parquet(s"$path/meta").head.getLong(0))
+    val bagRowsA = o.fork(spark.read.parquet(s"$path/trainBags").count())
+    val binRows = binsA.join().groupBy(_.getInt(0))
+    val models = modelsA.join()
       .sortBy(_.getInt(0))
       .map { r =>
         val wordLength = r.getInt(6)
@@ -119,8 +104,7 @@ object ModelIO {
             r.getBoolean(8), r.getBoolean(9), r.getBoolean(10), bins))
       }.toSeq
     val bags = spark.read.parquet(s"$path/trainBags")
-    Boss.EnsembleModel(models, bags, Await.result(bagRowsF, Duration.Inf),
-      Await.result(sizeF, Duration.Inf))
+    Boss.EnsembleModel(models, bags, bagRowsA.join(), sizeA.join())
   }
 
   // ---- S9: WEASEL ----------------------------------------------------
@@ -134,46 +118,44 @@ object ModelIO {
     */
   def saveWeasel(model: Weasel.WeaselModel, path: String)(implicit spark: SparkSession): Unit = {
     import spark.implicits._
-    concurrently(
-      () => model.quantizers.toSeq.map { case (w, q) =>
+    Overlap(spark) { o =>
+      o.fork(model.quantizers.toSeq.map { case (w, q) =>
         (w, q.windowSize, q.normMean, q.maxWordLength, q.bestValues.toSeq)
       }.toDF("w", "windowSize", "normMean", "maxWordLength", "bestValues")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/quantizers"),
-      () => model.quantizers.toSeq.flatMap { case (w, q) =>
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/quantizers"))
+      o.fork(model.quantizers.toSeq.flatMap { case (w, q) =>
         q.bins.toSeq.map { case (coef, edges) => (w, coef, edges.toSeq) }
       }.toDF("w", "coef", "edges")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/bins"),
-      () => model.selected.write.mode("overwrite").parquet(s"$path/selected"),
-      () => LinModel.save(model.lr, path),
-      () => Seq((model.norm, model.features, model.trainCorrect, model.windows, model.dictSize))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/bins"))
+      o.fork(model.selected.write.mode("overwrite").parquet(s"$path/selected"))
+      o.fork(LinModel.save(model.lr, path))
+      o.fork(Seq((model.norm, model.features, model.trainCorrect, model.windows, model.dictSize))
         .toDF("norm", "features", "trainCorrect", "windows", "dictSize")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/meta"))
+    }
   }
 
-  def loadWeasel(path: String)(implicit spark: SparkSession): Weasel.WeaselModel = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec = artifactPool
-    val metaF = Future(spark.read.parquet(s"$path/meta").head)
-    val binsF = Future(spark.read.parquet(s"$path/bins").collect())
-    val qF = Future(spark.read.parquet(s"$path/quantizers").collect())
-    val lrF = Future(LinModel.load(path))
-    val bins = Await.result(binsF, Duration.Inf)
+  def loadWeasel(path: String)(implicit spark: SparkSession): Weasel.WeaselModel = Overlap(spark) { o =>
+    val metaA = o.fork(spark.read.parquet(s"$path/meta").head)
+    val binsA = o.fork(spark.read.parquet(s"$path/bins").collect())
+    val qA = o.fork(spark.read.parquet(s"$path/quantizers").collect())
+    val lrA = o.fork(LinModel.load(path))
+    val bins = binsA.join()
       .groupBy(_.getInt(0))
       .map { case (w, rows) =>
         w -> rows.map(r => r.getInt(1) -> r.getSeq[Double](2).toArray).toMap
       }
-    val quantizers = Await.result(qF, Duration.Inf).map { r =>
+    val quantizers = qA.join().map { r =>
       r.getInt(0) -> Weasel.SupervisedModel(
         r.getInt(1), r.getBoolean(2),
         r.getSeq[Int](4).toArray, r.getInt(3),
         bins.getOrElse(r.getInt(0), Map.empty))
     }.toMap
-    val meta = Await.result(metaF, Duration.Inf)
+    val meta = metaA.join()
     Weasel.WeaselModel(
       meta.getBoolean(0), meta.getInt(1), meta.getLong(2), quantizers,
       meta.getSeq[Int](3), spark.read.parquet(s"$path/selected"), meta.getInt(4),
-      Await.result(lrF, Duration.Inf))
+      lrA.join())
   }
 
   // ---- S9: MUSE ------------------------------------------------------

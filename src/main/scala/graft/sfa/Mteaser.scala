@@ -58,9 +58,6 @@ class MteaserClassifier(
   import Mteaser._
 
   def fit(train0: DataFrame)(implicit spark: SparkSession): MteaserModel = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val muse = new MuseClassifier(slaveCfg)
     // eager cache: the per-snapshot fits below run CONCURRENTLY and all
     // branch from `train` — against a lazy input each would race to
@@ -76,54 +73,50 @@ class MteaserClassifier(
     val offsets = new Array[Int](cfg.s + 1)
     for (s <- 2 to cfg.s) offsets(s) = math.round(step * s).toInt
 
-    // snapshots are independent until the threshold fold — fit them in
-    // parallel driver threads (Spark interleaves the jobs); each fit's
+    // snapshots are independent until the threshold fold — fit them as
+    // arms of one Overlap scope (Spark interleaves the jobs); each fit's
     // cost is plan depth, not data volume, so overlap hides the
     // scheduling latency the sequential loop serialized
-    val fitted = (2 to cfg.s).filter(offsets(_) >= cfg.minLen).map { s =>
-      s -> Future {
-        val truncated = truncate(train, offsets(s))
-        // one pass: the final refit's vectors score the train set too
-        val (slave, proba) = muse.fitWithProba(truncated)
-        // the ONLY collect: correct-sample features for the driver-side
-        // one-class problem (model-sized by design). Ordered by sample
-        // id — the SMO is sample-order-dependent and id order is the
-        // reference's train-array order (see Teaser.fit).
-        val correctFeats = proba.filter(col("label") === col("pred"))
-          .select(col("id"), col("probs")).orderBy("id").collect()
-          .map(r => EarlyCascade.features(r.getSeq[Double](1).toArray))
-        val master = OneClassSVM.fitGrid(correctFeats, cfg.nu)
-        // threshold tuning scores the slave on FULL-length samples
-        // (reference tuning predict runs with testing=false →
-        // extractUntilOffset keeps whole samples,
-        // MTEASERClassifier.java:190-191,264-273), not on the truncated
-        // self-scored train set — see Teaser.fit for the rationale.
-        val out = EarlyCascade.outcomeOf(
-          muse.predictProba(slave, train), master).cache()
-        out.count()
-        (slave, master, out)
-      }
+    val fitted = graft.util.Overlap(spark) { o =>
+      (2 to cfg.s).filter(offsets(_) >= cfg.minLen).map { s =>
+        s -> o.fork {
+          val truncated = truncate(train, offsets(s))
+          // one pass: the final refit's vectors score the train set too
+          val (slave, proba) = muse.fitWithProba(truncated)
+          // the ONLY collect: correct-sample features for the driver-side
+          // one-class problem (model-sized by design). Ordered by sample
+          // id — the SMO is sample-order-dependent and id order is the
+          // reference's train-array order (see Teaser.fit).
+          val correctFeats = proba.filter(col("label") === col("pred"))
+            .select(col("id"), col("probs")).orderBy("id").collect()
+            .map(r => EarlyCascade.features(r.getSeq[Double](1).toArray))
+          val master = OneClassSVM.fitGrid(correctFeats, cfg.nu)
+          // threshold tuning scores the slave on FULL-length samples
+          // (reference tuning predict runs with testing=false →
+          // extractUntilOffset keeps whole samples,
+          // MTEASERClassifier.java:190-191,264-273), not on the truncated
+          // self-scored train set — see Teaser.fit for the rationale.
+          val out = EarlyCascade.outcomeOf(
+            muse.predictProba(slave, train), master).cache()
+          out.count()
+          (slave, master, out)
+        }
+      }.map { case (s, arm) => s -> arm.join() }
     }
-    val slaves = scala.collection.mutable.Map.empty[Int, Muse.MuseModel]
-    val masters = scala.collection.mutable.Map.empty[Int, OneClassSVM.Model]
-    val outcomes = scala.collection.mutable.Map.empty[Int, DataFrame]
-    fitted.foreach { case (s, fut) =>
-      val (slave, master, out) = Await.result(fut, Duration.Inf)
-      slaves(s) = slave; masters(s) = master; outcomes(s) = out
-    }
-
+    // fitted is in snapshot order, the order the cascade folds in
     var state = EarlyCascade.init(sampleLens(train),
       (cfg.minThreshold to cfg.maxThreshold).toList)
-    for (s <- 2 to cfg.s if outcomes.contains(s)) {
-      state = EarlyCascade.step(state, outcomes(s), offsets(s), s, cfg.s).localCheckpoint(true)
+    for ((s, (_, _, out)) <- fitted) {
+      state = EarlyCascade.step(state, out, offsets(s), s, cfg.s).localCheckpoint(true)
     }
     val bestT = EarlyCascade.bestThreshold(state, cfg.minThreshold)
-    outcomes.values.foreach(_.unpersist())
+    fitted.foreach { case (_, (_, _, out)) => out.unpersist() }
     // model state is collected and the folded cascade state is
     // checkpointed — release the input cache iff fit() introduced it
     if (ownCache) train.unpersist()
 
-    MteaserModel(offsets, slaves.toMap, masters.toMap, bestT)
+    MteaserModel(offsets, fitted.map { case (s, (slave, _, _)) => s -> slave }.toMap,
+      fitted.map { case (s, (_, master, _)) => s -> master }.toMap, bestT)
   }
 
   /** Early-classify test samples, fully distributed (the undecided

@@ -81,43 +81,49 @@ object Warehouse {
 /** Session-scoped reuse of shared pipeline stages (sliding SFA words,
   * fitted models). Several registered queries consume the same upstream
   * stage — words feed bags, joins, χ² selection, classifiers — and a
-  * real user session computes such a stage once and fans out. The memo
-  * is keyed by (session identity, logical key); entries are `cache()`d
-  * DataFrames or fitted model objects. At cluster scale the same role
-  * is played by a persisted table / model store; nothing here assumes
-  * local mode.
-  *
-  * Bench calls [[clear]] after its warmup so the first *measured*
-  * consumer of a stage still pays for building it.
-  */
-/** Session-scoped shared-stage cache, keyed on the session's UUID (a
-  * stable string — unlike an identity hash it cannot alias after a
-  * session is GC'd, and entries don't pin the session object). A JVM
-  * cycling sessions evicts a stopped session's entries with [[evict]];
-  * [[clear]] drops everything (Bench does this between warmup and the
-  * measured pass).
+  * real user session computes such a stage once and fans out. Entries
+  * are `cache()`d DataFrames or fitted model objects, keyed by (session
+  * UUID, logical key): unlike an identity hash the UUID cannot alias
+  * after a session is GC'd, and entries don't pin the session object.
+  * At cluster scale the same role is played by a persisted table /
+  * model store; nothing here assumes local mode. A JVM cycling sessions
+  * evicts a stopped session's entries with [[evict]]; [[clear]] drops
+  * everything (Bench does this after its warmup, so the first
+  * *measured* consumer of a stage still pays for building it).
   */
 object Pipelines {
   import scala.collection.concurrent.TrieMap
   private val dfs = TrieMap.empty[(String, String), DataFrame]
   private val objs = TrieMap.empty[(String, String), AnyRef]
 
-  /** Per-key build locks: overlapped build pipelines ([[buildPool]])
-    * may race on a SHARED upstream stage, and a bare
-    * `TrieMap.getOrElseUpdate` evaluates the builder in both racers —
-    * for a persisted stage that is double compute plus a leaked
-    * persist. Single-flight per key: losers block and read the
-    * winner's entry. Deadlock-free because stage dependencies form a
-    * DAG (a cycle would be infinite recursion even single-threaded).
+  /** Per-key build locks: overlapped builds ([[Overlap]]) may race on
+    * a SHARED upstream stage, and a bare `TrieMap.getOrElseUpdate`
+    * evaluates the builder in both racers — for a persisted stage that
+    * is double compute plus a leaked persist. Single-flight per key:
+    * losers block and read the winner's entry. Deadlock-free because
+    * stage dependencies form a DAG (a cycle would be infinite recursion
+    * even single-threaded). A build whose lock [[evict]]/[[clear]]
+    * dropped meanwhile goes to its caller unstored and `release`d.
     */
   private val buildLocks = TrieMap.empty[(String, String), Object]
-  private def singleFlight[T](map: TrieMap[(String, String), T], k: (String, String))(
-      build: => T): T =
+  private def singleFlight[T](map: TrieMap[(String, String), T], k: (String, String),
+      release: T => Unit)(build: => T): T =
     map.get(k).getOrElse {
-      buildLocks.getOrElseUpdate(k, new Object).synchronized {
-        map.get(k).getOrElse { val v = build; map.put(k, v); v }
+      val lock = buildLocks.getOrElseUpdate(k, new Object)
+      lock.synchronized {
+        map.get(k).getOrElse {
+          val v = build
+          val owned = buildLocks.synchronized {
+            buildLocks.get(k).exists(_ eq lock) && { map.put(k, v); true }
+          }
+          if (!owned) release(v)
+          v
+        }
       }
     }
+
+  private def unpersist(df: DataFrame): Unit =
+    try df.unpersist() catch { case _: Throwable => () }
 
   private def sid(s: SparkSession): String =
     org.apache.spark.sql.graft.Bridge.sessionUUID(s)
@@ -136,7 +142,7 @@ object Pipelines {
     * guarantees the cache degrades to disk, not to an executor OOM.
     */
   def cachedDF(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    singleFlight(dfs, (sid(s), key)) {
+    singleFlight(dfs, (sid(s), key), unpersist) {
       val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = df.count()
       System.err.println(s"[cache] $key: $n rows (MEMORY_AND_DISK)")
@@ -145,22 +151,7 @@ object Pipelines {
 
   /** Build-once shared object (fitted model, broadcast bins) for this session. */
   def cachedObj[T <: AnyRef](s: SparkSession, key: String)(build: => T): T =
-    singleFlight(objs, (sid(s), key))(build).asInstanceOf[T]
-
-  /** Shared daemon pool for overlapping INDEPENDENT driver-submitted
-    * build pipelines (guide §2.6: actions are only sequential because
-    * the driver calls them sequentially). Cached — i.e. unbounded — so
-    * an overlapped build that itself overlaps sub-builds can never
-    * self-deadlock on pool starvation; the concurrency in practice is
-    * bounded by the handful of builds a call site submits. Nothing
-    * here changes a session's confs, so every pool thread plans under
-    * the settings of the session it was handed.
-    */
-  lazy val buildPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-build"); t.setDaemon(true); t
-      }))
+    singleFlight(objs, (sid(s), key), (_: AnyRef) => ())(build).asInstanceOf[T]
 
   /** A memoized clone of `s` with `overrides` set on it, for plans that
     * need settings the caller's session must not be steered into: the
@@ -218,19 +209,19 @@ object Pipelines {
     */
   def evict(s: SparkSession): Unit = {
     val id = sid(s)
-    dfs.keys.filter(_._1 == id).foreach { k =>
-      dfs.remove(k).foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    }
-    objs.keys.filter(_._1 == id).foreach(objs.remove)
-    buildLocks.keys.filter(_._1 == id).foreach(buildLocks.remove)
+    buildLocks.synchronized {
+      buildLocks.keys.filter(_._1 == id).foreach(buildLocks.remove)
+      objs.keys.filter(_._1 == id).foreach(objs.remove)
+      dfs.keys.filter(_._1 == id).toSeq.flatMap(dfs.remove)
+    }.foreach(unpersist)
   }
 
-  def clear(): Unit = {
-    dfs.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    dfs.clear()
-    objs.clear()
-    buildLocks.clear()
-  }
+  def clear(): Unit =
+    buildLocks.synchronized {
+      val all = dfs.values.toSeq
+      dfs.clear(); objs.clear(); buildLocks.clear()
+      all
+    }.foreach(unpersist)
 
   /** Drop (and unpersist) ONE cached DataFrame stage for `s`, keeping
     * every other entry — for callers that must force a fit object
@@ -239,8 +230,7 @@ object Pipelines {
     * built would flatter the first measured series consumer).
     */
   def dropDF(s: SparkSession, key: String): Unit =
-    dfs.remove((sid(s), key))
-      .foreach(df => try df.unpersist() catch { case _: Throwable => () })
+    dfs.remove((sid(s), key)).foreach(unpersist)
 
   /** Partition count for an iterative driver-coordinated ML fit over
     * `n` feature rows. Every MLlib L-BFGS iteration launches a

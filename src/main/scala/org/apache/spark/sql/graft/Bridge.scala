@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graft
 
+import java.util.Properties
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -20,6 +22,13 @@ object Bridge {
     */
   def waitListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The calling thread's Spark local properties (job group,
+    * description, job tags) and their setter, `private[spark]` on
+    * SparkContext: an overlapped arm runs under its caller's.
+    */
+  def localProperties(sc: SparkContext): Properties = sc.getLocalProperties
+  def setLocalProperties(sc: SparkContext, p: Properties): Unit = sc.setLocalProperties(p)
 
   /** `df`'s analyzed plan as a frame of session `s`
     * (`Dataset.ofRows` is `private[sql]`): `s` plans and runs it under

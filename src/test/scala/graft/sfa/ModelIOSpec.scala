@@ -1,7 +1,7 @@
 package graft.sfa
 
 import graft.SparkSpec
-import graft.ts.Loaders
+import graft.ts.{Cbf, Loaders}
 import org.apache.spark.sql.functions._
 
 /** Save/load round-trips (the reference asserts loaded classifiers
@@ -62,6 +62,52 @@ class ModelIOSpec extends SparkSpec {
     // same label string maps to the same numeric id
     val labels = rows.filter(_._2 == 0).sortBy(_._1).map(_._3)
     assert(labels(0) == labels(2) && labels(0) != labels(1))
+  }
+
+  /** Seeded CBF (Saito 1994) as (id, label, data): train and test draws. */
+  private def cbf(seed: Long): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    Cbf(30, 128, seed).toSeq.zipWithIndex
+      .map { case ((l, d), i) => (i.toLong, l, d.toSeq) }
+      .toDF("id", "label", "data")
+  }
+
+  test("WEASEL round-trips on generated CBF with identical predictions") {
+    val (train, test) = (cbf(7101L), cbf(7102L))
+    val clf = new WeaselClassifier(Weasel.Config(minF = 4, maxF = 4, folds = 2,
+      normalization = Seq(true), minWindowLength = 8, maxWindowLength = 12, lrMaxIter = 20))
+    val model = clf.fit(train)
+    val path = tmp("weasel-cbf")
+    ModelIO.saveWeasel(model, path)
+    val loaded = ModelIO.loadWeasel(path)
+    assert(loaded.norm == model.norm && loaded.features == model.features)
+    assert(loaded.windows == model.windows && loaded.dictSize == model.dictSize)
+    assert(loaded.quantizers.keySet == model.quantizers.keySet)
+    val p0 = clf.predict(model, test).orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+    val p1 = clf.predict(loaded, test).orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+    assert(p0 == p1, "loaded WEASEL predicts differently")
+    assert(p0.length == 30)
+    model.selected.unpersist()
+  }
+
+  test("BOSS ensemble round-trips on generated CBF with identical predictions") {
+    val (train, test) = (cbf(7201L), cbf(7202L))
+    val clf = new BossEnsemble(Boss.Config(minWindowLength = 10, maxWindowLength = 12))
+    val model = clf.fit(train)
+    val path = tmp("boss-cbf")
+    ModelIO.saveBossEnsemble(model, path)
+    val loaded = ModelIO.loadBossEnsemble(path)
+    assert(loaded.trainSize == model.trainSize)
+    assert(loaded.trainBagRows == model.trainBagRows)
+    assert(loaded.models.map(m => (m.norm, m.windowLength, m.features, m.trainCorrect))
+      == model.models.map(m => (m.norm, m.windowLength, m.features, m.trainCorrect)))
+    assert(loaded.models.map(_.sfa.bins.map(_.toSeq).toSeq)
+      == model.models.map(_.sfa.bins.map(_.toSeq).toSeq))
+    val p0 = clf.predict(model, test).orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+    val p1 = clf.predict(loaded, test).orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+    assert(p0 == p1, "loaded BOSS ensemble predicts differently")
+    assert(p0.length == 30)
+    model.trainBags.unpersist()
   }
 
   private val uniBase = "/root/reference/src/main/resources/datasets/univariate"
