@@ -197,7 +197,7 @@ object Bpe {
     * checkpoints each round's delta job re-applies up to cadence−1
     * pending merge layers over the dictionary, so raising it saves
     * writes but grows per-round UDF work linearly within the window.
-    * MEASURED (r9, [[BpeCadenceBench]]: over-cap fixture, raw JVM — no
+    * MEASURED (r9: over-cap fixture, raw JVM — no
     * sbt overhead — one warm-up fit then min-of-3 per cadence):
     * cadence 1 → 26.1 s, 2 → 23.7 s, 4 → 22.2 s, 8 → 25.1 s. The curve
     * is a shallow U: fewer materializations win until the re-applied

@@ -230,8 +230,8 @@ class BossEnsemble(cfg: Boss.Config = Boss.Config()) {
 
   /** Fit on (id LONG, label DOUBLE, data ARRAY<DOUBLE>). */
   def fit(train: DataFrame)(implicit spark: SparkSession): EnsembleModel = {
-    val trainCount = train.count()
-    val maxLen = train.select(max(size(col("data")))).head.getInt(0)
+    val sizes = train.agg(count(lit(1)), max(size(col("data")))).head
+    val (trainCount, maxLen) = (sizes.getLong(0), sizes.getInt(1))
     val maxW = math.min(maxLen, cfg.maxWindowLength)
     val windows = (cfg.minWindowLength to maxW).toSeq
 

@@ -266,18 +266,4 @@ object Fourier {
     }
     d
   }
-
-  /** Exact Euclidean distance with early abandoning (SFATrie.java:723-750). */
-  def euclidean(a: Array[Double], b: Array[Double], minValue: Double): Double = {
-    var d = 0.0
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val diff = a(i) - b(i)
-      d += diff * diff
-      if (d > minValue) return Double.PositiveInfinity
-      i += 1
-    }
-    d
-  }
 }

@@ -245,10 +245,9 @@ object IndexOps {
     * path's persisted-stats update): counts add, boxes widen
     * element-wise. min/max use Spark SQL's double total order
     * (java.lang.Double.compare: NaN greatest, -0.0 < 0.0), so the
-    * result is bit-identical to the [[mergeBoxTables]] aggregate it
-    * replaces — on tables of at most α^prefixLen rows the distributed
-    * union/explode/re-aggregate was three exchanges of driver-sized
-    * data.
+    * result is bit-identical to a distributed union/explode/re-aggregate,
+    * which on tables of at most α^prefixLen rows was three exchanges of
+    * driver-sized data.
     */
   def mergeBoxRows(
       a: Array[(Long, Long, Seq[Double], Seq[Double])],
@@ -262,26 +261,6 @@ object IndexOps {
           l._3.lazyZip(r._3).map(mn).toSeq, l._4.lazyZip(r._4).map(mx).toSeq)
       }
     }
-  }
-
-  /** Merge two [[boxTable]]-shaped frames (a layout's persisted stats
-    * and an appended batch's): counts add, boxes widen element-wise —
-    * min/max are associative, so save-then-append stats equal the
-    * one-shot aggregate bit-for-bit.
-    */
-  def mergeBoxTables(a: DataFrame, b: DataFrame): DataFrame = {
-    val both = a.select("prefix", "cnt", "mns", "mxs")
-      .union(b.select("prefix", "cnt", "mns", "mxs"))
-    val cnts = both.groupBy("prefix").agg(sum("cnt").as("cnt"))
-    val boxes = both
-      .select(col("prefix"), posexplode(expr("arrays_zip(mns, mxs)")).as(Seq("coef", "mm")))
-      .groupBy("prefix", "coef")
-      .agg(min("mm.mns").as("mn"), max("mm.mxs").as("mx"))
-      .groupBy("prefix")
-      .agg(
-        expr("transform(sort_array(collect_list(struct(coef, mn))), p -> p.mn)").as("mns"),
-        expr("transform(sort_array(collect_list(struct(coef, mx))), p -> p.mx)").as("mxs"))
-    cnts.join(boxes, "prefix").select("prefix", "cnt", "mns", "mxs")
   }
 
   /** [[knnWithStats]] over a PERSISTED prefix-partitioned parquet layout

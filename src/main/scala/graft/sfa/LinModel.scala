@@ -48,52 +48,62 @@ final case class OvrLM(
     weights: Array[Array[Double]],
     intercepts: Array[Double]) extends LinModel {
 
-  def transform(vecs: DataFrame): DataFrame = {
-    val ls = labels; val ws = weights; val bs = intercepts
-    val dim = ls.map(_.toInt).max + 1
-    val scoreUdf = udf { (v: Vector) =>
-      val dec = new Array[Double](ws.length)
-      var k = 0
-      while (k < ws.length) {
-        var d = bs(k)
-        val w = ws(k)
-        v match {
-          case s: org.apache.spark.ml.linalg.SparseVector =>
-            var j = 0
-            while (j < s.indices.length) { d += w(s.indices(j)) * s.values(j); j += 1 }
-          case dv =>
-            var j = 0
-            while (j < dv.size) { d += w(j) * dv(j); j += 1 }
-        }
-        dec(k) = d
-        k += 1
+  private lazy val dim = labels.map(_.toInt).max + 1
+
+  /** liblinear's decision and probability rules for one feature vector:
+    * (predicted label, per-class probabilities indexed by class id) — the
+    * one scoring function of [[transform]] and the driver-side fold
+    * scores.
+    */
+  def score(v: Vector): (Double, Array[Double]) = {
+    val dec = new Array[Double](weights.length)
+    var k = 0
+    while (k < weights.length) {
+      var d = intercepts(k)
+      val w = weights(k)
+      v match {
+        case s: org.apache.spark.ml.linalg.SparseVector =>
+          var j = 0
+          while (j < s.indices.length) { d += w(s.indices(j)) * s.values(j); j += 1 }
+        case dv =>
+          var j = 0
+          while (j < dv.size) { d += w(j) * dv(j); j += 1 }
       }
-      val probs = new Array[Double](dim)
-      val pred =
-        if (ls.length == 2) {
-          // single binary model: dec > 0 → labels(0) (Linear.predict);
-          // p(labels(0)) = σ(dec), p(labels(1)) = 1 − p (predictProbability)
-          val p = 1.0 / (1.0 + math.exp(-dec(0)))
-          probs(ls(0).toInt) = p
-          probs(ls(1).toInt) = 1.0 - p
-          if (dec(0) > 0) ls(0) else ls(1)
-        } else {
-          // strict argmax in label order, then normalized sigmoids
-          var best = 0
-          k = 1
-          while (k < dec.length) { if (dec(k) > dec(best)) best = k; k += 1 }
-          var s = 0.0
-          k = 0
-          while (k < dec.length) {
-            val p = 1.0 / (1.0 + math.exp(-dec(k)))
-            probs(ls(k).toInt) = p
-            s += p
-            k += 1
-          }
-          k = 0
-          while (k < dec.length) { probs(ls(k).toInt) /= s; k += 1 }
-          ls(best)
+      dec(k) = d
+      k += 1
+    }
+    val probs = new Array[Double](dim)
+    val pred =
+      if (labels.length == 2) {
+        // single binary model: dec > 0 → labels(0) (Linear.predict);
+        // p(labels(0)) = σ(dec), p(labels(1)) = 1 − p (predictProbability)
+        val p = 1.0 / (1.0 + math.exp(-dec(0)))
+        probs(labels(0).toInt) = p
+        probs(labels(1).toInt) = 1.0 - p
+        if (dec(0) > 0) labels(0) else labels(1)
+      } else {
+        // strict argmax in label order, then normalized sigmoids
+        var best = 0
+        k = 1
+        while (k < dec.length) { if (dec(k) > dec(best)) best = k; k += 1 }
+        var s = 0.0
+        k = 0
+        while (k < dec.length) {
+          val p = 1.0 / (1.0 + math.exp(-dec(k)))
+          probs(labels(k).toInt) = p
+          s += p
+          k += 1
         }
+        k = 0
+        while (k < dec.length) { probs(labels(k).toInt) /= s; k += 1 }
+        labels(best)
+      }
+    (pred, probs)
+  }
+
+  def transform(vecs: DataFrame): DataFrame = {
+    val scoreUdf = udf { (v: Vector) =>
+      val (pred, probs) = score(v)
       (pred, Vectors.dense(probs))
     }
     vecs.withColumn("_scored", scoreUdf(col("features")))
@@ -141,31 +151,24 @@ object LinModel {
     .setFamily("binomial")
     .setTol(OvrTol)
 
-  /** Fit the OvR model, on the driver below [[LocalFitMaxRows]] samples.
-    * `vecs` must carry (label, features) and should already be coalesced
-    * for small fits (Pipelines.fitParallelism).
+  /** At or below this many train samples an OvR fit collects the
+    * feature vectors and solves on the driver ([[GridFit]]). Rationale:
+    * every L-BFGS iteration of a distributed MLlib fit is a
+    * treeAggregate JOB, so a K-class OvR fit on a fixture-sized input
+    * pays K × iterations × scheduling latency for sub-megabyte math —
+    * and the reference always fits liblinear in-process (model-sized
+    * input is the §7.3 contract). 5k samples × ~10⁴ sparse features is
+    * a few MB collected; past the cutoff the distributed path takes
+    * over unchanged.
     */
-  def fit(vecs: DataFrame, n: Long, maxIter: Int): LinModel =
-    if (n <= LocalFitMaxRows) fitOvrLocal(vecs, n, maxIter)
-    else fitOvr(vecs, n, maxIter)
+  private[sfa] val LocalFitMaxRows = 5000L
 
-  /** Below this many train samples an OvR fit collects the feature
-    * vectors and solves on the driver. Rationale: every L-BFGS
-    * iteration of a distributed MLlib fit is a treeAggregate JOB, so a
-    * K-class OvR fit on a fixture-sized input pays K × iterations ×
-    * scheduling latency for sub-megabyte math — and the reference
-    * always fits liblinear in-process (model-sized input is the §7.3
-    * contract). 5k samples × ~10⁴ sparse features is a few MB
-    * collected; past the cutoff the distributed path takes over
-    * unchanged.
-    */
-  private val LocalFitMaxRows = 5000L
-
-  /** liblinear-style OvR: K binary fits (ONE for K = 2). The binary
-    * fits share the cached `vecs` and run as arms of one
-    * [[graft.util.Overlap]] scope — each MLlib fit is a driver-blocking
-    * sequence of treeAggregate jobs, so a few parallel fits just
-    * interleave their jobs on the cluster.
+  /** liblinear-style OvR: K binary fits (ONE for K = 2) over `vecs`
+    * (label, features), coalesced for the fit size
+    * (Pipelines.fitParallelism). The binary fits share the cached `vecs`
+    * and run as arms of one [[graft.util.Overlap]] scope — each MLlib fit
+    * is a driver-blocking sequence of treeAggregate jobs, so a few
+    * parallel fits just interleave their jobs on the cluster.
     */
   def fitOvr(vecs: DataFrame, n: Long, maxIter: Int): OvrLM = {
     val labels = vecs.select("label").distinct()
@@ -185,16 +188,24 @@ object LinModel {
     * standardization off, breeze L-BFGS(m=10, tol=OvrTol) from MLlib's
     * own start point (w = 0, b = log-odds of the label prior) — so the
     * fitted weights land at the same optimum as the distributed path,
-    * minus the per-iteration job round-trips. Rows are ordered by `id`
-    * when present so the FP reduction order (and hence the model bits)
-    * is reproducible run to run.
+    * minus the per-iteration job round-trips. Rows are sorted by `id` on
+    * the driver when present so the FP reduction order (and hence the
+    * model bits) is reproducible run to run.
     */
   private[sfa] def fitOvrLocal(vecs: DataFrame, n: Long, maxIter: Int): OvrLM = {
-    val base =
-      if (vecs.columns.contains("id")) vecs.orderBy("id") else vecs
-    val rows = base.select("label", "features").collect()
-    val labels = rows.map(_.getDouble(0)).distinct.sorted
-    val xs = rows.map(r => (r.getDouble(0), r.getAs[Vector](1)))
+    val xs =
+      if (!vecs.columns.contains("id"))
+        vecs.select("label", "features").collect().map(r => (r.getDouble(0), r.getAs[Vector](1)))
+      else vecs.select("id", "label", "features").collect().sortBy(_.getLong(0))
+        .map(r => (r.getDouble(1), r.getAs[Vector](2)))
+    fitLocal(xs, n, maxIter)
+  }
+
+  /** [[fitOvrLocal]] over rows already collected in their fit order:
+    * (label, features), λ = 1/n.
+    */
+  private[sfa] def fitLocal(xs: Array[(Double, Vector)], n: Long, maxIter: Int): OvrLM = {
+    val labels = xs.map(_._1).distinct.sorted
     val dim = xs.headOption.map(_._2.size).getOrElse(0)
     val lambda = 1.0 / n
     val fitLabels = if (labels.length == 2) labels.take(1) else labels

@@ -390,9 +390,9 @@ object ModelIO {
           else mOld.flatMap(_.header(BoxStatsHeader)) match {
             // the persisted table and the created-files aggregate are
             // both driver-sized (≤ α^prefixLen rows); the merge runs on
-            // the driver (IndexOps.mergeBoxRows, bit-identical to the
-            // old mergeBoxTables aggregate) instead of as a three-
-            // exchange distributed job over model-sized data
+            // the driver (IndexOps.mergeBoxRows, bit-identical to a
+            // distributed re-aggregate) instead of as a three-exchange
+            // distributed job over model-sized data
             case Some(d) if created.nonEmpty => Some(IndexOps.mergeBoxRows(
               readStatsRows(s, path, d), boxRowsOverFiles(s, path, created)))
             case Some(d) => Some(readStatsRows(s, path, d))

@@ -1,8 +1,7 @@
 package graft.sfa
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.ml.functions.vector_to_array
 
 /** WEASEL+MUSE — the multivariate WEASEL
@@ -95,10 +94,11 @@ object Muse {
       }
   }
 
-  /** Sliding packed words per (norm, w, dim, id, offset) in one plan —
+  /** Sliding packed words per (norm, w, dim, id) in one plan —
     * [[SFAModel.transformWindowingWords]] as MFT (no z-norm, lowerBounding
-    * off) plus [[graft.sfa.expr.SfaWordExpr]]; a (norm, w, dim) without a
-    * model yields no words.
+    * off) plus [[graft.sfa.expr.SfaWordsExpr]] over every coefficient, the
+    * word at offset i in `words(i)`; a (norm, w, dim) without a model
+    * yields no row.
     */
   def wordsGrid(
       series: DataFrame,
@@ -109,6 +109,7 @@ object Muse {
     val usedBits = SFAOps.gridUsedBits(models.values)
     val key = Seq(col("norm"), col("w"), col("dim"))
     val l = SFAOps.configValue(models.map { case (k, m) => k -> m.wordLength }, key: _*)
+    val coefs = SFAOps.configValue(models.map { case (k, m) => k -> Seq.range(0, m.wordLength) }, key: _*)
     val edges = SFAOps.configValue(
       models.map { case (k, m) => k -> SFAOps.wordEdges(m.bins, maxF, usedBits) }, key: _*)
     val cfgs = models.keys.map { case (n, w, _) => (n, w, windowIdx(w)) }.toSeq.distinct
@@ -116,41 +117,24 @@ object Muse {
     series.crossJoin(cfgs)
       .filter(size(col("data")) >= col("w"))
       .select(col("norm"), col("w"), col("w_idx"), col("dim"), col("id"), col("label"), col("data"),
-        l.as("l"), edges.as("edges"))
+        l.as("l"), coefs.as("coefs"), edges.as("edges"))
       .filter(col("edges").isNotNull)
-      .select(col("norm"), col("w"), col("w_idx"), col("dim"), col("id"), col("label"), col("edges"),
-        posexplode(SFAOps.mftCol(col("data"), col("w"), col("l"), col("norm"),
-          lowerBounding = false, applyZNorm = false)).as(Seq("offset", "approx")))
       .select(col("norm"), col("w"), col("w_idx"), col("dim"), col("id"), col("label"),
-        col("offset"), SFAOps.wordCol(col("approx"), col("edges"), usedBits).as("word"))
+        SFAOps.wordsCol(SFAOps.mftCol(col("data"), col("w"), col("l"), col("norm"),
+          lowerBounding = false, applyZNorm = false), col("coefs"), col("edges"), usedBits).as("words"))
   }
 
-  /** MUSE bag keys at word length f: unigrams always, bigrams when the
-    * largest window < 200; a window contributes only if w ≥ f
+  /** MUSE bag keys at every word length in `fs`: unigrams always,
+    * bigrams (prev at offset − w, zero words included) when the largest
+    * window is < 200; a window contributes only if w ≥ f
     * (MUSE.java:235-275). Output: (norm, f, id, label, key, cnt).
     */
-  def bags(words: DataFrame, f: Int, usedBits: Int, maxWindow: Int, cfg: Config): DataFrame = {
-    val m = Words.mask(f, usedBits)
-    def pack(word2: org.apache.spark.sql.Column, word: org.apache.spark.sql.Column) =
+  def bags(words: DataFrame, fs: Seq[Int], usedBits: Int, maxWindow: Int, cfg: Config): DataFrame = {
+    def pack(word2: Column, word: Column) =
       shiftleft(shiftleft(shiftleft(word2, WordBits).bitwiseOR(word), DimBits)
         .bitwiseOR(col("dim")), WIdxBits).bitwiseOR(col("w_idx"))
-    val eligible = words.filter(col("w") >= f)
-      .withColumn("wf", col("word").bitwiseAND(lit(m)))
-    val unigrams = eligible.select(col("norm"), col("id"), col("label"),
-      pack(lit(0L), col("wf")).as("key"))
-    val all =
-      if (cfg.bigrams && maxWindow < 200) {
-        val prevs = eligible.select(col("norm"), col("w"), col("dim"), col("id"),
-          (col("offset") + col("w")).as("offset"), col("wf").as("prevw"))
-        val bigrams = eligible
-          .join(prevs, Seq("norm", "w", "dim", "id", "offset"))
-          .select(col("norm"), col("id"), col("label"),
-            pack(col("prevw"), col("wf")).as("key"))
-        unigrams.unionByName(bigrams)
-      } else unigrams
-    all.groupBy("norm", "id", "label", "key")
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("f", lit(f))
+    Weasel.keyBags(words.withColumn("f", explode(typedLit(fs))).filter(col("w") >= col("f")),
+      usedBits, pack(lit(0L), _), Option.when(cfg.bigrams && maxWindow < 200)(pack _))
   }
 }
 
@@ -160,51 +144,22 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
 
   private val usedBits = Words.binlog(cfg.alphabetSize)
 
-  private def fitLin(vecs: DataFrame, n: Long): LinModel =
-    LinModel.fit(vecs, n, maxIter = cfg.lrMaxIter)
-
-  private def chiFilter(b: DataFrame, nSamples: Long): DataFrame = {
-    val presence = b.filter(col("cnt") > 0)
-      .select(col("norm"), col("f"), col("key"), col("id"), col("label"))
-    val featCount = presence.groupBy("norm", "f", "key").agg(count(lit(1)).as("fc"))
-    val obs = presence.groupBy("norm", "f", "key", "label").agg(count(lit(1)).as("obs"))
-    val classCount = presence.select("norm", "f", "id", "label").distinct()
-      .groupBy("norm", "f", "label").agg(count(lit(1)).as("cc"))
-    featCount.join(classCount, Seq("norm", "f"))
-      .join(obs, Seq("norm", "f", "key", "label"), "left")
-      .na.fill(0L, Seq("obs"))
-      .withColumn("expected", col("cc").cast("double") / nSamples * col("fc"))
-      .withColumn("chi",
-        (col("obs") - col("expected")) * (col("obs") - col("expected")) / col("expected"))
-      .groupBy("norm", "f", "key").agg(max("chi").as("chi"))
-      .filter(col("chi") >= cfg.chiLimit)
-      .select("norm", "f", "key")
-  }
-
-  def fit(train: DataFrame)(implicit spark: SparkSession): MuseModel = {
-    val (model, vecs) = fitCore(train)
-    vecs.unpersist()
-    model
-  }
+  def fit(train: DataFrame)(implicit spark: SparkSession): MuseModel =
+    fitCore(train, withProba = false)._1
 
   /** Fit AND return the train-set probabilities (id, label, pred,
     * probs) in one pass — see [[WeaselClassifier.fitWithProba]]; used
     * by the MTEASER per-snapshot loop.
     */
   private[sfa] def fitWithProba(train: DataFrame)(implicit spark: SparkSession): (MuseModel, DataFrame) = {
-    val (model, vecs) = fitCore(train)
-    val proba = model.lr.transform(vecs)
-      .select(col("id"), col("label"), col("prediction").as("pred"),
-        vector_to_array(col("probability")).as("probs"))
-      .localCheckpoint(true)
-    vecs.unpersist()
-    (model, proba)
+    val (model, proba) = fitCore(train, withProba = true)
+    (model, proba.get)
   }
 
-  private def fitCore(train: DataFrame)(implicit spark: SparkSession): (MuseModel, DataFrame) = {
-    import spark.implicits._
-    val n = train.select("id").distinct().count()
-    val maxLen = train.select(max(size(col("data")))).head.getInt(0)
+  private def fitCore(train: DataFrame, withProba: Boolean)(
+      implicit spark: SparkSession): (MuseModel, Option[DataFrame]) = {
+    val sizes = train.agg(countDistinct("id"), max(size(col("data")))).head
+    val (n, maxLen) = (sizes.getLong(0), sizes.getInt(1))
 
     def windowsFor(norm: Boolean): Seq[Int] = {
       val min = if (norm && cfg.minWindowLength <= 2) math.max(3, cfg.minWindowLength)
@@ -214,15 +169,8 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
     val allWindows = windowsFor(false)
     val maxWindow = allWindows.max
     val wIdx = allWindows.zipWithIndex.toMap
-
-    val byLabel = Window.partitionBy("label").orderBy("id")
-    val folds = train.select("id", "label").distinct()
-      .withColumn("fold", ((row_number().over(byLabel) - 1) % cfg.folds).cast("int"))
-      .select("id", "fold")
-
-    var best: (HistogramType, Boolean, Int, Long) =
-      (cfg.histTypes.head, cfg.normalization.head, cfg.minF, -1L)
-    val fitted = scala.collection.mutable.Map.empty[HistogramType, Map[(Boolean, Int, Int), SFAModel]]
+    val fs = cfg.minF to cfg.maxF by 2
+    val candidates = for (nm <- cfg.normalization; f <- fs) yield (nm, f)
 
     // CV exists only to pick the winning (hist, norm, f) — with a
     // single candidate the pick is forced, so skip the fold fits and
@@ -231,55 +179,32 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
     val singleCandidate =
       cfg.histTypes.size == 1 && cfg.normalization.size == 1 && cfg.minF == cfg.maxF
 
-    for (hist <- cfg.histTypes) {
+    // per histogram type one bins grid and one words and bag pass serve
+    // every (norm, f); scan order hist, norm, f with strictly-greater
+    // updates, candidates without a selected key skipped
+    var best: (HistogramType, Boolean, Int, Long) =
+      (cfg.histTypes.head, cfg.normalization.head, cfg.minF, -1L)
+    val grids = cfg.histTypes.map { hist =>
       val models = fitBinsGrid(train, allWindows, cfg.normalization, hist, cfg.maxF, cfg.alphabetSize)
         .filter { case ((nm, w, _), _) => windowsFor(nm).contains(w) }
-      fitted(hist) = models
-      val words = wordsGrid(train, models, wIdx, cfg.maxF).cache()
-      for (nm <- cfg.normalization; f <- cfg.minF to cfg.maxF by 2 if !singleCandidate) {
-        val b = bags(words.filter(col("norm") === nm), f, usedBits, maxWindow, cfg).cache()
-        val sel = chiFilter(b, n)
-        val dict = Weasel.dictionary(sel).cache()
-        val dims = dict.groupBy("norm", "f").agg(max("dict_idx").as("d")).collect()
-          .map(r => (r.getBoolean(0), r.getInt(1)) -> r.getInt(2)).toMap
-        if (dims.nonEmpty) {
-          // coalesce before the iterative LR fits: see Pipelines.fitParallelism
-          val vecs = Weasel.vectors(b, dict, dims, train).join(folds, "id")
-            .coalesce(graft.util.Pipelines.fitParallelism(n)).cache()
-          val correct = (0 until cfg.folds).map { k =>
-            val tr = vecs.filter(col("fold") =!= k)
-            val te = vecs.filter(col("fold") === k)
-            if (tr.isEmpty || te.isEmpty) 0L
-            else {
-              val mdl = fitLin(tr, n)
-              mdl.transform(te).filter(col("prediction") === col("label")).count()
-            }
-          }.sum
-          vecs.unpersist()
-          if (correct > best._4) best = (hist, nm, f, correct)
-        }
-        b.unpersist(); dict.unpersist()
+      val grid = new GridFit(bags(wordsGrid(train, models, wIdx, cfg.maxF), fs, usedBits, maxWindow, cfg),
+        Weasel.chi(_, n, cfg.chiLimit), train, candidates, n, cfg.lrMaxIter)
+      if (!singleCandidate) {
+        val scores = grid.crossValidate(cfg.folds)
+        for (c @ (nm, f) <- candidates; correct <- scores.get(c) if correct > best._4)
+          best = (hist, nm, f, correct)
       }
-      words.unpersist()
-    }
+      hist -> (models, grid)
+    }.toMap
 
     val (bestHist, bestNorm, bestF, bestCorrect) = best
-    val models = fitted(bestHist).filter { case ((nm, _, _), _) => nm == bestNorm }
-    val words = wordsGrid(train, models, wIdx, cfg.maxF)
-    val fb = bags(words, bestF, usedBits, maxWindow, cfg).cache()
-    val (selected, dictSize) = Weasel.modelDictionary(chiFilter(fb, n))
-    val vecs = Weasel.modelVectors(fb, selected, bestNorm, bestF, dictSize, train, broadcastDict = false)
-      .coalesce(graft.util.Pipelines.fitParallelism(n)).cache()
-    val lr = fitLin(vecs, n)
-    // single-candidate path skipped CV: trainCorrect = final-model score
-    val correct =
-      if (!singleCandidate) bestCorrect
-      else lr.transform(vecs).filter(col("prediction") === col("label")).count()
-    fb.unpersist()
+    val (models, grid) = grids(bestHist)
+    val refit = grid.refit((bestNorm, bestF), scoreTrain = singleCandidate, withProba)
+    grids.values.foreach(_._2.release())
 
-    (MuseModel(bestHist, bestNorm, bestF, correct,
-      models.map { case ((_, w, d), m) => (w, d) -> m },
-      allWindows, selected, dictSize, lr), vecs)
+    (MuseModel(bestHist, bestNorm, bestF, if (singleCandidate) refit.trainCorrect else bestCorrect,
+      models.collect { case ((`bestNorm`, w, d), m) => (w, d) -> m },
+      allWindows, refit.selected, refit.dictSize, refit.lr), refit.proba)
   }
 
   def predict(model: MuseModel, test: DataFrame)(implicit spark: SparkSession): DataFrame =
@@ -305,11 +230,11 @@ class MuseClassifier(cfg: Muse.Config = Muse.Config()) {
     val wIdx = allWindows.zipWithIndex.toMap
     val models = model.quantizers.map { case ((w, d), m) => (model.norm, w, d) -> m }
     val words = wordsGrid(test, models, wIdx, cfg.maxF)
-    val b = bags(words, model.features, usedBits, allWindows.max, cfg)
+    val b = bags(words, Seq(model.features), usedBits, allWindows.max, cfg)
     // vectors from ALL test samples: zero-feature samples still get an
     // LR prediction via the intercept (reference behavior)
     model.lr.transform(Weasel.modelVectors(b, model.selected, model.norm, model.features,
-      model.dictSize, test, broadcastDict = true))
+      model.dictSize, test))
   }
 
   def eval(train: DataFrame, test: DataFrame)(implicit spark: SparkSession): (MuseModel, Double) = {

@@ -108,6 +108,13 @@ object SFAOps {
   def selectCoefsCol(approx: Column, coefs: Column): Column =
     Bridge.column(graft.sfa.expr.SelectCoefsExpr(Bridge.expression(approx), Bridge.expression(coefs)))
 
+  /** Packed words of every window of a sliding-DFT array, each taken at
+    * the given coefficients first ([[graft.sfa.expr.SfaWordsExpr]]).
+    */
+  def wordsCol(approxs: Column, coefs: Column, edges: Column, usedBits: Int): Column =
+    Bridge.column(graft.sfa.expr.SfaWordsExpr(Bridge.expression(approxs), Bridge.expression(coefs),
+      Bridge.expression(edges), usedBits))
+
   /** The edges rows [[wordCol]] needs to pack `features` symbols from a
     * bins matrix: [[Words.createWord]] packs at most `features` and
     * `60 / usedBits` symbols, and a coefficient without an edges row

@@ -1,6 +1,6 @@
 package graft.sfa
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.ml.functions.vector_to_array
@@ -30,9 +30,13 @@ import org.apache.spark.ml.linalg.Vectors
   *    accuracies carry ±0.05.
   *
   * Scale: identical architecture to [[Boss]] — the (norm, windowLength)
-  * grid is a data column; ANOVA-F and χ² are groupBy aggregations; the
-  * only per-group collects are bin edges (l × α−1 doubles per config)
-  * and the MLlib feature vectors.
+  * grid and the word length f are data columns, so one words pass and
+  * one bag pass serve every (norm, f); ANOVA-F and χ² are groupBy
+  * aggregations. The collects are the ranked coefficients and bin edges
+  * (l × α−1 doubles per config), the χ² class counts, each candidate's
+  * dictionary size and, at or below [[LinModel]]'s local cutoff, every
+  * candidate's feature vectors once: the fold fits, fold scores and the
+  * refit then run on the driver ([[GridFit]]).
   */
 object Weasel {
 
@@ -102,7 +106,7 @@ object Weasel {
       trainCorrect: Long,
       quantizers: Map[Int, SupervisedModel], // windowLength → model
       windows: Seq[Int],                     // full grid (w_idx = position)
-      selected: DataFrame,                   // (w_idx, key, dict_idx)
+      selected: DataFrame,                   // (key, dict_idx)
       dictSize: Int,
       lr: LinModel)
 
@@ -197,32 +201,32 @@ object Weasel {
     }
   }
 
-  /** Sliding packed words for every config in one plan — [[SupervisedModel.words]]
-    * as MFT (lowerBounding off), F-ranked coefficient selection and
-    * [[graft.sfa.expr.SfaWordExpr]]. Columns: (norm, w, w_idx, id, label,
-    * offset, word); `w_idx` is the window's index in the length grid.
+  /** Sliding packed words for every config in one plan —
+    * [[SupervisedModel.words]] as MFT (lowerBounding off), then F-ranked
+    * coefficient selection and packing per window
+    * ([[graft.sfa.expr.SfaWordsExpr]]). Columns: (norm, w, w_idx, id,
+    * label, words), one row per (config, series) with the word at offset
+    * i in `words(i)`; `w_idx` is the window's index in its norm's length
+    * grid.
     */
   def wordsGrid(
       data: DataFrame,
       models: Map[(Boolean, Int), SupervisedModel],
-      windowIdx: Map[Int, Int],
+      windowIdx: Map[(Boolean, Int), Int],
       usedBits: Int)(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     def byCfg[V: scala.reflect.runtime.universe.TypeTag](f: SupervisedModel => V) =
       SFAOps.configValue(models.map { case (k, q) => k -> f(q) }, col("norm"), col("w"))
-    val cfgs = models.keys.toSeq.map { case (n, w) => (n, w, windowIdx(w)) }
+    val cfgs = models.keys.toSeq.map { case k @ (n, w) => (n, w, windowIdx(k)) }
       .toDF("norm", "w", "w_idx")
     data.crossJoin(cfgs)
       .filter(size(col("data")) >= col("w"))
       .select(col("norm"), col("w"), col("w_idx"), col("id"), col("label"), col("data"),
         byCfg(q => math.max(q.maxWordLength, 2)).as("l"), byCfg(_.bestValues.toSeq).as("coefs"),
         byCfg(q => SFAOps.wordEdges(q.bestValues.map(q.bins), q.bestValues.length, usedBits)).as("edges"))
-      .select(col("norm"), col("w"), col("w_idx"), col("id"), col("label"), col("coefs"), col("edges"),
-        posexplode(SFAOps.mftCol(col("data"), col("w"), col("l"), col("norm"),
-          lowerBounding = false, applyZNorm = true)).as(Seq("offset", "approx")))
-      .select(col("norm"), col("w"), col("w_idx"), col("id"), col("label"), col("offset"),
-        SFAOps.wordCol(SFAOps.selectCoefsCol(col("approx"), col("coefs")), col("edges"), usedBits)
-          .as("word"))
+      .select(col("norm"), col("w"), col("w_idx"), col("id"), col("label"),
+        SFAOps.wordsCol(SFAOps.mftCol(col("data"), col("w"), col("l"), col("norm"),
+          lowerBounding = false, applyZNorm = true), col("coefs"), col("edges"), usedBits).as("words"))
   }
 
   /** Bit width of the window-index field in unigram keys:
@@ -230,73 +234,78 @@ object Weasel {
   def highestBit(maxWindowLength: Int): Int =
     Words.binlog(Integer.highestOneBit(maxWindowLength)) + 1
 
-  /** Unigram + bigram bag keys at feature length f (no numerosity
-    * reduction in WEASEL): unigram = (word & mask) << hb | w_idx;
-    * bigram = prevWord << 32 | unigram with prev at offset − w, skipped
-    * when prevWord == 0 (WEASEL.java:142-175).
-    * Output: (norm, f, id, label, key, cnt).
+  /** Unigram + bigram bag keys at every word length in `fs` (no
+    * numerosity reduction in WEASEL): unigram = (word & mask) << hb |
+    * w_idx; bigram = prev << 32 | unigram with prev the masked word at
+    * offset − w, skipped when it is 0 (WEASEL.java:142-175). Input:
+    * [[wordsGrid]] rows. Output: (norm, f, id, label, key, cnt).
     */
-  def bags(words: DataFrame, f: Int, usedBits: Int, hb: Int): DataFrame = {
-    val m = Words.mask(f, usedBits)
-    val uni = words
-      .withColumn("wf", col("word").bitwiseAND(lit(m)))
-      .withColumn("uni", shiftleft(col("wf"), hb).bitwiseOR(col("w_idx")))
-      .select(col("norm"), col("w"), col("w_idx"), col("id"), col("label"),
-        col("offset"), col("uni"))
-    // the bigram partner is the word at offset − w: self-join on the
-    // shifted offset (an equi-join, not a wide window over lag(w))
-    val prevs = words
-      .withColumn("wf", col("word").bitwiseAND(lit(m)))
-      .select(col("norm"), col("w"), col("id"),
-        (col("offset") + col("w")).as("offset"), col("wf").as("prevw"))
-    val withPrev = uni.join(prevs, Seq("norm", "w", "id", "offset"), "left")
-    val unigrams = withPrev.select(col("norm"), col("id"), col("label"), col("uni").as("key"))
-    val bigrams = withPrev
-      .filter(col("prevw").isNotNull && col("prevw") =!= 0)
-      .select(col("norm"), col("id"), col("label"),
-        shiftleft(col("prevw"), 32).bitwiseOR(col("uni")).as("key"))
-    unigrams.unionByName(bigrams)
-      .groupBy("norm", "id", "label", "key")
+  def bags(words: DataFrame, fs: Seq[Int], usedBits: Int, hb: Int): DataFrame = {
+    def uni(wf: Column) = shiftleft(wf, hb).bitwiseOR(col("w_idx"))
+    keyBags(words.withColumn("f", explode(typedLit(fs))), usedBits, uni,
+      Some((prev, wf) => when(prev =!= 0, shiftleft(prev, 32).bitwiseOR(uni(wf)))))
+  }
+
+  /** The bags of a words frame (norm, w, f, id, label, words, …), WEASEL's
+    * and MUSE's alike. A window's word and the word at offset − w of the
+    * same array, both masked to f symbols, give its unigram key
+    * `uni(word)` and, from offset w on, its bigram key `bi(prev, word)`
+    * (null: none). One key array per row, exploded once and counted per
+    * (norm, f, id, label, key).
+    */
+  private[sfa] def keyBags(
+      words: DataFrame,
+      usedBits: Int,
+      uni: Column => Column,
+      bi: Option[(Column, Column) => Column]): DataFrame = {
+    val mask = call_function("shiftleft", lit(1L), col("f") * usedBits) - 1L
+    val ws = col("words")
+    val unigrams = transform(ws, x => uni(x.bitwiseAND(mask)))
+    val keys = bi.fold(unigrams)(b => concat(unigrams, transform(ws, (x, i) =>
+      when(i >= col("w"), b(ws(i - col("w")).bitwiseAND(mask), x.bitwiseAND(mask))))))
+    words.select(col("norm"), col("f"), col("id"), col("label"), explode(keys).as("key"))
+      .filter(col("key").isNotNull)
+      .groupBy("norm", "f", "id", "label", "key")
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("f", lit(f))
+  }
+
+  /** χ² of every (norm, f, key) on document presence, in one aggregate:
+    * per class c, (obs − e)² / e with e = P(c) · featureCount, where P(c)
+    * is the share of the n samples with a c-labelled bag in that (norm,
+    * f); a key keeps its MAX over classes (see the deviation note). The
+    * class counts are tiny and collected first. Input: bags (norm, f, id,
+    * label, key, cnt). Output: (norm, f, key, chi) with chi ≥ `limit`.
+    */
+  def chi(bags: DataFrame, nSamples: Long, limit: Double): DataFrame = {
+    val prior = bags.groupBy("norm", "f", "label").agg(countDistinct("id")).collect()
+      .map(r => (r.getBoolean(0), r.getInt(1), r.getDouble(2)) -> r.getLong(3).toDouble / nSamples)
+      .toMap
+    val labels = prior.keys.map(_._3).toSeq.distinct.sorted
+    val perClass = labels.indices.map { i =>
+      // null where the class has no bag in this (norm, f): the max skips it
+      val e = SFAOps.configValue(prior, col("norm"), col("f"), lit(labels(i))) * col("fc")
+      val obs = col(s"obs$i")
+      (obs - e) * (obs - e) / e
+    }
+    bags.groupBy("norm", "f", "key")
+      .agg(count(lit(1)).as("fc"),
+        labels.zipWithIndex.map { case (l, i) => count(when(col("label") === l, 1)).as(s"obs$i") }: _*)
+      .select(col("norm"), col("f"), col("key"),
+        perClass.reduceOption(greatest(_, _)).getOrElse(lit(null).cast("double")).as("chi"))
+      .filter(col("chi") >= limit)
   }
 
   /** Per-(norm, f, window) χ² feature selection on document presence
-    * counts with the unigram/bigram caps (WEASEL.java:217-339).
-    * Input bags rows: (norm, f, id, label, key, cnt) — the window index
-    * is recovered from the key. Output: (norm, f, key) accepted.
+    * counts with the unigram/bigram caps (WEASEL.java:217-339): the top
+    * wordLimit unigrams and the top wordLimit bigrams of each window by
+    * [[chi]]. Input: [[bags]] rows — the window index is the key's low
+    * `hb` bits. Output: (norm, f, key) accepted.
     */
   def chiSquared(bags: DataFrame, nSamples: Long, cfg: Config, hb: Int): DataFrame = {
-    val wIdxCol = when(col("key") >= (1L << 32), // bigram: low half holds the unigram
-      col("key").bitwiseAND(lit((1L << 32) - 1)).bitwiseAND(lit((1L << hb) - 1)))
-      .otherwise(col("key").bitwiseAND(lit((1L << hb) - 1)))
-    val presence = bags.filter(col("cnt") > 0)
-      .select(col("norm"), col("f"), col("key"), col("id"), col("label"))
-      .withColumn("w_idx", wIdxCol)
-    val featCount = presence.groupBy("norm", "f", "key", "w_idx")
-      .agg(count(lit(1)).as("fc"))
-    val obs = presence.groupBy("norm", "f", "key", "label")
-      .agg(count(lit(1)).as("obs"))
-    val classCount = presence.select("norm", "f", "id", "label").distinct()
-      .groupBy("norm", "f", "label").agg(count(lit(1)).as("cc"))
-
-    // χ² per (feature, class) with expected = P(class)·featureCount; a
-    // feature survives when its max class χ² ≥ limit (see deviation note)
-    val chi = featCount.join(classCount, Seq("norm", "f"))
-      .join(obs, Seq("norm", "f", "key", "label"), "left")
-      .na.fill(0L, Seq("obs"))
-      .withColumn("expected", col("cc").cast("double") / nSamples * col("fc"))
-      .withColumn("chi",
-        (col("obs") - col("expected")) * (col("obs") - col("expected")) / col("expected"))
-      .groupBy("norm", "f", "key", "w_idx")
-      .agg(max("chi").as("chi"))
-      .filter(col("chi") >= cfg.chiLimit)
-
-    // per-window caps: top wordLimit unigrams + top wordLimit bigrams
-    val byChi = Window.partitionBy(col("norm"), col("f"), col("w_idx"),
-      (col("key") >= (1L << 32)).as("isBigram"))
+    val byChi = Window.partitionBy(col("norm"), col("f"),
+      col("key").bitwiseAND(lit((1L << hb) - 1)), col("key") >= (1L << 32))
       .orderBy(col("chi").desc, col("key").asc)
-    chi.withColumn("rk", row_number().over(byChi))
+    chi(bags, nSamples, cfg.chiLimit).withColumn("rk", row_number().over(byChi))
       .filter(col("rk") <= cfg.wordLimit)
       .select("norm", "f", "key")
   }
@@ -308,11 +317,11 @@ object Weasel {
   }
 
   /** Assemble MLlib sparse vectors per sample from dictionary-indexed
-    * counts — the one vector helper of WEASEL and MUSE, fit and predict.
-    * `bags` (norm, f, id, label, key, cnt) join `dict` (norm, f, key,
-    * dict_idx); `dims` gives each (norm, f) its largest dict_idx.
-    * Output: (norm, f, id, label, features VECTOR) for every sample of
-    * every (norm, f) in `dims`.
+    * counts — the one vector helper of WEASEL and MUSE, fit and predict,
+    * one plan for every (norm, f) in `dims`. `bags` (norm, f, id, label,
+    * key, cnt) join `dict` (norm, f, key, dict_idx); `dims` gives each
+    * (norm, f) its largest dict_idx. Output: (norm, f, id, label,
+    * features VECTOR) for every sample of every (norm, f) in `dims`.
     *
     * `samples` (id, label) is the complete sample set: a sample sharing
     * NO selected feature still gets an all-zero vector — the reference
@@ -325,17 +334,16 @@ object Weasel {
       dict: DataFrame,
       dims: Map[(Boolean, Int), Int],
       samples: DataFrame): DataFrame = {
-    val ids = samples.select(col("id"), col("label")).distinct()
-    // one (id, label)-keyed join per (norm, f) — callers fit one at a time
-    dims.toSeq.map { case ((n, f), d) =>
-      val counts = bags.filter(col("norm") === n && col("f") === f)
-        .join(dict.filter(col("norm") === n && col("f") === f).select("key", "dict_idx"), "key")
-        .groupBy("id", "label")
-        .agg(collect_list(col("dict_idx")).as("idx"), collect_list(col("cnt")).as("cnt"))
-      ids.join(counts, Seq("id", "label"), "left")
-        .select(lit(n).as("norm"), lit(f).as("f"), col("id"), col("label"),
-          sparseVector(lit(d + 1), col("idx"), col("cnt")).as("features"))
-    }.reduce(_ unionByName _)
+    val spark = bags.sparkSession
+    import spark.implicits._
+    val sizes = dims.toSeq.map { case ((n, f), d) => (n, f, d + 1) }.toDF("norm", "f", "size")
+    val counts = bags.join(dict.select("norm", "f", "key", "dict_idx"), Seq("norm", "f", "key"))
+      .groupBy("norm", "f", "id", "label")
+      .agg(collect_list(col("dict_idx")).as("idx"), collect_list(col("cnt")).as("cnt"))
+    samples.select(col("id"), col("label")).distinct().crossJoin(sizes)
+      .join(counts, Seq("norm", "f", "id", "label"), "left")
+      .select(col("norm"), col("f"), col("id"), col("label"),
+        sparseVector(col("size"), col("idx"), col("cnt")).as("features"))
   }
 
   private val sparseVector = udf { (size: Int, idx: Seq[Int], cnt: Seq[Long]) =>
@@ -346,20 +354,8 @@ object Weasel {
     }
   }
 
-  /** A final refit's dictionary: `selected` (norm, f, key) of one
-    * (norm, f) numbered by [[dictionary]] and kept as (key, dict_idx),
-    * cached — the one frame a fitted model keeps — with its size (0 when
-    * nothing was selected).
-    */
-  private[sfa] def modelDictionary(selected: DataFrame): (DataFrame, Int) = {
-    val dict = dictionary(selected).select(col("key"), col("dict_idx")).cache()
-    val size = dict.agg(max("dict_idx")).collect().head
-    (dict, if (size.isNullAt(0)) 0 else size.getInt(0))
-  }
-
-  /** [[vectors]] of a model dictionary (key, dict_idx) at its (norm, f);
-    * the predict side broadcasts the model-sized dictionary, the fit
-    * leaves the join to the planner.
+  /** [[vectors]] of a model dictionary (key, dict_idx) at its (norm, f),
+    * broadcasting the model-sized dictionary.
     */
   def modelVectors(
       bags: DataFrame,
@@ -367,10 +363,9 @@ object Weasel {
       norm: Boolean,
       features: Int,
       dictSize: Int,
-      samples: DataFrame,
-      broadcastDict: Boolean): DataFrame = {
+      samples: DataFrame): DataFrame = {
     val dict = selected.select(lit(norm).as("norm"), lit(features).as("f"), col("key"), col("dict_idx"))
-    vectors(bags, if (broadcastDict) broadcast(dict) else dict, Map((norm, features) -> dictSize), samples)
+    vectors(bags, broadcast(dict), Map((norm, features) -> dictSize), samples)
   }
 }
 
@@ -380,42 +375,28 @@ class WeaselClassifier(cfg: Weasel.Config = Weasel.Config()) {
 
   private val usedBits = Words.binlog(cfg.alphabetSize)
 
-  // liblinear runs with eps = 0.1 (loose); a tight MLlib tolerance only
-  // burns L-BFGS iterations on 10⁴-dim coefficient vectors without
-  // moving the golden accuracies — see [[LinModel]].
-  private def fitLin(vecs: DataFrame, n: Long): LinModel =
-    LinModel.fit(vecs, n, cfg.lrMaxIter)
-
   /** Fit: grid over norm × f with 10-fold stratified CV, then refit the
     * best configuration on all samples.
     */
-  def fit(train: DataFrame)(implicit spark: SparkSession): WeaselModel = {
-    val (model, vecs) = fitCore(train)
-    vecs.unpersist()
-    model
-  }
+  def fit(train: DataFrame)(implicit spark: SparkSession): WeaselModel =
+    fitCore(train, withProba = false)._1
 
   /** Fit AND return the train-set probabilities (id, label, pred,
     * probs) in one pass: the final refit's feature vectors serve both,
     * so cascade fits (TEASER trains a slave and immediately scores the
     * same truncated train set per snapshot) skip a full
     * words→bags→vectors recompute. The proba frame is materialized
-    * (localCheckpoint) before the shared vectors are released.
+    * before the shared vectors are released.
     */
   private[sfa] def fitWithProba(train: DataFrame)(implicit spark: SparkSession): (WeaselModel, DataFrame) = {
-    val (model, vecs) = fitCore(train)
-    val proba = model.lr.transform(vecs)
-      .select(col("id"), col("label"), col("prediction").as("pred"),
-        vector_to_array(col("probability")).as("probs"))
-      .localCheckpoint(true)
-    vecs.unpersist()
-    (model, proba)
+    val (model, proba) = fitCore(train, withProba = true)
+    (model, proba.get)
   }
 
-  private def fitCore(train: DataFrame)(implicit spark: SparkSession): (WeaselModel, DataFrame) = {
-    import spark.implicits._
-    val n = train.count()
-    val maxLen = train.select(max(size(col("data")))).head.getInt(0)
+  private def fitCore(train: DataFrame, withProba: Boolean)(
+      implicit spark: SparkSession): (WeaselModel, Option[DataFrame]) = {
+    val sizes = train.agg(count(lit(1)), max(size(col("data")))).head
+    val (n, maxLen) = (sizes.getLong(0), sizes.getInt(1))
     val hb = highestBit(cfg.maxWindowLength)
 
     def windowsFor(norm: Boolean): Seq[Int] = {
@@ -430,83 +411,37 @@ class WeaselClassifier(cfg: Weasel.Config = Weasel.Config()) {
     val quantizers = fitQuantizersGrid(train,
       allCfgs.map(_._2).distinct, cfg.normalization, cfg)
       .filter { case ((nm, w), _) => windowsFor(nm).contains(w) }
+    val wIdx = quantizers.keys.map { case k @ (nm, w) => k -> windowsFor(nm).indexOf(w) }.toMap
 
-    // stratified fold assignment (round-robin per label by id)
-    val byLabel = Window.partitionBy("label").orderBy("id")
-    val folded = train.withColumn("fold",
-      ((row_number().over(byLabel) - 1) % cfg.folds).cast("int")).cache()
-
-    var best: Option[(Boolean, Int, Long)] = None
-    val wordsByNorm: Map[Boolean, DataFrame] = cfg.normalization.map { nm =>
-      val ws = windowsFor(nm)
-      val wIdx = ws.zipWithIndex.toMap
-      val models = quantizers.filter { case ((n2, _), _) => n2 == nm }
-      nm -> wordsGrid(folded, models, wIdx, usedBits).cache()
-    }.toMap
+    // one words pass and one bag pass serve every (norm, f) candidate
+    val fs = cfg.minF to cfg.maxF by 2
+    val candidates = for (nm <- cfg.normalization; f <- fs) yield (nm, f)
+    val grid = new GridFit(bags(wordsGrid(train, quantizers, wIdx, usedBits), fs, usedBits, hb),
+      chiSquared(_, n, cfg, hb), train, candidates, n, cfg.lrMaxIter)
 
     // CV exists only to pick the winning (norm, f) — with a single
     // candidate the pick is forced, so skip the fold fits and score
     // trainCorrect on the final model instead (reduced configs like
     // the s9 fixture fit hit this path)
     val singleCandidate = cfg.normalization.size == 1 && cfg.minF == cfg.maxF
-
-    val scores = for {
-      nm <- cfg.normalization
-      f <- cfg.minF to cfg.maxF by 2
-      if !singleCandidate
-    } yield {
-      val b = bags(wordsByNorm(nm).filter(col("norm") === nm), f, usedBits, hb)
-        .filter(col("norm") === nm).cache()
-      val sel = chiSquared(b, n, cfg, hb)
-      val dict = dictionary(sel).cache()
-      val dims = dict.groupBy("norm", "f").agg(max("dict_idx").as("d")).collect()
-        .map(r => (r.getBoolean(0), r.getInt(1)) -> r.getInt(2)).toMap
-      if (dims.isEmpty) { b.unpersist(); dict.unpersist(); (nm, f, 0L) }
-      else {
-        // coalesce before the iterative LR fits: see Pipelines.fitParallelism
-        val vecs = vectors(b, dict, dims, folded)
-          .join(folded.select(col("id"), col("fold")), "id")
-          .coalesce(graft.util.Pipelines.fitParallelism(n)).cache()
-        val correct = (0 until cfg.folds).map { k =>
-          val tr = vecs.filter(col("fold") =!= k)
-          val te = vecs.filter(col("fold") === k)
-          if (tr.isEmpty || te.isEmpty) 0L
-          else {
-            val m = fitLin(tr, n)
-            m.transform(te).filter(col("prediction") === col("label")).count()
-          }
-        }.sum
-        vecs.unpersist(); b.unpersist(); dict.unpersist()
-        (nm, f, correct)
-      }
-    }
+    val scores = if (singleCandidate) Map.empty[(Boolean, Int), Long] else grid.crossValidate(cfg.folds)
 
     // scan order: norm true first, f ascending; strictly-greater update
     val (bestNorm, bestF, bestCorrect) =
-      scores.foldLeft((cfg.normalization.head, cfg.minF, -1L)) {
-        case (acc @ (_, _, bc), (nm, f, c)) => if (c > bc) (nm, f, c) else acc
+      candidates.foldLeft((cfg.normalization.head, cfg.minF, -1L)) {
+        case (acc @ (_, _, bc), (nm, f)) =>
+          val c = scores.getOrElse((nm, f), 0L)
+          if (c > bc) (nm, f, c) else acc
       }
 
-    // final refit at the chosen configuration; of its cached frames only
-    // the model's dictionary outlives the fit (and `vecs`, until the
-    // caller releases it)
-    val fb = bags(wordsByNorm(bestNorm).filter(col("norm") === bestNorm),
-      bestF, usedBits, hb).cache()
-    val (selected, dictSize) = modelDictionary(chiSquared(fb, n, cfg, hb))
-    val vecs = modelVectors(fb, selected, bestNorm, bestF, dictSize, folded, broadcastDict = false)
-      .coalesce(graft.util.Pipelines.fitParallelism(n)).cache()
-    val lr = fitLin(vecs, n)
-    // single-candidate path skipped CV: trainCorrect = final-model score
-    val correct =
-      if (!singleCandidate) bestCorrect
-      else lr.transform(vecs).filter(col("prediction") === col("label")).count()
-    fb.unpersist()
-    wordsByNorm.values.foreach(_.unpersist())
-    folded.unpersist()
+    // final refit at the chosen configuration; of the cached frames only
+    // the model's dictionary outlives the fit
+    val refit = grid.refit((bestNorm, bestF), scoreTrain = singleCandidate, withProba)
+    grid.release()
 
-    (WeaselModel(bestNorm, bestF, correct,
+    (WeaselModel(bestNorm, bestF, if (singleCandidate) refit.trainCorrect else bestCorrect,
       quantizers.collect { case ((`bestNorm`, w), m) => w -> m }.toMap,
-      windowsFor(bestNorm), selected, dictSize, lr), vecs)
+      windowsFor(bestNorm), refit.selected, refit.dictSize, refit.lr), refit.proba)
   }
 
   /** Predict with per-class probabilities → (id, label, pred, probs).
@@ -525,15 +460,15 @@ class WeaselClassifier(cfg: Weasel.Config = Weasel.Config()) {
   private def predictFull(model: WeaselModel, test: DataFrame)(implicit spark: SparkSession): DataFrame = {
     val hb = highestBit(cfg.maxWindowLength)
     // w_idx MUST come from the fitted full grid (see WeaselModel doc)
-    val wIdx = model.windows.zipWithIndex.toMap
+    val wIdx = model.windows.zipWithIndex.map { case (w, i) => (model.norm, w) -> i }.toMap
     val words = wordsGrid(test,
       model.quantizers.map { case (w, m) => (model.norm, w) -> m },
       wIdx, usedBits)
-    val b = bags(words, model.features, usedBits, hb)
+    val b = bags(words, Seq(model.features), usedBits, hb)
     // vectors from ALL test samples: a sample with no selected feature
     // still gets an LR prediction via the intercept (reference behavior)
     model.lr.transform(modelVectors(b, model.selected, model.norm, model.features,
-      model.dictSize, test, broadcastDict = true))
+      model.dictSize, test))
   }
 
   def eval(train: DataFrame, test: DataFrame)(implicit spark: SparkSession): (WeaselModel, Double) = {

@@ -1,6 +1,6 @@
 package graft.sfa.expr
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
@@ -39,30 +39,8 @@ case class SfaWordExpr(approx: Expression, edges: Expression, usedBits: Int)
 
   private def mask: Long = (1L << usedBits) - 1
 
-  override def nullSafeEval(a: Any, e: Any): Any = {
-    val av = a.asInstanceOf[ArrayData]
-    val ev = e.asInstanceOf[ArrayData]
-    val n = av.numElements()
-    val m = ev.numElements()
-    var word = 0L
-    var c = 0
-    while (c < n) {
-      val v = av.getDouble(c)
-      var sym = 0L
-      if (c < m) {
-        val es = ev.getArray(c)
-        val em = es.numElements()
-        var j = 0
-        while (j < em) {
-          if (v >= es.getDouble(j)) sym += 1
-          j += 1
-        }
-      }
-      word |= (sym & mask) << (usedBits * c)
-      c += 1
-    }
-    word
-  }
+  override def nullSafeEval(a: Any, e: Any): Any =
+    SfaWordExpr.word(a.asInstanceOf[ArrayData], e.asInstanceOf[ArrayData], usedBits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, e) => {
@@ -98,6 +76,71 @@ case class SfaWordExpr(approx: Expression, edges: Expression, usedBits: Int)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SfaWordExpr =
     copy(approx = newLeft, edges = newRight)
+}
+
+object SfaWordExpr {
+  /** The interpreted word kernel, the same loop the generated code runs. */
+  def word(av: ArrayData, ev: ArrayData, usedBits: Int): Long = {
+    val mask = (1L << usedBits) - 1
+    val n = av.numElements()
+    val m = ev.numElements()
+    var word = 0L
+    var c = 0
+    while (c < n) {
+      val v = av.getDouble(c)
+      var sym = 0L
+      if (c < m) {
+        val es = ev.getArray(c)
+        val em = es.numElements()
+        var j = 0
+        while (j < em) {
+          if (v >= es.getDouble(j)) sym += 1
+          j += 1
+        }
+      }
+      word |= (sym & mask) << (usedBits * c)
+      c += 1
+    }
+    word
+  }
+}
+
+/** The words of every window of a series row: `(ARRAY<ARRAY<DOUBLE>>,
+  * ARRAY<INT>, ARRAY<ARRAY<DOUBLE>>) → ARRAY<BIGINT>`, element i being
+  * [[SfaWordExpr]] of [[SelectCoefsExpr]] of approximation i. A grid
+  * that maps a sliding-DFT array to words this way evaluates its
+  * per-config coefficients and edges once per row, where a `transform`
+  * lambda would evaluate them once per window (and run interpreted).
+  */
+case class SfaWordsExpr(approxs: Expression, coefs: Expression, edges: Expression, usedBits: Int)
+    extends TernaryExpression with ImplicitCastInputTypes {
+
+  override def first: Expression = approxs
+  override def second: Expression = coefs
+  override def third: Expression = edges
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "sfa_words"
+  override def inputTypes =
+    Seq(ArrayType(ArrayType(DoubleType)), ArrayType(IntegerType), ArrayType(ArrayType(DoubleType)))
+
+  override def nullSafeEval(a: Any, c: Any, e: Any): Any =
+    SfaWordsExpr.words(a.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData],
+      e.asInstanceOf[ArrayData], usedBits)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, c, e) =>
+      s"${ev.value} = graft.sfa.expr.SfaWordsExpr.words($a, $c, $e, $usedBits);")
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): SfaWordsExpr =
+    copy(approxs = newFirst, coefs = newSecond, edges = newThird)
+}
+
+object SfaWordsExpr {
+  def words(approxs: ArrayData, coefs: ArrayData, edges: ArrayData, usedBits: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(Array.tabulate(approxs.numElements()) { i =>
+      SfaWordExpr.word(SelectCoefsExpr.select(approxs.getArray(i), coefs), edges, usedBits)
+    })
 }
 
 /** The approximation values at the given coefficient indices, in index

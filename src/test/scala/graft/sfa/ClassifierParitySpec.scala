@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * (`SFA.*`, `SFAModel.transformWindowingWords`,
   * `SupervisedModel.words`), the feature vectors equal their sparse
   * (dict_idx, count) definition, and the four classifiers' predictions
-  * equal the values recorded for this fixture. Small grids over both
-  * norms keep the suite short.
+  * equal the values recorded for this fixture, for WEASEL and MUSE also
+  * through a cross-validated grid. Small grids over both norms keep the
+  * suite short.
   */
 class ClassifierParitySpec extends SparkSpec {
 
@@ -59,6 +60,10 @@ class ClassifierParitySpec extends SparkSpec {
         k -> rs.sortBy(_.getAs[Int]("offset")).map(_.getAs[Long]("word")).toSeq
       }
 
+  /** A WEASEL or MUSE words grid, one row per (config, series, offset). */
+  private def byOffset(words: DataFrame): Array[Row] =
+    words.select(col("*"), posexplode(col("words")).as(Seq("offset", "word"))).collect()
+
   private def disjointSlices(d: Array[Double], w: Int): Seq[Array[Double]] =
     (0 until d.length / w).map(i => d.slice(i * w, i * w + w))
 
@@ -94,7 +99,7 @@ class ClassifierParitySpec extends SparkSpec {
       // a missing (norm, w, dim) model yields no words for that key
       val dropped = (false, 8, 1)
       val wIdx = windows.zipWithIndex.toMap
-      val rows = Muse.wordsGrid(trainDf2, models - dropped, wIdx, maxF).collect()
+      val rows = byOffset(Muse.wordsGrid(trainDf2, models - dropped, wIdx, maxF))
       assert(rows.forall(r => r.getAs[Int]("w_idx") == wIdx(r.getAs[Int]("w"))))
       val words = wordsBy(rows,
         r => (r.getAs[Boolean]("norm"), r.getAs[Int]("w"), r.getAs[Int]("dim")))
@@ -141,7 +146,7 @@ class ClassifierParitySpec extends SparkSpec {
     }
     val usedBits = Words.binlog(weaselCfg.alphabetSize)
     val wIdx = weaselWindows.zipWithIndex.toMap
-    val rows = Weasel.wordsGrid(trainDf, qs, wIdx, usedBits).collect()
+    val rows = byOffset(Weasel.wordsGrid(trainDf, qs, qs.keys.map(k => k -> wIdx(k._2)).toMap, usedBits))
     assert(rows.forall(r => r.getAs[Int]("w_idx") == wIdx(r.getAs[Int]("w"))))
     val words = wordsBy(rows, r => (r.getAs[Boolean]("norm"), r.getAs[Int]("w")))
     for (((n, w), q) <- qs; (d, id) <- trainRows.map(_._2).zipWithIndex) {
@@ -182,8 +187,8 @@ class ClassifierParitySpec extends SparkSpec {
     val usedBits = Words.binlog(4)
     val hb = Weasel.highestBit(weaselCfg.maxWindowLength)
     val qs = weaselQs.filter(_._1._1)
-    val wb = Weasel.bags(Weasel.wordsGrid(trainDf, qs, weaselWindows.zipWithIndex.toMap, usedBits),
-      4, usedBits, hb).cache()
+    val wIdx = qs.keys.map(k => k -> weaselWindows.indexOf(k._2)).toMap
+    val wb = Weasel.bags(Weasel.wordsGrid(trainDf, qs, wIdx, usedBits), Seq(4), usedBits, hb).cache()
     assertVectors(wb, Weasel.dictionary(Weasel.chiSquared(wb, trainRows.length, weaselCfg, hb)),
       trainDf, "weasel")
     wb.unpersist()
@@ -191,7 +196,7 @@ class ClassifierParitySpec extends SparkSpec {
     val museWindows = Seq(3, 8, 13)
     val ms = Muse.fitBinsGrid(trainDf2, museWindows, Seq(false), HistogramType.EquiDepth, 4, 4)
     val mb = Muse.bags(Muse.wordsGrid(trainDf2, ms, museWindows.zipWithIndex.toMap, 4),
-      4, usedBits, museWindows.max, Muse.Config()).cache()
+      Seq(4), usedBits, museWindows.max, Muse.Config()).cache()
     // a dictionary over every other key, so some samples keep few features
     val keys = mb.select("norm", "f", "key").distinct().filter(col("key") % 2 === 0)
     assertVectors(mb, Weasel.dictionary(keys), trainDf2.select("id", "label"), "muse")
@@ -219,6 +224,21 @@ class ClassifierParitySpec extends SparkSpec {
     rows.foreach(_.getSeq[Double](2).foreach(p =>
       md5.update(java.nio.ByteBuffer.allocate(8).putDouble(p).array())))
     rows.map(_.getDouble(1).toInt).mkString + " " + md5.digest().map("%02x".format(_)).mkString
+  }
+
+  /** A WEASEL fit's selection, trainCorrect and dictSize, then its test
+    * predictions and probability digest.
+    */
+  private def weaselPin(clf: WeaselClassifier): String = {
+    val m = clf.fit(trainDf)
+    s"${m.norm}/${m.features}/${m.trainCorrect}/${m.dictSize} " + probaString(clf.predictProba(m, testDf))
+  }
+
+  /** [[weaselPin]] for a MUSE fit on the two-dimensional frames. */
+  private def musePin(clf: MuseClassifier): String = {
+    val m = clf.fit(trainDf2)
+    s"${m.hist}/${m.norm}/${m.features}/${m.trainCorrect}/${m.dictSize} " +
+      probaString(clf.predictProba(m, testDf2))
   }
 
   private def timed[T](name: String)(f: => T): T = {
@@ -249,17 +269,29 @@ class ClassifierParitySpec extends SparkSpec {
         m.models.map(x => s"${x.norm}/${x.windowLength}/${x.features}/${x.trainCorrect}")
           .sorted.mkString(",") + " " + predString(vs.predict(m, testDf))
       },
-      "weasel" -> timed("weasel") {
-        val m = weasel.fit(trainDf)
-        s"${m.norm}/${m.features}/${m.trainCorrect}/${m.dictSize} " +
-          probaString(weasel.predictProba(m, testDf))
-      },
-      "muse" -> timed("muse") {
-        val m = muse.fit(trainDf2)
-        s"${m.hist}/${m.norm}/${m.features}/${m.trainCorrect}/${m.dictSize} " +
-          probaString(muse.predictProba(m, testDf2))
-      })
+      "weasel" -> timed("weasel")(weaselPin(weasel)),
+      "muse" -> timed("muse")(musePin(muse)))
     info(got.toSeq.sorted.mkString("; "))
     assert(got == Recorded)
+  }
+
+  /** The cross-validated fits, recorded for this fixture: WEASEL over
+    * both norms × f ∈ {4, 6} and MUSE over f ∈ {4, 6} at one norm, three
+    * folds each, on windows short enough that the folds miss samples.
+    */
+  private val RecordedCv = Map(
+    "weasel" -> "false/4/20/154 132122123123323123133123 38b2c4e66816702e0da71f4778163251",
+    "muse" -> "EquiWidth/true/4/23/223 122123323123123113123222 1e13ae26e18ff7eedfe5fbaeff2c466b")
+
+  test("cross-validated WEASEL and MUSE fits equal the recorded ones") {
+    val weasel = new WeaselClassifier(weaselCfg.copy(minWindowLength = 3, maxWindowLength = 5))
+    val muse = new MuseClassifier(Muse.Config(minF = 4, maxF = 6, minWindowLength = 3,
+      maxWindowLength = 5, folds = 3, histTypes = Seq(HistogramType.EquiWidth),
+      normalization = Seq(true)))
+    val got = Map(
+      "weasel" -> timed("weasel cv")(weaselPin(weasel)),
+      "muse" -> timed("muse cv")(musePin(muse)))
+    info(got.toSeq.sorted.mkString("; "))
+    assert(got == RecordedCv)
   }
 }

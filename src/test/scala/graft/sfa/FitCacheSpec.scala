@@ -7,9 +7,13 @@ import org.apache.spark.sql.functions.lit
 
 /** A WEASEL or MUSE fit leaves exactly one cached frame behind: the
   * model's (key, dict_idx) dictionary. Everything else it caches on the
-  * way (spectra, words, bags, the fold dictionaries, the refit's bags
-  * and vectors) is released before `fit` returns, so repeated fits in
-  * one session neither pile up cached blocks nor find each other's.
+  * way (the quantizer spectra, the bags of every (norm, f) candidate and
+  * their numbered keys, and above the local-fit cutoff each candidate's
+  * fold vectors and the refit's vectors) is released before `fit`
+  * returns, so repeated fits in one session neither pile up cached
+  * blocks nor find each other's. Below the cutoff the fold fits and the
+  * refit read one collect of the vectors, which caches nothing. A train
+  * frame the caller cached stays cached.
   */
 class FitCacheSpec extends SparkSpec {
 
@@ -41,11 +45,36 @@ class FitCacheSpec extends SparkSpec {
     assertOnlyDictionaryKept(() => clf.fit(train).selected)
   }
 
+  private val singleWeasel = new WeaselClassifier(Weasel.Config(minF = 4, maxF = 4,
+    minWindowLength = 8, maxWindowLength = 12, normalization = Seq(false), lrMaxIter = 20))
+  private val singleMuse = new MuseClassifier(Muse.Config(minF = 4, maxF = 4, minWindowLength = 8,
+    maxWindowLength = 11, histTypes = Seq(HistogramType.EquiWidth), normalization = Seq(true),
+    lrMaxIter = 20))
+
+  private def multivariate(df: DataFrame): DataFrame =
+    df.withColumn("dim", lit(0)).select("id", "dim", "label", "data")
+
+  test("a single-candidate WEASEL fit keeps only its model's dictionary cached") {
+    val train = frame(1303L)
+    assertOnlyDictionaryKept(() => singleWeasel.fit(train).selected)
+  }
+
   test("a MUSE fit keeps only its model's dictionary cached") {
-    val clf = new MuseClassifier(Muse.Config(minF = 4, maxF = 4, minWindowLength = 8,
-      maxWindowLength = 11, histTypes = Seq(HistogramType.EquiWidth), normalization = Seq(true),
-      lrMaxIter = 20))
-    val train = frame(1302L).withColumn("dim", lit(0)).select("id", "dim", "label", "data")
-    assertOnlyDictionaryKept(() => clf.fit(train).selected)
+    val train = multivariate(frame(1302L))
+    assertOnlyDictionaryKept(() => singleMuse.fit(train).selected)
+  }
+
+  test("a train frame the caller cached is still cached after a WEASEL or MUSE fit") {
+    val train = frame(1304L).cache()
+    val train2 = multivariate(frame(1305L)).cache()
+    train.count()
+    train2.count()
+    val cached = persisted
+    assertOnlyDictionaryKept(() => singleWeasel.fit(train).selected)
+    assertOnlyDictionaryKept(() => singleMuse.fit(train2).selected)
+    assert(train.storageLevel.useMemory && train2.storageLevel.useMemory)
+    assert(persisted == cached)
+    train.unpersist(blocking = true)
+    train2.unpersist(blocking = true)
   }
 }
