@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.{BuildOnce, Names, QueryDef, Tables, Warehouse}
+import graft.util.{BuildOnce, Maintenance, Names, QueryDef, Tables, Warehouse}
 
 /** Physical-layout operators: bucketed table layout for co-located
   * (shuffle-free) joins — the storage-side half of the scale toolkit
@@ -254,19 +254,20 @@ object Layout {
     */
   def writeZordered(ev: DataFrame, loc: String,
       blockSize: Option[Long] = None,
-      dims: (String, String) = ("user_id", "cents")): Unit =
-    graft.util.Maintenance.withLock(ev.sparkSession, loc, "save") {
-      writeZBatch(ev, loc, blockSize, dims, org.apache.spark.sql.SaveMode.Overwrite)
-      // the layout self-describes its z-dimensions (written AFTER the
-      // data — the overwrite clears the directory first)
-      graft.util.Maintenance.writeSidecar(ev.sparkSession, loc, ZorderMetaFile,
-        Seq("zdims" -> s"${dims._1},${dims._2}"))
+      dims: (String, String) = ("user_id", "cents")): Unit = {
+    val s = ev.sparkSession
+    Maintenance.commit(s, loc, "save") { t =>
       // manifest-committed (the reader-safety + orphan-exclusion
       // contract every maintained layout now carries)
-      graft.util.Maintenance.writeManifest(ev.sparkSession, loc,
-        graft.util.Maintenance.Manifest(Map.empty,
-          graft.util.Maintenance.listDataFiles(ev.sparkSession, loc)))
+      t.publish {
+        writeZBatch(ev, loc, blockSize, dims, org.apache.spark.sql.SaveMode.Overwrite)
+        // the layout self-describes its z-dimensions (written AFTER the
+        // data — the overwrite clears the directory first)
+        Maintenance.writeSidecar(s, loc, ZorderMetaFile, Seq("zdims" -> s"${dims._1},${dims._2}"))
+      }(supersedes = _ => true)
     }
+    ()
+  }
 
   /** Incremental bulk INSERT into a z-ordered layout: the new batch
     * rides the SAME Morton pipeline (range-partition + sort on z within
@@ -293,8 +294,8 @@ object Layout {
       blockSize: Option[Long] = None,
       dims: (String, String) = ("user_id", "cents"),
       ingestKey: Option[(String, Long)] = None): Boolean =
-    graft.util.Maintenance.withLock(ev.sparkSession, loc, "append") {
-      graft.util.Maintenance.readSidecar(ev.sparkSession, loc, ZorderMetaFile) match {
+    Maintenance.commit(ev.sparkSession, loc, "append", ingestKey) { t =>
+      Maintenance.readSidecar(ev.sparkSession, loc, ZorderMetaFile) match {
         case Some(m) =>
           require(m.get("zdims").contains(s"${dims._1},${dims._2}"),
             s"append z-dimensions (${dims._1},${dims._2}) do not match the " +
@@ -306,28 +307,8 @@ object Layout {
             "sidecar) — write it with writeZordered first; appending unsorted " +
             "data would silently break row-group skipping")
       }
-      val s = ev.sparkSession
-      val mOld = graft.util.Maintenance.readManifest(s, loc)
-      val replayed = ingestKey.exists { case (sid, bid) =>
-        mOld.flatMap(_.header(graft.sfa.ModelIO.ingestHeader(sid)))
-          .flatMap(_.toLongOption).exists(bid <= _)
-      }
-      if (replayed) false
-      else {
-        val fsBefore = graft.util.Maintenance.listDataFiles(s, loc).toSet
-        writeZBatch(ev, loc, blockSize, dims, org.apache.spark.sql.SaveMode.Append)
-        val created = graft.util.Maintenance.listDataFiles(s, loc).filterNot(fsBefore)
-        val headers = mOld.map(_.headers).getOrElse(Map.empty[String, String]) ++
-          ingestKey.toSeq.flatMap { case (sid, bid) =>
-            Seq(graft.sfa.ModelIO.ingestHeader(sid) -> bid.toString,
-              graft.sfa.ModelIO.LastIngestHeader -> s"$sid:$bid")
-          }
-        graft.util.Maintenance.writeManifest(s, loc, graft.util.Maintenance.Manifest(
-          headers,
-          mOld.map(_.files).getOrElse(fsBefore.toSeq.sorted) ++ created))
-        true
-      }
-    }
+      t.publish(writeZBatch(ev, loc, blockSize, dims, org.apache.spark.sql.SaveMode.Append))()
+    }.isDefined
 
   /** Bounded compaction of an append-grown z-ordered layout — the r9
     * gap ("appendZordered's only compaction analogue is a full
@@ -350,42 +331,38 @@ object Layout {
   def compactZordered(s: SparkSession, loc: String,
       blockSize: Option[Long] = None, smallBytes: Long = 32L << 20,
       targetBytes: Long = 128L << 20): Int =
-    graft.util.Maintenance.withLock(s, loc, "compact") {
-      val m = graft.util.Maintenance.readManifest(s, loc).getOrElse(
+    Maintenance.commit(s, loc, "compact") { t =>
+      val m = t.prev.getOrElse(
         throw new IllegalStateException(
           s"$loc is not a manifest-committed z-ordered layout — write it with " +
             "writeZordered first; compaction without a committed snapshot " +
             "cannot give readers a safe view"))
-      val dims = graft.util.Maintenance.readSidecar(s, loc, ZorderMetaFile)
+      val dims = Maintenance.readSidecar(s, loc, ZorderMetaFile)
         .flatMap(_.get("zdims")).map(_.split(",", 2)) match {
         case Some(Array(d1, d2)) => (d1, d2)
         case _ => throw new IllegalStateException(
           s"$loc carries no z-dimension sidecar — cannot re-sort merged files")
       }
       val root = new org.apache.hadoop.fs.Path(loc)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       // one recursive listing carries every length — never a per-file
       // getFileStatus loop (10⁶ files would be 10⁶ NameNode RPCs)
-      val sizes = graft.util.Maintenance.dataFileSizes(s, loc)
+      val sizes = Maintenance.dataFileSizes(s, loc)
       val smalls = m.files.filter(f => sizes.get(f).exists(_ < smallBytes))
       if (smalls.size < 2) 0
       else {
         val totalBytes = smalls.map(sizes).sum
         val outParts = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-        val fsBefore = graft.util.Maintenance.listDataFiles(s, loc).toSet
-        writeZBatch(
+        t.publish(writeZBatch(
           s.read.option("basePath", loc).parquet(smalls.map(f => new org.apache.hadoop.fs.Path(root, f).toString): _*),
-          loc, blockSize, dims, org.apache.spark.sql.SaveMode.Append, Some(outParts))
-        val created = graft.util.Maintenance.listDataFiles(s, loc).filterNot(fsBefore)
-        graft.util.Maintenance.writeManifest(s, loc, graft.util.Maintenance.Manifest(
-          m.headers, m.files.filterNot(smalls.toSet) ++ created))
+          loc, blockSize, dims, org.apache.spark.sql.SaveMode.Append, Some(outParts)))(
+          supersedes = smalls.toSet)
         // the merged-away small files are NOT deleted here: a reader
         // pinned to the pre-compact manifest keeps a fully-intact
         // snapshot until `Maintenance.vacuumOrphans` sweeps them on the
         // maintenance schedule
         smalls.size
       }
-    }
+    }.get // no ingest key: never a replay
 
   private val ZorderMetaFile = "_graft_zorder_meta"
 
@@ -425,7 +402,7 @@ object Layout {
       compactZordered(s, loc)
       ()
     }
-    graft.util.Maintenance.readLayout(s, loc)
+    Maintenance.readLayout(s, loc)
   }
 
   /** 2-D range rollup over the z-ordered layout. The box is derived

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.{Pipelines, QueryDef, Tables}
+import graft.util.{Maintenance, Pipelines, QueryDef, Tables}
 
 /** Similarity search over the embedding column (SURVEY §7.1 step 10 /
   * driver north-star). Two paths:
@@ -36,13 +36,6 @@ object Similarity {
     * derives member norms with exactly the batch kernel).
     */
   private[graft] def dotCol(a: Column, b: Column): Column = dot(a, b)
-
-  /** Cross-package seam for [[appendIvfLayout]] (the streaming IVF
-    * ingest's per-micro-batch append, with its exactly-once key).
-    */
-  private[graft] def appendIvf(members: DataFrame, loc: String,
-      ingestKey: Option[(String, Long)]): Boolean =
-    appendIvfLayout(members.sparkSession, members, loc, ingestKey)
 
   private[graft] def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
@@ -364,9 +357,13 @@ object Similarity {
     * rows. The centroids ARE the layout's self-description — an append
     * assigns against THEM, never against recomputed centroids (which
     * would drift as the corpus grows and scatter members across wrong
-    * cells); the small sidecar adds a cheap consistency check.
+    * cells); the committed cell count adds a cheap consistency check.
     */
   private val IvfCentroidsDir = "_centroids"
+
+  /** The sidecar that recorded the cell count before the count moved
+    * into the manifest; still read for layouts saved that way.
+    */
   private val IvfMetaFile = "_graft_ivf_meta"
 
   /** Manifest header naming the layout's CURRENT centroid table dir —
@@ -377,33 +374,42 @@ object Similarity {
     */
   private val CentroidsHeader = "centroids_dir"
 
+  /** Manifest header holding the row count of the table
+    * [[CentroidsHeader]] names, committed in the same rename: a
+    * re-cluster that drops empty cells can never leave a count that
+    * disagrees with the still-committed table.
+    */
+  private val CellsHeader = "cells"
+
   /** Persist `members` (c_id, civ, cn) as the cell-partitioned IVF
     * layout assigned against `cent`, plus the centroid table itself and
-    * the fail-fast sidecar — the embedding-side analogue of
+    * its cell count — the embedding-side analogue of
     * `ModelIO.saveIndex` (self-describing, maintenance-locked,
     * MANIFEST-COMMITTED: readers resolve one atomic snapshot of member
-    * files + centroid pointer, see `graft.util.Maintenance.readLayout`).
+    * files + centroid pointer, see `Maintenance.readLayout`).
     */
   def saveIvfLayout(s: SparkSession, members: DataFrame,
-      cent: DataFrame, loc: String): Unit =
-    graft.util.Maintenance.withLock(s, loc, "save") {
+      cent: DataFrame, loc: String): Unit = {
+    Maintenance.commit(s, loc, "save") { t =>
       // cent is consumed three times (assignment broadcast, centroid
-      // write, sidecar count) and its plan is the Lloyd-step fit — cache
-      // it for the save's duration so the fit runs once
+      // write, cell count) and its plan is the Lloyd-step fit — cache it
+      // for the save's duration so the fit runs once
       val c = cent.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        assignCells(members.select(col("c_id").as("id"), col("civ").as("iv")), c)
-          .withColumnRenamed("id", "c_id")
-          .join(members, "c_id")
-          .write.mode("overwrite").partitionBy("cell").parquet(loc)
-        c.coalesce(1).write.mode("overwrite").parquet(s"$loc/$IvfCentroidsDir")
-        graft.util.Maintenance.writeSidecar(s, loc, IvfMetaFile,
-          Seq("cells" -> c.count().toString))
-        graft.util.Maintenance.writeManifest(s, loc, graft.util.Maintenance.Manifest(
-          Map(CentroidsHeader -> IvfCentroidsDir),
-          graft.util.Maintenance.listDataFiles(s, loc)))
+        val cells = c.count()
+        t.publish {
+          assignCells(members.select(col("c_id").as("id"), col("civ").as("iv")), c)
+            .withColumnRenamed("id", "c_id")
+            .join(members, "c_id")
+            .write.mode("overwrite").partitionBy("cell").parquet(loc)
+          // after the member overwrite, which clears the directory
+          c.coalesce(1).write.mode("overwrite").parquet(s"$loc/$IvfCentroidsDir")
+        }(supersedes = _ => true, headers = (_, _) =>
+          Map(CentroidsHeader -> IvfCentroidsDir, CellsHeader -> cells.toString))
       } finally { c.unpersist(); () }
     }
+    ()
+  }
 
   /** Incremental bulk INSERT into a persisted IVF layout: new members
     * are assigned against the layout's own PERSISTED centroids and
@@ -411,66 +417,47 @@ object Similarity {
     * untouched cells keep their files, nothing is rewritten, and every
     * query sees the appended members the moment the write commits (the
     * probe set is computed against the same persisted centroids).
-    * Fail-fast: a layout without a centroid table (or whose sidecar
-    * disagrees with it) refuses the append — assigning against
-    * RECOMPUTED centroids would scatter members across cells that
-    * disagree with the at-rest partitioning. Serialized per layout by
-    * the shared maintenance lock (`graft.util.Maintenance`).
+    * Fail-fast: a layout without a centroid table (or whose committed
+    * cell count disagrees with it) refuses the append — assigning
+    * against RECOMPUTED centroids would scatter members across cells
+    * that disagree with the at-rest partitioning. Serialized per layout
+    * by the shared maintenance lock (`graft.util.Maintenance`).
     */
   def appendIvfLayout(s: SparkSession, members: DataFrame,
       loc: String, ingestKey: Option[(String, Long)] = None): Boolean =
-    graft.util.Maintenance.withLock(s, loc, "append") {
-      val mOld = graft.util.Maintenance.readManifest(s, loc)
-      val replayed = ingestKey.exists { case (sid, bid) =>
-        mOld.flatMap(_.header(graft.sfa.ModelIO.ingestHeader(sid)))
-          .flatMap(_.toLongOption).exists(bid <= _)
-      }
-      if (replayed) false
-      else {
-        val fs = new org.apache.hadoop.fs.Path(loc)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val centDir = mOld.flatMap(_.header(CentroidsHeader)).getOrElse(IvfCentroidsDir)
-        if (!fs.exists(new org.apache.hadoop.fs.Path(s"$loc/$centDir")))
-          throw new IllegalStateException(
-            s"$loc has no persisted centroid table ($centDir) — appending " +
-              "against recomputed centroids would scatter members across wrong " +
-              "cells; write the layout with saveIvfLayout first")
-        val cent = s.read.parquet(s"$loc/$centDir")
-        graft.util.Maintenance.readSidecar(s, loc, IvfMetaFile).foreach { m =>
+    Maintenance.commit(s, loc, "append", ingestKey) { t =>
+      val fs = new org.apache.hadoop.fs.Path(loc)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val centDir = t.prev.flatMap(_.header(CentroidsHeader)).getOrElse(IvfCentroidsDir)
+      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$loc/$centDir")))
+        throw new IllegalStateException(
+          s"$loc has no persisted centroid table ($centDir) — appending " +
+            "against recomputed centroids would scatter members across wrong " +
+            "cells; write the layout with saveIvfLayout first")
+      val cent = s.read.parquet(s"$loc/$centDir")
+      t.prev.flatMap(_.header(CellsHeader))
+        .orElse(Maintenance.readSidecar(s, loc, IvfMetaFile).map(_.getOrElse("cells", "<absent>")))
+        .foreach { recorded =>
           val n = cent.count()
-          require(m.get("cells").contains(n.toString),
-            s"centroid table at $loc has $n cells but the sidecar records " +
-              s"${m.getOrElse("cells", "<absent>")} — the layout is inconsistent")
+          require(recorded == n.toString,
+            s"centroid table at $loc has $n cells but the layout records " +
+              s"$recorded — the layout is inconsistent")
         }
-        // created-set discipline (see ModelIO.appendIndexBatch): the
-        // manifest gains exactly this write's files; a crashed earlier
-        // append's unpublished orphans stay excluded forever, which is
-        // also what makes the streaming ingestKey path exactly-once
-        val fsBefore = graft.util.Maintenance.listDataFiles(s, loc).toSet
+      t.publish {
         assignCells(members.select(col("c_id").as("id"), col("civ").as("iv")), cent)
           .withColumnRenamed("id", "c_id")
           .join(members, "c_id")
           .write.mode("append").partitionBy("cell").parquet(loc)
-        val created = graft.util.Maintenance.listDataFiles(s, loc).filterNot(fsBefore)
-        val baseFiles = mOld.map(_.files).getOrElse(fsBefore.toSeq.sorted)
-        val headers = mOld.map(_.headers)
-          .getOrElse(Map(CentroidsHeader -> IvfCentroidsDir)) ++
-          ingestKey.toSeq.flatMap { case (sid, bid) =>
-            Seq(graft.sfa.ModelIO.ingestHeader(sid) -> bid.toString,
-              graft.sfa.ModelIO.LastIngestHeader -> s"$sid:$bid")
-          }
-        graft.util.Maintenance.writeManifest(s, loc,
-          graft.util.Maintenance.Manifest(headers, baseFiles ++ created))
-        true
-      }
-    }
+      // a pre-manifest layout commits the centroid dir it was checked against
+      }(headers = (_, _) => Map(CentroidsHeader -> centDir))
+    }.isDefined
 
   /** The layout's centroid table, resolved through the manifest's
     * committed pointer (pre-manifest layouts fall back to the fixed
     * `_centroids` dir).
     */
   def loadIvfCentroids(s: SparkSession, loc: String): DataFrame = {
-    val dir = graft.util.Maintenance.readManifest(s, loc)
+    val dir = Maintenance.readManifest(s, loc)
       .flatMap(_.header(CentroidsHeader)).getOrElse(IvfCentroidsDir)
     s.read.parquet(s"$loc/$dir").select("cell", "cv", "cn2")
   }
@@ -479,13 +466,13 @@ object Similarity {
     * the shared merge-beside-and-swap compaction
     * (`Maintenance.compactPartitioned`) over the cell partitions —
     * over-fragmented cells merged to one new file each, everything
-    * else (light cells, the centroid table, the sidecar)
+    * else (light cells, the centroid table and its cell count)
     * byte-untouched, same locked snapshot-isolated contract as the
     * k-NN index's `ModelIO.compactIndex`.
     */
   def compactIvfLayout(s: SparkSession, loc: String,
       maxFilesPerCell: Int = 4): Seq[Long] =
-    graft.util.Maintenance.compactPartitioned(s, loc, "cell", maxFilesPerCell)
+    Maintenance.compactPartitioned(s, loc, "cell", maxFilesPerCell)
       .map(_.toLong)
 
   /** Measured cell skew of the at-rest layout: max/mean of per-cell
@@ -501,8 +488,8 @@ object Similarity {
   def ivfCellSkew(s: SparkSession, loc: String): Double = {
     // one recursive listing carries every length — never a per-file
     // getFileStatus loop (10⁶ files would be 10⁶ NameNode RPCs)
-    val sizes = graft.util.Maintenance.dataFileSizes(s, loc)
-    val files = graft.util.Maintenance.readManifest(s, loc)
+    val sizes = Maintenance.dataFileSizes(s, loc)
+    val files = Maintenance.readManifest(s, loc)
       .map(_.files).getOrElse(sizes.keys.toSeq)
     val perCell = files
       .filter(f => f.startsWith("cell=") && sizes.contains(f))
@@ -530,13 +517,12 @@ object Similarity {
     * trigger, not per append.
     */
   def reclusterIvfLayout(s: SparkSession, loc: String): Long =
-    graft.util.Maintenance.withLock(s, loc, "recluster") {
-      val mOld = graft.util.Maintenance.readManifest(s, loc).getOrElse(
-        throw new IllegalStateException(
-          s"$loc is not a manifest-committed IVF layout — save it with " +
-            "saveIvfLayout first; re-clustering an unversioned directory " +
-            "cannot give readers a safe snapshot"))
-      val members = graft.util.Maintenance.readLayout(s, loc)
+    Maintenance.commit(s, loc, "recluster") { t =>
+      if (t.prev.isEmpty) throw new IllegalStateException(
+        s"$loc is not a manifest-committed IVF layout — save it with " +
+          "saveIvfLayout first; re-clustering an unversioned directory " +
+          "cannot give readers a safe snapshot")
+      val members = Maintenance.readLayout(s, loc)
         .select(col("c_id"), col("civ"), col("cn"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -547,19 +533,15 @@ object Similarity {
         val cells = cent.count() // materialize before any write consumes it
         val gen = s"_centroids_g${ProcessHandle.current().pid()}_${System.nanoTime()}"
         cent.coalesce(1).write.parquet(s"$loc/$gen")
-        val fsBefore = graft.util.Maintenance.listDataFiles(s, loc).toSet
-        assignCells(base, cent)
-          .withColumnRenamed("id", "c_id")
-          .join(members, "c_id")
-          .write.mode("append").partitionBy("cell").parquet(loc)
-        val created = graft.util.Maintenance.listDataFiles(s, loc).filterNot(fsBefore)
-        // the sidecar count must match the table the manifest is about
-        // to point at (appendIvfLayout cross-checks them)
-        graft.util.Maintenance.writeSidecar(s, loc, IvfMetaFile,
-          Seq("cells" -> cells.toString))
-        // THE swap: only the new generation's files + new centroid dir
-        graft.util.Maintenance.writeManifest(s, loc, graft.util.Maintenance.Manifest(
-          mOld.headers + (CentroidsHeader -> gen), created))
+        // THE swap: only the new generation's files + new centroid dir,
+        // with the cell count of exactly that table
+        t.publish {
+          assignCells(base, cent)
+            .withColumnRenamed("id", "c_id")
+            .join(members, "c_id")
+            .write.mode("append").partitionBy("cell").parquet(loc)
+        }(supersedes = _ => true, headers = (_, _) =>
+          Map(CentroidsHeader -> gen, CellsHeader -> cells.toString))
         cent.unpersist()
         // the old generation (member files + centroid dir) is NOT
         // deleted here: a reader pinned to the pre-recluster manifest
@@ -567,7 +549,7 @@ object Similarity {
         // `Maintenance.vacuumOrphans` sweeps the unreferenced generation
         cells
       } finally { members.unpersist(); () }
-    }
+    }.get // no ingest key: never a replay
 
   private def ivfLayoutAnn(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
@@ -608,7 +590,7 @@ object Similarity {
     val probed = probes.select("cell").distinct().collect().map(_.getLong(0))
     // manifest-pinned member scan: the committed snapshot the centroid
     // probes above belong to (one atomic view of cells + centroids)
-    val layout = graft.util.Maintenance.readLayout(s, loc)
+    val layout = Maintenance.readLayout(s, loc)
       .filter(col("cell").isin(probed: _*)) // → PartitionFilters pruning
       .select(col("cell").cast("long").as("cell"), col("c_id"), col("civ"), col("cn"))
     // one cell per corpus vector ⇒ (q_id, c_id) pairs are already

@@ -2,7 +2,7 @@ package graft.sfa
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.Overlap
+import graft.util.{Maintenance, Overlap}
 
 /** Model persistence (SURVEY §2.1 S8/S9/S10), re-expressed as columnar
   * artifacts instead of the reference's Java/Kryo serialization
@@ -281,7 +281,7 @@ object ModelIO {
     * 1<<usedBits packing, while `IndexOps.knnOverLayout` layouts pass
     * 256 to match the k-NN engine's scalar prefix key.
     *
-    * The layout is MANIFEST-COMMITTED ([[graft.util.Maintenance.readManifest]]):
+    * The layout is MANIFEST-COMMITTED ([[Maintenance.readManifest]]):
     * one atomically-replaced file publishes the data-file list AND the
     * per-prefix box-stats pointer together, so (a) readers always
     * resolve a complete committed snapshot — across a concurrent
@@ -292,24 +292,24 @@ object ModelIO {
     * impossible by construction (stats and rows are one rename).
     */
   def saveIndex(corpus: DataFrame, usedBits: Int, prefixLen: Int, path: String,
-      prefixStart: Int = 0, base: Int = 0): Unit =
-    withMaintenanceLock(corpus.sparkSession, path, "save") {
-      val s = corpus.sparkSession
-      writeIndex(corpus, usedBits, prefixLen, path, prefixStart, base, SaveMode.Overwrite)
-      writeIndexMeta(s, path, usedBits, prefixLen, prefixStart, base)
-      val files = graft.util.Maintenance.listDataFiles(s, path)
-      // stats from the just-written files' narrow (prefix, approx)
-      // columns — bit-identical to what a query-time scan would compute
-      // (doubles round-trip parquet exactly), far cheaper than
-      // re-running the corpus plan. Layouts WITHOUT an approx column
-      // (word-only indexes like s10's) carry no boxes — k-NN never runs
-      // over them, and knnOverLayout's fallback stays for such cases.
-      val headers =
-        if (!corpus.columns.contains("approx")) Map.empty[String, String]
-        else Map(BoxStatsHeader -> writeBoxStats(s, path, boxRowsOverFiles(s, path, files)))
-      graft.util.Maintenance.writeManifest(s, path,
-        graft.util.Maintenance.Manifest(headers, files))
+      prefixStart: Int = 0, base: Int = 0): Unit = {
+    val s = corpus.sparkSession
+    Maintenance.commit(s, path, "save") { t =>
+      t.publish {
+        writeIndex(corpus, usedBits, prefixLen, path, prefixStart, base, SaveMode.Overwrite)
+        writeIndexMeta(s, path, usedBits, prefixLen, prefixStart, base)
+      }(supersedes = _ => true, headers = (_, files) =>
+        // stats from the just-written files' narrow (prefix, approx)
+        // columns — bit-identical to what a query-time scan would compute
+        // (doubles round-trip parquet exactly), far cheaper than
+        // re-running the corpus plan. Layouts WITHOUT an approx column
+        // (word-only indexes like s10's) carry no boxes — k-NN never runs
+        // over them, and knnOverLayout's fallback stays for such cases.
+        if (!corpus.columns.contains("approx")) Map.empty
+        else Map(BoxStatsHeader -> writeBoxStats(s, path, boxRowsOverFiles(s, path, files))))
     }
+    ()
+  }
 
   /** Incremental bulk INSERT into an existing layout (the trie-insert
     * analogue, SFATrie.java's insert path re-expressed for an at-rest
@@ -326,7 +326,7 @@ object ModelIO {
     * (layouts written by [[saveIndex]] are self-describing), so a
     * mismatched append fails fast instead of silently corrupting the
     * prefix partitioning. Maintenance ops are serialized per layout by
-    * the single-maintainer lock (see [[maintenanceLockPath]]): an
+    * the single-maintainer lock (see [[Maintenance.withLock]]): an
     * append racing a compaction fails fast instead of being lost.
     */
   def appendIndex(corpus: DataFrame, usedBits: Int, prefixLen: Int, path: String,
@@ -350,75 +350,51 @@ object ModelIO {
     */
   def appendIndexBatch(corpus: DataFrame, usedBits: Int, prefixLen: Int, path: String,
       prefixStart: Int = 0, base: Int = 0,
-      ingestKey: Option[(String, Long)] = None): Boolean =
-    withMaintenanceLock(corpus.sparkSession, path, "append") {
-      val s = corpus.sparkSession
-      val mOld = graft.util.Maintenance.readManifest(s, path)
-      val replayed = ingestKey.exists { case (sid, bid) =>
-        mOld.flatMap(_.header(ingestHeader(sid))).flatMap(_.toLongOption).exists(bid <= _)
+      ingestKey: Option[(String, Long)] = None): Boolean = {
+    val s = corpus.sparkSession
+    Maintenance.commit(s, path, "append", ingestKey) { t =>
+      val existing = readIndexMeta(s, path)
+      existing.foreach { m =>
+        require(m == IndexMeta(usedBits, prefixLen, prefixStart, base),
+          s"append packing (usedBits=$usedBits, prefixLen=$prefixLen, " +
+            s"prefixStart=$prefixStart, base=$base) does not match the layout's " +
+            s"own metadata $m at $path — appending with a different packing " +
+            "would scatter records across wrong prefix directories")
       }
-      if (replayed) false
-      else {
-        val existing = readIndexMeta(s, path)
-        existing.foreach { m =>
-          require(m == IndexMeta(usedBits, prefixLen, prefixStart, base),
-            s"append packing (usedBits=$usedBits, prefixLen=$prefixLen, " +
-              s"prefixStart=$prefixStart, base=$base) does not match the layout's " +
-              s"own metadata $m at $path — appending with a different packing " +
-              "would scatter records across wrong prefix directories")
-        }
-        // a layout that MAINTAINS box stats cannot absorb approx-less
-        // rows: the boxes would silently stop covering the new members
-        // and the k-NN prune would turn unsound
-        require(corpus.columns.contains("approx") ||
-          mOld.forall(_.header(BoxStatsHeader).isEmpty),
-          s"layout $path maintains box stats but the appended batch has no " +
-            "'approx' column — the maintained boxes would no longer bound " +
-            "every member")
-        // created-set discipline: the manifest gains EXACTLY the files
-        // this write added (FS before/after diff under the lock), never
-        // a directory listing — a crashed earlier append's committed-
-        // but-unpublished orphans stay excluded forever
-        val fsBefore = graft.util.Maintenance.listDataFiles(s, path).toSet
-        writeIndex(corpus, usedBits, prefixLen, path, prefixStart, base, SaveMode.Append)
-        val created = graft.util.Maintenance.listDataFiles(s, path).filterNot(fsBefore)
-        // a pre-manifest layout adopts its full pre-append listing (that
-        // IS what its directory readers saw) and becomes committed
-        val baseFiles = mOld.map(_.files).getOrElse(fsBefore.toSeq.sorted)
-        val merged: Option[Array[(Long, Long, Seq[Double], Seq[Double])]] =
-          if (!corpus.columns.contains("approx")) None // word-only layout: no boxes
-          else mOld.flatMap(_.header(BoxStatsHeader)) match {
+      // a layout that MAINTAINS box stats cannot absorb approx-less
+      // rows: the boxes would silently stop covering the new members
+      // and the k-NN prune would turn unsound
+      val statsDir = t.prev.flatMap(_.header(BoxStatsHeader))
+      require(corpus.columns.contains("approx") || statsDir.isEmpty,
+        s"layout $path maintains box stats but the appended batch has no " +
+          "'approx' column — the maintained boxes would no longer bound " +
+          "every member")
+      t.publish(writeIndex(corpus, usedBits, prefixLen, path, prefixStart, base, SaveMode.Append))(
+        headers = (created, files) =>
+          if (!corpus.columns.contains("approx")) Map.empty // word-only layout: no boxes
+          else Map(BoxStatsHeader -> writeBoxStats(s, path, statsDir match {
             // the persisted table and the created-files aggregate are
             // both driver-sized (≤ α^prefixLen rows); the merge runs on
             // the driver (IndexOps.mergeBoxRows, bit-identical to a
             // distributed re-aggregate) instead of as a three-exchange
             // distributed job over model-sized data
-            case Some(d) if created.nonEmpty => Some(IndexOps.mergeBoxRows(
-              readStatsRows(s, path, d), boxRowsOverFiles(s, path, created)))
-            case Some(d) => Some(readStatsRows(s, path, d))
+            case Some(d) if created.nonEmpty => IndexOps.mergeBoxRows(
+              readStatsRows(s, path, d), boxRowsOverFiles(s, path, created))
+            case Some(d) => readStatsRows(s, path, d)
             // pre-stats layout: one narrow full pass upgrades it
-            case None => Some(boxRowsOverFiles(s, path, baseFiles ++ created))
-          }
-        val statsDir = merged.map(writeBoxStats(s, path, _))
-        val headers = mOld.map(_.headers).getOrElse(Map.empty) ++
-          statsDir.map(BoxStatsHeader -> _) ++
-          ingestKey.toSeq.flatMap { case (sid, bid) =>
-            Seq(ingestHeader(sid) -> bid.toString, LastIngestHeader -> s"$sid:$bid")
-          }
-        graft.util.Maintenance.writeManifest(s, path,
-          graft.util.Maintenance.Manifest(headers, baseFiles ++ created))
-        // the superseded stats generation is NOT deleted here: an append
-        // deletes nothing, so a reader that resolved the old manifest an
-        // instant ago keeps a fully-intact snapshot (boxes included) —
-        // `Maintenance.vacuumOrphans` is the one deleter of superseded
-        // generations, run on the maintenance schedule
-        // annotate a pre-metadata layout with the packing this append
-        // just asserted, so the NEXT append is checked too
-        if (existing.isEmpty)
-          writeIndexMeta(s, path, usedBits, prefixLen, prefixStart, base)
-        true
-      }
-    }
+            case None => boxRowsOverFiles(s, path, files)
+          })))
+      // the superseded stats generation is NOT deleted here: an append
+      // deletes nothing, so a reader that resolved the old manifest an
+      // instant ago keeps a fully-intact snapshot (boxes included) —
+      // `Maintenance.vacuumOrphans` is the one deleter of superseded
+      // generations, run on the maintenance schedule
+      // annotate a pre-metadata layout with the packing this append
+      // just asserted, so the NEXT append is checked too
+      if (existing.isEmpty)
+        writeIndexMeta(s, path, usedBits, prefixLen, prefixStart, base)
+    }.isDefined
+  }
 
   /** Packing parameters a [[saveIndex]] layout records about itself. */
   final case class IndexMeta(usedBits: Int, prefixLen: Int, prefixStart: Int, base: Int)
@@ -432,19 +408,6 @@ object ModelIO {
     */
   private val BoxStatsHeader = "stats_dir"
 
-  /** Manifest header recording the most recent streaming publisher as
-    * `streamId:batchId` (observability; the per-lineage watermark
-    * headers below are what the replay guard reads).
-    */
-  private[graft] val LastIngestHeader = "last_ingest"
-
-  /** Per-lineage streaming watermark header: batch ids are
-    * CHECKPOINT-scoped, so each stream lineage carries its own key — a
-    * recreated checkpoint's renumbered batches are new data under a new
-    * key, and two streams feeding one layout cannot mute each other.
-    */
-  private[graft] def ingestHeader(streamId: String) = s"ingest.$streamId"
-
   /** The maintained [[IndexOps.boxTable]] rows for `path`, resolved
     * through the manifest — None when the layout predates the stats
     * (callers fall back to the query-time aggregate). A manifest that
@@ -454,7 +417,7 @@ object ModelIO {
     */
   def readBoxStats(s: SparkSession,
       path: String): Option[Array[(Long, Long, Seq[Double], Seq[Double])]] =
-    graft.util.Maintenance.readManifest(s, path)
+    Maintenance.readManifest(s, path)
       .flatMap(_.header(BoxStatsHeader))
       .map(readStatsRows(s, path, _))
 
@@ -502,43 +465,15 @@ object ModelIO {
     dir
   }
 
-  // ---- single-maintainer lock -----------------------------------------
-
-  /** THE concurrency contract of the index-maintenance lifecycle:
-    * save/append/compact are SERIALIZED per layout by a lock file
-    * (atomic create-if-absent) next to the layout directory. Without
-    * it, an [[appendIndex]] committing inside [[compactIndex]]'s
-    * read→overwrite window is silently LOST (the compacted rewrite
-    * replaces the prefix directory the append just added a file to) —
-    * the distributed failure mode the reference never faced because its
-    * trie insert/merge is single-process by construction
-    * (SFATrie.java:299-380). A competing maintainer fails FAST with the
-    * holder's identity instead of corrupting the layout; queries never
-    * take the lock (every read resolves a committed manifest snapshot,
-    * safe across append AND compaction). A maintainer whose process
-    * was KILLED leaves its lock behind on purpose:
-    * `Maintenance.inspectAndRelease` validates the committed snapshot
-    * and releases exactly when coherent. Lock placement is
-    * a SIBLING of the layout dir so `saveIndex`'s whole-directory
-    * overwrite cannot delete the lock that guards it. Atomicity caveat
-    * as for the sidecar: create-if-absent is atomic on local/HDFS
-    * semantics; object stores need their own conditional-put primitive.
-    */
-  private def maintenanceLockPath(path: String): org.apache.hadoop.fs.Path =
-    graft.util.Maintenance.lockPath(path)
-
-  private def withMaintenanceLock[T](s: SparkSession, path: String, op: String)(body: => T): T =
-    graft.util.Maintenance.withLock(s, path, op)(body)
-
   private val IndexMetaFile = "_graft_index_meta"
 
   /** Sidecar commit via the shared write-then-rename-over helper
-    * ([[graft.util.Maintenance.writeSidecar]]): no torn sidecar on a
+    * ([[Maintenance.writeSidecar]]): no torn sidecar on a
     * crash, no no-sidecar window for a concurrent reader.
     */
   private def writeIndexMeta(s: SparkSession, path: String,
       usedBits: Int, prefixLen: Int, prefixStart: Int, base: Int): Unit =
-    graft.util.Maintenance.writeSidecar(s, path, IndexMetaFile, Seq(
+    Maintenance.writeSidecar(s, path, IndexMetaFile, Seq(
       "usedBits" -> usedBits.toString, "prefixLen" -> prefixLen.toString,
       "prefixStart" -> prefixStart.toString, "base" -> base.toString))
 
@@ -548,7 +483,7 @@ object ModelIO {
     * skipping the check on corruption would defeat the fail-fast.
     */
   def readIndexMeta(s: SparkSession, path: String): Option[IndexMeta] =
-    graft.util.Maintenance.readSidecar(s, path, IndexMetaFile).map { kv =>
+    Maintenance.readSidecar(s, path, IndexMetaFile).map { kv =>
       try IndexMeta(kv("usedBits").toInt, kv("prefixLen").toInt,
         kv("prefixStart").toInt, kv("base").toInt)
       catch {
@@ -596,15 +531,14 @@ object ModelIO {
     * layout size, so routine compaction after appends touches only
     * what fragmented; at extreme scale call it per prefix-batch
     * (filter the returned list). Returns the compacted prefixes. Runs
-    * under the single-maintainer lock (see [[maintenanceLockPath]]).
+    * under the single-maintainer lock (see [[Maintenance.withLock]]).
     * IndexAppendSpec pins file counts, untouched-light-prefix bytes,
     * k-NN exactness across the whole append→compact lifecycle, and the
     * fail-fast of an append interleaved into the compaction window.
     */
   def compactIndex(path: String, maxFilesPerPrefix: Int = 4)(
       implicit spark: SparkSession): Seq[Long] =
-    graft.util.Maintenance
-      .compactPartitioned(spark, path, "prefix", maxFilesPerPrefix)
+    Maintenance.compactPartitioned(spark, path, "prefix", maxFilesPerPrefix)
       .map(_.toLong)
 
   /** Manifest-pinned read of the layout (committed snapshot, loud
@@ -612,5 +546,5 @@ object ModelIO {
     * pre-manifest layouts fall back to the plain directory read.
     */
   def loadIndex(path: String)(implicit spark: SparkSession): DataFrame =
-    graft.util.Maintenance.readLayout(spark, path)
+    Maintenance.readLayout(spark, path)
 }

@@ -18,26 +18,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * manifest commit publishes rows and merged box stats atomically, so
   * every record whose batch committed is immediately searchable.
   *
-  * Delivery semantics: EXACTLY-ONCE. The publish point of an append is
-  * the layout manifest's single atomic rename, which carries (in one
-  * commit with the file list) a per-lineage watermark header
-  * `ingest.<streamId> = batchId`. A replayed batch at or below its own
-  * lineage's watermark is a no-op; a crash BEFORE the rename leaves
-  * only orphan files no later manifest adopts (appends publish
-  * `old ∪ created` from an under-lock before/after listing); a crash
-  * AFTER it is fully committed. The r9 design's residual — append and
-  * marker as two commits, able to duplicate one batch — is closed, not
-  * narrowed: there is no state between "not published" and "published
-  * with the watermark". Watermarks are keyed by the checkpoint's own
-  * lineage id, so a recreated checkpoint's renumbered batches are NEW
-  * data (never muted), and several streams feeding one layout keep
-  * independent watermarks (they serialize at the maintenance lock and
-  * cannot mute each other). Residual (documented): one watermark header
-  * per lineage lives in the manifest for the layout's lifetime — a few
-  * bytes each; a layout fed by unboundedly many distinct checkpoints
-  * over years should prune dead lineages' keys during scheduled
-  * maintenance (dropping a key only re-opens replay for that one
-  * retired checkpoint).
+  * Delivery semantics: EXACTLY-ONCE, keyed by the checkpoint's lineage
+  * id — the per-lineage watermark commits in the same manifest rename
+  * as the batch's files (`Maintenance.commit`; MAINTENANCE.md,
+  * "Exactly-once streaming ingest", gives the argument and its one
+  * residual).
   */
 object StreamingIndexIngest {
 
@@ -47,21 +32,10 @@ object StreamingIndexIngest {
 
   /** Batch id of the most recent committed micro-batch of ANY lineage
     * (−1 = none) — observability; the replay guard reads the
-    * per-lineage watermark headers, not this.
+    * per-lineage watermarks (`Maintenance.lastCommitted`), not this.
     */
   def lastCommitted(s: SparkSession, path: String): Long =
-    graft.util.Maintenance.readManifest(s, path)
-      .flatMap(_.header(graft.sfa.ModelIO.LastIngestHeader))
-      .flatMap(_.split(":", 2).lastOption)
-      .flatMap(_.toLongOption)
-      .getOrElse(-1L)
-
-  /** This lineage's committed watermark (−1 = none). */
-  def lastCommitted(s: SparkSession, path: String, streamId: String): Long =
-    graft.util.Maintenance.readManifest(s, path)
-      .flatMap(_.header(graft.sfa.ModelIO.ingestHeader(streamId)))
-      .flatMap(_.toLongOption)
-      .getOrElse(-1L)
+    graft.util.Maintenance.lastIngested(s, path)
 
   /** Append one micro-batch exactly-once: skipped ONLY when the
     * manifest's watermark FOR THIS stream lineage (`streamId`) is at or
@@ -101,13 +75,23 @@ object StreamingIndexIngest {
     * with the asserted packing instead.
     */
   def ingest(records: Dataset[WindowRecord], usedBits: Int, prefixLen: Int,
-      path: String, checkpoint: String): StreamingQuery = {
+      path: String, checkpoint: String): StreamingQuery =
+    startIngest(records, checkpoint) { (batch, streamId, id) =>
+      appendBatch(batch.toDF(), streamId, id, usedBits, prefixLen, path)
+    }
+
+  /** The `foreachBatch` sink every layout ingest shares: each
+    * micro-batch goes to `append` with the checkpoint's lineage id and
+    * its batch id, which together are the batch's exactly-once key.
+    */
+  private[streaming] def startIngest[T](records: Dataset[T], checkpoint: String)(
+      append: (Dataset[T], String, Long) => Boolean): StreamingQuery = {
     val s = records.sparkSession
     // resolved on the FIRST batch (the engine writes the checkpoint
     // metadata at query start, before any batch fires)
     lazy val streamId = checkpointStreamId(s, checkpoint)
-    val sink: (Dataset[WindowRecord], Long) => Unit = (batch, id) => {
-      appendBatch(batch.toDF(), streamId, id, usedBits, prefixLen, path)
+    val sink: (Dataset[T], Long) => Unit = (batch, id) => {
+      append(batch, streamId, id)
       ()
     }
     records.writeStream

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -15,25 +15,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * FAST; the streaming query terminates and a restart from the
   * checkpoint replays the batch).
   *
-  * Delivery semantics: EXACTLY-ONCE, by the same mechanism as
-  * [[StreamingIndexIngest]] — the publish point is the layout
-  * manifest's single atomic rename, which carries the per-lineage
-  * watermark header `ingest.<streamId> = batchId` in the same commit as
-  * the file list. A replayed batch at or below its lineage's watermark
-  * no-ops; a crash before the rename leaves only unpublished orphan
-  * files no later manifest adopts; a crash after it is fully committed.
+  * Delivery semantics: EXACTLY-ONCE, as for [[StreamingIndexIngest]]
+  * (MAINTENANCE.md, "Exactly-once streaming ingest").
   */
 object StreamingIvfIngest {
 
   /** One raw embedding row, the shape of the `embeddings` table. */
   final case class EmbedRecord(vec_id: Long, embedding: Seq[Float])
-
-  /** This lineage's committed watermark (−1 = none). */
-  def lastCommitted(s: SparkSession, loc: String, streamId: String): Long =
-    graft.util.Maintenance.readManifest(s, loc)
-      .flatMap(_.header(graft.sfa.ModelIO.ingestHeader(streamId)))
-      .flatMap(_.toLongOption)
-      .getOrElse(-1L)
 
   /** Append one micro-batch exactly-once (see the object doc). The
     * integer scaling is THE batch rule (`Similarity.emb`), so a vector
@@ -48,7 +36,8 @@ object StreamingIvfIngest {
         expr("transform(embedding, v -> cast(round(cast(v as double) * 10000) as bigint))"))
       .select(col("vec_id").as("c_id"), col("civ"))
     val withNorm = members.withColumn("cn", graft.pipeline.Similarity.dotCol(col("civ"), col("civ")))
-    graft.pipeline.Similarity.appendIvf(withNorm, loc, Some((streamId, batchId)))
+    graft.pipeline.Similarity.appendIvfLayout(
+      withNorm.sparkSession, withNorm, loc, Some((streamId, batchId)))
   }
 
   /** Attach the ingest to an embedding stream feeding the IVF layout at
@@ -56,17 +45,6 @@ object StreamingIvfIngest {
     * fast on a directory without a persisted centroid table).
     */
   def ingest(records: Dataset[EmbedRecord], loc: String,
-      checkpoint: String): StreamingQuery = {
-    val s = records.sparkSession
-    lazy val streamId = StreamingIndexIngest.checkpointStreamId(s, checkpoint)
-    val sink: (Dataset[EmbedRecord], Long) => Unit = (batch, id) => {
-      appendBatch(batch, streamId, id, loc)
-      ()
-    }
-    records.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(sink)
-      .start()
-  }
+      checkpoint: String): StreamingQuery =
+    StreamingIndexIngest.startIngest(records, checkpoint)(appendBatch(_, _, _, loc))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous ingestion into a Z-ordered layout — the third and last
@@ -14,27 +14,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * streaming query terminates and a restart from the checkpoint
   * replays the batch).
   *
-  * Delivery semantics: EXACTLY-ONCE, by the same mechanism as
-  * [[StreamingIndexIngest]] / [[StreamingIvfIngest]] — the publish
-  * point is the layout manifest's single atomic rename, which carries
-  * the per-lineage watermark header `ingest.<streamId> = batchId` in
-  * the same commit as the file list. A replayed batch at or below its
-  * lineage's watermark no-ops; a crash before the rename leaves only
-  * unpublished orphan files no later manifest adopts; a crash after it
-  * is fully committed.
+  * Delivery semantics: EXACTLY-ONCE, as for [[StreamingIndexIngest]]
+  * (MAINTENANCE.md, "Exactly-once streaming ingest").
   */
 object StreamingZorderIngest {
 
   /** One event row, the shape `Layout.zorderedEvents` persists. */
   final case class EventRecord(
       event_id: Long, user_id: Long, event_type: String, cents: Long)
-
-  /** This lineage's committed watermark (−1 = none). */
-  def lastCommitted(s: SparkSession, loc: String, streamId: String): Long =
-    graft.util.Maintenance.readManifest(s, loc)
-      .flatMap(_.header(graft.sfa.ModelIO.ingestHeader(streamId)))
-      .flatMap(_.toLongOption)
-      .getOrElse(-1L)
 
   /** Append one micro-batch exactly-once (see the object doc). Returns
     * whether the batch was appended. Exposed for the spec's
@@ -50,17 +37,6 @@ object StreamingZorderIngest {
     * fast on a directory without the z-dimensions sidecar).
     */
   def ingest(records: Dataset[EventRecord], loc: String,
-      checkpoint: String): StreamingQuery = {
-    val s = records.sparkSession
-    lazy val streamId = StreamingIndexIngest.checkpointStreamId(s, checkpoint)
-    val sink: (Dataset[EventRecord], Long) => Unit = (batch, id) => {
-      appendBatch(batch, streamId, id, loc)
-      ()
-    }
-    records.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(sink)
-      .start()
-  }
+      checkpoint: String): StreamingQuery =
+    StreamingIndexIngest.startIngest(records, checkpoint)(appendBatch(_, _, _, loc))
 }

@@ -12,9 +12,13 @@ import org.apache.hadoop.fs.Path
   *    window is silently lost;
   *  - a self-describing metadata SIDECAR (write-then-rename, rename
   *    OVER the destination) so a mismatched append fails fast instead
-  *    of silently corrupting the layout's physical contract.
+  *    of silently corrupting the layout's physical contract;
+  *  - the one COMMIT protocol ([[commit]]) every save, append,
+  *    compaction and re-cluster publishes through: lock, replay guard,
+  *    created-set listing, adoption, header merge and the manifest
+  *    rename, written once (MAINTENANCE.md describes it).
   *
-  * Atomicity caveat (both primitives): create-if-absent and rename are
+  * Atomicity caveat (all three): create-if-absent and rename are
   * atomic on local/HDFS semantics; object stores need their own
   * conditional-put/rename primitives.
   */
@@ -260,17 +264,15 @@ object Maintenance {
     * identical bytes).
     *
     * Tombstone maintenance is AUTOMATIC at this choke point (every
-    * commit flows through here): the previous manifest's tombstones are
-    * carried forward, and every file — or `*_dir`-header generation
-    * dir — the previous manifest referenced but `m` does not gets a
-    * fresh tombstone stamped with this commit's wall time. Callers
-    * therefore never think about retention; [[vacuumOrphans]] is the
-    * only consumer (and passes `carryTombstones = false` to publish its
-    * purged log without re-adopting the entries it just retired).
+    * commit flows through here): `prev`'s tombstones are carried
+    * forward, and every file — or `*_dir`-header generation dir — `prev`
+    * referenced but `m` does not gets a fresh tombstone stamped with
+    * this commit's wall time. [[commit]] passes the manifest on disk at
+    * publish time; [[vacuumOrphans]] passes None, publishing its purged
+    * log without re-adopting the entries it just retired.
     */
   def writeManifest(s: SparkSession, path: String, m: Manifest,
-      carryTombstones: Boolean = true): Unit = {
-    val prev = if (carryTombstones) readManifest(s, path) else None
+      prev: Option[Manifest]): Unit = {
     val now = System.currentTimeMillis()
     val liveDirs = m.headers.collect { case (k, v) if k.endsWith("_dir") => v }.toSet
     val live = m.files.toSet ++ liveDirs
@@ -299,29 +301,13 @@ object Maintenance {
     */
   private[graft] var onBeforeManifestCommit: () => Unit = () => ()
 
-  /** Recursive data-file listing under `path` (or `path/sub`), returned
-    * RELATIVE to `path`: only `*.parquet`, skipping any `_`/`.`-prefixed
-    * path component (Spark job machinery, sidecars, stats directories,
+  /** Recursive data-file listing under `path`, returned RELATIVE to
+    * `path`: only `*.parquet`, skipping any `_`/`.`-prefixed path
+    * component (Spark job machinery, sidecars, stats directories,
     * staging temps are all invisible to the data plane by convention).
     */
-  def listDataFiles(s: SparkSession, path: String, sub: String = ""): Seq[String] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val start = if (sub.isEmpty) root else new Path(root, sub)
-    if (!fs.exists(start)) return Seq.empty
-    val rootUri = root.toUri.getPath
-    def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
-    def walk(p: Path): Seq[String] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (hidden(n)) Seq.empty
-        else if (st.isDirectory) walk(st.getPath)
-        else if (n.endsWith(".parquet"))
-          Seq(st.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"))
-        else Seq.empty
-      }
-    walk(start)
-  }
+  def listDataFiles(s: SparkSession, path: String): Seq[String] =
+    dataFileSizes(s, path).keys.toSeq
 
   /** Sizes of every data file under `path`, keyed by root-relative
     * path — ONE recursive listing (each directory's listStatus carries
@@ -347,6 +333,109 @@ object Maintenance {
       }
     walk(root).toMap
   }
+
+  // ---- the commit protocol ----------------------------------------------
+
+  /** Run one maintenance op on the layout at `path` under the commit
+    * protocol every maintained layout shares — the one place it is
+    * written:
+    *
+    *  1. take the single-maintainer lock ([[withLock]], named `op`);
+    *  2. read the committed manifest (`Txn.prev`, None for a layout
+    *     without one);
+    *  3. with an `ingestKey = (streamId, batchId)`, skip a batch at or
+    *     below that lineage's committed watermark: the result is None
+    *     and nothing runs;
+    *  4. otherwise run `body`, which makes its own pre-write checks
+    *     against `prev` and publishes through [[Txn.publish]] (or does
+    *     not, when it has nothing to do). `publish` owns the rest:
+    *     listing before and after the write, adoption, header and
+    *     watermark merge, and the manifest rename.
+    *
+    * None iff `ingestKey` named an already-committed batch.
+    */
+  def commit[T](s: SparkSession, path: String, op: String,
+      ingestKey: Option[(String, Long)] = None)(body: Txn => T): Option[T] =
+    withLock(s, path, op) {
+      val prev = readManifest(s, path)
+      val replayed = ingestKey.exists { case (sid, bid) =>
+        watermark(prev, sid).exists(bid <= _)
+      }
+      if (replayed) None else Some(body(new Txn(s, path, prev, ingestKey)))
+    }
+
+  /** One maintenance op in flight under [[commit]]. `prev` is the
+    * committed snapshot the op started from, read under the lock.
+    */
+  final class Txn private[Maintenance] (s: SparkSession, path: String,
+      val prev: Option[Manifest], ingestKey: Option[(String, Long)]) {
+
+    /** Run `write`, then publish its result in ONE manifest rename:
+      *
+      *  - the committed files become the snapshot's files minus those
+      *    `supersedes` names (none for an append, the merged-away ones
+      *    for a compaction, all for a save or re-cluster) plus EXACTLY
+      *    the files `write` created — a listing before and after it,
+      *    under the lock, never a directory census. A crashed earlier
+      *    op's unpublished orphans therefore stay excluded forever, and
+      *    a replayed streaming batch can never adopt them;
+      *  - the committed headers become the snapshot's headers, then
+      *    `headers(created, files)` (box stats, centroid generation),
+      *    then the ingest watermark (`ingest.<streamId>`,
+      *    `last_ingest`) when the op carries a key.
+      *
+      * The snapshot built on is the manifest on disk at publish time:
+      * `prev`, unless `write` was an overwrite that cleared the
+      * directory (a save), which starts the layout afresh. A layout
+      * without a manifest adopts its pre-write listing — that IS what
+      * its directory readers saw — and becomes committed.
+      */
+    def publish(write: => Unit)(supersedes: String => Boolean = _ => false,
+        headers: (Seq[String], Seq[String]) => Map[String, String] = (_, _) => Map.empty): Unit = {
+      val before = listDataFiles(s, path).toSet
+      write
+      val created = listDataFiles(s, path).filterNot(before)
+      val base = readManifest(s, path)
+      val files = base.map(_.files).getOrElse(before.toSeq.sorted).filterNot(supersedes) ++ created
+      val watermarks = ingestKey.toSeq.flatMap { case (sid, bid) =>
+        Seq(ingestHeader(sid) -> bid.toString, LastIngestHeader -> s"$sid:$bid")
+      }
+      writeManifest(s, path, Manifest(
+        base.map(_.headers).getOrElse(Map.empty) ++ headers(created, files) ++ watermarks,
+        files), base)
+    }
+  }
+
+  /** Manifest header recording the most recent streaming publisher as
+    * `streamId:batchId` (observability; the per-lineage watermark
+    * headers are what the replay guard reads).
+    */
+  private val LastIngestHeader = "last_ingest"
+
+  /** Per-lineage streaming watermark header: batch ids are
+    * CHECKPOINT-scoped, so each stream lineage carries its own key — a
+    * recreated checkpoint's renumbered batches are new data under a new
+    * key, and two streams feeding one layout cannot mute each other.
+    */
+  private def ingestHeader(streamId: String) = s"ingest.$streamId"
+
+  private def watermark(m: Option[Manifest], streamId: String): Option[Long] =
+    m.flatMap(_.header(ingestHeader(streamId))).flatMap(_.toLongOption)
+
+  /** Lineage `streamId`'s committed watermark at `path` (−1 = none). */
+  def lastCommitted(s: SparkSession, path: String, streamId: String): Long =
+    watermark(readManifest(s, path), streamId).getOrElse(-1L)
+
+  /** Batch id of the most recent committed micro-batch of ANY lineage
+    * at `path` (−1 = none) — observability; the replay guard reads the
+    * per-lineage watermarks, not this.
+    */
+  def lastIngested(s: SparkSession, path: String): Long =
+    readManifest(s, path)
+      .flatMap(_.header(LastIngestHeader))
+      .flatMap(_.split(":", 2).lastOption)
+      .flatMap(_.toLongOption)
+      .getOrElse(-1L)
 
   /** Read the layout at `path` through its committed manifest when one
     * exists (the safe-across-compaction view: one atomic snapshot,
@@ -400,10 +489,10 @@ object Maintenance {
     */
   def compactPartitioned(s: SparkSession, path: String, partCol: String,
       maxFilesPerPartition: Int): Seq[String] =
-    withLock(s, path, "compact") {
+    commit(s, path, "compact") { t =>
       import org.apache.spark.sql.functions.col
       val root = new Path(path)
-      val m = readManifest(s, path).getOrElse(throw new IllegalStateException(
+      val m = t.prev.getOrElse(throw new IllegalStateException(
         s"$path has no committed manifest — compaction merges beside the old " +
           "files and swaps them in one manifest rename, which needs a committed " +
           "file list for readers to resolve; write the layout through the " +
@@ -418,22 +507,20 @@ object Maintenance {
         .toSeq.sorted
       if (heavy.nonEmpty) {
         val heavySet = heavy.toSet
-        val heavyFiles = m.files.filter(f => partOf(f).exists(heavySet))
+        def isHeavy(f: String) = partOf(f).exists(heavySet)
         onCompactBeforeWriteBack()
-        val before = listDataFiles(s, path).toSet
-        s.read.option("basePath", path)
-          .parquet(heavyFiles.map(new Path(root, _).toString): _*)
-          .repartition(heavy.size, col(partCol)) // ~one output file per partition
-          .write.mode("append").partitionBy(partCol).parquet(path)
-        val created = listDataFiles(s, path).filterNot(before)
         // THE swap: heavy partitions' old entries out, merged files in,
-        // headers carried; writeManifest auto-tombstones the dropped
-        // files for the vacuum retention window
-        writeManifest(s, path, Manifest(m.headers,
-          m.files.filterNot(f => partOf(f).exists(heavySet)) ++ created))
+        // headers carried; the dropped files are tombstoned for the
+        // vacuum retention window
+        t.publish {
+          s.read.option("basePath", path)
+            .parquet(m.files.filter(isHeavy).map(new Path(root, _).toString): _*)
+            .repartition(heavy.size, col(partCol)) // ~one output file per partition
+            .write.mode("append").partitionBy(partCol).parquet(path)
+        }(supersedes = isHeavy)
       }
       heavy
-    }
+    }.get // no ingest key: never a replay
 
   /** Test seam: invoked between compaction's fragmentation census and
     * its merge+publish, i.e. inside the window where an unserialized
@@ -575,8 +662,7 @@ object Maintenance {
       val stillDead = (keptFiles ++ keptDirs).toSet
       val liveTombs = m.tombstones.filter { case (_, p) => stillDead(p) }
       if (liveTombs != m.tombstones)
-        writeManifest(s, path, m.copy(tombstones = liveTombs),
-          carryTombstones = false)
+        writeManifest(s, path, m.copy(tombstones = liveTombs), None)
       VacuumReport(orphanFiles, staleDirs, bytes, keptFiles ++ keptDirs)
     }
 

@@ -210,4 +210,50 @@ class IvfLayoutSpec extends SparkSpec {
       assert(graft.util.Maintenance.readLayout(spark, loc).count() == preVac)
     } finally { members.unpersist(); () }
   }
+
+  test("recluster crash at publish: the committed cell count stays with the committed centroids") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val e = Similarity.emb(spark, dir)
+    val members = e.filter(col("vec_id") >= 10)
+      .select(col("vec_id").as("c_id"), col("iv").as("civ"), col("nrm2").as("cn"))
+      .cache()
+    try {
+      val cent8 = Similarity.ivfCentroids(
+        members.select(col("c_id").as("id"), col("civ").as("iv")), 8)
+        .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
+      // one extra centroid no member is assigned to: a copy of an existing
+      // one under a larger cell id loses every score tie on the cell id,
+      // so the re-cluster's Lloyd step drops it as an empty cell
+      val (_, cv, cn2) = cent8.head
+      val cent = (cent8 :+ ((cent8.map(_._1).max + 1000000L, cv, cn2)))
+        .toSeq.toDF("cell", "cv", "cn2")
+      val loc = graft.util.Warehouse.dir(spark, "ivf_recluster_crash_spec")
+      Similarity.saveIvfLayout(spark, members.filter(col("c_id") % 2 === 0), cent, loc)
+      val saved = graft.util.Maintenance.readLayout(spark, loc).count()
+      assert(Similarity.loadIvfCentroids(spark, loc).count() == 9L)
+
+      graft.util.Maintenance.onBeforeManifestCommit =
+        () => throw new RuntimeException("simulated crash before publish")
+      val died = scala.util.Try(Similarity.reclusterIvfLayout(spark, loc))
+      graft.util.Maintenance.onBeforeManifestCommit = () => ()
+      assert(died.isFailure, "the simulated crash must propagate")
+      // unpublished: the old generation (9 centroids) is still committed
+      assert(Similarity.loadIvfCentroids(spark, loc).count() == 9L)
+      assert(graft.util.Maintenance.readLayout(spark, loc).count() == saved)
+
+      // appends keep working against the still-committed generation
+      val rest = members.filter(col("c_id") % 2 =!= 0)
+      assert(Similarity.appendIvfLayout(spark, rest, loc))
+      assert(graft.util.Maintenance.readLayout(spark, loc).count() == saved + rest.count())
+
+      // and a retried re-cluster lands: the empty cell is gone, nothing lost
+      assert(Similarity.reclusterIvfLayout(spark, loc) == 8L)
+      assert(Similarity.loadIvfCentroids(spark, loc).count() == 8L)
+      assert(graft.util.Maintenance.readLayout(spark, loc).count() == members.count())
+      assert(Similarity.appendIvfLayout(spark,
+        Seq((3000000L, cv, cn2)).toDF("c_id", "civ", "cn"), loc))
+      assert(graft.util.Maintenance.readLayout(spark, loc).count() == members.count() + 1L)
+    } finally { members.unpersist(); () }
+  }
 }

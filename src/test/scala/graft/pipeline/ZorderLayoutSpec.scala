@@ -177,4 +177,38 @@ class ZorderLayoutSpec extends SparkSpec {
       assert(graft.util.Maintenance.readLayout(spark, zLoc).count() == rowsGrown)
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
+
+  test("compactZordered crash at publish leaves the committed snapshot; a retry lands the merge") {
+    val ev = graft.util.Tables.load(spark, dir, "events")
+      .withColumn("cents", round(col("value") * 100).cast("long"))
+      .select("event_id", "user_id", "event_type", "cents")
+    val loc = graft.util.Warehouse.dir(spark, "zorder_compact_crash_spec")
+    Layout.writeZordered(ev.filter(col("event_id") % 2 === 0), loc)
+    (0 until 4).foreach { i =>
+      Layout.appendZordered(ev.filter(col("event_id") % 8 === 2 * i + 1).limit(100), loc)
+    }
+    val committed = graft.util.Maintenance.readManifest(spark, loc).get.files
+    val rows = graft.util.Maintenance.readLayout(spark, loc).count()
+
+    graft.util.Maintenance.onBeforeManifestCommit =
+      () => throw new RuntimeException("simulated crash before publish")
+    val died = scala.util.Try(Layout.compactZordered(spark, loc, smallBytes = 1L << 40))
+    graft.util.Maintenance.onBeforeManifestCommit = () => ()
+    assert(died.isFailure, "the simulated crash must propagate")
+    // unpublished: the committed file list and row count are unchanged,
+    // and the merged files are orphans no manifest names
+    assert(graft.util.Maintenance.readManifest(spark, loc).get.files == committed)
+    assert(graft.util.Maintenance.readLayout(spark, loc).count() == rows)
+    assert(graft.util.Maintenance.listDataFiles(spark, loc).size > committed.size,
+      "fixture: the crashed merge must have left durable files")
+
+    // the retry lands the merge: every committed file is merged away,
+    // the crashed attempt's orphans stay unadopted, no row lost or doubled
+    val merged = Layout.compactZordered(spark, loc, smallBytes = 1L << 40)
+    assert(merged == committed.size)
+    val after = graft.util.Maintenance.readManifest(spark, loc).get.files
+    assert(after.nonEmpty && after.toSet.intersect(committed.toSet).isEmpty)
+    assert(after.size < committed.size)
+    assert(graft.util.Maintenance.readLayout(spark, loc).count() == rows)
+  }
 }

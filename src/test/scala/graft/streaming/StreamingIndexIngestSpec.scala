@@ -121,7 +121,7 @@ class StreamingIndexIngestSpec extends SparkSpec {
     // watermark never advanced, and the crashed write's files are
     // orphans on disk that no manifest names
     assert(ModelIO.loadIndex(path)(spark).count() == half)
-    assert(StreamingIndexIngest.lastCommitted(spark, path, "lineage-x") == -1L)
+    assert(graft.util.Maintenance.lastCommitted(spark, path, "lineage-x") == -1L)
     val manifestFiles = graft.util.Maintenance.readManifest(spark, path).get.files.toSet
     val orphans = graft.util.Maintenance.listDataFiles(spark, path).filterNot(manifestFiles)
     assert(orphans.nonEmpty, "fixture: the crashed write must have left durable files")
@@ -132,7 +132,7 @@ class StreamingIndexIngestSpec extends SparkSpec {
     assert(StreamingIndexIngest.appendBatch(batch, "lineage-x", 0L, model.usedBits, 2, path))
     val loaded = ModelIO.loadIndex(path)(spark)
     assert(loaded.count() == n.toLong, s"replay must land the batch exactly once")
-    assert(StreamingIndexIngest.lastCommitted(spark, path, "lineage-x") == 0L)
+    assert(graft.util.Maintenance.lastCommitted(spark, path, "lineage-x") == 0L)
     // a second replay is a no-op
     assert(!StreamingIndexIngest.appendBatch(batch, "lineage-x", 0L, model.usedBits, 2, path))
     assert(ModelIO.loadIndex(path)(spark).count() == n.toLong)

@@ -62,7 +62,7 @@ class StreamingIvfIngestSpec extends SparkSpec {
       assert(grown.size == base + streamed.length)
 
       val sid = StreamingIndexIngest.checkpointStreamId(spark, ckpt)
-      assert(StreamingIvfIngest.lastCommitted(spark, loc, sid) == 2L)
+      assert(graft.util.Maintenance.lastCommitted(spark, loc, sid) == 2L)
       // replay of a committed batch id of the same lineage: no-op
       val replayBatch = spark.createDataset(streamed.take(5).toSeq)
       assert(!StreamingIvfIngest.appendBatch(replayBatch, sid, 1L, loc))
@@ -78,7 +78,7 @@ class StreamingIvfIngestSpec extends SparkSpec {
       graft.util.Maintenance.onBeforeManifestCommit = () => ()
       assert(died.isFailure)
       assert(graft.util.Maintenance.readLayout(spark, loc).count() == grown.size.toLong)
-      assert(StreamingIvfIngest.lastCommitted(spark, loc, sid) == 2L)
+      assert(graft.util.Maintenance.lastCommitted(spark, loc, sid) == 2L)
       assert(StreamingIvfIngest.appendBatch(spark.createDataset(fresh), sid, 3L, loc))
       assert(graft.util.Maintenance.readLayout(spark, loc).count() ==
         grown.size.toLong + fresh.length)

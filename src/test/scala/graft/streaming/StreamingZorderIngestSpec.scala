@@ -54,7 +54,7 @@ class StreamingZorderIngestSpec extends SparkSpec {
       assert(grownIds.size.toLong == base + streamed.length)
 
       val sid = StreamingIndexIngest.checkpointStreamId(spark, ckpt)
-      assert(StreamingZorderIngest.lastCommitted(spark, loc, sid) == 2L)
+      assert(graft.util.Maintenance.lastCommitted(spark, loc, sid) == 2L)
       // replay of a committed batch id of the same lineage: no-op
       val replayBatch = spark.createDataset(streamed.take(5).toSeq)
       assert(!StreamingZorderIngest.appendBatch(replayBatch, sid, 1L, loc))
@@ -70,7 +70,7 @@ class StreamingZorderIngestSpec extends SparkSpec {
       graft.util.Maintenance.onBeforeManifestCommit = () => ()
       assert(died.isFailure)
       assert(graft.util.Maintenance.readLayout(spark, loc).count() == grownIds.size.toLong)
-      assert(StreamingZorderIngest.lastCommitted(spark, loc, sid) == 2L)
+      assert(graft.util.Maintenance.lastCommitted(spark, loc, sid) == 2L)
       assert(StreamingZorderIngest.appendBatch(spark.createDataset(fresh), sid, 3L, loc))
       assert(graft.util.Maintenance.readLayout(spark, loc).count() ==
         grownIds.size.toLong + fresh.length)

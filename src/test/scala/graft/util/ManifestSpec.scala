@@ -25,12 +25,13 @@ class ManifestSpec extends SparkSpec {
     val m = Maintenance.Manifest(
       Map("stats_dir" -> "_boxes_1", "ingest.abc" -> "7"),
       Seq("p=2/b.parquet", "p=1/a.parquet"))
-    Maintenance.writeManifest(spark, dir, m)
+    Maintenance.writeManifest(spark, dir, m, Maintenance.readManifest(spark, dir))
     val got = Maintenance.readManifest(spark, dir).get
     assert(got.headers == m.headers)
     assert(got.files == m.files.sorted, "file list is canonical (sorted)")
     // replace is atomic and total — no merging of stale entries
-    Maintenance.writeManifest(spark, dir, Maintenance.Manifest(Map.empty, Seq("only.parquet")))
+    Maintenance.writeManifest(spark, dir, Maintenance.Manifest(Map.empty, Seq("only.parquet")),
+      Maintenance.readManifest(spark, dir))
     val got2 = Maintenance.readManifest(spark, dir).get
     assert(got2.headers.isEmpty && got2.files == Seq("only.parquet"))
     // ...except the retention log, which the commit choke point maintains
@@ -57,7 +58,8 @@ class ManifestSpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("p").parquet(path)
     val files = Maintenance.listDataFiles(spark, path)
     assert(files.nonEmpty && files.forall(f => f.startsWith("p=") && f.endsWith(".parquet")))
-    Maintenance.writeManifest(spark, path, Maintenance.Manifest(Map.empty, files))
+    Maintenance.writeManifest(spark, path, Maintenance.Manifest(Map.empty, files),
+      Maintenance.readManifest(spark, path))
     assert(Maintenance.readLayout(spark, path).count() == 40)
 
     // manufacture a crashed append's orphan: committed parquet in a
@@ -81,7 +83,7 @@ class ManifestSpec extends SparkSpec {
       val created = Maintenance.listDataFiles(spark, path).filterNot(before)
       val m = Maintenance.readManifest(spark, path).get
       Maintenance.writeManifest(spark, path,
-        Maintenance.Manifest(m.headers, m.files ++ created))
+        Maintenance.Manifest(m.headers, m.files ++ created), Maintenance.readManifest(spark, path))
     }
     val published = Maintenance.readLayout(spark, path).count()
     assert(published == 43)
@@ -108,7 +110,7 @@ class ManifestSpec extends SparkSpec {
       val m = Maintenance.readManifest(spark, path)
         .getOrElse(Maintenance.Manifest(Map.empty, before.toSeq))
       Maintenance.writeManifest(spark, path,
-        Maintenance.Manifest(m.headers, m.files ++ created))
+        Maintenance.Manifest(m.headers, m.files ++ created), Maintenance.readManifest(spark, path))
     }
     val pre = Maintenance.readLayout(spark, path).count()
     assert(pre == 84)
@@ -252,7 +254,7 @@ class ManifestSpec extends SparkSpec {
     val g1 = fsH.create(new org.apache.hadoop.fs.Path(gen1Dir, "b.parquet"), true)
     g1.write(Array.fill(32)(1.toByte)); g1.close()
     Maintenance.writeManifest(spark, path,
-      Maintenance.Manifest(Map("stats_dir" -> "_boxes_gen1"), gen1))
+      Maintenance.Manifest(Map("stats_dir" -> "_boxes_gen1"), gen1), Maintenance.readManifest(spark, path))
     val pinned = Maintenance.readLayout(spark, path) // plans over gen1
 
     // generation 2 REPLACES generation 1 (the recluster/compact shape):
@@ -262,7 +264,7 @@ class ManifestSpec extends SparkSpec {
     val gen2 = Maintenance.listDataFiles(spark, path).filterNot(gen1.toSet)
     assert(gen2.nonEmpty)
     Maintenance.writeManifest(spark, path,
-      Maintenance.Manifest(Map("stats_dir" -> "_boxes_gen2"), gen2))
+      Maintenance.Manifest(Map("stats_dir" -> "_boxes_gen2"), gen2), Maintenance.readManifest(spark, path))
     fsH.mkdirs(new org.apache.hadoop.fs.Path(path, "_boxes_gen2"))
 
     // crash residue: durable but never published in ANY manifest
