@@ -434,7 +434,7 @@ object Similarity {
           s"$loc has no persisted centroid table ($centDir) — appending " +
             "against recomputed centroids would scatter members across wrong " +
             "cells; write the layout with saveIvfLayout first")
-      val cent = s.read.parquet(s"$loc/$centDir")
+      val cent = Maintenance.readGeneration(s, loc, centDir)
       t.prev.flatMap(_.header(CellsHeader))
         .orElse(Maintenance.readSidecar(s, loc, IvfMetaFile).map(_.getOrElse("cells", "<absent>")))
         .foreach { recorded =>
@@ -459,7 +459,7 @@ object Similarity {
   def loadIvfCentroids(s: SparkSession, loc: String): DataFrame = {
     val dir = Maintenance.readManifest(s, loc)
       .flatMap(_.header(CentroidsHeader)).getOrElse(IvfCentroidsDir)
-    s.read.parquet(s"$loc/$dir").select("cell", "cv", "cn2")
+    Maintenance.readGeneration(s, loc, dir).select("cell", "cv", "cn2")
   }
 
   /** Selective small-file compaction of an append-grown IVF layout:

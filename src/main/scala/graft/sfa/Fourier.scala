@@ -13,24 +13,27 @@ package graft.sfa
   *  - with `lowerBounding` values are scaled by `1/√w`;
   *  - after the offset cut, every odd slot is sign-flipped.
   *
-  * Only the first `l` Fourier *values* (= l/2 complex coefficients) are
-  * ever computed, so a direct O(w·l) evaluation beats an FFT for the
-  * small `l` used by SFA words; the sliding path pays O(l) per step via
-  * the recurrence X_t(k) = (X_{t-1}(k) + x_{t+w-1} - x_{t-1})·e^{2πik/w}.
+  * Only the Fourier *values* a word keeps are ever computed: the first
+  * `min(w, l + startOffset)` raw slots, ⌈that/2⌉ complex coefficients.
+  * The direct path ([[transformWindow]], [[WindowDft]]) evaluates each
+  * kept coefficient as its own O(w) sum, which beats an FFT for the
+  * small `l` of SFA words; the momentary path pays O(l) per step via the
+  * recurrence X_t(k) = (X_{t-1}(k) + x_{t+w-1} - x_{t-1})·e^{2πik/w}.
   */
 object Fourier {
 
-  /** Per-(w, coefs) twiddle tables for [[rawWindowDft]]:
+  /** Per-(w, kept coefficients) twiddle tables for [[rawWindowDft]]:
     * `table(k)(2j / 2j+1) = cos/sin(arg·j)` with `arg = -2π·k/w` — the
     * EXACT expression the inline loop evaluated, precomputed once per
     * JVM instead of twice per (window, k, j). The direct DFT is the CPU
     * core of every word pipeline (one call per sliding window), and the
     * trig dominated it; a table lookup yields bit-identical sums because
     * the values and the summation order are unchanged. Bounded: one
-    * entry per distinct (windowSize, coefs) pair a process ever uses
-    * (grids use a handful), each entry coefs × 2w doubles; very large
-    * transforms (padded whole-series DFTs) skip the cache below rather
-    * than pin megabyte tables.
+    * entry per distinct (windowSize, coefs) pair a process ever uses,
+    * where coefs is the ⌈min(w, l + startOffset)/2⌉ coefficients a
+    * transform keeps (grids use a handful), each entry coefs × 2w
+    * doubles; very large transforms (padded whole-series DFTs) skip the
+    * cache below rather than pin megabyte tables.
     */
   private val twiddleCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Array[Double]]]()
@@ -50,6 +53,13 @@ object Fourier {
       t
     })
 
+  /** The twiddle table for the first `len` slots of a `w`-point window,
+    * or null past [[TwiddleCacheMaxW]] (the sum then evaluates its trig
+    * inline).
+    */
+  private def tableFor(w: Int, len: Int): Array[Array[Double]] =
+    if (w <= TwiddleCacheMaxW) twiddles(w, (math.min(len, w) + 1) / 2) else null
+
   /** Raw interleaved DFT values of `data[from until from+w)` (zero-padded
     * when the series is shorter), slots `0 until len`, slot 1 zeroed.
     * No offset cut, no norming, no sign flips — the "first window" state
@@ -57,10 +67,21 @@ object Fourier {
     */
   private[graft] def rawWindowDft(data: Array[Double], from: Int, w: Int, len: Int): Array[Double] = {
     val out = new Array[Double](len)
+    rawWindowDftInto(data, from, w, len, tableFor(w, len), 0, out)
+    out
+  }
+
+  /** [[rawWindowDft]] into `out` with the table `tw` already resolved,
+    * from coefficient `k0` on: slots `2·k0 until min(len, w)` are
+    * written, the others are left as they are. Each coefficient is its
+    * own sum over j, so asking for fewer leaves every computed one
+    * bit-identical.
+    */
+  private def rawWindowDftInto(data: Array[Double], from: Int, w: Int, len: Int,
+      tw: Array[Array[Double]], k0: Int, out: Array[Double]): Unit = {
     val n = math.min(w, math.max(0, data.length - from))
     val coefs = (math.min(len, w) + 1) / 2
-    val tw = if (w <= TwiddleCacheMaxW) twiddles(w, coefs) else null
-    var k = 0
+    var k = k0
     while (k < coefs) {
       var re = 0.0
       var im = 0.0
@@ -88,24 +109,47 @@ object Fourier {
       k += 1
     }
     if (len > 1) out(1) = 0.0 // DC imaginary part
-    out
   }
 
   /** Offset-cut + norm + alternating sign, into a fresh array of length l
-    * (zero-filled past the available slots). `factor` already includes any
-    * per-window 1/σ scaling.
+    * (zero-filled past the available slots): `((v·factor)·sign)·scale`.
+    * `factor` already includes any per-window 1/σ scaling of the MFT
+    * path; `scale` is the direct path's 1/σ, applied last.
     */
-  private[graft] def cutAndNorm(mft: Array[Double], startOffset: Int, l: Int, factor: Double): Array[Double] = {
+  private[graft] def cutAndNorm(mft: Array[Double], startOffset: Int, l: Int, factor: Double,
+      scale: Double = 1.0): Array[Double] = {
     val out = new Array[Double](l)
     val n = math.min(l, mft.length - startOffset)
     var i = 0
     var sign = 1.0
     while (i < n) {
-      out(i) = mft(startOffset + i) * factor * sign
+      out(i) = mft(startOffset + i) * factor * sign * scale
       sign = -sign
       i += 1
     }
     out
+  }
+
+  /** The direct transform of many windows of one length: each window's
+    * [[transformWindow]] values, with the twiddle table resolved once
+    * and only the raw slots the cut keeps computed — from
+    * `startOffset` to `min(w, l + startOffset)` — into one reused
+    * buffer, so a window costs one output array. Holds that buffer, so
+    * one instance serves one thread: the kernels make one per series.
+    */
+  private[graft] final class WindowDft(w: Int, l: Int, normMean: Boolean, lowerBounding: Boolean) {
+    private[this] val startOffset = if (normMean) 2 else 0
+    private[this] val norm = if (lowerBounding) 1.0 / math.sqrt(w) else 1.0
+    private[this] val raw = new Array[Double](math.min(w, l + startOffset))
+    private[this] val tw = tableFor(w, raw.length)
+
+    /** The first `l` values of the window at `from`, each
+      * `((raw·norm)·sign)·scale`.
+      */
+    def apply(data: Array[Double], from: Int, scale: Double): Array[Double] = {
+      rawWindowDftInto(data, from, w, raw.length, tw, startOffset / 2, raw)
+      cutAndNorm(raw, startOffset, l, norm, scale)
+    }
   }
 
   /** Single-window Fourier transform: first `l` values of the window
@@ -118,12 +162,8 @@ object Fourier {
       windowSize: Int,
       l: Int,
       normMean: Boolean,
-      lowerBounding: Boolean): Array[Double] = {
-    val startOffset = if (normMean) 2 else 0
-    val norm = if (lowerBounding) 1.0 / math.sqrt(windowSize) else 1.0
-    val raw = rawWindowDft(data, from, windowSize, windowSize)
-    cutAndNorm(raw, startOffset, l, norm)
-  }
+      lowerBounding: Boolean): Array[Double] =
+    new WindowDft(windowSize, l, normMean, lowerBounding)(data, from, 1.0)
 
   /** Rolling mean/std for every sliding window (population std, clamped at
     * 0 for negative round-off), the O(n) incremental form
@@ -247,8 +287,7 @@ object Fourier {
     require(l % 2 == 0, "l must be even to hold (re, im) pairs")
     var n2 = 1
     while (n2 < data.length) n2 <<= 1
-    val raw = rawWindowDft(data, 0, n2, math.min(l + 2, n2))
-    cutAndNorm(raw, 2, l, 1.0 / math.sqrt(n2))
+    new WindowDft(n2, l, normMean = true, lowerBounding = true)(data, 0, 1.0)
   }
 
   /** Lower-bounding distance between two interleaved Fourier value arrays:

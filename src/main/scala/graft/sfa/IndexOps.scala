@@ -192,10 +192,10 @@ object IndexOps {
     // scalar. 256 ≥ any alphabet in use (reference caps α at 8).
     val prefixCol = expr(
       s"aggregate(slice(word, ${prefixStart + 1}, $plen), 0L, (acc, s) -> acc * 256 + s)")
-    knnCore(
-      corpus.select(col("id"), col("data"), col("word"), col("approx"),
-        prefixCol.as("prefix")),
-      queries, bins, normed, k, probe, plen, queryBatchRows)
+    val prepared = corpus.select(col("id"), col("data"), col("word"), col("approx"),
+      prefixCol.as("prefix"))
+    knnCore(prepared, queries, bins, normed, k, probe, plen, queryBatchRows,
+      probeSlot = s"corpus:${prepared.queryExecution.logical.semanticHash()}")
   }
 
   /** The per-prefix Fourier bounding-box aggregate shared by the
@@ -298,7 +298,7 @@ object IndexOps {
       .select(col("id"), col("data"), col("word"), col("approx"),
         col("prefix").cast("long").as("prefix"))
     knnCore(prepared, queries, bins, normed, k, probe, prefixLen, queryBatchRows,
-      precomputedBoxes = ModelIO.readBoxStats(spark, path))
+      probeSlot = s"layout:$path", precomputedBoxes = ModelIO.readBoxStats(spark, path))
   }
 
   /** The filter-and-refine engine shared by the in-memory and persisted
@@ -306,7 +306,9 @@ object IndexOps {
     * either a projected corpus or a partitioned layout scan. Every
     * member/payload access goes through a prefix-list filter, so against
     * a layout the planner turns the driver's probe/survivor plan into
-    * partition pruning.
+    * partition pruning. Each batch's phase-1 probe frame is cached in
+    * the session's `probeSlot` slot (one per corpus or layout and batch
+    * index), so the next call on the same corpus releases it.
     */
   private def knnCore(
       prepared: DataFrame,
@@ -317,6 +319,7 @@ object IndexOps {
       probe: Int,
       plen: Int,
       queryBatchRows: Long,
+      probeSlot: String,
       precomputedBoxes: Option[Array[(Long, Long, Seq[Double], Seq[Double])]] = None)(
       implicit spark: SparkSession): (DataFrame, KnnStats) = {
     def lbUdf(w: Column, qw: Column, qa: Column): Column = lbCol(w, qw, qa, bins, normed)
@@ -378,7 +381,7 @@ object IndexOps {
     // for an unbounded query set. Queries therefore process in slices
     // of at most QueryBatchRows (boxes planned once, corpus untouched);
     // one slice ≡ the unbatched plan.
-    def runBatch(qb: DataFrame): (DataFrame, KnnStats) = {
+    def runBatch(qb: DataFrame, batch: Int): (DataFrame, KnnStats) = {
       val qNarrow = qb.select(col("qid"), col("qword"), col("qapprox"))
       val qPayload = qb.select(col("qid"), col("qdata"))
 
@@ -424,7 +427,7 @@ object IndexOps {
       // gets no τ — sound because probe ≥ k forces probing to exhaust
       // the corpus before that can happen, see the None case below)
       val probePrefixes = probePairs.map(_._2).distinct.toSeq
-      val probed0 = graft.util.Pipelines.tracked(spark,
+      val probed0 = graft.util.Pipelines.trackedIn(spark, s"knn-probe:$probeSlot:$batch",
         members(probePrefixes).select(col("id"), col("prefix"))
           .join(broadcast(pairDF(probePairs)), Seq("prefix"))
           .select(col("qid"), col("id")))
@@ -482,7 +485,7 @@ object IndexOps {
     if (nBatches > 1)
       System.err.println(s"[gated] knn query set: $qTotal rows -> $nBatches probe-plan batches")
     val parts = (0 until nBatches).map { i =>
-      runBatch(graft.util.Gated.chunk(queries, "qid", i, nBatches))
+      runBatch(graft.util.Gated.chunk(queries, "qid", i, nBatches), i)
     }
     val fin = parts.map(_._1).reduce(_ union _)
     val stats = parts.map(_._2).reduce { (a, b) =>

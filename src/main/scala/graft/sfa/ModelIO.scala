@@ -423,7 +423,7 @@ object ModelIO {
 
   private def readStatsRows(s: SparkSession, path: String,
       dir: String): Array[(Long, Long, Seq[Double], Seq[Double])] =
-    s.read.parquet(new org.apache.hadoop.fs.Path(path, dir).toString)
+    Maintenance.readGeneration(s, path, dir)
       .select("prefix", "cnt", "mns", "mxs")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2), r.getSeq[Double](3)))

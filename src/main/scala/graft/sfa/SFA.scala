@@ -128,9 +128,8 @@ object SFA {
       lowerBounding: Boolean,
       histogram: HistogramType,
       applyZNorm: Boolean = true): (SFAModel, Array[Array[Double]]) = {
-    val approx = windows.map { case (win, _) =>
-      Fourier.transformWindow(win, 0, windowSize, wordLength, normMean, lowerBounding)
-    }
+    val dft = new Fourier.WindowDft(windowSize, wordLength, normMean, lowerBounding)
+    val approx = windows.map { case (win, _) => dft(win, 0, 1.0) }
     // orderline per coefficient: (value rounded to 2 decimals, label)
     val orderline = Array.tabulate(wordLength) { j =>
       val vl = new Array[(Double, Double)](windows.length)

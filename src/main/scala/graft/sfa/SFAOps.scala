@@ -29,37 +29,35 @@ object SFAOps {
   /** THE per-series disjoint-window kernel behind
     * [[graft.sfa.expr.DisjointDftExpr]]: `zNorm` z-norms each complete
     * window first (σ-division only when !normMean; MUSE transforms the
-    * raw windows), then the single-window DFT.
+    * raw windows), then the single-window DFT of the `l` kept values.
     */
   private[sfa] def disjointKernelArr(
       arr: Array[Double], w: Int, l: Int, normMean: Boolean,
-      lowerBounding: Boolean, zNorm: Boolean): Array[Array[Double]] =
-    if (zNorm)
-      SFA.disjointWindows(arr, w, normMean).map { win =>
-        Fourier.transformWindow(win, 0, w, l, normMean, lowerBounding)
-      }
-    else
-      Array.tabulate(arr.length / w) { i =>
-        Fourier.transformWindow(arr, i * w, w, l, normMean, lowerBounding)
-      }
+      lowerBounding: Boolean, zNorm: Boolean): Array[Array[Double]] = {
+    val dft = new Fourier.WindowDft(w, l, normMean, lowerBounding)
+    if (zNorm) SFA.disjointWindows(arr, w, normMean).map(dft(_, 0, 1.0))
+    else Array.tabulate(arr.length / w)(i => dft(arr, i * w, 1.0))
+  }
 
   /** THE per-series sliding-window kernel (direct per-window DFT with
     * per-window 1/σ scaling, σ=0 guarded to 1) — behind
     * [[graft.sfa.expr.SlidingDftExpr]], shared by
     * [[slidingApproxDirect]], [[slidingApproxArrays]] and
-    * [[windowGridBags]]. Series shorter than the window yield no rows
-    * (callers additionally exclude them at DataFrame level, where the
-    * SQL oracle models the exclusion).
+    * [[windowGridBags]]. One [[Fourier.WindowDft]] per series: the
+    * twiddle table is looked up once, each window computes only the
+    * `min(w, l + startOffset)` slots it keeps and lands in one array,
+    * `((raw·norm)·sign)·(1/σ)`. Series shorter than the window yield no
+    * rows (callers additionally exclude them at DataFrame level, where
+    * the SQL oracle models the exclusion).
     */
   private[sfa] def slidingKernelArr(
       arr: Array[Double], w: Int, l: Int, normMean: Boolean): Array[Array[Double]] =
     if (arr.length < w) Array.empty
     else {
       val (_, stds) = Fourier.rollingMeanStdDirect(arr, w)
+      val dft = new Fourier.WindowDft(w, l, normMean, lowerBounding = true)
       Array.tabulate(arr.length - w + 1) { t =>
-        val direct = Fourier.transformWindow(arr, t, w, l, normMean, lowerBounding = true)
-        val f = if (stds(t) > 0) 1.0 / stds(t) else 1.0
-        direct.map(_ * f)
+        dft(arr, t, if (stds(t) > 0) 1.0 / stds(t) else 1.0)
       }
     }
 

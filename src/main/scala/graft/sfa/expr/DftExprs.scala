@@ -13,8 +13,10 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
   * serialization boundary — a ScalaUDF converts the full series into a
   * boxed `Seq[Double]` and the nested result array back through
   * CatalystTypeConverters on EVERY row of the hottest stage in the
-  * engine. Here the input is one primitive-array copy and each window's
-  * coefficients land in an UnsafeArrayData wrapper directly.
+  * engine. Here the input is one primitive-array copy, each window
+  * computes only the `l` values it returns (one twiddle-table lookup per
+  * series, see [[graft.sfa.Fourier.WindowDft]]), and each window's array
+  * lands in an UnsafeArrayData wrapper directly.
   */
 object DftKernels {
   private def toCatalyst(a: Array[Array[Double]]): ArrayData =

@@ -452,6 +452,21 @@ object Maintenance {
       case _ => s.read.parquet(path)
     }
 
+  /** The parquet table in one of a layout's `_`-prefixed generation
+    * directories (maintained box stats, IVF centroids), read through its
+    * listed `*.parquet` part files: Spark's data source warns "All
+    * paths were ignored" on every read of a root path whose own name
+    * starts with `_` (the read still works), while the part files' names
+    * are not hidden. The on-disk layout stays as written. A missing
+    * directory throws `FileNotFoundException`.
+    */
+  def readGeneration(s: SparkSession, path: String, dir: String): org.apache.spark.sql.DataFrame = {
+    val root = new Path(path, dir)
+    val parts = root.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(root)
+      .map(_.getPath).filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
+    s.read.parquet(parts: _*)
+  }
+
   /** Selective small-file compaction for any append-grown
     * MANIFEST-COMMITTED layout partitioned by `partCol` (k-NN word
     * prefixes, IVF cells): every partition holding more than

@@ -197,10 +197,22 @@ object Pipelines {
     * distinct entries. A long-lived session's registry is therefore
     * bounded by its distinct tracked plans, not its call count.
     */
-  def tracked(s: SparkSession, df: DataFrame): DataFrame = {
+  def tracked(s: SparkSession, df: DataFrame): DataFrame =
+    trackedIn(s, s"plan:${df.queryExecution.logical.semanticHash()}", df)
+
+  /** [[tracked]] in a caller-named slot, for a per-call frame whose plan
+    * is new on every call (it holds a literal of the call's own inputs),
+    * which [[tracked]] would keep once per call until [[clear]]. The
+    * slot holds one frame: a later call replaces the earlier frame and
+    * unpersists it, unless both plans are the same (they then share one
+    * cache entry). A caller still evaluating a replaced frame recomputes
+    * it from its plan, with the same result.
+    */
+  def trackedIn(s: SparkSession, slot: String, df: DataFrame): DataFrame = {
     val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val planKey = cached.queryExecution.logical.semanticHash()
-    dfs.put((sid(s), s"_tracked:$planKey"), cached)
+    dfs.put((sid(s), s"_tracked:$slot"), cached)
+      .filterNot(_.queryExecution.logical.sameResult(cached.queryExecution.logical))
+      .foreach(unpersist)
     cached
   }
 

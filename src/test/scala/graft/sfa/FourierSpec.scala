@@ -93,6 +93,129 @@ class FourierSpec extends AnyFunSuite {
     assert(out(0).zip(direct).forall { case (a, b) => math.abs(a - b) < 1e-9 })
   }
 
+  // ---- bit-identity of the trimmed direct kernels ----------------------
+  // The full-length formula the direct kernels used before they computed
+  // only the kept slots: all ⌈w/2⌉ coefficients of the window (the trig
+  // evaluated inline with the twiddle table's exact expression), then the
+  // offset cut, norm and sign, then the sliding path's 1/σ.
+
+  private def fullRaw(data: Array[Double], from: Int, w: Int): Array[Double] = {
+    val out = new Array[Double](w)
+    val n = math.min(w, math.max(0, data.length - from))
+    var k = 0
+    while (k < (w + 1) / 2) {
+      val arg = -2.0 * math.Pi * k / w
+      var re = 0.0
+      var im = 0.0
+      var j = 0
+      while (j < n) {
+        val a = arg * j
+        val x = data(from + j)
+        re += x * math.cos(a)
+        im += x * math.sin(a)
+        j += 1
+      }
+      if (2 * k < w) out(2 * k) = re
+      if (2 * k + 1 < w) out(2 * k + 1) = im
+      k += 1
+    }
+    if (w > 1) out(1) = 0.0
+    out
+  }
+
+  private def fullWindow(data: Array[Double], from: Int, w: Int, l: Int,
+      normMean: Boolean, lowerBounding: Boolean): Array[Double] = {
+    val raw = fullRaw(data, from, w)
+    val off = if (normMean) 2 else 0
+    val norm = if (lowerBounding) 1.0 / math.sqrt(w) else 1.0
+    val out = new Array[Double](l)
+    var sign = 1.0
+    var i = 0
+    while (i < math.min(l, w - off)) {
+      out(i) = raw(off + i) * norm * sign
+      sign = -sign
+      i += 1
+    }
+    out
+  }
+
+  private def fullSliding(data: Array[Double], w: Int, l: Int, normMean: Boolean) =
+    if (data.length < w) Array.empty[Array[Double]]
+    else {
+      val (_, stds) = Fourier.rollingMeanStdDirect(data, w)
+      Array.tabulate(data.length - w + 1) { t =>
+        val f = if (stds(t) > 0) 1.0 / stds(t) else 1.0
+        fullWindow(data, t, w, l, normMean, lowerBounding = true).map(_ * f)
+      }
+    }
+
+  private def fullDisjoint(data: Array[Double], w: Int, l: Int, normMean: Boolean,
+      lowerBounding: Boolean, zNorm: Boolean) =
+    if (zNorm) SFA.disjointWindows(data, w, normMean)
+      .map(fullWindow(_, 0, w, l, normMean, lowerBounding))
+    else Array.tabulate(data.length / w)(i => fullWindow(data, i * w, w, l, normMean, lowerBounding))
+
+  private def assertBits(got: Array[Array[Double]], want: Array[Array[Double]], what: String): Unit = {
+    assert(got.length == want.length, s"$what: ${got.length} windows, want ${want.length}")
+    got.indices.foreach { t =>
+      assert(got(t).length == want(t).length, s"$what window $t: length")
+      got(t).indices.foreach { i =>
+        assert(java.lang.Double.doubleToRawLongBits(got(t)(i)) ==
+          java.lang.Double.doubleToRawLongBits(want(t)(i)),
+          s"$what window $t slot $i: ${got(t)(i)} vs ${want(t)(i)}")
+      }
+    }
+  }
+
+  private val bitWindowSizes = Seq(4, 16, 19, 32, 33, 64, 128)
+
+  test("trimmed transformWindow is bit-identical to the full-length formula") {
+    val data = series(300, 501L)
+    val short = series(10, 502L)
+    for {
+      w <- bitWindowSizes
+      l <- 1 to 16
+      normMean <- Seq(true, false)
+      lowerBounding <- Seq(true, false)
+    } {
+      // window starts inside, at the last full window, and past the end
+      // of the series (zero-padded, n < w), plus a series shorter than w
+      val cases = Seq(data -> 0, data -> 7, data -> (data.length - w),
+        data -> (data.length - w / 2), data -> data.length, short -> 0)
+      assertBits(
+        cases.map { case (d, from) => Fourier.transformWindow(d, from, w, l, normMean, lowerBounding) }.toArray,
+        cases.map { case (d, from) => fullWindow(d, from, w, l, normMean, lowerBounding) }.toArray,
+        s"transformWindow w=$w l=$l normMean=$normMean lb=$lowerBounding")
+    }
+    // the whole-series transform is the same window, padded to 2^k
+    for (n <- Seq(5, 64, 100, 300); l <- 2 to 16 by 2) {
+      val n2 = Integer.highestOneBit(n - 1) * 2
+      assertBits(Array(Fourier.transformSeries(data.take(n), l)),
+        Array(fullWindow(data.take(n), 0, n2, l, normMean = true, lowerBounding = true)),
+        s"transformSeries n=$n l=$l")
+    }
+  }
+
+  test("trimmed sliding and disjoint kernels are bit-identical to the full-length formula") {
+    val data = series(300, 503L)
+    // a constant stretch gives σ = 0 windows (the 1/σ guard)
+    val flat = Array.fill(40)(0.0) ++ series(60, 504L)
+    for {
+      w <- bitWindowSizes
+      l <- 1 to 16
+      normMean <- Seq(true, false)
+      d <- Seq(data, flat, data.take(w - 1))
+    } {
+      val what = s"w=$w l=$l normMean=$normMean n=${d.length}"
+      assertBits(SFAOps.slidingKernelArr(d, w, l, normMean), fullSliding(d, w, l, normMean),
+        s"sliding $what")
+      for (lowerBounding <- Seq(true, false); zNorm <- Seq(true, false))
+        assertBits(SFAOps.disjointKernelArr(d, w, l, normMean, lowerBounding, zNorm),
+          fullDisjoint(d, w, l, normMean, lowerBounding, zNorm),
+          s"disjoint $what lb=$lowerBounding z=$zNorm")
+    }
+  }
+
   test("Fourier distance lower-bounds the true Euclidean distance") {
     // Parseval: 2/n * sum_{k=1..l/2} |dX_k|^2 <= sum |dx|^2 for any prefix
     val a = Loaders.znorm(series(64, 1L))
