@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Local pre-flight for the driver's t2 gate: run each oracle SQL in DuckDB
 over the same parquet tables and diff against the Verify.scala parquet dump.
-Usage: python3 scripts/check_oracles.py <sfDir> <verifyOutDir>
+Usage: python3 scripts/check_oracles.py <sfDir> <verifyOutDir> [query,query,...]
+The optional third argument is the comma-separated query filter
+`graft.Verify` takes: only the named oracles are checked.
 """
 import json, sys, glob, os
 import duckdb
@@ -9,12 +11,15 @@ import pyarrow.parquet as pq
 import pandas as pd
 
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
+only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 con = duckdb.connect()
 for t in ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split():
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+if only is not None:
+    oracle = {k: v for k, v in oracle.items() if k in only}
 ok = fail = 0
 for name in sorted(oracle):
     files = glob.glob(f"{out_dir}/{name}/*.parquet")

@@ -202,16 +202,10 @@ object Bpe {
     * cadence 1 → 26.1 s, 2 → 23.7 s, 4 → 22.2 s, 8 → 25.1 s. The curve
     * is a shallow U: fewer materializations win until the re-applied
     * pending-merge layers outgrow them (~8), and 4 sits at the bottom —
-    * so 4 is the default. Result parity holds at EVERY cadence (it is
-    * purely a materialization schedule);
-    * env `GRAFT_BPE_CKPT_EVERY` re-tunes it without a code change for
-    * regimes where writes dominate instead (very large dictionaries on
-    * slow storage).
+    * so the cadence is 4. Result parity holds at EVERY cadence (it is
+    * purely a materialization schedule).
     */
-  private[pipeline] val ReprCkptEvery: Int =
-    sys.env.get("GRAFT_BPE_CKPT_EVERY").flatMap(_.toIntOption).filter(_ >= 1)
-      .getOrElse(4) // malformed/non-positive values fall back (a throw here
-                    // would be an ExceptionInInitializerError far from the env var)
+  private[pipeline] val ReprCkptEvery = 4
 
   /** Distributed trainer — the scale path when the type dictionary
     * exceeds [[MaxTypes]]: the SAME merge rule as [[fitMerges]], with
@@ -242,8 +236,7 @@ object Bpe {
     * size — no dropped tail, and BpeSpec pins merge-for-merge equality
     * with the driver loop.
     */
-  private[pipeline] def fitMergesDistributed(dictDf: DataFrame, k: Int,
-      ckptEvery: Int = ReprCkptEvery): Seq[(Long, String, String, Long)] = {
+  private[pipeline] def fitMergesDistributed(dictDf: DataFrame, k: Int): Seq[(Long, String, String, Long)] = {
     val symUdf = udf { (w: String) => symbolize(w) }
     val mergeUdf = udf { (syms: Seq[String], l: String, r: String) =>
       mergePair(syms.toVector, l, r)
@@ -294,7 +287,7 @@ object Bpe {
         val merged = reprs
           .withColumn("syms", mergeUdf(col("syms"), lit(l), lit(r)))
         pendingMerges += 1
-        if (pendingMerges >= ckptEvery) {
+        if (pendingMerges >= ReprCkptEvery) {
           // materialize once per cadence; only then is the PREVIOUS
           // checkpoint safe to release (the composed views between
           // cadences are plans rooted at it, never materialized state)

@@ -240,19 +240,13 @@ object ClassifierQ {
     * form.) Train = even user_ids, class = user_id % 3.
     */
   private def f13(s: SparkSession, dir: String): DataFrame = {
-    val ed2 = udf { (a: Seq[Double], b: Seq[Double]) =>
-      var d = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { val x = a(i) - b(i); d += x * x; i += 1 }
-      d
-    }
     val train = IndexQ.slices(s, dir).filter(col("user_id") % 2 === 0)
       .withColumn("cls", col("user_id") % 3)
       .cache()
     val a = train.select(col("cls"), col("user_id").as("id"), col("data"))
     val b = train.select(col("cls"), col("user_id").as("oid"), col("data").as("odata"))
     val nnd = a.join(b, Seq("cls")).filter(col("id") =!= col("oid"))
-      .withColumn("d2", ed2(col("data"), col("odata")))
+      .withColumn("d2", graft.sfa.IndexOps.ed2Udf(col("data"), col("odata")))
       .groupBy("cls", "id").agg(sqrt(min(col("d2"))).as("d"))
     val byD = Window.partitionBy("cls").orderBy(col("d").asc, col("id").asc)
     nnd.withColumn("rn", row_number().over(byD).cast("long"))

@@ -255,7 +255,7 @@ object GridQ {
     */
   private def m4(s: SparkSession, dir: String): DataFrame = {
     val disjoint = SfaQ.disjointApprox(s, dir)
-    val sliding = SfaQ.slidingApprox(s, dir)
+    val sliding = SfaQ.slidingApproxArr(s, dir)
 
     val edBins = SFAOps.equiDepthBins(disjoint, Alpha)
     val mm = disjoint
@@ -340,7 +340,7 @@ object GridQ {
       Alpha, Seq("snap"))
     val bags = graft.util.Pipelines.tracked(s, SFAOps.bagOfWords(
       SFAOps.packWords(
-        SFAOps.slidingApproxDirect(perSnap, M5W, L, normMean = false, Seq("snap")),
+        SFAOps.slidingApproxArrays(perSnap, M5W, L, normMean = false, Seq("snap")),
         bins, Bits, Seq("snap")),
       Seq("snap")))
     // materialize before the 1-NN join: its test/train/no-match subtrees

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.{QueryDef, Tables}
 import graft.util.Rnd.jround
-import graft.sfa.{Fourier, IndexOps, ModelIO, SFA, Words}
+import graft.sfa.{IndexOps, ModelIO, SFAOps, Words}
 import graft.ts.Loaders
 
 /** Exact k-NN index queries (SFATrie equivalent, SURVEY §2.5 J5/J6/J9)
@@ -32,17 +32,13 @@ object IndexQ {
     */
   private[queries] def slices(s: SparkSession, dir: String): DataFrame =
     graft.util.Pipelines.cachedDF(s, s"index.slices:$dir") {
-      val ser = graft.sfa.SFAOps.seriesOf(Tables.load(s, dir, "events"))
+      val ser = SFAOps.seriesOf(Tables.load(s, dir, "events"))
       val sliceUdf = udf { (data: Seq[Double]) =>
         Loaders.znorm(data.take(SliceLen).toArray)
       }
       ser.filter(size(col("data")) >= SliceLen)
         .select(col("user_id"), sliceUdf(col("data")).as("data"))
     }
-
-  private def approxUdf = udf { (data: Seq[Double]) =>
-    Fourier.transformWindow(data.toArray, 0, SliceLen, L, normMean = false, lowerBounding = true)
-  }
 
   /** Fit equi-width bins (the trie's histogram type) on the corpus
     * approximations' 2-decimal orderline, driver-collected (l × (α−1)
@@ -69,7 +65,9 @@ object IndexQ {
     graft.util.Pipelines.cachedObj(s, s"index.prepared:$dir") { preparedBuild(s, dir) }
 
   private def preparedBuild(s: SparkSession, dir: String): (DataFrame, DataFrame, Array[Array[Double]]) = {
-    val sl = slices(s, dir).withColumn("approx", approxUdf(col("data"))).cache()
+    // the slice's one window: a plain (not z-normed) lower-bounding DFT
+    val sl = slices(s, dir).withColumn("approx", element_at(SFAOps.disjointCol(col("data"),
+      lit(SliceLen), lit(L), lit(false), lowerBounding = true, zNorm = false), 1)).cache()
     val corpus0 = sl.filter(col("user_id") % 2 === 0)
     val queries0 = sl.filter(col("user_id") % 2 === 1)
     val bins = fitBins(corpus0)
@@ -366,8 +364,7 @@ object IndexQ {
     val (corpus, _, _) = prepared(s, dir)
     val usedBits = Words.binlog(Alpha)
     corpus
-      .withColumn("prefix",
-        expr(s"aggregate(slice(word, 3, $PrefixLen), 0L, (acc, s) -> acc * ${1 << usedBits} + s)"))
+      .withColumn("prefix", IndexOps.prefixCol(col("word"), 2, PrefixLen, 1 << usedBits))
       .select(col("prefix"), posexplode(col("approx")).as(Seq("coef", "v")))
       .groupBy(col("prefix"), col("coef").cast("long").as("coef"))
       .agg(jround(min(col("v")), 6).as("mn"), jround(max(col("v")), 6).as("mx"))

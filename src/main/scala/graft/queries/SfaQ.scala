@@ -65,27 +65,19 @@ object SfaQ {
     * disjoint windows, applied to every sliding window.
     */
   private[queries] def slidingWordsOf(eventsDF: DataFrame): DataFrame = {
-    val ser = SFAOps.seriesOf(eventsDF).cache()
+    val ser = SFAOps.seriesOf(eventsDF)
     val bins = binsDF(SFAOps.disjointApprox(ser, W, L, normMean = false))
-    val sliding = SFAOps.slidingApproxDirect(ser, W, L, normMean = false)
-    SFAOps.packWords(sliding, bins, Bits)
+    SFAOps.packWords(SFAOps.slidingApproxArrays(ser, W, L, normMean = false), bins, Bits)
   }
 
-  /** Sliding approximations as one array row per window — the shared
-    * stage both the exploded view and the fused word path derive from.
-    */
+  /** Sliding approximations as one array row per window. */
   private[queries] def slidingApproxArr(s: SparkSession, dir: String): DataFrame =
     Pipelines.cachedDF(s, s"sfa.slidingApproxArr:$dir")(
       SFAOps.slidingApproxArrays(series(s, dir), W, L, normMean = false))
 
-  private[queries] def slidingApprox(s: SparkSession, dir: String): DataFrame =
-    Pipelines.cachedDF(s, s"sfa.slidingApprox:$dir")(
-      slidingApproxArr(s, dir)
-        .select(col("user_id"), col("win"), posexplode(col("approx")).as(Seq("coef", "v"))))
-
   /** Sliding packed words through the fused native expression
-    * ([[graft.sfa.expr.SfaWordExpr]]) — one codegen'd pass per window
-    * row instead of explode → broadcast join → re-aggregate.
+    * ([[graft.sfa.expr.SfaWordExpr]]) against the driver-collected bins
+    * — one codegen'd pass per window row.
     */
   private[queries] def slidingWords(s: SparkSession, dir: String): DataFrame =
     Pipelines.cachedDF(s, s"sfa.slidingWords:$dir") {
@@ -111,20 +103,23 @@ object SfaQ {
         col("pos").cast("long").as("pos"), col("edge"))
       .orderBy("coef", "pos")
 
-  private def t8(s: SparkSession, dir: String): DataFrame = {
-    val approx = disjointApprox(s, dir)
-    SFAOps.packWords(approx, binsDF(approx), Bits)
+  private def t8(s: SparkSession, dir: String): DataFrame =
+    SFAOps.packWords(SFAOps.disjointApproxArrays(series(s, dir), W, L, normMean = false),
+        binsDF(disjointApprox(s, dir)), Bits)
       .select(col("user_id"), col("win").cast("long").as("win"), col("word"))
       .orderBy("user_id", "win")
-  }
 
   private def t2(s: SparkSession, dir: String): DataFrame =
     // exclude series shorter than the window: the library op pads them
     // to one truncated window (reference semantics) but the SQL oracle
     // models complete windows only
-    SFAOps.slidingApproxMft(series(s, dir).filter(size(col("data")) >= W), W, L, normMean = false)
+    series(s, dir).filter(size(col("data")) >= W)
+      .select(col("user_id"), posexplode(SFAOps.mftCol(col("data"), lit(W), lit(L), lit(false),
+        lowerBounding = true, applyZNorm = true)).as(Seq("win", "approx")))
       .select(col("user_id"), col("win").cast("long").as("win"),
-        col("coef").cast("long").as("coef"), jround(col("v"), 4).as("v"))
+        posexplode(col("approx")).as(Seq("coef", "v")))
+      .select(col("user_id"), col("win"), col("coef").cast("long").as("coef"),
+        jround(col("v"), 4).as("v"))
       .orderBy("user_id", "win", "coef")
 
   private def a1(s: SparkSession, dir: String): DataFrame =
@@ -427,19 +422,19 @@ object SfaQ {
       .orderBy(col("f").desc, col("coef").asc)
     val sel = f.withColumn("rk", row_number().over(byF))
       .filter(col("rk") <= 4).select("coef", "rk")
-    // single aggregation: symbol via higher-order filter over broadcast
-    // per-coefficient edge arrays (same shape as SFAOps.packWords)
-    val edgeArrays = binsDF(approx)
-      .groupBy(col("coef"))
-      .agg(expr("transform(sort_array(collect_list(struct(pos, edge))), p -> p.edge)")
-        .as("edges"))
-    approx.join(broadcast(sel), Seq("coef"))
-      .join(broadcast(edgeArrays), Seq("coef"), "left")
-      .withColumn("symbol",
-        when(col("edges").isNull, 0L)
-          .otherwise(expr("cast(size(filter(edges, e -> v >= e)) as long)")))
-      .groupBy(col("user_id"), col("win").cast("long").as("win"))
-      .agg(sum(col("symbol") * expr("shiftleft(1L, (rk - 1) * 2)")).as("word"))
+    // one row: the selected coefficients in F-rank order and their edges
+    // rows in the same order — none when no coefficient passes the filter
+    val ranked = sel
+      .agg(sort_array(collect_list(struct(col("rk"), col("coef")))).getField("coef").as("coefs"))
+      .filter(size(col("coefs")) > 0)
+      .crossJoin(SFAOps.edgesRows(binsDF(approx), Bits))
+      .select(col("coefs"), expr("transform(coefs, " +
+        "c -> coalesce(try_element_at(edges, c + 1), cast(array() AS ARRAY<DOUBLE>)))").as("edges"))
+    SFAOps.disjointApproxArrays(series(s, dir), W, L, normMean = false)
+      .crossJoin(broadcast(ranked))
+      .select(col("user_id"), col("win").cast("long").as("win"),
+        SFAOps.wordCol(SFAOps.selectCoefsCol(col("approx"), col("coefs")), col("edges"), Bits)
+          .as("word"))
       .orderBy("user_id", "win")
   }
 

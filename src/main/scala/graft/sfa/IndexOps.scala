@@ -86,10 +86,24 @@ object IndexOps {
     * (bit-identical results, all oracles unchanged), but fused into
     * whole-stage codegen with no per-row array deserialization.
     */
-  private def ed2Udf(a: Column, b: Column): Column =
+  private[graft] def ed2Udf(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.Bridge.column(graft.sfa.expr.Ed2Expr(
       org.apache.spark.sql.graft.Bridge.expression(a),
       org.apache.spark.sql.graft.Bridge.expression(b)))
+
+  /** The k-NN prefix key: `len` word symbols from 0-based symbol `start`
+    * packed base `base` into a LONG, most significant first. An ARRAY
+    * join key is not hashable, so every prefix equi-join would degrade
+    * to a broadcast nested-loop over (corpus × survivor) pairs — the
+    * hash join needs a scalar.
+    *
+    * The lambda is SQL text with fixed variable names: `functions.aggregate`
+    * names its variables afresh on every call, so two builds of the same
+    * plan would hash apart and miss the plan-keyed stage slots
+    * ([[graft.util.Pipelines.tracked]], the k-NN probe slot).
+    */
+  private[graft] def prefixCol(word: Column, start: Int, len: Int, base: Int): Column =
+    call_function("aggregate", slice(word, start + 1, len), lit(0L), expr(s"(acc, s) -> acc * $base + s"))
 
   /** Pruning telemetry of one [[knn]] run: how much of the corpus the LB
     * pass actually touched (the trie's subtree-skip, measured).
@@ -186,14 +200,9 @@ object IndexOps {
     val plen =
       if (prefixLen > 0) prefixLen
       else adaptiveDepth(corpus.count(), bins(0).length + 1, bins.length - prefixStart)
-    // pack the prefix symbols into a LONG: an ARRAY join key is not
-    // hashable, so every prefix equi-join would degrade to a broadcast
-    // nested-loop over (corpus × survivor) pairs — the hash join needs a
-    // scalar. 256 ≥ any alphabet in use (reference caps α at 8).
-    val prefixCol = expr(
-      s"aggregate(slice(word, ${prefixStart + 1}, $plen), 0L, (acc, s) -> acc * 256 + s)")
+    // base 256 ≥ any alphabet in use (reference caps α at 8)
     val prepared = corpus.select(col("id"), col("data"), col("word"), col("approx"),
-      prefixCol.as("prefix"))
+      prefixCol(col("word"), prefixStart, plen, 256).as("prefix"))
     knnCore(prepared, queries, bins, normed, k, probe, plen, queryBatchRows,
       probeSlot = s"corpus:${prepared.queryExecution.logical.semanticHash()}")
   }
@@ -563,8 +572,7 @@ object IndexOps {
       usedBits: Int,
       prefixLen: Int,
       startSymbol: Int = 0): DataFrame = {
-    def prefixOf(word: org.apache.spark.sql.Column) =
-      expr(s"aggregate(slice(${word.toString}, ${startSymbol + 1}, $prefixLen), 0L, (acc, s) -> acc * ${1 << usedBits} + s)")
+    def prefixOf(word: Column) = prefixCol(word, startSymbol, prefixLen, 1 << usedBits)
     val c = corpus.select(col("id"), col("data"), prefixOf(col("word")).as("prefix"))
     val q = queries.select(col("qid"), col("qdata"), prefixOf(col("qword")).as("prefix"))
     val byD = Window.partitionBy(col("qid")).orderBy(col("d2").asc, col("id").asc)

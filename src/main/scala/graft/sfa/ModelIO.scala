@@ -497,8 +497,7 @@ object ModelIO {
       prefixStart: Int, base: Int, mode: SaveMode): Unit = {
     val b = if (base > 0) base else 1 << usedBits
     val packed = corpus
-      .withColumn("prefix",
-        expr(s"aggregate(slice(word, ${prefixStart + 1}, $prefixLen), 0L, (acc, s) -> acc * $b + s)"))
+      .withColumn("prefix", IndexOps.prefixCol(col("word"), prefixStart, prefixLen, b))
     // cluster the write by the partition column (AQE REBALANCE: sized
     // to the advisory partition bytes, skew-split when a prefix is
     // hot): without it every upstream task writes a file into every

@@ -42,9 +42,9 @@ object SFAOps {
   /** THE per-series sliding-window kernel (direct per-window DFT with
     * per-window 1/σ scaling, σ=0 guarded to 1) — behind
     * [[graft.sfa.expr.SlidingDftExpr]], shared by
-    * [[slidingApproxDirect]], [[slidingApproxArrays]] and
-    * [[windowGridBags]]. One [[Fourier.WindowDft]] per series: the
-    * twiddle table is looked up once, each window computes only the
+    * [[slidingApproxArrays]] and [[windowGridBags]]. One
+    * [[Fourier.WindowDft]] per series: the twiddle table is looked up
+    * once, each window computes only the
     * `min(w, l + startOffset)` slots it keeps and lands in one array,
     * `((raw·norm)·sign)·(1/σ)`. Series shorter than the window yield no
     * rows (callers additionally exclude them at DataFrame level, where
@@ -150,9 +150,23 @@ object SFAOps {
       k -> bins
     }
 
-  /** Disjoint-window Fourier approximations (the quantizer-fit input):
-    * z-norm each complete window (σ-division only when !normMean), direct
-    * DFT, keep `l` values. Output: (user_id, win, coef, v) with `v`
+  /** Disjoint-window Fourier approximations, one array row per complete
+    * window: z-norm each window (σ-division only when !normMean), direct
+    * DFT, keep `l` values. Output: (extraKeys…, user_id, win, approx).
+    */
+  def disjointApproxArrays(
+      series: DataFrame,
+      windowSize: Int,
+      l: Int,
+      normMean: Boolean,
+      extraKeys: Seq[String] = Nil): DataFrame = {
+    val keep = (extraKeys :+ "user_id").map(col)
+    series.select(keep :+ posexplode(disjointCol(col("data"), lit(windowSize), lit(l), lit(normMean),
+      lowerBounding = true, zNorm = true)).as(Seq("win", "approx")): _*)
+  }
+
+  /** [[disjointApproxArrays]] with one row per coefficient (the
+    * quantizer-fit input): (extraKeys…, user_id, win, coef, v) with `v`
     * unrounded (rounding is applied by callers per use).
     */
   def disjointApprox(
@@ -162,9 +176,7 @@ object SFAOps {
       normMean: Boolean,
       extraKeys: Seq[String] = Nil): DataFrame = {
     val keep = (extraKeys :+ "user_id").map(col)
-    series
-      .select(keep :+ posexplode(disjointCol(col("data"), lit(windowSize), lit(l), lit(normMean),
-        lowerBounding = true, zNorm = true)).as(Seq("win", "approx")): _*)
+    disjointApproxArrays(series, windowSize, l, normMean, extraKeys)
       .select(keep ++ Seq(col("win"), posexplode(col("approx")).as(Seq("coef", "v"))): _*)
   }
 
@@ -197,106 +209,91 @@ object SFAOps {
     m
   }
 
-  /** Quantize per-window approximations against broadcast bins and pack
-    * into words: symbol = #edges ≤ value, word = Σ symbol_c << (bits·c).
-    * Input rows: (user_id, win, coef, v); output: (user_id, win, word).
-    * The bin edges are pre-collapsed to one sorted array per coefficient
-    * so the broadcast is a row per coefficient and the join adds no
-    * shuffle — ONE shuffle total (the word groupBy).
+  /** One `ARRAY<ARRAY<DOUBLE>>` edges row per key from a fitted
+    * `(keys…, coef, pos, edge)` table: element c holds coefficient c's
+    * edges in `pos` order, an empty array for a coefficient without
+    * edges. A coefficient with more than `2^usedBits − 1` edges fails
+    * the query: [[wordCol]] masks each symbol to its bit field, so an
+    * overfull coefficient would wrap instead of counting.
     *
-    * The edge count is unrolled into `when(size ≥ i ∧ v ≥ edges[i])`
-    * conditional sums rather than a higher-order `filter(edges, …)`:
-    * lambda functions evaluate interpreted per row, and this expression
-    * runs once per (window, coefficient) — the hottest row count in the
-    * engine. The unrolled form stays inside whole-stage codegen.
+    * The fitted table holds at most keys × l × (α − 1) rows, so both
+    * regroupings run in one partition (`coalesce(1)`, no exchange)
+    * instead of re-shuffling a table the broadcast collects anyway.
+    */
+  private[graft] def edgesRows(
+      bins: DataFrame,
+      usedBits: Int,
+      extraKeys: Seq[String] = Nil): DataFrame = {
+    val keys = extraKeys.map(col)
+    val maxEdges = (1 << usedBits) - 1
+    bins.coalesce(1)
+      .groupBy(keys :+ col("coef"): _*)
+      .agg(sort_array(collect_list(struct(col("pos"), col("edge")))).getField("edge").as("edges"))
+      .select(keys ++ Seq(col("coef"), when(size(col("edges")) <= maxEdges, col("edges"))
+        .otherwise(raise_error(lit(s"bin edges exceed symbol capacity for usedBits=$usedBits")))
+        .as("edges")): _*)
+      .groupBy(keys: _*)
+      .agg(map_from_entries(collect_list(struct(col("coef"), col("edges")))).as("byCoef"),
+        max(col("coef")).as("top"))
+      // SQL-text lambda: fixed variable names keep the plan hash stable
+      // across builds (see IndexOps.prefixCol)
+      .select(keys :+ expr("transform(sequence(0, top), " +
+        "c -> coalesce(byCoef[c], cast(array() AS ARRAY<DOUBLE>)))").as("edges"): _*)
+  }
+
+  /** Quantize approximation arrays against fitted bins and pack them into
+    * words through [[wordCol]]: one broadcast edges row per key
+    * ([[edgesRows]]), one map-side word per window, no explosion and no
+    * re-aggregation. A key without bins packs 0s.
+    * Input rows: (extraKeys…, user_id, win, approx);
+    * output: (extraKeys…, user_id, win, word).
     */
   def packWords(
       approx: DataFrame,
       bins: DataFrame,
       usedBits: Int,
-      extraKeys: Seq[String] = Nil): DataFrame = {
-    val maxEdges = (1 << usedBits) - 1
-    val binKeys = (extraKeys :+ "coef").map(col)
-    val edgeArrays = bins
-      .groupBy(binKeys: _*)
-      .agg(expr("transform(sort_array(collect_list(struct(pos, edge))), p -> p.edge)")
-        .as("edges"))
-    val symbol = (1 to maxEdges)
-      .map(i => when(size(col("edges")) >= i && col("v") >= element_at(col("edges"), i), 1L)
-        .otherwise(0L))
-      .reduce(_ + _)
-    approx.join(broadcast(edgeArrays), extraKeys :+ "coef", "left")
-      .withColumn("symbol", symbol)
-      .groupBy((extraKeys ++ Seq("user_id", "win")).map(col): _*)
-      .agg(sum(col("symbol") * expr(s"shiftleft(1L, coef * $usedBits)")).as("word"))
-  }
+      extraKeys: Seq[String] = Nil): DataFrame =
+    approx.join(broadcast(edgesRows(bins, usedBits, extraKeys)), extraKeys, "left")
+      .select((extraKeys ++ Seq("user_id", "win")).map(col) :+
+        wordCol(col("approx"), coalesce(col("edges"), typedlit(Seq.empty[Seq[Double]])), usedBits)
+          .as("word"): _*)
 
   /** Sliding-window Fourier approximations by direct per-window DFT with
-    * per-window 1/σ scaling — the oracle-checkable sliding path (the
-    * O(1)-per-step MFT recurrence is the perf path, validated by the
-    * FourierSpec parity suite). Output: (user_id, win, coef, v).
-    * Series shorter than the window are excluded (they take the padded
-    * single-window path, which the SQL oracle does not model).
-    */
-  def slidingApproxDirect(
-      series: DataFrame,
-      windowSize: Int,
-      l: Int,
-      normMean: Boolean,
-      extraKeys: Seq[String] = Nil): DataFrame = {
-    val keep = (extraKeys :+ "user_id").map(col)
-    series
-      .filter(size(col("data")) >= windowSize)
-      .select(keep :+ posexplode(slidingCol(col("data"), lit(windowSize), lit(l), lit(normMean)))
-        .as(Seq("win", "approx")): _*)
-      .select(keep ++ Seq(col("win"), posexplode(col("approx")).as(Seq("coef", "v"))): _*)
-  }
-
-  /** Sliding approximations kept as ONE array row per window — the
-    * input shape of the fused-expression word path (no per-coefficient
-    * explosion). Same values as [[slidingApproxDirect]] pre-explode.
+    * per-window 1/σ scaling, ONE array row per window — the
+    * oracle-checkable sliding path (the O(1)-per-step MFT recurrence is
+    * the perf path, validated by the FourierSpec parity suite). Output:
+    * (extraKeys…, user_id, win, approx). Series shorter than the window
+    * are excluded (they take the padded single-window path, which the
+    * SQL oracle does not model).
     */
   def slidingApproxArrays(
       series: DataFrame,
       windowSize: Int,
       l: Int,
-      normMean: Boolean): DataFrame =
+      normMean: Boolean,
+      extraKeys: Seq[String] = Nil): DataFrame =
     series
       .filter(size(col("data")) >= windowSize)
-      .select(col("user_id"), posexplode(slidingCol(col("data"), lit(windowSize), lit(l), lit(normMean)))
-        .as(Seq("win", "approx")))
+      .select((extraKeys :+ "user_id").map(col) :+
+        posexplode(slidingCol(col("data"), lit(windowSize), lit(l), lit(normMean)))
+          .as(Seq("win", "approx")): _*)
 
   /** Fused quantize + pack via the native codegen expression
-    * [[graft.sfa.expr.SfaWordExpr]]: one pass per window row, bins as a
-    * nested-array literal (assigned edges only). Value-identical to
-    * [[packWords]]; preferred on hot paths — no explosion, no join, no
-    * aggregation, stays inside whole-stage codegen.
+    * [[graft.sfa.expr.SfaWordExpr]] against a driver-side bins matrix:
+    * one pass per window row, bins as a nested-array literal (assigned
+    * edges only). Value-identical to [[packWords]] over the same bins.
     */
   def packWordsFused(
       approxArrays: DataFrame,
       bins: Array[Array[Double]],
       usedBits: Int): DataFrame = {
-    // a coefficient with ≥ 2^usedBits−1 assigned edges would overflow its
-    // bit field and the OR-pack would corrupt neighboring symbols — the
-    // grouped packWords caps structurally; the fused form must check
+    // a coefficient with more than 2^usedBits−1 assigned edges would
+    // overflow its bit field, and sfa_word masks the symbol: fail instead
     require(bins.forall(_.count(_ != Double.MaxValue) <= (1 << usedBits) - 1),
       s"bin edges exceed symbol capacity for usedBits=$usedBits")
     val edges: Seq[Seq[Double]] = bins.map(_.filter(_ != Double.MaxValue).toSeq).toSeq
     approxArrays.select(col("user_id"), col("win"),
       wordCol(col("approx"), typedlit(edges), usedBits).as("word"))
-  }
-
-  /** Sliding approximations via the MFT recurrence (the scale path). */
-  def slidingApproxMft(
-      series: DataFrame,
-      windowSize: Int,
-      l: Int,
-      normMean: Boolean): DataFrame = {
-    val mft = mftCol(col("data"), lit(windowSize), lit(l), lit(normMean),
-      lowerBounding = true, applyZNorm = true)
-    series
-      .select(col("user_id"), posexplode(mft).as(Seq("win", "approx")))
-      .select(col("user_id"), col("win"), posexplode(col("approx")).as(Seq("coef", "v")))
   }
 
   /** The window-grid word pipeline with the grid axis as a `w` COLUMN:
@@ -333,15 +330,13 @@ object SFAOps {
       .select(col("w"), col("user_id"), col("win"),
         posexplode(col("approx")).as(Seq("coef", "v")))
     val bins = equiDepthBins(disjoint, alphabetSize, Seq("w"))
-    // slidingApproxDirect with the window length as data — the SAME
+    // slidingApproxArrays with the window length as data — the SAME
     // kernel (1/σ scaling, short-series exclusion) as the per-w form
     val sliding = fanned
       .filter(size(col("data")) >= col("w"))
       .select(col("w"), col("user_id"),
         posexplode(slidingCol(col("data"), col("w"), lit(l), lit(false)))
           .as(Seq("win", "approx")))
-      .select(col("w"), col("user_id"), col("win"),
-        posexplode(col("approx")).as(Seq("coef", "v")))
     bagOfWords(packWords(sliding, bins, usedBits, Seq("w")), Seq("w"))
   }
 

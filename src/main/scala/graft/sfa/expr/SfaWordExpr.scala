@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * Reference semantics: per-coefficient symbol lookup
   * (sfa/transformation/SFA.java:194-231) + bit packing
   * (sfa/classification/Classifier.java:163-192). The symbol counts ALL
-  * edges ≤ v (no early break), bit-for-bit the grouped form
-  * [[graft.sfa.SFAOps.packWords]] computes; a coefficient with no
-  * edges row yields symbol 0, matching that form's left join. On
+  * edges ≤ v (no early break), as the SQL oracles' per-coefficient
+  * `SUM(CASE WHEN v >= edge …)` does; a coefficient with no edges row,
+  * or an empty one, yields symbol 0, matching their left join. On
   * ascending edges (a fitted bins row, +∞ placeholders included) the
   * count equals [[graft.sfa.SFAModel.quantize]]'s scan, and the symbol
   * is masked to `usedBits` as [[graft.sfa.Words.createWord]] masks it,

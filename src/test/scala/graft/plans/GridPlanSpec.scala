@@ -102,11 +102,11 @@ class GridPlanSpec extends SparkSpec {
       val p3 = executed(bagsFor(ser, Seq(8, 16, 24)))
       // numerosity's window runs on hashpartitioning(w, user_id); the bag
       // groupBy(w, user_id, word) clusters on a superset and must NOT
-      // insert another exchange — the plan carries: bins groupBy, word
-      // groupBy, window partitioning. The binding gate is RELATIVE
-      // (count equal across grid sizes); the absolute count is an upper
-      // bound so a Spark/conf drift that merges an exchange cannot mask
-      // a grid-size-proportional regression
+      // insert another exchange — the plan carries: bins groupBy, the
+      // per-w edges-row groupBy, window partitioning. The binding gate
+      // is RELATIVE (count equal across grid sizes); the absolute count
+      // is an upper bound so a Spark/conf drift that merges an exchange
+      // cannot mask a grid-size-proportional regression
       val (x2, x3) = (countOf(p2, "Exchange hashpartitioning"), countOf(p3, "Exchange hashpartitioning"))
       assert(x2 == x3, s"2-point=$x2 3-point=$x3\n$p3")
       assert(x2 <= 3, p2)
@@ -144,9 +144,10 @@ class GridPlanSpec extends SparkSpec {
         .select(col("w"), col("user_id"), col("word"), col("cnt"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
       val looped = ws.flatMap { w =>
-        val bins = SFAOps.equiDepthBins(SFAOps.disjointApprox(ser, w, L, normMean = false), Alpha)
+        val bins = SFAOps.collectBins(
+          SFAOps.equiDepthBins(SFAOps.disjointApprox(ser, w, L, normMean = false), Alpha), L, Alpha)
         SFAOps.bagOfWords(
-          SFAOps.packWords(SFAOps.slidingApproxDirect(ser, w, L, normMean = false), bins, Bits))
+          SFAOps.packWordsFused(SFAOps.slidingApproxArrays(ser, w, L, normMean = false), bins, Bits))
           .collect().map(r => (w.toLong, r.getLong(0), r.getLong(1), r.getLong(2)))
       }.toSet
       assert(keyed == looped)
