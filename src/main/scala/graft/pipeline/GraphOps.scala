@@ -37,19 +37,15 @@ object GraphOps {
   private val PrScale = 1000000000000L // 10^12
   private val PrIters = 3
 
-  import Similarity.{dot, emb, dupCandidates}
+  import Similarity.{emb, scoredPairs}
 
   /** Directed kNN edges (src, dst, cos): top-$KnnK among the blocked
     * candidates, both orientations of each unordered candidate pair.
     */
   private def knnEdges(s: SparkSession, dir: String): DataFrame =
     Pipelines.cachedDF(s, s"graph.knn:$dir") {
-      val e = emb(s, dir)
-      val va = e.select(col("vec_id").as("a"), col("iv").as("aiv"), col("nrm2").as("an"))
-      val vb = e.select(col("vec_id").as("b"), col("iv").as("biv"), col("nrm2").as("bn"))
-      val scored = dupCandidates(s, dir).join(va, "a").join(vb, "b")
-        .withColumn("dot", dot(col("aiv"), col("biv")))
-        .withColumn("cos", graft.util.Rnd.jround(col("dot") / (sqrt(col("an")) * sqrt(col("bn"))), 6))
+      val scored = scoredPairs(s, dir)
+        .withColumn("cos", graft.util.Rnd.jround(col("cosRaw"), 6))
         .select("a", "b", "cos")
       val directed = scored.select(col("a").as("src"), col("b").as("dst"), col("cos"))
         .unionByName(scored.select(col("b").as("src"), col("a").as("dst"), col("cos")))

@@ -6,19 +6,30 @@ import org.apache.spark.sql.expressions.Window
 import graft.util.{Maintenance, Pipelines, QueryDef, Tables}
 
 /** Similarity search over the embedding column (SURVEY §7.1 step 10 /
-  * driver north-star). Two paths:
+  * driver north-star).
   *
-  *  - brute-force cosine top-k (the correctness baseline): query set is
-  *    broadcast; the corpus scan is embarrassingly parallel; per-query
-  *    top-k via window rank. Wrong plan at 100 TB only if the query set is
-  *    large — then switch to the LSH-bucketed variant;
-  *  - sign-LSH bucketed ANN: 16-bit random-hyperplane sketch (hyperplanes
-  *    derived deterministically from md5, no RNG), equi-join on bucket →
-  *    candidates → exact re-rank. One shuffle on the bucket key.
+  * Every top-k path is one filter-and-refine skeleton: [[queriesOf]]
+  * and [[corpusOf]] split the embeddings (vec_id < 10 queries, the rest
+  * corpus), the path's own candidate generator shortlists (q_id, c_id)
+  * pairs, and [[rerank]] (via [[refine]]) re-ranks them by exact integer
+  * cosine, ties → smaller c_id — the engine-side twin of the oracles'
+  * [[rerankCtes]]. Cell-based generators rank centroids with the one
+  * [[rankCells]] (ties → smaller cell), whose top-1 case is
+  * [[assignCells]]. Only the generator differs between paths:
+  *
+  *  - brute-force cosine top-k (the correctness baseline): every corpus
+  *    row is a candidate of every broadcast query;
+  *  - sign-LSH: same-bucket vectors over 4 × 8-bit random-hyperplane
+  *    tables (hyperplanes derived deterministically from md5, no RNG);
+  *  - IVF (computed and persisted-layout): members of the probed cells;
+  *  - SQ8 and PQ-ADC: an asymmetric shortlist over compressed codes.
+  *
+  * The near-dup and graph families score blocked (a, b) pairs through
+  * the one [[scoredPairs]] frame.
   *
   * Dot products use integer-scaled elements (×10⁴, exact long arithmetic
-  * via a sequential `aggregate` fold) so results are bit-identical across
-  * engines and the ranking is stable.
+  * in one native kernel) so results are bit-identical across engines and
+  * the ranking is stable.
   */
 object Similarity {
 
@@ -42,25 +53,77 @@ object Similarity {
       .withColumn("iv", expr("transform(embedding, v -> cast(round(cast(v as double) * 10000) as bigint))"))
       .withColumn("nrm2", dot(col("iv"), col("iv")))
 
-  /** Brute-force cosine top-5: queries = vec_id < 10, corpus = the rest. */
-  private def cosineTopK(s: SparkSession, dir: String): DataFrame =
-    Pipelines.cachedDF(s, s"sim.brute:$dir") { cosineTopK0(s, dir) }
+  // ---- the filter-and-refine skeleton ---------------------------------
 
-  private def cosineTopK0(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
-    val q = e.filter(col("vec_id") < 10)
+  /** The query side of [[emb]]: vec_id < 10 as (q_id, qiv, qn). */
+  private def queriesOf(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("iv").as("qiv"), col("nrm2").as("qn"))
-    val c = e.filter(col("vec_id") >= 10)
+
+  /** The corpus side of [[emb]]: vec_id ≥ 10 as (c_id, civ, cn). */
+  private def corpusOf(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") >= 10)
       .select(col("vec_id").as("c_id"), col("iv").as("civ"), col("nrm2").as("cn"))
-    val scored = c.crossJoin(broadcast(q))
+
+  /** Exact re-rank of candidate rows carrying both sides (q_id, qiv, qn,
+    * c_id, civ, cn): integer dot, cosine rounded to 6 digits, per-query
+    * rank on the rounded value with ties → smaller c_id, top `k` as
+    * (q_id, rk, c_id, cos) — the engine-side twin of [[rerankCtes]].
+    */
+  private def rerank(pairs: DataFrame, k: Int): DataFrame = {
+    val scored = pairs
       .withColumn("dot", dot(col("qiv"), col("civ")))
       .withColumn("cos", graft.util.Rnd.jround(col("dot") / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
     val w = Window.partitionBy("q_id").orderBy(desc("cos"), col("c_id"))
     scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 5)
+      .filter(col("rk") <= k)
       .select("q_id", "rk", "c_id", "cos")
       .orderBy("q_id", "rk")
   }
+
+  /** [[rerank]] of a (q_id, c_id) candidate set: the queries `q` join
+    * broadcast, the corpus `c` on the shuffle side.
+    */
+  private def refine(cand: DataFrame, q: DataFrame, c: DataFrame, k: Int): DataFrame =
+    rerank(cand.join(broadcast(q), "q_id").join(c, "c_id"), k)
+
+  /** The top `n` cells of every `key` row of `rows` against the
+    * broadcast centroids `cent` (cell, cv, cn2): score = dot(`vec`, cv) /
+    * √cn2 descending, ties → smaller cell. Returns (`key`, cell).
+    */
+  private def rankCells(rows: DataFrame, key: String, vec: String,
+      cent: DataFrame, n: Int): DataFrame = {
+    val byKey = Window.partitionBy(key).orderBy(desc("score"), col("cell"))
+    rows.crossJoin(broadcast(cent))
+      .withColumn("score", dot(col(vec), col("cv")) / sqrt(col("cn2")))
+      .withColumn("rn", row_number().over(byKey))
+      // `rn = 1` for the top-1 (assignment) case: the assignment plans
+      // stay comparable across commits with scripts/plan_diff.py
+      .filter(if (n == 1) col("rn") === 1 else col("rn") <= n)
+      .select(key, "cell")
+  }
+
+  /** Embedding width the sign-LSH planes and the PQ subspaces are built for. */
+  private val Dims = 64
+
+  /** Fails unless `e`'s vectors are [[Dims]] wide. Paths with a fixed
+    * geometry would otherwise degrade silently on another width (the
+    * LSH plane dots cover only the dimensions both sides share; PQ
+    * slices empty or truncated subspaces). `head(1)`: an empty table
+    * has nothing to check.
+    */
+  private def requireDims(e: DataFrame, path: String): Unit =
+    e.select(size(col("iv")).as("d")).head(1).foreach { r =>
+      require(r.getInt(0) == Dims,
+        s"$path expects $Dims-dim embeddings, got ${r.getInt(0)}")
+    }
+
+  /** Brute-force cosine top-5: every corpus row is a candidate. */
+  private def cosineTopK(s: SparkSession, dir: String): DataFrame =
+    Pipelines.cachedDF(s, s"sim.brute:$dir") {
+      val e = emb(s, dir)
+      rerank(corpusOf(e).crossJoin(broadcast(queriesOf(e))), 5)
+    }
 
   // The oracle unnests both vectors positionally; products and norms are
   // exact BIGINTs, so SUM order does not matter.
@@ -111,75 +174,50 @@ object Similarity {
   private val Tables_ = 4
   private val BitsPerTable = 8
 
-  /** (vec_id, tbl, bucket) sign-LSH sketches: `tables` hash tables of
-    * `bits`-bit buckets, hyperplane signs from md5 parity (deterministic,
-    * engine-portable).
+  /** (vec_id, tbl, bucket) sign-LSH sketches: $Tables_ hash tables of
+    * $BitsPerTable-bit buckets, hyperplane signs from md5 parity
+    * (deterministic, engine-portable). Cached per dir: both sides of the
+    * bucket self-join (and repeat queries in a session) reuse one
+    * materialized sketch table instead of re-evaluating the plane
+    * expressions.
     */
-  /** Cached per (dir, config): both sides of the bucket self-join (and
-    * repeat queries in a session) reuse one materialized sketch table
-    * instead of re-evaluating the plane expressions.
+  private def sketchesOf(s: SparkSession, dir: String, e: DataFrame): DataFrame =
+    Pipelines.cachedDF(s, s"sim.sketch:$dir:$Tables_:$BitsPerTable") {
+      requireDims(e, "sign-LSH sketch")
+      val digest = java.security.MessageDigest.getInstance("MD5")
+      val signs = Array.tabulate(Tables_ * BitsPerTable, Dims) { (i, d) =>
+        val h = digest.digest(s"$i,$d".getBytes("UTF-8"))
+        if ((h(0) & 1) == 0) 1 else -1
+      }
+      // the sign matrix is a compile-time constant: each plane's dot is a
+      // native codegen'd LongDotExpr against an array literal — no
+      // dimension explosion, no join, no extra shuffle; the sketch is a
+      // per-row projection
+      def planeDot(i: Int): Column =
+        dot(col("iv"), typedlit(signs(i).map(_.toLong).toSeq))
+      val bucketCols = (0 until Tables_).map { t =>
+        (0 until BitsPerTable).map { b =>
+          when(planeDot(t * BitsPerTable + b) > 0, lit(1L << b)).otherwise(lit(0L))
+        }.reduce(_ + _)
+      }
+      e.select(col("vec_id"),
+        posexplode(array(bucketCols: _*)).as(Seq("tbl", "bucket")))
+    }
+
+  /** Candidates: the corpus vectors sharing a bucket with the query in
+    * at least one table.
     */
-  private def sketchesOf(s: SparkSession, dir: String, e: DataFrame, tables: Int, bits: Int): DataFrame =
-    Pipelines.cachedDF(s, s"sim.sketch:$dir:$tables:$bits") { sketchesOf0(e, tables, bits) }
-
-  private def sketchesOf0(e: DataFrame, tables: Int, bits: Int): DataFrame = {
-    // the sign matrix below is built for exactly 64 dimensions; zip_with
-    // null-pads on length mismatch, which would silently NULL every plane
-    // dot and send all vectors to bucket 0 (blocking degenerates to
-    // all-pairs). Fail loudly instead.
-    // head(1): an empty embeddings table has nothing to sketch — any
-    // dim passes vacuously (head() would throw on the empty frame)
-    e.select(size(col("iv")).as("d")).head(1).foreach { r =>
-      require(r.getInt(0) == 64,
-        s"sign-LSH sketch expects 64-dim embeddings, got ${r.getInt(0)}")
-    }
-    val numPlanes = tables * bits
-    val digest = java.security.MessageDigest.getInstance("MD5")
-    val signs = Array.tabulate(numPlanes, 64) { (i, d) =>
-      val h = digest.digest(s"$i,$d".getBytes("UTF-8"))
-      if ((h(0) & 1) == 0) 1 else -1
-    }
-    // the sign matrix is a compile-time constant: each plane's dot is a
-    // native codegen'd LongDotExpr against an array literal — no
-    // dimension explosion, no join, no extra shuffle; the sketch is a
-    // per-row projection
-    def planeDot(i: Int): Column =
-      dot(col("iv"), typedlit(signs(i).map(_.toLong).toSeq))
-    val bucketCols = (0 until tables).map { t =>
-      (0 until bits).map { b =>
-        when(planeDot(t * bits + b) > 0, lit(1L << b)).otherwise(lit(0L))
-      }.reduce(_ + _)
-    }
-    e.select(col("vec_id"),
-      posexplode(array(bucketCols: _*)).as(Seq("tbl", "bucket")))
-  }
-
   private def lshAnn(s: SparkSession, dir: String): DataFrame =
-    Pipelines.cachedDF(s, s"sim.lsh:$dir") { lshAnn0(s, dir) }
-
-  private def lshAnn0(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
-    val sketches = sketchesOf(s, dir, e, Tables_, BitsPerTable)
-
-    val l = sketches.select(col("tbl"), col("bucket"), col("vec_id").as("q_id"))
-      .filter(col("q_id") < 10)
-    val r = sketches.select(col("tbl"), col("bucket"), col("vec_id").as("c_id"))
-      .filter(col("c_id") >= 10)
-    val cand = l.join(r, Seq("tbl", "bucket")).select("q_id", "c_id").distinct()
-
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("iv").as("qiv"), col("nrm2").as("qn"))
-    val c = e.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("c_id"), col("iv").as("civ"), col("nrm2").as("cn"))
-    val scored = cand.join(broadcast(q), "q_id").join(c, "c_id")
-      .withColumn("dot", dot(col("qiv"), col("civ")))
-      .withColumn("cos", graft.util.Rnd.jround(col("dot") / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
-      .select("q_id", "rk", "c_id", "cos")
-      .orderBy("q_id", "rk")
-  }
+    Pipelines.cachedDF(s, s"sim.lsh:$dir") {
+      val e = emb(s, dir)
+      val sketches = sketchesOf(s, dir, e)
+      val l = sketches.select(col("tbl"), col("bucket"), col("vec_id").as("q_id"))
+        .filter(col("q_id") < 10)
+      val r = sketches.select(col("tbl"), col("bucket"), col("vec_id").as("c_id"))
+        .filter(col("c_id") >= 10)
+      val cand = l.join(r, Seq("tbl", "bucket")).select("q_id", "c_id").distinct()
+      refine(cand, queriesOf(e), corpusOf(e), 3)
+    }
 
   // ---- shared oracle fragments ----------------------------------------
 
@@ -270,28 +308,23 @@ object Similarity {
     * IVF index persists), and per-query work is |probed cells|, not |corpus|.
     */
   private def ivfAnn(s: SparkSession, dir: String): DataFrame =
-    Pipelines.cachedDF(s, s"sim.ivf:$dir") { ivfAnn0(s, dir) }
+    Pipelines.cachedDF(s, s"sim.ivf:$dir") {
+      val e = emb(s, dir)
+      val (q, c) = (queriesOf(e), corpusOf(e))
+      val base = c.select(col("c_id").as("id"), col("civ").as("iv"))
+      val cent = ivfCentroids(base, IvfCells)
+      val m1 = assignCells(base, cent).withColumnRenamed("id", "c_id")
+      val cand = rankCells(q, "q_id", "qiv", cent, IvfProbes)
+        .join(m1, "cell").select("q_id", "c_id").distinct()
+      refine(cand, q, c, 3)
+    }
 
-  /** One-Lloyd-step deterministic integer centroids over `base`
-    * ((id, iv) rows): seeds = the `cells` smallest ids, assignment by
-    * cosine to the seed, centroid = element-wise INTEGER SUM of its
-    * members (cosine is scale-invariant so the sum stands in for the
-    * mean and scores stay exact/engine-portable). Cells that lose all
-    * members in the Lloyd step drop out (both engines GROUP them away
-    * identically). Returns (cell, cv ARRAY<BIGINT>, cn2).
-    */
   /** Argmax-cosine assignment of `base` (id, iv) to `cent` (cell, cv,
     * cn2): ties → smaller cell — THE assignment tie rule every consumer
     * (IVF, k-means, the oracles) shares, defined once.
     */
-  private[graft] def assignCells(base: DataFrame, cent: DataFrame): DataFrame = {
-    val byId = Window.partitionBy("id").orderBy(desc("score"), col("cell"))
-    base.crossJoin(broadcast(cent))
-      .withColumn("score", dot(col("iv"), col("cv")) / sqrt(col("cn2")))
-      .withColumn("rn", row_number().over(byId))
-      .filter(col("rn") === 1)
-      .select("id", "cell")
-  }
+  private[graft] def assignCells(base: DataFrame, cent: DataFrame): DataFrame =
+    rankCells(base, "id", "iv", cent, 1)
 
   /** Element-wise integer centroid sums of assignment `m`'s groups. */
   private[graft] def centroidSums(m: DataFrame, base: DataFrame): DataFrame =
@@ -302,38 +335,19 @@ object Similarity {
       .agg(expr("transform(sort_array(collect_list(struct(i, cx))), p -> p.cx)").as("cv"))
       .withColumn("cn2", dot(col("cv"), col("cv")))
 
+  /** One-Lloyd-step deterministic integer centroids over `base`
+    * ((id, iv) rows): seeds = the `cells` smallest ids, assignment by
+    * cosine to the seed, centroid = element-wise INTEGER SUM of its
+    * members (cosine is scale-invariant so the sum stands in for the
+    * mean and scores stay exact/engine-portable). Cells that lose all
+    * members in the Lloyd step drop out (both engines GROUP them away
+    * identically). Returns (cell, cv ARRAY<BIGINT>, cn2).
+    */
   def ivfCentroids(base: DataFrame, cells: Int): DataFrame = {
     val seeds = base.orderBy("id").limit(cells)
       .select(col("id").as("cell"), col("iv").as("cv"))
       .withColumn("cn2", dot(col("cv"), col("cv")))
     centroidSums(assignCells(base, seeds), base)
-  }
-
-  private def ivfAnn0(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
-    val c = e.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("c_id"), col("iv").as("civ"), col("nrm2").as("cn"))
-    val cent = ivfCentroids(c.select(col("c_id").as("id"), col("civ").as("iv")), IvfCells)
-    // member→cell via THE shared assignment rule (assignCells)
-    val m1 = assignCells(c.select(col("c_id").as("id"), col("civ").as("iv")), cent)
-      .withColumnRenamed("id", "c_id")
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("iv").as("qiv"), col("nrm2").as("qn"))
-    val byQ = Window.partitionBy("q_id").orderBy(desc("score"), col("cell"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("score", dot(col("qiv"), col("cv")) / sqrt(col("cn2")))
-      .withColumn("rn", row_number().over(byQ))
-      .filter(col("rn") <= IvfProbes)
-      .select("q_id", "cell")
-    val cand = probes.join(m1, "cell").select("q_id", "c_id").distinct()
-    val scored = cand.join(broadcast(q), "q_id").join(c, "c_id")
-      .withColumn("dot", dot(col("qiv"), col("civ")))
-      .withColumn("cos", graft.util.Rnd.jround(col("dot") / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
-      .select("q_id", "rk", "c_id", "cos")
-      .orderBy("q_id", "rk")
   }
 
   /** Persisted IVF layout + pruned ANN: the corpus embeddings are
@@ -553,11 +567,8 @@ object Similarity {
 
   private def ivfLayoutAnn(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val c = e.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("c_id"), col("iv").as("civ"), col("nrm2").as("cn"))
-    val loc = graft.util.Warehouse.dir(s,
-      "ivf/" + java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString)
+    val c = corpusOf(e)
+    val loc = graft.util.Warehouse.dir(s, s"ivf/${graft.util.Names.pathKey(dir)}")
     // Build-once per JVM: a fresh JVM always rebuilds (an on-disk
     // _SUCCESS check would serve a stale layout if the source table
     // changed between runs); within a JVM every re-run reuses it.
@@ -575,18 +586,11 @@ object Similarity {
       // whole save→append→compact lifecycle every round
       compactIvfLayout(s, loc, maxFilesPerCell = 1)
     }
+    val q = queriesOf(e)
     // probes score against the PERSISTED centroid table, as any reader
     // of the at-rest layout would (integer centroid sums round-trip
     // parquet exactly, so scores are unchanged)
-    val cent = loadIvfCentroids(s, loc)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("iv").as("qiv"), col("nrm2").as("qn"))
-    val byQ = Window.partitionBy("q_id").orderBy(desc("score"), col("cell"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("score", dot(col("qiv"), col("cv")) / sqrt(col("cn2")))
-      .withColumn("rn", row_number().over(byQ))
-      .filter(col("rn") <= IvfProbes)
-      .select("q_id", "cell")
+    val probes = rankCells(q, "q_id", "qiv", loadIvfCentroids(s, loc), IvfProbes)
     val probed = probes.select("cell").distinct().collect().map(_.getLong(0))
     // manifest-pinned member scan: the committed snapshot the centroid
     // probes above belong to (one atomic view of cells + centroids)
@@ -595,15 +599,7 @@ object Similarity {
       .select(col("cell").cast("long").as("cell"), col("c_id"), col("civ"), col("cn"))
     // one cell per corpus vector ⇒ (q_id, c_id) pairs are already
     // unique — no distinct barrier needed before scoring
-    val scored = probes.join(layout, "cell")
-      .join(broadcast(q), "q_id")
-      .withColumn("dot", dot(col("qiv"), col("civ")))
-      .withColumn("cos", graft.util.Rnd.jround(col("dot") / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
-      .select("q_id", "rk", "c_id", "cos")
-      .orderBy("q_id", "rk")
+    rerank(probes.join(layout, "cell").join(broadcast(q), "q_id"), 3)
   }
 
   /** IVF CTEs: seed cells → assign → integer centroid sums → one Lloyd
@@ -678,8 +674,7 @@ object Similarity {
 
   private def sqAnn0(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val c = e.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("c_id"), col("iv").as("civ"), col("nrm2").as("cn"))
+    val (q, c) = (queriesOf(e), corpusOf(e))
     // per-dimension corpus [min, max]: 64 rows — model-sized, collected
     // like the IVF centroids and inlined as array literals
     val mm = c.select(posexplode(col("civ")).as(Seq("i", "x")))
@@ -699,26 +694,23 @@ object Similarity {
     })
     val corp = c.withColumn("rv", rvOf(col("civ")))
       .withColumn("rn2", dot(col("rv"), col("rv")))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"),
-        transform(col("iv"), x => x * lit(255L)).as("q255"),
-        col("iv").as("qiv"), col("nrm2").as("qn"))
+    val q255 = q.select(col("q_id"), transform(col("qiv"), x => x * lit(255L)).as("q255"))
+    refine(shortlist(corp, q255, "q255", SqCand), q, c, 3)
+  }
+
+  /** The asymmetric shortlist of the compressed scans: the top `n`
+    * corpus ids per query by dot(`qvec`, rv) / √rn2 over the
+    * reconstructions `recon` (c_id, rv, rn2) and the broadcast query
+    * vectors `q` (q_id, `qvec`), ties → smaller c_id. Returns (q_id, c_id).
+    */
+  private def shortlist(recon: DataFrame, q: DataFrame, qvec: String, n: Int): DataFrame = {
     val byQ = Window.partitionBy("q_id").orderBy(desc("ascore"), col("c_id"))
-    val cand = corp.crossJoin(broadcast(q.select("q_id", "q255")))
-      .withColumn("adot", dot(col("q255"), col("rv")))
+    recon.crossJoin(broadcast(q.select("q_id", qvec)))
+      .withColumn("adot", dot(col(qvec), col("rv")))
       .withColumn("ascore", col("adot") / sqrt(col("rn2")))
       .withColumn("rn", row_number().over(byQ))
-      .filter(col("rn") <= SqCand)
+      .filter(col("rn") <= n)
       .select("q_id", "c_id")
-    val scored = cand.join(broadcast(q.select("q_id", "qiv", "qn")), "q_id")
-      .join(c, "c_id")
-      .withColumn("dot", dot(col("qiv"), col("civ")))
-      .withColumn("cos", graft.util.Rnd.jround(col("dot") / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
-      .select("q_id", "rk", "c_id", "cos")
-      .orderBy("q_id", "rk")
   }
 
   /** SQ8 CTEs: per-dim corpus [min,max] → integer reconstruction →
@@ -750,14 +742,14 @@ object Similarity {
 
   // ---- product-quantized (PQ-ADC) ANN ---------------------------------
 
-  /** PQ geometry: $PqM subspaces of 64/$PqM dims, $PqKs entries per
+  /** PQ geometry: $PqM subspaces of $Dims/$PqM dims, $PqKs entries per
     * codebook → a vector compresses to $PqM 4-bit codes (4 bytes — 16×
     * smaller than float32, the standard PQ-ADC layout; public: Jégou et
     * al. 2011, FAISS IndexPQ).
     */
   private val PqM = 8
   private val PqKs = 16
-  private val PqSub = 8 // dims per subspace
+  private val PqSub = Dims / PqM // dims per subspace
 
   /** Fixed-point scale for codebook means: mean = (sum·$PqScale) div cnt
     * — truncating integer division, which Spark's `div` and DuckDB's
@@ -791,8 +783,8 @@ object Similarity {
 
   private def pqAnn0(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val c = e.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("c_id"), col("iv").as("civ"), col("nrm2").as("cn"))
+    requireDims(e, "PQ-ADC")
+    val (q, c) = (queriesOf(e), corpusOf(e))
     // (c_id, m, sv): the corpus split into per-subspace slices
     def subbed(src: DataFrame, idCol: String, vecCol: String): DataFrame =
       src.select(col(idCol), posexplode(
@@ -835,24 +827,7 @@ object Similarity {
       .groupBy("c_id")
       .agg(expr("transform(sort_array(collect_list(struct(i, rx))), p -> p.rx)").as("rv"))
       .withColumn("rn2", dot(col("rv"), col("rv")))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("iv").as("qiv"), col("nrm2").as("qn"))
-    val byQ = Window.partitionBy("q_id").orderBy(desc("ascore"), col("c_id"))
-    val cand = rv.crossJoin(broadcast(q.select("q_id", "qiv")))
-      .withColumn("adot", dot(col("qiv"), col("rv")))
-      .withColumn("ascore", col("adot") / sqrt(col("rn2")))
-      .withColumn("rn", row_number().over(byQ))
-      .filter(col("rn") <= PqCand)
-      .select("q_id", "c_id")
-    val scored = cand.join(broadcast(q), "q_id")
-      .join(c, "c_id")
-      .withColumn("dot", dot(col("qiv"), col("civ")))
-      .withColumn("cos", graft.util.Rnd.jround(col("dot") / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), col("c_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
-      .select("q_id", "rk", "c_id", "cos")
-      .orderBy("q_id", "rk")
+    refine(shortlist(rv, q, "qiv", PqCand), q, c, 3)
   }
 
   /** PQ oracle CTEs: per-subspace flat view → seed codebooks → integer-L2
@@ -936,7 +911,7 @@ object Similarity {
       (bruteA.join(), methodAs.map { case (name, a) => name -> a.join() })
     }
     val brute = bruteAll.filter(col("rk") <= 3).select("q_id", "c_id")
-    val qs = emb(s, dir).filter(col("vec_id") < 10).select(col("vec_id").as("q_id"))
+    val qs = queriesOf(emb(s, dir)).select("q_id")
     def recallOf(name: String, ann: DataFrame): DataFrame = {
       val hits = brute.join(ann.select("q_id", "c_id"), Seq("q_id", "c_id"))
         .groupBy("q_id").agg(count(lit(1)).as("hits"))
@@ -1017,13 +992,7 @@ object Similarity {
   private def dupMembership(s: SparkSession, dir: String): DataFrame =
     Pipelines.cachedDF(s, s"sim.dupmemb:$dir") {
       val base = emb(s, dir).select(col("vec_id").as("id"), col("iv"))
-      val cent = ivfCentroids(base, DupCells)
-      val byId = Window.partitionBy("id").orderBy(desc("score"), col("cell"))
-      base.crossJoin(broadcast(cent))
-        .withColumn("score", dot(col("iv"), col("cv")) / sqrt(col("cn2")))
-        .withColumn("rn", row_number().over(byId))
-        .filter(col("rn") <= DupProbes)
-        .select("id", "cell")
+      rankCells(base, "id", "iv", ivfCentroids(base, DupCells), DupProbes)
     }
 
   /** Candidate pairs sharing ≥1 probed cell (a < b). Cached + logged:
@@ -1041,22 +1010,28 @@ object Similarity {
         .select("a", "b").distinct()
     }
 
-  /** Candidate pairs re-scored by exact integer cosine and filtered at
-    * $DupThreshold — the ONE definition of the near-dup edge set that
-    * [[embedCosine]] (presentation: rounded cos, sorted) and
-    * [[semantic]] (consumption: raw pairs into the CC contraction) both
-    * derive from. Unsorted and unrounded on purpose: a global sort is
-    * presentation cost the graph consumer must not pay.
+  /** The blocked candidate pairs (a < b) with both vectors, their exact
+    * integer dot and the unrounded cosine `cosRaw` — the one pair-scoring
+    * frame the near-dup edges ([[dupPairs]]) and the kNN graph
+    * (`GraphOps.knnEdges`, which rounds it) share.
     */
-  private def dupPairs(s: SparkSession, dir: String): DataFrame = {
+  private[pipeline] def scoredPairs(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val va = e.select(col("vec_id").as("a"), col("iv").as("aiv"), col("nrm2").as("an"))
     val vb = e.select(col("vec_id").as("b"), col("iv").as("biv"), col("nrm2").as("bn"))
     dupCandidates(s, dir).join(va, "a").join(vb, "b")
       .withColumn("dot", dot(col("aiv"), col("biv")))
       .withColumn("cosRaw", col("dot") / (sqrt(col("an")) * sqrt(col("bn"))))
-      .filter(col("cosRaw") >= DupThreshold)
   }
+
+  /** [[scoredPairs]] filtered at $DupThreshold — the ONE definition of
+    * the near-dup edge set that [[embedCosine]] (presentation: rounded
+    * cos, sorted) and [[semantic]] (consumption: raw pairs into the CC
+    * contraction) both derive from. Unsorted and unrounded on purpose: a
+    * global sort is presentation cost the graph consumer must not pay.
+    */
+  private def dupPairs(s: SparkSession, dir: String): DataFrame =
+    scoredPairs(s, dir).filter(col("cosRaw") >= DupThreshold)
 
   private def embedCosine(s: SparkSession, dir: String): DataFrame =
     dupPairs(s, dir)

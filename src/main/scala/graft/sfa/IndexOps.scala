@@ -204,7 +204,7 @@ object IndexOps {
     val prepared = corpus.select(col("id"), col("data"), col("word"), col("approx"),
       prefixCol(col("word"), prefixStart, plen, 256).as("prefix"))
     knnCore(prepared, queries, bins, normed, k, probe, plen, queryBatchRows,
-      probeSlot = s"corpus:${prepared.queryExecution.logical.semanticHash()}")
+      probeSlot = s"corpus:${prepared.queryExecution.analyzed.semanticHash()}")
   }
 
   /** The per-prefix Fourier bounding-box aggregate shared by the

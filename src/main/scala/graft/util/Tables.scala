@@ -189,16 +189,18 @@ object Pipelines {
     * intra-query `.cache()` has no owner, so it would survive
     * [[clear]]/[[evict]] for the JVM lifetime. Unlike [[cachedDF]] the
     * frame is not eagerly materialized — this is ownership bookkeeping,
-    * not memoization. Keyed by the SEMANTIC plan hash: a re-run of the
-    * same query registers the same key and replaces its old entry
-    * (identical plans share one CacheManager entry, so no unpersist is
-    * needed on replace), while genuinely different plans — including
-    * concurrent branch fits calling from one source line — keep
-    * distinct entries. A long-lived session's registry is therefore
+    * not memoization. Keyed by the SEMANTIC hash of the ANALYZED plan
+    * (the unanalyzed plan names each `functions` lambda variable afresh
+    * on every build, so two builds of one frame would hash apart): a
+    * re-run of the same query registers the same key and replaces its
+    * old entry (identical plans share one CacheManager entry, so no
+    * unpersist is needed on replace), while genuinely different plans
+    * — including concurrent branch fits calling from one source line —
+    * keep distinct entries. A long-lived session's registry is therefore
     * bounded by its distinct tracked plans, not its call count.
     */
   def tracked(s: SparkSession, df: DataFrame): DataFrame =
-    trackedIn(s, s"plan:${df.queryExecution.logical.semanticHash()}", df)
+    trackedIn(s, s"plan:${df.queryExecution.analyzed.semanticHash()}", df)
 
   /** [[tracked]] in a caller-named slot, for a per-call frame whose plan
     * is new on every call (it holds a literal of the call's own inputs),
@@ -211,7 +213,7 @@ object Pipelines {
   def trackedIn(s: SparkSession, slot: String, df: DataFrame): DataFrame = {
     val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     dfs.put((sid(s), s"_tracked:$slot"), cached)
-      .filterNot(_.queryExecution.logical.sameResult(cached.queryExecution.logical))
+      .filterNot(_.queryExecution.analyzed.sameResult(cached.queryExecution.analyzed))
       .foreach(unpersist)
     cached
   }
